@@ -1283,16 +1283,16 @@ object ParityQueries {
   /** Per-partition accounting THROUGH the partitions metadata table
     * ([[TableSink.metaPartitions]] — Iceberg's `partitions` analogue):
     * events land identity-partitioned by event_type, and the metadata
-    * table's per-partition record counts — recovered from the
-    * `col=value` path spine with every data column pruned — must equal
+    * table's per-partition record counts — keyed by the `col=value`
+    * path spine of each file's manifest entry — must equal
     * the fixture's per-type counts. File counts and byte sizes are
     * engine-specific (salted writer layout), so the oracle pins the
     * partition spine and record counts while MetaTablesSpec pins the
     * file-level invariants.
     *
-    * Scale shape: one metadata-only scan (footer row counts), two bounded
-    * aggregates keyed by file then partition — a 100 TB table's partition
-    * rollup never touches data pages or the driver. */
+    * Scale shape: the rollup reads only the head manifest, whose entries
+    * record each file's rows and bytes at commit — no data file is
+    * opened. */
   def metaPartitions(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
@@ -2436,8 +2436,8 @@ object ParityQueries {
     * never wall-clock or file counts, which the record-per-file split
     * may vary); the oracle recomputes the counts from the source. Pins
     * identifier resolution (`<table>` as the namespace tail), the
-    * distributed V1Scan execution path, and that the footer-only
-    * inventories agree with the snapshot log. */
+    * V1Scan execution path, and that the manifest-served inventories
+    * agree with the snapshot log. */
   def metaSql(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
     val wh = "/root/repo/target/tmp/graft_catalog_wh"

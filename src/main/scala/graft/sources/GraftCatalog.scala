@@ -321,14 +321,22 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
       firstFile: Option[String], userSchema: Option[StructType] = None,
       writable: Boolean = false, morVersion: Option[Int] = None): Table = {
     val spark = SparkSession.active
-    val opts = new CaseInsensitiveStringMap(
-      util.Map.of("basePath", tableDir(ident).toString))
+    val base = tableDir(ident).toString
+    val opts = new CaseInsensitiveStringMap(util.Map.of("basePath", base))
     val orc = firstFile.exists(_.endsWith(".orc"))
+    val fmt = if (orc) "orc" else "parquet"
+    // without a declared schema the scan serves the footer schema Spark's
+    // inference would pick, read on the driver: planning runs no job
+    val dataSchema = userSchema.orElse {
+      val o = Map("basePath" -> base)
+      if (paths == Seq(base)) FileFooters.ofDirectory(spark, fmt, base, o)
+      else FileFooters.ofFiles(spark, fmt, paths, base, o)
+    }
     val delegate: FileTable =
       if (orc) OrcTable(ident.name(), spark, opts, paths,
-        userSchema, classOf[OrcFileFormat])
+        dataSchema, classOf[OrcFileFormat])
       else ParquetTable(ident.name(), spark, opts, paths,
-        userSchema, classOf[ParquetFileFormat])
+        dataSchema, classOf[ParquetFileFormat])
     lazy val cfg = insertConfig(ident, firstFile)
     // RENAMED tables scan through a projecting relation: pre-rename
     // files keep the old physical column name, so the scan must request
@@ -386,8 +394,6 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
       if (renames.isEmpty) None
       else {
         val declared = userSchema.getOrElse(delegate.schema)
-        val fmt = if (orc) "orc" else "parquet"
-        val base = tableDir(ident).toString
         Some((declared, () => {
           val s = SparkSession.active
           if (paths.isEmpty)
@@ -450,12 +456,12 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
     * where `<meta>` ∈ `snapshots` (alias `history`), `files`,
     * `partitions`, `deletes`, `changes` — served only when no real table
     * shadows the name (real tables win). Each is a read-only
-    * [[GraftMetaTable]] whose V1Scan EXECUTES the matching [[TableSink]]
-    * metadata DataFrame as a distributed plan: file/partition inventories
-    * run as the same footer-only scans the library functions use,
-    * `changes` replays the full CDC changelog, and only snapshot/delete
-    * rows (bounded by manifest count) are driver-computed — the
-    * `metaFiles` 100 TB contract, now through SQL. */
+    * [[GraftMetaTable]] whose V1Scan executes the matching [[TableSink]]
+    * metadata DataFrame: the file/partition inventories are the head
+    * manifest's recorded per-file facts (no data file is opened, so
+    * planning and answering them runs no scan), snapshot/delete rows are
+    * driver-computed from the log, and `changes` replays the full CDC
+    * changelog as a distributed plan. */
   private def metaTable(ident: Identifier): Option[Table] = {
     if (ident.namespace().isEmpty) return None
     val base = Identifier.of(
@@ -1077,14 +1083,13 @@ private[graft] final class GraftReadOnlyTable(delegate: FileTable,
 /** A metadata table (`cat.t.snapshots` / `files` / `partitions` /
   * `deletes` / `changes`): read-only, served as a DSv2
   * [[org.apache.spark.sql.connector.read.V1Scan]] whose relation executes
-  * the underlying metadata DataFrame DISTRIBUTED (`df.rdd`) — never a
+  * the underlying metadata DataFrame as its plan (`df.rdd`) — never a
   * driver-side collect. That matters for `changes`: the row-level
   * changelog is data-sized, and a `LocalScan` would have funneled the
-  * whole diff through the driver; the bounded views (snapshots, file and
-  * partition inventories) simply keep their distributed plans. Rows are
-  * computed when the scan executes; only the snapshot-metadata plans do
-  * their (bounded) manifest reads at plan-construction time. No write
-  * capability: an INSERT gets Spark's standard refusal. */
+  * whole diff through the driver. The file and partition inventories
+  * are local relations over the head manifest's per-file facts, built at
+  * plan-construction time; snapshots and deletes read the log there too.
+  * No write capability: an INSERT gets Spark's standard refusal. */
 private[graft] final class GraftMetaTable(fullName: String,
     compute: () => org.apache.spark.sql.DataFrame)
     extends Table with SupportsRead {

@@ -313,13 +313,11 @@ final class ZoneMaps(sink: TableSink) {
   def readBetweenInPlan(spark: SparkSession,
       bounds: (String, Column, Column)*): DataFrame = {
     require(bounds.nonEmpty, "readBetweenInPlan needs at least one bound")
-    def stripScheme(c: Column): Column =
-      regexp_replace(c, "^[a-z][a-zA-Z0-9+.-]*:(//)?", "")
     val prunedPaths: Option[org.apache.spark.sql.DataFrame] =
       sink.manifestStatsDf(spark) match {
         case Some(stats) =>
           Some(stats.where(!manifestKeep(spark, bounds))
-            .select(stripScheme(col("path")).as("__zm_path")))
+            .select(TableSink.stripScheme(col("path")).as("__zm_path")))
         case None if WarehouseIO.isDir(
             new org.apache.hadoop.fs.Path(statsPath)) =>
           val keep = coalesce(bounds.map { case (c, lo, hi) =>
@@ -339,7 +337,7 @@ final class ZoneMaps(sink: TableSink) {
         // merge-on-read delete anti-join makes _metadata unresolvable
         val df = sink.readWithScanPath(spark, "__zm_scan_raw")
         df.withColumn("__zm_scan_path",
-            stripScheme(TableSink.decodePath(col("__zm_scan_raw"))))
+            TableSink.stripScheme(TableSink.decodePath(col("__zm_scan_raw"))))
           .join(broadcast(pruned),
             col("__zm_scan_path") === col("__zm_path"), "left_anti")
           .drop("__zm_scan_path", "__zm_scan_raw")

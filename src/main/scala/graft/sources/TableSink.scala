@@ -5,6 +5,8 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import scala.jdk.CollectionConverters._
+
 /** Partition-transform-aware table sink (reference: connector.py K1-K10,
   * SURVEY.md §2.3) on partitioned Parquet/ORC.
   *
@@ -88,6 +90,16 @@ object TableSink {
   private[graft] def decodePath(s: String): String =
     java.net.URLDecoder.decode(s.replace("+", "%2B"), "UTF-8")
 
+  /** A URI's leading `scheme:` (and `//`): what is left compares as a
+    * path across `file:`/`hdfs:`/`s3a:` renderings of one location. */
+  private val SchemePrefix = "^[a-z][a-zA-Z0-9+.-]*:(//)?"
+
+  private[graft] def stripScheme(s: String): String =
+    s.replaceFirst(SchemePrefix, "")
+
+  private[graft] def stripScheme(c: Column): Column =
+    regexp_replace(c, SchemePrefix, "")
+
   /** Render a zone-stat bound for persistence. TIMESTAMP bounds persist
     * as EPOCH MICROS (timezone-independent) — a cast-to-string render
     * would use the WRITER's session timezone with no zone designator, and
@@ -168,6 +180,11 @@ object TableSink {
   /** Name of the optional per-row partition-override map column consumed by
     * [[TableSink.withDerived]] (reference models.py:62-63 `partition_data`). */
   val PartitionDataCol = "_partition_data"
+
+  /** One row of the live file inventory behind the `files` and
+    * `partitions` metadata tables. */
+  private final case class LiveFile(uri: String, partition: String,
+      facts: WarehouseIO.FileFacts)
 
   /** Default [[TableSink.removeOrphans]] grace window (24 h) — generous
     * versus the seconds-scale life of a staged write so a concurrent
@@ -499,8 +516,8 @@ final class TableSink(val config: SinkConfig) {
       val raw = TableSink.decodePath(r.getString(0))
       val rel =
         if (raw.startsWith(rootStr)) raw.stripPrefix(rootStr).stripPrefix("/")
-        else raw.replaceFirst("^[a-z][a-zA-Z0-9+.-]*:(//)?", "")
-          .stripPrefix(rootStr.replaceFirst("^[a-z][a-zA-Z0-9+.-]*:(//)?", ""))
+        else TableSink.stripScheme(raw)
+          .stripPrefix(TableSink.stripScheme(rootStr))
           .stripPrefix("/")
       if (rels.contains(rel)) Some(rel -> r.getString(1)) else None
     }.toMap
@@ -526,8 +543,13 @@ final class TableSink(val config: SinkConfig) {
         "stats refold on a shallow clone is not supported — materialize " +
           "the clone first (compact)")
       val stats = manifestStatsFor(spark, rels, schema)
+      // the refold replaces every entry: carry each file's recorded facts
+      val facts = WarehouseIO.readSnapshotLines(logPath, snapshotFile(head))
+        .map(l => WarehouseIO.manifestLinePath(l) -> WarehouseIO.entryFacts(l))
+        .toMap
       val merged = WarehouseIO.writeManifestLines(logPath,
-        rels.distinct.sorted.map(r => stats.get(r).fold(r)(j => s"$r\t$j")))
+        rels.distinct.sorted.map(r =>
+          WarehouseIO.renderEntry(r, stats.get(r), facts.getOrElse(r, None))))
       if (WarehouseIO.writeStringIfAbsent(logFile(f"v${head + 1}%05d.list"),
           WarehouseIO.renderSnapshot(Seq(merged))))
         return head + 1
@@ -801,6 +823,23 @@ final class TableSink(val config: SinkConfig) {
       .dropDuplicates("path"))
   }
 
+  /** Manifest lines for `rels`, files a commit adds: each entry records
+    * the file's [[WarehouseIO.FileFacts]] (one status call and one footer
+    * read on the driver per file — O(files added)) beside any column
+    * stats in `stats`. A file unreadable here keeps an entry without
+    * facts; the commit's own existence checks refuse a swept file. */
+  private def entryLines(rels: Seq[String],
+      stats: Map[String, String] = Map.empty): Seq[String] =
+    rels.distinct.sorted.map(r => WarehouseIO.renderEntry(r, stats.get(r),
+      scala.util.Try(FileFooters.factsOf(dataPath(r), config.fileFormat))
+        .toOption))
+
+  /** Absolute path of a manifest entry: a shallow clone's source entries
+    * are absolute, everything else is relative to the table root. */
+  private def dataPath(rel: String): org.apache.hadoop.fs.Path =
+    if (rel.startsWith("/")) new org.apache.hadoop.fs.Path(rel)
+    else new org.apache.hadoop.fs.Path(config.tablePath, rel)
+
   /** CHECK-constraint gate ([[SinkConfig.checkConstraints]]): one
     * aggregate pass over `df` counting violations per constraint; any
     * violation refuses the write with the per-constraint counts. NULL
@@ -852,8 +891,7 @@ final class TableSink(val config: SinkConfig) {
     val ownManifest =
       if (added.isEmpty) None
       else Some(WarehouseIO.writeManifestLines(logPath,
-        added.distinct.sorted.map(r =>
-          stats.get(r).fold(r)(j => s"$r	$j"))))
+        entryLines(added, stats)))
     // a manifest WE created to represent the base (bootstrap listing of
     // pre-existing unversioned data, or one-time migration of a legacy
     // inline-list head) — superseded and deleted if the claim is lost
@@ -1206,7 +1244,7 @@ final class TableSink(val config: SinkConfig) {
     val v = snapshotVersions().lastOption.getOrElse(0) + 1
     val names =
       if (files.isEmpty) Nil
-      else Seq(WarehouseIO.writeManifest(logPath, files.sorted))
+      else Seq(WarehouseIO.writeManifestLines(logPath, entryLines(files)))
     WarehouseIO.writeString(logFile(f"v$v%05d.list"),
       WarehouseIO.renderSnapshot(names))
     v
@@ -1413,8 +1451,7 @@ final class TableSink(val config: SinkConfig) {
     * its own capture when the columns are already present and drops
     * them unless asked to keep. */
   private def readFiles(spark: SparkSession, rels: Seq[String],
-      capturePos: Boolean = false,
-      captureFileMeta: Boolean = false): DataFrame = {
+      capturePos: Boolean = false): DataFrame = {
     // an empty file set cannot infer a schema — an empty diff (e.g.
     // readChanges(v, v)) borrows the live table's schema instead
     if (rels.isEmpty) read(spark).limit(0)
@@ -1428,14 +1465,16 @@ final class TableSink(val config: SinkConfig) {
       // explicit config.tableSchema still wins (caller's pin).
       val declared = config.tableSchema.orElse(alterDeclaredSchema)
       def load(files: Seq[String], base: String): DataFrame = {
-        val r0 = spark.read.format(config.fileFormat)
-          .option("basePath", base)
         // renamed tables mix file generations (pre-rename files carry
         // the old physical name): surface BOTH names — merge-schema
         // when inferring, old columns appended when declared — so
         // applyRenames can coalesce them under the new name
-        val r = if (renames.nonEmpty) r0.option("mergeSchema", "true") else r0
+        val opts = Map("basePath" -> base) ++
+          (if (renames.nonEmpty) Map("mergeSchema" -> "true") else Map.empty)
+        val r = spark.read.format(config.fileFormat).options(opts)
         declared.map(augmentWithRenameSources(_, renames))
+          .orElse(FileFooters.ofFiles(spark, config.fileFormat, files, base,
+            opts))
           .fold(r)(s => r.schema(s)).load(files: _*)
       }
       // a shallow clone's manifest mixes ABSOLUTE entries (the source's
@@ -1464,17 +1503,7 @@ final class TableSink(val config: SinkConfig) {
       // same-window A/B) for sidecars that do not exist
       val multi = localFileGroups.size + (if (ext.isEmpty) 0 else 1) > 1
       def cap(df: DataFrame): DataFrame =
-        if (captureFileMeta)
-          // file-inventory capture for the metadata tables (round-14):
-          // UNCONDITIONAL (unlike capturePos) because the caller groups
-          // on these columns, and CHEAP — file_path/size/mtime are
-          // per-file constants, not the per-row row_index
-          // materialization the capturePos guard exists to avoid
-          df.withColumn("__graft_file", col("_metadata.file_path"))
-            .withColumn("__graft_size", col("_metadata.file_size"))
-            .withColumn("__graft_mtime",
-              col("_metadata.file_modification_time"))
-        else if (!capturePos || !multi) df
+        if (!capturePos || !multi) df
         else df.withColumn("__graft_file", col("_metadata.file_path"))
           .withColumn("__graft_pos", col("_metadata.row_index"))
       val localGroups = localFileGroups
@@ -1661,6 +1690,19 @@ final class TableSink(val config: SinkConfig) {
 
   private def sidecarIndex(): SidecarIndex = new SidecarIndex
 
+  /** The rows of list sidecars `dirs` (key lists or position lists, one
+    * parquet directory per commit), unioned by name. Each directory's
+    * schema comes from its footer on the driver ([[FileFooters]]): every
+    * planning of a pending-delete read loads its sidecars, and schema
+    * inference would launch one job per directory. */
+  private def readSidecars(spark: SparkSession,
+      dirs: Seq[org.apache.hadoop.fs.Path]): DataFrame =
+    dirs.map { d =>
+      val r = spark.read
+      FileFooters.ofDirectory(spark, "parquet", d.toString)
+        .fold(r)(r.schema).parquet(d.toString)
+    }.reduce(_ unionByName _)
+
   /** Delete predicates committed at or before `version`, in commit order.
     * Stored one per sidecar as SQL text. (Key-list deletes are separate —
     * [[deleteKeys]] — and counted by [[hasPendingDeletes]].) */
@@ -1745,16 +1787,14 @@ final class TableSink(val config: SinkConfig) {
       val kds = idx.keyDirs(v)
       val afterKeys = if (kds.nonEmpty) {
         val keys = applyRenames(
-          kds.map(kd => df.sparkSession.read.parquet(kd.toString))
-            .reduce(_ unionByName _), renames)
+          readSidecars(df.sparkSession, kds), renames)
         // anti-join on the key list's own columns; Spark broadcasts a
         // small erasure list and shuffle-joins a huge one (AQE decides)
         afterSql.join(keys, keys.columns.toSeq, "left_anti")
       } else afterSql
       val pds = idx.posDirs(v)
       if (pds.nonEmpty) {
-        val pos = pds.map(pd => df.sparkSession.read.parquet(pd.toString))
-          .reduce(_ unionByName _)
+        val pos = readSidecars(df.sparkSession, pds)
           .withColumnRenamed("file_path", "__graft_file")
           .withColumnRenamed("row_pos", "__graft_pos")
         // a position list is bounded by the matched-row count at commit
@@ -1980,7 +2020,7 @@ final class TableSink(val config: SinkConfig) {
       "no delete sidecars to consolidate")
     if (vs.size == 1) return head // already consolidated: no-op
     val keySchemas = keyDirsByV.flatMap(_._2)
-      .map(kd => spark.read.parquet(kd.toString).columns.toSeq)
+      .map(kd => readSidecars(spark, Seq(kd)).columns.toSeq)
       .distinct
     require(keySchemas.size <= 1,
       s"erasure lists use mixed key-column sets (${keySchemas.map(_.mkString("(", ",", ")")).mkString(", ")}) " +
@@ -2005,9 +2045,7 @@ final class TableSink(val config: SinkConfig) {
       if (keyDirsByV.isEmpty) None
       else {
         val n = s"keys-$uuid12"
-        keyDirsByV.flatMap(_._2)
-          .map(kd => spark.read.parquet(kd.toString))
-          .reduce(_ unionByName _).distinct()
+        readSidecars(spark, keyDirsByV.flatMap(_._2)).distinct()
           .write.mode("overwrite").parquet(logFile(n).toString)
         Some(n)
       }
@@ -2015,9 +2053,7 @@ final class TableSink(val config: SinkConfig) {
       if (posDirsByV.isEmpty) None
       else {
         val n = s"pos-$uuid12"
-        posDirsByV.flatMap(_._2)
-          .map(pd => spark.read.parquet(pd.toString))
-          .reduce(_ unionByName _).distinct()
+        readSidecars(spark, posDirsByV.flatMap(_._2)).distinct()
           .write.mode("overwrite").parquet(logFile(n).toString)
         Some(n)
       }
@@ -2192,15 +2228,11 @@ final class TableSink(val config: SinkConfig) {
           b = b.withColumn(m, vi.preds
             .map(p => coalesce(expr(p), lit(false))).reduce(_ || _))
         else if (vi.keyDirs.nonEmpty) {
-          val keys = vi.keyDirs
-            .map(kd => spark.read.parquet(kd.toString))
-            .reduce(_ unionByName _).distinct()
+          val keys = readSidecars(spark, vi.keyDirs).distinct()
           b = b.join(keys.withColumn(m, lit(true)),
             keys.columns.toSeq, "left_outer")
         } else {
-          val pos = vi.posDirs
-            .map(pd => spark.read.parquet(pd.toString))
-            .reduce(_ unionByName _)
+          val pos = readSidecars(spark, vi.posDirs)
             .withColumnRenamed("file_path", "__graft_file")
             .withColumnRenamed("row_pos", "__graft_pos")
             .distinct()
@@ -2243,17 +2275,13 @@ final class TableSink(val config: SinkConfig) {
       val byKeys =
         if (in.keyDirs.isEmpty) None
         else {
-          val keys = in.keyDirs
-            .map(kd => spark.read.parquet(kd.toString))
-            .reduce(_ unionByName _)
+          val keys = readSidecars(spark, in.keyDirs)
           Some(base.join(keys, keys.columns.toSeq, "left_semi"))
         }
       val byPos =
         if (in.posDirs.isEmpty) None
         else {
-          val pos = in.posDirs
-            .map(pd => spark.read.parquet(pd.toString))
-            .reduce(_ unionByName _)
+          val pos = readSidecars(spark, in.posDirs)
             .withColumnRenamed("file_path", "__graft_file")
             .withColumnRenamed("row_pos", "__graft_pos")
           Some(base.join(pos,
@@ -2709,13 +2737,11 @@ final class TableSink(val config: SinkConfig) {
       }
     }
     import spark.implicits._
-    def stripScheme(s: String): String =
-      s.replaceFirst("^[a-z][a-zA-Z0-9+.-]*:(//)?", "")
     val perRank: Map[Int, (Long, Long)] =
       if (pairs.isEmpty) Map.empty
       else {
         val maxRank = vs.length - 1
-        val byPath = pairs.map { case (r, p) => (stripScheme(p), r) }
+        val byPath = pairs.map { case (r, p) => (TableSink.stripScheme(p), r) }
           .toDF("__mf_key", "rank")
         // one executor-side read per distinct manifest; a manifest shared
         // by many snapshots fans out through the (cheap) name join
@@ -2724,8 +2750,8 @@ final class TableSink(val config: SinkConfig) {
           // a manifest line may carry per-file stats after a TAB — the
           // membership key is the path part only
           .select(substring_index(col("value"), "\t", 1).as("file"),
-            regexp_replace(TableSink.decodePath(col("_metadata.file_path")),
-              "^[a-z][a-zA-Z0-9+.-]*:(//)?", "").as("__mf_key"))
+            TableSink.stripScheme(
+              TableSink.decodePath(col("_metadata.file_path"))).as("__mf_key"))
           .where(length(col("file")) > 0 && !col("file").startsWith("#"))
           .join(broadcast(byPath), "__mf_key")
           .select(col("file"), col("rank"))
@@ -2782,68 +2808,73 @@ final class TableSink(val config: SinkConfig) {
   }
 
   /** One row per live data file — (file_path, record_count, size_bytes,
-    * modified_at), Iceberg's `files` table. Fully DISTRIBUTED: the counts
-    * come from one scan that reads only the `_metadata` struct (column
-    * pruning leaves data columns untouched; parquet serves the row counts
-    * from footers), so a 100 TB table's file inventory costs a
-    * metadata-only scan across executors, never a driver-side loop over
-    * millions of footers. */
-  def metaFiles(spark: SparkSession): DataFrame = {
-    val rels =
-      if (config.versioned && snapshotVersions().nonEmpty)
-        manifestFiles(snapshotVersions().last)
-      else listDataFiles()
-    // per-relation capture (round-14): a mixed-spine or clone manifest
-    // unions several scan relations, where `_metadata` is unresolvable —
-    // the inventory must come from columns captured inside each relation
-    readFiles(spark, rels, captureFileMeta = true)
-      .groupBy(col("__graft_file").as("file_path"))
-      .agg(count(lit(1)).as("record_count"),
-        first(col("__graft_size")).as("size_bytes"),
-        first(col("__graft_mtime")).as("modified_at"))
-  }
+    * modified_at), Iceberg's `files` table, answered from the head
+    * manifest alone: every commit records each file it adds with its
+    * rows, bytes and modification time ([[entryLines]]), so no data file
+    * is opened or scanned. An entry without those facts (written before
+    * commits recorded them) costs one footer read on the driver, as does
+    * every file of an unversioned table, which has no manifest.
+    * `file_path` is the URI a scan reports as `_metadata.file_path`.
+    * Driver cost is O(live files), the same as resolving the head
+    * manifest for any read. */
+  def metaFiles(spark: SparkSession): DataFrame =
+    spark.createDataFrame(
+      fileInventory().map { f =>
+        org.apache.spark.sql.Row(f.uri, f.facts.rows, f.facts.size,
+          new java.sql.Timestamp(f.facts.mtimeMs))
+      }.asJava,
+      StructType.fromDDL("file_path STRING NOT NULL, " +
+        "record_count BIGINT NOT NULL, size_bytes BIGINT, " +
+        "modified_at TIMESTAMP"))
 
   /** Iceberg's `partitions` metadata table: one row per live partition —
     * (partition, record_count, file_count, size_bytes), the rollup a
     * maintenance pipeline reads to find skewed or fragmented partitions
-    * before compaction. The partition identity is recovered from the data
-    * file PATH (the `col=value` directory spine), not from data columns,
-    * so derived-transform partitions (day/bucket/truncate) report their
-    * transformed values exactly as written and the scan stays
-    * metadata-only: like [[metaFiles]], the counts come from parquet
-    * footers via the `_metadata` struct with every data column pruned.
-    * Unpartitioned tables report one row with partition = ''. */
-  def metaPartitions(spark: SparkSession): DataFrame = {
-    val rels =
+    * before compaction. The partition identity is the data file's
+    * directory spine under the table root (or, for a shallow clone's
+    * source entries, under the source root), URI-encoded as in
+    * `file_path`, so derived-transform partitions (day/bucket/truncate)
+    * report their transformed values exactly as written. Like
+    * [[metaFiles]] it rolls up the head manifest's recorded facts and
+    * opens no data file. Unpartitioned tables report one row with
+    * partition = ''. */
+  def metaPartitions(spark: SparkSession): DataFrame =
+    spark.createDataFrame(
+      fileInventory().groupBy(_.partition).toSeq.sortBy(_._1).map {
+        case (p, fs) =>
+          org.apache.spark.sql.Row(p, fs.map(_.facts.rows).sum,
+            fs.size.toLong, fs.map(_.facts.size).sum)
+      }.asJava,
+      StructType.fromDDL("partition STRING NOT NULL, record_count BIGINT, " +
+        "file_count BIGINT NOT NULL, size_bytes BIGINT"))
+
+  /** The live data files behind [[metaFiles]] and [[metaPartitions]]:
+    * the head manifest's entries (the directory listing on an unversioned
+    * table), sorted by URI. */
+  private def fileInventory(): Seq[TableSink.LiveFile] = {
+    val lines =
       if (config.versioned && snapshotVersions().nonEmpty)
-        manifestFiles(snapshotVersions().last)
+        WarehouseIO.readSnapshotLines(logPath,
+          snapshotFile(snapshotVersions().last))
       else listDataFiles()
-    // strip this table's root AND (for shallow clones) the source root,
-    // so cloned files report the same partition spine as local ones; the
-    // roots compare as URI PATHS (scheme/authority stripped by the lazy
-    // prefix) so the spine is stable across file:/hdfs:/s3a: reporting
-    val roots = (rootUriPath(config.tablePath) +:
-        cloneBasePath.toSeq.map(rootUriPath))
-      .map(java.util.regex.Pattern.quote).mkString("(", "|", ")")
-    // same per-relation capture as [[metaFiles]] — `_metadata` does not
-    // resolve across a mixed-spine/clone union (round-14).
-    // OPTIMIZATION r15 (guide §4 per-row work): the partition spine is a
-    // function of the FILE path, but it sat in the per-row groupBy key —
-    // two regexp_replace evaluations per data row (measured 0.99 CPU-s of
-    // q_meta_partitions' 1.65 in that one aggregate stage). Rolling up to
-    // per-file counts first makes the regex per-file; identical groups
-    // because the old key (partition, fp) was determined by fp alone.
-    readFiles(spark, rels, captureFileMeta = true)
-      .groupBy(col("__graft_file").as("fp"))
-      .agg(count(lit(1)).as("n"),
-        first(col("__graft_size")).cast("long").as("sz"))
-      .groupBy(regexp_replace(
-          regexp_replace(col("fp"),
-            s"^[a-z][a-z0-9+.-]*:.*?$roots/?", ""),
-          "/?[^/]+$", "").as("partition"))
-      .agg(sum(col("n")).as("record_count"),
-        count(lit(1)).as("file_count"),
-        sum(col("sz")).as("size_bytes"))
+    // the scan's rendering: a qualified URI whose empty authority
+    // collapses (`file:/x`, not `file:///x`), path percent-encoded
+    def uriOf(p: org.apache.hadoop.fs.Path): String = {
+      val q = WarehouseIO.fs(p).makeQualified(p).toUri
+      new java.net.URI(q.getScheme,
+        Option(q.getAuthority).filter(_.nonEmpty).orNull, q.getPath,
+        null).toString
+    }
+    val roots = (config.tablePath +: cloneBasePath.toSeq)
+      .map(r => uriOf(new org.apache.hadoop.fs.Path(r)).stripSuffix("/") + "/")
+    lines.map { line =>
+      val path = dataPath(WarehouseIO.manifestLinePath(line))
+      val uri = uriOf(path)
+      val spine = roots.find(uri.startsWith).fold(uri)(uri.stripPrefix)
+      TableSink.LiveFile(uri, spine.take(spine.lastIndexOf('/').max(0)),
+        WarehouseIO.entryFacts(line)
+          .getOrElse(FileFooters.factsOf(path, config.fileFormat)))
+    }.sortBy(_.uri)
   }
 
   /** Iceberg `all_delete_files` metadata-table analogue: one row per
@@ -2870,16 +2901,14 @@ final class TableSink(val config: SinkConfig) {
       val keys =
         if (kds.isEmpty) None
         else {
-          val k = kds.map(kd => spark.read.parquet(kd.toString))
-            .reduce(_ unionByName _)
+          val k = readSidecars(spark, kds)
           Some((v.toLong, "keys", k.count(), k.columns.mkString(",")))
         }
       val pos = {
         val pds = idx.posDirs(v)
         if (pds.isEmpty) None
         else Some((v.toLong, "positions",
-          pds.map(pd => spark.read.parquet(pd.toString))
-            .reduce(_ unionByName _).count(),
+          readSidecars(spark, pds).count(),
           "file_path,row_pos"))
       }
       Seq(pred, keys, pos).flatten
@@ -3143,7 +3172,7 @@ final class TableSink(val config: SinkConfig) {
     // optimistic exclusive-create version claim (concurrent auditors on
     // one branch commute exactly like main appends)
     val added = stagedWrite(clusterForWrite(withDerived(Ops.ensureMessage(df))))
-    val own = WarehouseIO.writeManifest(logPath, added.distinct.sorted)
+    val own = WarehouseIO.writeManifestLines(logPath, entryLines(added))
     var attempt = 0
     var committed = false
     while (!committed) {
@@ -4280,7 +4309,7 @@ final class TableSink(val config: SinkConfig) {
           })
       }
       val keys = idx.keyDirs(v).flatMap(kd =>
-        spark.read.parquet(kd.toString).schema.fieldNames
+        readSidecars(spark, Seq(kd)).schema.fieldNames
           .map(_.toLowerCase))
       preds ++ keys
     }.toSet
@@ -4745,10 +4774,10 @@ final class TableSink(val config: SinkConfig) {
       }
     }
     val renames = renameMap
-    val r0 = spark.read.format(config.fileFormat)
-    val r =
-      if (mergeSchema || renames.nonEmpty) r0.option("mergeSchema", "true")
-      else r0
+    val opts =
+      if (mergeSchema || renames.nonEmpty) Map("mergeSchema" -> "true")
+      else Map.empty[String, String]
+    val r = spark.read.format(config.fileFormat).options(opts)
     // same sidecar-declared-schema fallback as readFiles (round-14):
     // an ALTER-widened table's mixed narrow/wide generations only read
     // under the declared schema. An explicit mergeSchema=true call
@@ -4758,6 +4787,8 @@ final class TableSink(val config: SinkConfig) {
       else config.tableSchema.orElse(alterDeclaredSchema)
     val df = applyRenames(
       declared.map(augmentWithRenameSources(_, renames))
+        .orElse(FileFooters.ofDirectory(spark, config.fileFormat,
+          config.tablePath, opts))
         .fold(r)(s => r.schema(s)).load(config.tablePath),
       renames)
     // live read = head-snapshot semantics: merge-on-read predicates apply
@@ -4791,8 +4822,10 @@ final class TableSink(val config: SinkConfig) {
       case _ => ()
     }
     val r = spark.read.format(config.fileFormat)
-    val df = captured(
-      config.tableSchema.fold(r)(s => r.schema(s)).load(config.tablePath))
+    val df = captured(config.tableSchema
+      .orElse(FileFooters.ofDirectory(spark, config.fileFormat,
+        config.tablePath))
+      .fold(r)(s => r.schema(s)).load(config.tablePath))
     snapshotVersions().lastOption.fold(df)(applyDeletes(df, _))
   }
 

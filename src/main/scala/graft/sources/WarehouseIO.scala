@@ -51,12 +51,12 @@ private[graft] object WarehouseIO {
   private val confCache = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, Configuration]())
 
-  private def conf: Configuration =
+  private[graft] def hadoopConf: Configuration =
     SparkSession.getActiveSession
       .map(s => confCache.computeIfAbsent(s, _.sessionState.newHadoopConf()))
       .getOrElse(new Configuration())
 
-  def fs(p: HPath): FileSystem = p.getFileSystem(conf)
+  def fs(p: HPath): FileSystem = p.getFileSystem(hadoopConf)
 
   def exists(p: HPath): Boolean = fs(p).exists(p)
 
@@ -392,6 +392,42 @@ private[graft] object WarehouseIO {
     name
   }
 
+  /** What a commit records about each data file it adds, in the manifest
+    * entry's stats JSON: rows (`n`), bytes (`size`) and modification time
+    * in epoch ms (`mtime`) — the `files` and `partitions` metadata tables
+    * answer from these without opening the file. */
+  final case class FileFacts(rows: Long, size: Long, mtimeMs: Long)
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A manifest line for `path`: its column-stats JSON (if any) with
+    * `facts` (if any) merged in; a bare path when neither is given. */
+  def renderEntry(path: String, stats: Option[String],
+      facts: Option[FileFacts]): String = facts match {
+    case None => stats.fold(path)(j => s"$path\t$j")
+    case Some(f) =>
+      val node = stats.fold(json.createObjectNode())(j =>
+        json.readTree(j).asInstanceOf[
+          com.fasterxml.jackson.databind.node.ObjectNode])
+      node.put("n", f.rows).put("size", f.size).put("mtime", f.mtimeMs)
+      s"$path\t${json.writeValueAsString(node)}"
+  }
+
+  /** The [[FileFacts]] a manifest line records; None for an entry written
+    * without them (a bare path, or column stats alone). */
+  def entryFacts(line: String): Option[FileFacts] = {
+    val i = line.indexOf('\t')
+    if (i < 0) None
+    else {
+      val node = json.readTree(line.substring(i + 1))
+      Seq("n", "size", "mtime").map(k => Option(node.get(k))) match {
+        case Seq(Some(n), Some(s), Some(m)) =>
+          Some(FileFacts(n.asLong, s.asLong, m.asLong))
+        case _ => None
+      }
+    }
+  }
+
   /** The path of a manifest line (everything before the stats TAB). */
   def manifestLinePath(line: String): String = {
     val i = line.indexOf('\t')
@@ -532,6 +568,17 @@ private[graft] object WarehouseIO {
   private[graft] val manifestContentReads =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Raw `path[\tstats]` lines of a snapshot file — the union of its
+    * manifests' lines, one per path ([[mergeManifestLines]]); a legacy
+    * inline-list snapshot's bare paths. */
+  def readSnapshotLines(logDir: HPath, snapshotPath: HPath): Seq[String] =
+    snapshotManifestNames(snapshotPath) match {
+      case Some(names) =>
+        mergeManifestLines(names.map(manifestLinesOf(logDir, _)))
+      case None =>
+        readString(snapshotPath).split("\n").filter(_.nonEmpty).toIndexedSeq
+    }
+
   /** Data-file paths of manifest `name` under `logDir` (per-line stats
     * stripped). */
   def manifestFilesOf(logDir: HPath, name: String): IndexedSeq[String] =
@@ -539,15 +586,10 @@ private[graft] object WarehouseIO {
 
   /** Resolve a snapshot file to its full data-file list: layered → the
     * union of its manifests (resolved against `logDir` — branch
-    * snapshots reference manifests in the MAIN log dir); legacy → the
-    * inline list. Deduped and sorted for deterministic reads. */
+    * snapshots reference manifests in the MAIN log dir), deduped and
+    * sorted for deterministic reads; legacy → the inline list. */
   def readSnapshotFiles(logDir: HPath, snapshotPath: HPath): Seq[String] =
-    snapshotManifestNames(snapshotPath) match {
-      case Some(names) =>
-        names.flatMap(manifestFilesOf(logDir, _)).distinct.sorted
-      case None =>
-        readString(snapshotPath).split("\n").filter(_.nonEmpty).toIndexedSeq
-    }
+    readSnapshotLines(logDir, snapshotPath).map(manifestLinePath)
 
   /** Recursively list DATA files under `root` as root-relative paths:
     * any path with a `_`- or `.`-prefixed segment (metadata dirs such as

@@ -516,7 +516,9 @@ class LayoutSpec extends AnyFunSuite {
     val statLines = WarehouseIO.childNames(logDir)
       .filter(n => n.startsWith("m-") && n.endsWith(".mf"))
       .flatMap(n => WarehouseIO.manifestLinesOf(logDir, n))
-      .filter(_.contains('\t'))
+      // entries carrying zone bounds (every entry also records per-file
+      // facts, so a stats TAB alone no longer marks a zone entry)
+      .filter(_.contains("\"z\":"))
     assert(statLines.nonEmpty)
     val micros = "\"t\":\\[\"(-?\\d+)\",\"(-?\\d+)\"\\]".r
     assert(statLines.forall(l => micros.findFirstIn(l).isDefined),

@@ -12,6 +12,15 @@ class MetaTablesSpec extends AnyFunSuite {
 
   private val wh = TestSpark.tmpDir("meta_wh")
 
+  /** The data-file scans in `df`'s physical plan (v1 or v2 file sources). */
+  private def dataFileScans(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if s.scan.isInstanceOf[
+            org.apache.spark.sql.execution.datasources.v2.FileScan] => s
+    }
+
   private def mkSink(name: String): TableSink = {
     val sink = new TableSink(SinkConfig(tableName = name, warehousePath = wh,
       versioned = true,
@@ -51,11 +60,43 @@ class MetaTablesSpec extends AnyFunSuite {
     assert(files.count() ==
       sink.metaSnapshots(spark).orderBy($"version".desc)
         .select($"n_files").as[Long].head())
-    // the scan is metadata-only: every data column pruned, the parquet
-    // reader serves an EMPTY read schema (footer-only row counts)
-    val plan = files.queryExecution.executedPlan.toString
-    assert(plan.contains("ReadSchema: struct<>"),
-      s"metaFiles must prune all data columns from the scan, got:\n$plan")
+    // answered from the manifest: the plan scans no data file
+    assert(dataFileScans(files).isEmpty,
+      s"metaFiles must not scan data files, got:\n" +
+        files.queryExecution.sparkPlan)
+  }
+
+  test("metaFiles serves a head manifest mixing entries with and without " +
+    "recorded facts: per-file counts equal count(*) per file") {
+    val sink = mkSink("ms2mix")
+    // a partition value Spark escapes in the directory name: file_path
+    // must keep the scan's percent-encoded rendering
+    sink.append(Seq((6L, "a", 60.0), (7L, "d e:f%g", 70.0))
+      .toDF("id", "cat", "v"))
+    // rewrite the oldest manifest as a table written before commits
+    // recorded per-file facts: bare paths, and one column-stats-only entry
+    val logDir =
+      new org.apache.hadoop.fs.Path(sink.config.tablePath, "_graft_log")
+    val head = sink.snapshotVersions().last
+    val names = WarehouseIO.snapshotManifestNames(
+      new org.apache.hadoop.fs.Path(logDir, f"v$head%05d.list")).get
+    val old = WarehouseIO.manifestLinesOf(logDir, names.head)
+    val stripped = old.map(WarehouseIO.manifestLinePath)
+    WarehouseIO.writeString(new org.apache.hadoop.fs.Path(logDir, names.head),
+      (s"${stripped.head}\t{\"n\":${WarehouseIO.entryFacts(old.head).get.rows}}"
+        +: stripped.tail).mkString("\n"))
+    val lines = names.flatMap(WarehouseIO.manifestLinesOf(logDir, _))
+    assert(lines.exists(WarehouseIO.entryFacts(_).isEmpty) &&
+      lines.exists(WarehouseIO.entryFacts(_).isDefined),
+      s"the head must mix entries with and without facts: $lines")
+    val served = sink.metaFiles(spark)
+      .select($"file_path", $"record_count").as[(String, Long)]
+      .collect().toMap
+    val counted = sink.read(spark)
+      .groupBy(col("_metadata.file_path")).count()
+      .as[(String, Long)].collect().toMap
+    assert(served == counted)
+    assert(dataFileScans(sink.metaFiles(spark)).isEmpty)
   }
 
   test("metaFiles tracks the head snapshot, not stale history") {
@@ -82,11 +123,11 @@ class MetaTablesSpec extends AnyFunSuite {
     assert(parts.agg(sum($"file_count")).as[Long].head() ==
       sink.metaFiles(spark).count())
     assert(parts.filter($"size_bytes" <= 0 || $"file_count" < 1).count() == 0)
-    // metadata-only scan here too: empty parquet read schema
-    val plan = sink.metaPartitions(spark)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ReadSchema: struct<>"),
-      s"metaPartitions must prune all data columns, got:\n$plan")
+    // answered from the manifest here too: no data-file scan
+    val mp = sink.metaPartitions(spark)
+    assert(dataFileScans(mp).isEmpty,
+      s"metaPartitions must not scan data files, got:\n" +
+        mp.queryExecution.sparkPlan)
   }
 
   test("metaPartitions reports one '' partition for unpartitioned tables") {
@@ -155,6 +196,25 @@ class MetaTablesSpec extends AnyFunSuite {
     assert(intercept[IllegalArgumentException](unv.metaSnapshots(spark))
       .getMessage.contains("versioned"))
     assert(unv.metaFiles(spark).agg(sum($"record_count")).as[Long].head() == 1L)
+  }
+
+  test("ORC commits record per-file facts too: the inventory is exact " +
+    "without a data-file scan") {
+    val orc = new TableSink(SinkConfig(tableName = "ms_orc", warehousePath = wh,
+      versioned = true, fileFormat = "orc",
+      partitionSpec = Seq(PartitionField("cat", Transform.Identity))))
+    orc.append(Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "a", 3.0))
+      .toDF("id", "cat", "v"))
+    val logDir =
+      new org.apache.hadoop.fs.Path(orc.config.tablePath, "_graft_log")
+    val lines = WarehouseIO.readSnapshotLines(logDir,
+      new org.apache.hadoop.fs.Path(logDir, "v00001.list"))
+    assert(lines.nonEmpty && lines.forall(WarehouseIO.entryFacts(_).isDefined),
+      s"every entry records its facts: $lines")
+    val parts = orc.metaPartitions(spark)
+      .select($"partition", $"record_count").as[(String, Long)].collect().toMap
+    assert(parts == Map("cat=a" -> 2L, "cat=b" -> 1L))
+    assert(dataFileScans(orc.metaFiles(spark)).isEmpty)
   }
 
   test("metaFiles/metaPartitions serve MIXED-SPINE (partition-spec-" +

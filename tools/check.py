@@ -13,14 +13,18 @@ import json, subprocess, sys, glob, os
 import duckdb
 import pandas as pd
 
+# the checkout this script lives in: sbt runs there, and output defaults
+# under its target/
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-OUT_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify_out"
+OUT_DIR = (sys.argv[2] if len(sys.argv) > 2
+           else os.path.join(ROOT, "target", "verify_out"))
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 def run_verify():
     cmd = ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT_DIR}']
-    r = subprocess.run(cmd, cwd="/root/repo", capture_output=True, text=True)
+    r = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True)
     for line in r.stdout.splitlines():
         if "[verify]" in line or "error" in line.lower():
             print(line)
