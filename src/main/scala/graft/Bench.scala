@@ -37,6 +37,24 @@ object Bench {
     "q_stream_versioned", "q_merge_upsert", "q_time_travel",
     "q_changelog_replicate")
 
+  /** One query's record: an untimed `warmUp`, then `runs` timed
+    * `sample`s (each returns wall, executor CPU and task run seconds),
+    * kept as (wall min, CPU min, run min, every wall). None when any of
+    * them throws (NonFatal only: OOM/LinkageError must abort): a FAILED
+    * query gets no timing. */
+  private[graft] def measure(name: String, runs: Int)(warmUp: => Unit)(
+      sample: => (Double, Double, Double))
+      : Option[(Double, Double, Double, Seq[Double])] =
+    try {
+      warmUp
+      val s = (1 to runs).map(_ => sample)
+      Some((s.map(_._1).min, s.map(_._2).min, s.map(_._3).min, s.map(_._1)))
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"WARN bench query $name failed: $e")
+        None
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -95,7 +113,9 @@ object Bench {
     // Warm-of-N: the first (untimed) run absorbs session JIT, whole-stage
     // codegen compilation, and each custom kernel family's first-use
     // cost; timed runs then sample the plan-faithful warm time and the
-    // MIN is recorded. NonFatal only: OOM/LinkageError must abort.
+    // MIN is recorded. A query that throws in any run is FAILED: it
+    // stays out of the totals (recording the time it took to fail would
+    // make it look fast) and both stdout lines list it.
     // System.gc() between queries keeps a shuffle-heavy query's garbage
     // debt from being billed inside its neighbors; blocking unpersist
     // evicts leaked caches/localCheckpoints (the ContextCleaner is
@@ -105,30 +125,22 @@ object Bench {
         .foreach(_.unpersist(blocking = true))
       System.gc()
     }
-    // name -> (wallMinSec, cpuMinSec, runMinSec, per-run walls)
-    val results = SparkEntry.queries.map { case (name, fn) =>
+    val outcomes = SparkEntry.queries.map { case (name, fn) =>
       evict()
-      try { fn(spark, sfDir).count() } catch {
-        case NonFatal(e) =>
-          System.err.println(s"WARN bench warm-up of $name failed: $e")
-      }
-      val samples = (1 to runs).map { _ =>
+      name -> measure(name, runs)(fn(spark, sfDir).count()) {
         evict()
         drain()
         val cpu0 = taskCpuNs.get(); val run0 = taskRunMs.get()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch {
-          case NonFatal(e) =>
-            System.err.println(s"WARN bench timed run of $name failed: $e")
-        }
+        fn(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
         drain()
-        (wall, (taskCpuNs.get() - cpu0) / 1e9,
-          (taskRunMs.get() - run0) / 1e3)
+        (wall, (taskCpuNs.get() - cpu0) / 1e9, (taskRunMs.get() - run0) / 1e3)
       }
-      name -> ((samples.map(_._1).min, samples.map(_._2).min,
-        samples.map(_._3).min, samples.map(_._1)))
     }
+    val results = outcomes.collect { case (k, Some(v)) => k -> v }
+    val failed = outcomes.collect { case (k, None) => k }.toSeq.sorted
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     def f4(v: Double): String = String.format(java.util.Locale.ROOT,
       "%.4f", Double.box(v)) // ROOT locale: '.' decimal point, valid JSON
     def jmap(kv: Iterable[(String, Double)]): String =
@@ -142,7 +154,7 @@ object Bench {
     val fullJson =
       s"""{"metric":"total","value":${f4(wallTotal)},"unit":"sec",""" +
       s""""cpu_sec":${f4(cpuTotal)},"run_sec":${f4(runTotal)},""" +
-      s""""timing":"$timing","sf":"$sfDir",""" +
+      s""""timing":"$timing","sf":"$sfDir","failed":$failedJson,""" +
       s""""queries":${jmap(results.map { case (k, v) => k -> v._1 })},""" +
       s""""queries_cpu":${jmap(results.map { case (k, v) => k -> v._2 })},""" +
       s""""queries_runs":${results.map { case (k, v) =>
@@ -170,6 +182,7 @@ object Bench {
       s"""{"metric":"total","value":${f4(wallTotal)},"unit":"sec",""" +
       s""""cpu_sec":${f4(cpuTotal)},"nq":${results.size},""" +
       s""""timing":"$timing","sf":"$sfDir","full":"$out",""" +
+      s""""failed":$failedJson,""" +
       s""""queries":${jmap(head)},"queries_cpu":${jmap(headCpu)}}"""
     println(json)
     spark.stop()

@@ -61,8 +61,9 @@ object TextAnalysis {
     scored.select(col("doc_id"), col("lang"), pred.as("pred_lang"))
   }
 
-  /** Quality score in [0,1]: 0.4·length + 0.4·stopword-hit + 0.2·(1-punct).
-    * Fixed evaluation order keeps the double arithmetic bit-identical to
+  /** Quality score in [0,1]: 0.4·length + 0.4·stopword-hit + 0.2·(1-punct),
+    * NULL for an empty document (its punctuation ratio is 0/0). Fixed
+    * evaluation order keeps the double arithmetic bit-identical to
     * the oracle. Exposed as a Column so pipelines attach it in-place
     * (no self-join, stays inside the document scan). */
   def qualityExpr(text: Column): Column = {
@@ -72,7 +73,10 @@ object TextAnalysis {
     val stopHits = markerScore(t, markers.head._2) // en stopwords
     val stopScore = least((stopHits * lit(10.0)) / nTok, lit(1.0))
     val punct = length(text) - length(regexp_replace(text, "[^a-z0-9 ]", ""))
-    val punctRatio = punct / length(text).cast("double")
+    // an empty document has no ratio: NULL, as the oracle SQL's
+    // 0 / CAST(0 AS DOUBLE) is, where a bare division fails the whole
+    // query under ANSI mode
+    val punctRatio = punct / nullif(length(text), lit(0)).cast("double")
     lengthScore * lit(0.4) + stopScore * lit(0.4) +
       (lit(1.0) - punctRatio) * lit(0.2)
   }

@@ -1915,9 +1915,17 @@ final class TableSink(val config: SinkConfig) {
     * rows). A NULL in the list is REFUSED (round-13): it never matches
     * the anti-join (SQL join semantics), so the erasure it stands for
     * would silently not happen — the one failure mode a
-    * right-to-be-forgotten path must not have. Returns the committed
-    * version. */
-  def deleteKeys(keys: DataFrame, keyCols: Seq[String]): Int = {
+    * right-to-be-forgotten path must not have. The list is committed as
+    * its distinct key tuples. Returns the committed version. */
+  def deleteKeys(keys: DataFrame, keyCols: Seq[String]): Int =
+    deleteKeys(keys, keyCols, proven = false)
+
+  /** [[deleteKeys]]. `proven`: the caller has proved the key tuples of
+    * `keys` distinct and non-null (the replication apply's net-delete
+    * winners, whose NULL count its pin observed), so the NULL probe and
+    * the `distinct` are skipped; every other check still runs. */
+  private def deleteKeys(keys: DataFrame, keyCols: Seq[String],
+      proven: Boolean): Int = {
     requireNoStreamingLog()
     require(keyCols.nonEmpty, "deleteKeys needs at least one key column")
     require(keyCols.forall(keys.columns.contains),
@@ -1926,8 +1934,9 @@ final class TableSink(val config: SinkConfig) {
     // one bounded pass over the LIST (never the table): a NULL key tuple
     // anti-joins against nothing, so committing it would record an
     // erasure that never erases — refuse with the row, not a warning
-    require(keys.where(keyCols.map(col(_).isNull).reduceLeft(_ || _))
-      .limit(1).collect().isEmpty,
+    require(proven ||
+      keys.where(keyCols.map(col(_).isNull).reduceLeft(_ || _))
+        .limit(1).collect().isEmpty,
       s"deleteKeys list carries NULL in (${keyCols.mkString(", ")}): a " +
         "NULL key never matches the erasure anti-join, so those rows " +
         "would silently survive; filter or repair the list first")
@@ -1945,7 +1954,8 @@ final class TableSink(val config: SinkConfig) {
     // atomicity note — changelog consumers must never observe the
     // version before its sidecar)
     val sidecar = s"keys-${java.util.UUID.randomUUID().toString.take(12)}"
-    keys.select(keyCols.map(col): _*).distinct()
+    val list = keys.select(keyCols.map(col): _*)
+    (if (proven) list else list.distinct())
       .write.mode("overwrite").parquet(logFile(sidecar).toString)
     try commitAppendedFiles(Nil, keysRef = Some(sidecar))
     catch { case e: Throwable =>
@@ -2522,9 +2532,15 @@ final class TableSink(val config: SinkConfig) {
     * IDEMPOTENT under the keys, so the cursor's at-least-once replay (a
     * crash between apply and commit re-applies the batch) converges to
     * exactly-once replica state. Keys must be unique within a source
-    * commit (the same keyed-upsert contract the library API has).
+    * commit and non-null (the same keyed-upsert contract the library API
+    * has). A batch whose winners pin proves that — every insert row is
+    * its key's sole insert and winner, no NULL key — skips
+    * [[upsertMor]]'s key check and envelope aggregate and [[deleteKeys]]'
+    * NULL probe and distinct; any other batch meets those entries' own
+    * checks and refusals.
     *
-    * Returns the source versions consumed. The replica must be versioned
+    * Returns the source versions consumed, observed by the batch pin's
+    * own pass (no separate job). The replica must be versioned
     * (deletes land as merge-on-read key lists). A MoR-capable replica
     * (parquet, no live branch) takes each insert batch as ONE
     * position-delete + append commit ([[upsertMor]]) — O(batch) data IO
@@ -2536,13 +2552,14 @@ final class TableSink(val config: SinkConfig) {
     require(keyCols.nonEmpty, "replicateTo needs at least one key column")
     requireReplica(dest)
     val (batch, commit) = readChangelogSince(spark, cursorPath)
-    val b = batch.localCheckpoint() // pin the batch before dest ops run jobs
-    import spark.implicits._
-    val versions = b.select(col("_change_version"))
-      .distinct().as[Long].collect().sorted // bounded: commit count
+    // pin the batch before dest ops run jobs; the pin's pass also
+    // collects the consumed versions (bounded: commit count)
+    val (b, seen) = pinObserved(batch,
+      Seq(collect_set(col("_change_version").cast("long")).as("versions")))
+    val versions = seen("versions").asInstanceOf[Seq[Long]].sorted
     applyChangeBatch(dest, b, keyCols)
     commit()
-    versions.toSeq
+    versions
   }
 
   private def requireReplica(dest: TableSink): Unit = {
@@ -2553,10 +2570,32 @@ final class TableSink(val config: SinkConfig) {
       "a table cannot replicate onto itself")
   }
 
+  /** `df` pinned by `localCheckpoint`, with `metrics` computed by the
+    * pin's own pass (`Dataset.observe`, delivered once the pin's job
+    * succeeds — an empty frame observes counts of 0 and NULL min/max). */
+  private def pinObserved(df: DataFrame,
+      metrics: Seq[Column]): (DataFrame, Map[String, Any]) = {
+    val obs = org.apache.spark.sql.Observation()
+    val pinned = df.observe(obs, metrics.head, metrics.tail: _*)
+      .localCheckpoint()
+    (pinned, obs.get)
+  }
+
   /** Apply one changelog batch to `dest` as NET CHANGES (see
     * [[replicateTo]]'s contract notes — per key the highest-version
     * change wins, surviving inserts land as ONE keyed upsert and net
-    * deletes as ONE deleteKeys, both idempotent under the keys). */
+    * deletes as ONE deleteKeys, both idempotent under the keys).
+    *
+    * The key checks the public entries run as separate jobs are facts
+    * the winners pin already observes. Net-delete keys are one row per
+    * key group, so [[deleteKeys]]'s `distinct` is skipped, and so is its
+    * NULL probe when no delete winner has a NULL key. When every insert
+    * row is its key's sole insert and winner and none has a NULL key,
+    * the insert batch provably meets [[upsertMor]]'s key contract: its
+    * uniqueness check is skipped, and the observed min/max of the insert
+    * winners' keys are its key envelope. Any other batch goes through
+    * the public entries unchanged, so a duplicate key within a source
+    * commit or a NULL key is refused with their messages. */
   private def applyChangeBatch(dest: TableSink, b: DataFrame,
       keyCols: Seq[String]): Unit = {
     // per key, the highest-version change wins; WITHIN one version a
@@ -2575,35 +2614,37 @@ final class TableSink(val config: SinkConfig) {
     // the r15 fixture's delete batch is 88.5k of 100k rows) never
     // shuffles or checkpoints a payload byte; net INSERT payloads attach
     // once, by (key, version) semi-join against the checkpointed batch.
-    // The winners frame is checkpointed (O(batch) narrow rows) and every
-    // emptiness probe reads it, not the batch.
+    // The winners frame is checkpointed (O(batch) narrow rows).
     val verCol = col("_change_version")
     val typCol = col("_change_type")
-    val winners = b
-      .groupBy(keyCols.map(col): _*)
-      .agg(max(struct(verCol.as("v"), typCol.as("t"))).as("__w"),
-        count(when(typCol === "insert", 1)).as("__ni"))
-      .select(keyCols.map(col) :+ col("__w.v").as("_change_version") :+
-        col("__w.t").as("_change_type") :+ col("__ni"): _*)
-      .localCheckpoint()
-    val del = winners.filter(typCol === "delete")
-      .select(keyCols.map(col): _*)
-    // ONE tiny pass over the narrow winners frame decides both branches
-    // AND whether the insert attach needs a join at all (the former
-    // shape was two per-branch isEmpty actions over a payload frame):
-    // nDel/nIns gate the apply ops; `every` is true iff every batch
-    // insert row is its key's winner (per-key insert count ≤ 1 and the
-    // sole insert, when present, is the winner) — the CDC steady state.
-    val stats = winners.agg(
-      count(when(typCol === "delete", 1)).as("nd"),
-      count(when(typCol === "insert", 1)).as("niW"),
-      count(when(col("__ni") > 1 ||
-        (col("__ni") === 1 && typCol =!= "insert"), 1)).as("nSuperseded"))
-      .head()
-    val (nDel, nIns, every) =
-      (stats.getLong(0), stats.getLong(1), stats.getLong(2) == 0L)
+    val isIns = typCol === "insert"
+    val isDel = typCol === "delete"
+    val nullKey = keyCols.map(col(_).isNull).reduceLeft(_ || _)
+    val bounded = boundableKeys(b.schema, keyCols)
+    // the winners pin's own pass decides both branches and whether the
+    // insert attach needs a join at all: nDel/nIns gate the apply ops;
+    // `every` is true iff every batch insert row is its key's winner
+    // (per-key insert count ≤ 1 and the sole insert, when present, is
+    // the winner) — the CDC steady state
+    val (winners, facts) = pinObserved(
+      b.groupBy(keyCols.map(col): _*)
+        .agg(max(struct(verCol.as("v"), typCol.as("t"))).as("__w"),
+          count(when(isIns, 1)).as("__ni"))
+        .select(keyCols.map(col) :+ col("__w.v").as("_change_version") :+
+          col("__w.t").as("_change_type") :+ col("__ni"): _*),
+      Seq(count(when(isDel, 1)).as("nd"),
+        count(when(isIns, 1)).as("niW"),
+        count(when(col("__ni") > 1 ||
+          (col("__ni") === 1 && !isIns), 1)).as("nSuperseded"),
+        count(when(isDel && nullKey, 1)).as("ndNull"),
+        count(when(isIns && nullKey, 1)).as("niNull")) ++
+        bounded.flatMap(c => Seq(min(when(isIns, col(c))).as(s"min_$c"),
+          max(when(isIns, col(c))).as(s"max_$c"))))
+    def n(name: String) = facts(name).asInstanceOf[Long]
+    val (nDel, nIns, every) = (n("nd"), n("niW"), n("nSuperseded") == 0L)
+    val del = winners.filter(isDel).select(keyCols.map(col): _*)
     lazy val ins = {
-      val bIns = b.filter(typCol === "insert")
+      val bIns = b.filter(isIns)
       // steady state (every insert row is its key's winner — keys unique
       // within a commit, none superseded in the batch): no join needed.
       // Otherwise attach by null-safe (key, version) semi-join: the
@@ -2613,7 +2654,7 @@ final class TableSink(val config: SinkConfig) {
       val raw =
         if (every) bIns
         else {
-          val wIns = winners.filter(typCol === "insert")
+          val wIns = winners.filter(isIns)
             .select((keyCols :+ "_change_version").map(c =>
               col(c).as(s"__w_$c")): _*)
           bIns.join(wIns, (keyCols :+ "_change_version")
@@ -2629,7 +2670,7 @@ final class TableSink(val config: SinkConfig) {
     // a fresh replica has nothing to delete yet (and deleteKeys would
     // rightly refuse a table with no committed snapshot)
     if (dest.snapshotVersions().nonEmpty && nDel > 0L)
-      dest.deleteKeys(del, keyCols)
+      dest.deleteKeys(del, keyCols, proven = n("ndNull") == 0L)
     if (nIns > 0L) {
       // MERGE-ON-READ apply (round-12): a MoR-capable replica takes the
       // insert batch as ONE position-delete + append commit
@@ -2639,8 +2680,11 @@ final class TableSink(val config: SinkConfig) {
       // keyed idempotence, so the at-least-once replay contract holds.
       val morApply = dest.config.versioned &&
         dest.config.fileFormat == "parquet" && dest.branches().isEmpty
-      if (morApply) dest.upsertMor(ins, keyCols)
-      else dest.upsert(ins, keyCols)
+      if (!morApply) dest.upsert(ins, keyCols)
+      else if (every && n("niNull") == 0L)
+        dest.upsertMor(ins, keyCols, provenBounds = Some(bounded.map(c =>
+          (c, facts(s"min_$c"), facts(s"max_$c")))))
+      else dest.upsertMor(ins, keyCols)
     }
     // bounded read cost: sidecars stack one per apply (delete key lists
     // AND the MoR upsert's position lists) — fold past the replica
@@ -3537,11 +3581,21 @@ final class TableSink(val config: SinkConfig) {
     * free). Same atomic `#pos`-in-snapshot shape as [[updateMor]], same
     * lost-race re-resolution, same key contract as [[upsert]] (keys
     * unique within the batch, non-null — ENFORCED since round-13, one
-    * O(batch) pass). Sidecars stack one per apply —
+    * O(batch) pass), then one bounded aggregate for the batch's key
+    * envelope. Sidecars stack one per apply —
     * pair with [[maybeConsolidateDeletes]] (the replication apply does)
     * or [[compact]]. Versioned parquet tables only; a table with no
     * commits yet takes the plain append. */
-  def upsertMor(df: DataFrame, keyCols: Seq[String]): Unit = {
+  def upsertMor(df: DataFrame, keyCols: Seq[String]): Unit =
+    upsertMor(df, keyCols, provenBounds = None)
+
+  /** [[upsertMor]]. `provenBounds`: the caller has proved the key tuples
+    * of `df` non-null and unique (the replication apply, from its
+    * winners pin) and supplies their (column, min, max) over
+    * [[boundableKeys]], so the key-contract pass and the envelope
+    * aggregate are skipped; every other check still runs. */
+  private def upsertMor(df: DataFrame, keyCols: Seq[String],
+      provenBounds: Option[Seq[(String, Any, Any)]]): Unit = {
     require(keyCols.nonEmpty, "upsertMor needs at least one key column")
     requireNoStreamingLog()
     val liveBranches = branchesOrPending()
@@ -3549,7 +3603,7 @@ final class TableSink(val config: SinkConfig) {
       "upsertMor while a branch is live would make the audit surface " +
         "disagree with main; publish or drop first: " +
         liveBranches.mkString(", "))
-    requireKeyedBatch(df, keyCols, "upsertMor")
+    if (provenBounds.isEmpty) requireKeyedBatch(df, keyCols, "upsertMor")
     recoverSwap()
     require(config.versioned,
       "merge-on-read upsert needs versioned=true (position sidecars are " +
@@ -3563,40 +3617,36 @@ final class TableSink(val config: SinkConfig) {
     // withDerived) so the replacement aligns with the head frame's
     // columns on hidden-transform tables too
     val incoming = withDerived(Ops.ensureMessage(df))
-    val incomingKeys = incoming.select(keyCols.map(col): _*).distinct()
+    // proven keys are already distinct: the semi-join's build side needs
+    // no aggregate of its own
+    val batchKeys = incoming.select(keyCols.map(col): _*)
+    val incomingKeys =
+      if (provenBounds.isDefined) batchKeys else batchKeys.distinct()
     // OPTIMIZATION r15 (guide §3.2 / §6): the position resolve only needs
-    // head rows whose key COULD match a batch key, so compute the batch's
-    // per-column key envelope (ONE bounded aggregate — two values per key
-    // column) and push it as a range predicate into the head scan: parquet
-    // row-group stats then skip everything outside the envelope, instead
-    // of re-reading the whole replica per batch. Conservative superset —
+    // head rows whose key COULD match a batch key, so bound the scan by
+    // the batch's per-column key envelope (two values per key column)
+    // pushed as a range predicate into the head scan: parquet row-group
+    // stats then skip everything outside the envelope, instead of
+    // re-reading the whole replica per batch. Conservative superset —
     // the semi-join still decides exact membership; non-orderable key
     // types simply skip their bound. Batch keys are non-null (enforced
-    // by requireKeyedBatch above), so dropping null-key head rows is
-    // sound: they can never match the semi-join.
-    val boundable = keyCols.filter { c =>
-      incoming.schema(incoming.schema.fieldIndex(c)).dataType match {
-        case _: org.apache.spark.sql.types.NumericType |
-             org.apache.spark.sql.types.StringType |
-             org.apache.spark.sql.types.TimestampType |
-             org.apache.spark.sql.types.DateType => true
-        case _ => false
+    // by requireKeyedBatch above, or proved by the caller), so dropping
+    // null-key head rows is sound: they can never match the semi-join.
+    val bounds = provenBounds.getOrElse {
+      val boundable = boundableKeys(incoming.schema, keyCols)
+      if (boundable.isEmpty) Nil
+      else {
+        val aggs = boundable.flatMap(c => Seq(min(col(c)), max(col(c))))
+        val row = incomingKeys.agg(aggs.head, aggs.tail: _*).head()
+        boundable.zipWithIndex.map { case (c, i) =>
+          (c, row.get(2 * i), row.get(2 * i + 1))
+        }
       }
     }
-    val keyEnvelope: Option[Column] =
-      if (boundable.isEmpty) None
-      else {
-        val row = incomingKeys.agg(
-          boundable.flatMap(c => Seq(min(col(c)), max(col(c)))).head,
-          boundable.flatMap(c => Seq(min(col(c)), max(col(c)))).tail: _*)
-          .head()
-        val conj = boundable.zipWithIndex.flatMap { case (c, i) =>
-          if (row.isNullAt(2 * i)) None // empty batch: no envelope
-          else Some(col(c) >= lit(row.get(2 * i)) &&
-            col(c) <= lit(row.get(2 * i + 1)))
-        }
-        conj.reduceOption(_ && _)
-      }
+    val keyEnvelope: Option[Column] = bounds.flatMap { case (c, lo, hi) =>
+      if (lo == null) None // empty batch: no envelope
+      else Some(col(c) >= lit(lo) && col(c) <= lit(hi))
+    }.reduceOption(_ && _)
     var attempt = 0
     while (attempt < 5) {
       attempt += 1
@@ -3605,12 +3655,12 @@ final class TableSink(val config: SinkConfig) {
       requireAlignedBatch(incoming.columns.toSeq,
         base.columns.toSeq.filterNot(c =>
           c == "__graft_file" || c == "__graft_pos"), "upsertMor")
-      // pin ONE evaluation: the position list must describe exactly the
-      // head rows this commit's appends replace
+      // the position list is evaluated ONCE, by commitMorMutation's
+      // write: it describes exactly the head rows this commit's appends
+      // replace (the appends are the batch itself, not derived from it)
       val matched = base.join(incomingKeys, keyCols, "left_semi")
         .select(col("__graft_file").as("file_path"),
           col("__graft_pos").as("row_pos"))
-        .localCheckpoint()
       try {
         // select resolves case-insensitively (a batch may legally carry
         // case-different names — round-14); toDF pins the TABLE's
@@ -3629,6 +3679,21 @@ final class TableSink(val config: SinkConfig) {
       }
     }
   }
+
+  /** The key columns of `schema` whose min/max can bound a parquet scan
+    * (row-group stats): numeric, string, timestamp and date keys. */
+  private def boundableKeys(schema: StructType,
+      keyCols: Seq[String]): Seq[String] =
+    keyCols.filter { c =>
+      schema.find(_.name == c).orElse(schema.find(_.name.equalsIgnoreCase(c)))
+        .exists(_.dataType match {
+          case _: org.apache.spark.sql.types.NumericType |
+               org.apache.spark.sql.types.StringType |
+               org.apache.spark.sql.types.TimestampType |
+               org.apache.spark.sql.types.DateType => true
+          case _ => false
+        })
+    }
 
   /** Commit `df` with DYNAMIC partition overwrite: exactly the partitions
     * present in `df` are replaced, every other partition is untouched.
@@ -4386,18 +4451,26 @@ final class TableSink(val config: SinkConfig) {
     * V1 bridge, and consolidation can never clear it. With nothing
     * pinned to the analysis-time head, a pure append also commutes with
     * concurrent commits, so it takes the normal retrying claim rather
-    * than this primitive's single-attempt contract. */
+    * than this primitive's single-attempt contract.
+    *
+    * `positions` is evaluated exactly once, by the sidecar write, and
+    * whether it was empty comes from the written files' footers — no
+    * pin and no emptiness probe. A caller whose replacement rows derive
+    * from the same lineage as the positions pins that lineage first
+    * ([[updateMor]], the SQL MERGE), so both describe the same rows. */
   private[graft] def commitMorMutation(spark: SparkSession,
       positions: DataFrame, replacement: DataFrame): Int = {
-    // callers localCheckpoint the frame positions derive from, so the
-    // emptiness probe is a cheap scan of pinned partitions
-    val sidecarOpt =
-      if (positions.isEmpty) None
-      else Some(s"pos-${java.util.UUID.randomUUID().toString.take(12)}")
+    val sidecar = s"pos-${java.util.UUID.randomUUID().toString.take(12)}"
+    val sidecarDir = logFile(sidecar)
     var added: Seq[String] = Nil
     try {
-      sidecarOpt.foreach(s =>
-        positions.write.mode("overwrite").parquet(logFile(s).toString))
+      positions.write.mode("overwrite").parquet(sidecarDir.toString)
+      val nonEmpty = WarehouseIO.listDataFilesRel(sidecarDir).exists(rel =>
+        FileFooters.factsOf(new org.apache.hadoop.fs.Path(sidecarDir, rel),
+          "parquet").rows > 0L)
+      val sidecarOpt =
+        if (nonEmpty) Some(sidecar)
+        else { WarehouseIO.delete(sidecarDir, recursive = true); None }
       val prepared = clusterForWrite(withDerived(replacement))
       added = stagedWrite(prepared) // constraint gate runs in staging
       commitAppendedFiles(added,
@@ -4408,8 +4481,7 @@ final class TableSink(val config: SinkConfig) {
       case e: Throwable =>
         // the claim never landed: this attempt's sidecar and staged
         // files are unreferenced — drop them before propagating
-        sidecarOpt.foreach(s =>
-          WarehouseIO.delete(logFile(s), recursive = true))
+        WarehouseIO.delete(sidecarDir, recursive = true)
         added.foreach(rel => WarehouseIO.delete(
           new org.apache.hadoop.fs.Path(config.tablePath, rel)))
         throw e

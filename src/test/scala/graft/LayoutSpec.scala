@@ -7,8 +7,7 @@ class LayoutSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmpWarehouse(): String =
-    s"/root/repo/target/tmp/graft_layout_${java.util.UUID.randomUUID()}"
+  private def tmpWarehouse(): String = TestSpark.tmpDir("graft_layout")
 
   test("zvalue interleaves bits LSB-first, dimension i at position b*n+i") {
     // x=3 (011), y=5 (101), 3 bits, spans 0..7 -> identity normalization:

@@ -23,6 +23,8 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+  /** A fresh path under the checkout's `target/tmp` (the forked test JVM
+    * runs in the project directory). */
   def tmpDir(prefix: String): String =
-    s"/root/repo/target/tmp/${prefix}_${java.util.UUID.randomUUID()}"
+    s"${sys.props("user.dir")}/target/tmp/${prefix}_${java.util.UUID.randomUUID()}"
 }

@@ -155,6 +155,32 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(q.forall(v => v >= 0.0 && v <= 1.0))
   }
 
+  test("quality score is NULL for an empty document and bit-identical " +
+    "for the others") {
+    val docs = Tables.documents(spark, TestSpark.sfDir).select("doc_id", "text")
+    val withEmpty = docs.unionByName(Seq((-1L, "")).toDF("doc_id", "text"))
+    val got = TextAnalysis.qualityScore(withEmpty)
+      .select($"doc_id", $"quality").as[(Long, Option[Double])]
+      .collect().toMap
+    assert(got(-1L).isEmpty, "an empty document has no punctuation ratio")
+    // the score as the bare division computed it, on non-empty documents
+    val t = split($"text", " ")
+    val punct = length($"text") -
+      length(regexp_replace($"text", "[^a-z0-9 ]", ""))
+    val stopHits = size(filter(t, tok => array_contains(
+      array(TextAnalysis.markers.head._2.map(lit): _*), tok)))
+    val reference = least(size(t) / lit(100.0), lit(1.0)) * lit(0.4) +
+      least((stopHits * lit(10.0)) / size(t), lit(1.0)) * lit(0.4) +
+      (lit(1.0) - punct / length($"text").cast("double")) * lit(0.2)
+    val expected = docs.select($"doc_id", reference.as("quality"))
+      .as[(Long, Double)].collect()
+    assert(expected.nonEmpty)
+    expected.foreach { case (id, q) =>
+      assert(got(id).map(java.lang.Double.doubleToRawLongBits)
+        .contains(java.lang.Double.doubleToRawLongBits(q)), s"doc $id")
+    }
+  }
+
   test("fingerprint matches a hand-rolled rolling hash and detects changes") {
     val df = Seq((1L, "ab"), (2L, "ab"), (3L, "ba")).toDF("doc_id", "text")
     val fps = TextAnalysis.fingerprints(df).orderBy("doc_id")
