@@ -3617,11 +3617,10 @@ final class TableSink(val config: SinkConfig) {
     // withDerived) so the replacement aligns with the head frame's
     // columns on hidden-transform tables too
     val incoming = withDerived(Ops.ensureMessage(df))
-    // proven keys are already distinct: the semi-join's build side needs
-    // no aggregate of its own
-    val batchKeys = incoming.select(keyCols.map(col): _*)
-    val incomingKeys =
-      if (provenBounds.isDefined) batchKeys else batchKeys.distinct()
+    // the key contract (enforced above, or proved by the caller) makes
+    // the batch's key tuples distinct: the semi-join's build side and the
+    // envelope aggregate need no distinct of their own
+    val incomingKeys = incoming.select(keyCols.map(col): _*)
     // OPTIMIZATION r15 (guide §3.2 / §6): the position resolve only needs
     // head rows whose key COULD match a batch key, so bound the scan by
     // the batch's per-column key envelope (two values per key column)
@@ -4454,10 +4453,15 @@ final class TableSink(val config: SinkConfig) {
     * than this primitive's single-attempt contract.
     *
     * `positions` is evaluated exactly once, by the sidecar write, and
-    * whether it was empty comes from the written files' footers — no
-    * pin and no emptiness probe. A caller whose replacement rows derive
-    * from the same lineage as the positions pins that lineage first
-    * ([[updateMor]], the SQL MERGE), so both describe the same rows. */
+    * whether it was empty comes from the written files' footers (the
+    * row counts of the statuses one listing returns) — no pin and no
+    * emptiness probe. An empty sidecar is deleted before the commit; a
+    * crash between its write and that delete leaves an unreferenced
+    * `pos-*` directory in the log, which no snapshot folds and
+    * [[removeOrphans]] (or [[vacuum]]) reclaims once it ages past the
+    * grace window. A caller whose replacement rows derive from the same
+    * lineage as the positions pins that lineage first ([[updateMor]],
+    * the SQL MERGE), so both describe the same rows. */
   private[graft] def commitMorMutation(spark: SparkSession,
       positions: DataFrame, replacement: DataFrame): Int = {
     val sidecar = s"pos-${java.util.UUID.randomUUID().toString.take(12)}"
@@ -4465,9 +4469,9 @@ final class TableSink(val config: SinkConfig) {
     var added: Seq[String] = Nil
     try {
       positions.write.mode("overwrite").parquet(sidecarDir.toString)
-      val nonEmpty = WarehouseIO.listDataFilesRel(sidecarDir).exists(rel =>
-        FileFooters.factsOf(new org.apache.hadoop.fs.Path(sidecarDir, rel),
-          "parquet").rows > 0L)
+      val nonEmpty = WarehouseIO.dataFileStatuses(sidecarDir).exists {
+        case (_, st) => FileFooters.rowCount(st, "parquet") > 0L
+      }
       val sidecarOpt =
         if (nonEmpty) Some(sidecar)
         else { WarehouseIO.delete(sidecarDir, recursive = true); None }

@@ -307,53 +307,21 @@ private[graft] object WarehouseIO {
   }
 
   /** First data file under `root` as a root-relative path — the lazy
-    * counterpart of [[listDataFilesRel]] (same `_`/`.`-segment exclusion)
-    * for format sniffing and existence checks: the recursive listing is a
-    * remote ITERATOR, so the scan stops at the first hit instead of
-    * materializing an O(files) listing. */
-  def firstDataFileRel(root: HPath): Option[String] = {
-    val f = fs(root)
-    val q = f.makeQualified(root)
-    if (!f.exists(q)) return None
-    val rootStr = q.toString
-    val it = f.listFiles(q, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile) {
-        val rel = st.getPath.toString.stripPrefix(rootStr).stripPrefix("/")
-        val segs = rel.split('/')
-        if (!segs.exists(s => s.startsWith("_") || s.startsWith(".")))
-          return Some(rel)
-      }
-    }
-    None
-  }
+    * counterpart of [[listDataFilesRel]] for format sniffing and existence
+    * checks: the scan stops at the first hit instead of materializing an
+    * O(files) listing. */
+  def firstDataFileRel(root: HPath): Option[String] =
+    dataFileStatuses(root).nextOption().map(_._1)
 
   def modifiedAtMs(p: HPath): Long = fs(p).getFileStatus(p).getModificationTime
 
   def sizeOf(p: HPath): Long = fs(p).getFileStatus(p).getLen
 
-  /** Total bytes of DATA files under `root` (same `_`/`.`-segment
-    * exclusion as [[listDataFilesRel]]) — one lazy recursive listing, the
-    * sizes taken from the listing's own statuses (no per-file stat
-    * round-trips), nothing materialized. */
-  def totalDataBytes(root: HPath): Long = {
-    val f = fs(root)
-    val q = f.makeQualified(root)
-    if (!f.exists(q)) return 0L
-    val rootStr = q.toString
-    val it = f.listFiles(q, true)
-    var sum = 0L
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile) {
-        val rel = st.getPath.toString.stripPrefix(rootStr).stripPrefix("/")
-        if (!rel.split('/').exists(s => s.startsWith("_") || s.startsWith(".")))
-          sum += st.getLen
-      }
-    }
-    sum
-  }
+  /** Total bytes of DATA files under `root`, the sizes taken from the
+    * listing's own statuses (no per-file stat round-trips), nothing
+    * materialized. */
+  def totalDataBytes(root: HPath): Long =
+    dataFileStatuses(root).map(_._2.getLen).sum
 
   /** Same-filesystem rename, creating the destination's parent; fails
     * loudly instead of silently dropping a file on a refused rename. */
@@ -591,27 +559,32 @@ private[graft] object WarehouseIO {
   def readSnapshotFiles(logDir: HPath, snapshotPath: HPath): Seq[String] =
     readSnapshotLines(logDir, snapshotPath).map(manifestLinePath)
 
-  /** Recursively list DATA files under `root` as root-relative paths:
-    * any path with a `_`- or `.`-prefixed segment (metadata dirs such as
-    * `_graft_log`/`_staging`/`_spark_metadata`, `_SUCCESS` markers,
-    * checksum sidecars) is excluded — the same convention Spark's own
-    * file index applies. Sorted for deterministic manifests. */
-  def listDataFilesRel(root: HPath): Seq[String] = {
+  /** Recursively list DATA files under `root` as root-relative paths
+    * (see [[dataFileStatuses]] for what counts as data), sorted for
+    * deterministic manifests. */
+  def listDataFilesRel(root: HPath): Seq[String] =
+    dataFileStatuses(root).map(_._1).toVector.sorted
+
+  /** The DATA files under `root` as (root-relative path, status) pairs,
+    * from one recursive listing: any path with a `_`- or `.`-prefixed
+    * segment (metadata dirs such as `_graft_log`/`_staging`/
+    * `_spark_metadata`, `_SUCCESS` markers, checksum sidecars) is
+    * excluded — the same convention Spark's own file index applies. The
+    * listing is a remote ITERATOR, consumed lazily; empty when `root` is
+    * absent. */
+  def dataFileStatuses(root: HPath)
+      : Iterator[(String, org.apache.hadoop.fs.FileStatus)] = {
     val f = fs(root)
     val q = f.makeQualified(root)
-    if (!f.exists(q)) return Vector.empty
+    if (!f.exists(q)) return Iterator.empty
     val rootStr = q.toString
     val it = f.listFiles(q, true)
-    val out = Vector.newBuilder[String]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile) {
-        val rel = st.getPath.toString.stripPrefix(rootStr).stripPrefix("/")
-        val segs = rel.split('/')
-        if (!segs.exists(s => s.startsWith("_") || s.startsWith(".")))
-          out += rel
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(_.isFile)
+      .map(st => (st.getPath.toString.stripPrefix(rootStr).stripPrefix("/"),
+        st: org.apache.hadoop.fs.FileStatus))
+      .filterNot { case (rel, _) =>
+        rel.split('/').exists(s => s.startsWith("_") || s.startsWith("."))
       }
-    }
-    out.result().sorted
   }
 }

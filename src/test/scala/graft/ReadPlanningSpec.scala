@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,23 +17,6 @@ class ReadPlanningSpec extends AnyFunSuite {
 
   private def logDir(sink: TableSink) =
     new org.apache.hadoop.fs.Path(sink.config.tablePath, "_graft_log")
-
-  /** Jobs started while `body` runs (listener bus drained both sides). */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.sql.graft.Bridge.drainListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.sql.graft.Bridge.drainListeners(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
-  }
 
   /** A versioned identity-partitioned table with one pending key-list and
     * one pending position-list sidecar at its head. */
@@ -56,7 +36,7 @@ class ReadPlanningSpec extends AnyFunSuite {
     "changelog/position frames launches no job") {
     val sink = pendingTable("zj")
     val head = sink.snapshotVersions().last
-    val jobs = jobsDuring {
+    val jobs = TestSpark.jobsDuring {
       Seq("gplan.zj", "gplan.zj VERSION AS OF 2", "gplan.zj.files")
         .foreach { t =>
           val df = spark.sql(s"SELECT * FROM $t")
@@ -66,7 +46,7 @@ class ReadPlanningSpec extends AnyFunSuite {
       Seq(sink.readChangelog(spark, 0, head), sink.readHeadWithPos(spark))
         .foreach { df => df.schema; df.queryExecution.optimizedPlan }
     }
-    assert(jobs == 0, s"read planning launched $jobs Spark job(s)")
+    assert(jobs.isEmpty, s"read planning launched Spark jobs: $jobs")
     // and the frames still answer correctly
     assert(spark.sql("SELECT id FROM gplan.zj").as[Long].collect().sorted
       .toSeq == Seq(1L, 3L, 5L))

@@ -1,13 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobStart}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
-
-import scala.jdk.CollectionConverters._
 
 /** [[TableSink.replicateTo]]'s apply reads the facts it needs off the two
   * pins it already runs (the consumed versions, the net-change counts,
@@ -37,36 +30,6 @@ class ReplicationApplySpec extends AnyFunSuite {
     sink.read(spark).select($"id", $"cat", $"v")
       .as[(Long, String, Double)].collect().toSet
 
-  /** Each job started while `body` runs, named by the action of its SQL
-    * execution (adaptive execution submits shuffle stages from a pool
-    * thread, so a stage's own call site names no caller) or else its
-    * last stage (listener bus drained both sides). */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val actions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          actions.put(s.executionId, s.description); ()
-        case _ =>
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val action = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .flatMap(id => Option(actions.get(id.toLong)))
-        jobs.add(action.orElse(e.stageInfos.lastOption.map(_.name))
-          .getOrElse("?")); ()
-      }
-    }
-    org.apache.spark.sql.graft.Bridge.drainListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.sql.graft.Bridge.drainListeners(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.asScala.toSeq
-  }
-
   private def hasPendingAtHead(sink: TableSink): Boolean =
     sink.hasPendingDeletes(sink.snapshotVersions().last)
 
@@ -89,7 +52,7 @@ class ReplicationApplySpec extends AnyFunSuite {
       Seq("v" -> ($"v" + 200.0)))
     src.append(rows(46 to 50, 0.0))
     var applied: Seq[Long] = Nil
-    val steady = jobsDuring {
+    val steady = TestSpark.jobsDuring {
       applied = src.replicateTo(spark, replica, Seq("id"), cursor)
     }
     assert(applied == Seq(4L, 5L), s"applied source versions: $applied")
@@ -99,7 +62,7 @@ class ReplicationApplySpec extends AnyFunSuite {
         steady.mkString("; "))
     // a retraction: one delete-only batch
     src.deleteKeys(Seq(1L, 2L, 3L).toDF("id"), Seq("id"))
-    val retraction = jobsDuring {
+    val retraction = TestSpark.jobsDuring {
       src.replicateTo(spark, replica, Seq("id"), cursor)
     }
     assert(state(replica) == state(src))

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Count the Spark jobs of a run, per span and per call site.
+"""Count the Spark jobs of a run per call site, grouped by span.
 
     python3 tools/spark_jobs.py <eventlog> [<perfbench stdout>]
 
@@ -9,7 +9,9 @@ default with Spark 4). With the stdout of a traced perfbench run (`--trace 1`),
 each job is charged to the span whose id is its job group (the record
 line's `span_log` names them); jobs of spans outside the measured window
 (set-up and warm-up) and jobs outside any span are shown apart. Without
-it, jobs are grouped by raw job group.
+it, jobs are grouped by raw job group. Per-span totals are the traced
+record's own `spark.jobs` figures; this script adds which call sites make
+them up.
 
 A job's call site is the action that submitted it, read off its SQL
 execution's stack when it has one (adaptive execution submits shuffle
@@ -109,9 +111,7 @@ def jobs_of(path):
 def main(argv):
     if len(argv) not in (2, 3):
         sys.exit("usage: " + __doc__.strip().splitlines()[2].strip())
-    jobs = jobs_of(argv[1])
     names = span_names(argv[2]) if len(argv) == 3 else None
-    calls = collections.Counter(names.values()) if names else {}
 
     def label(group):
         if group in (None, "", "0"):
@@ -120,20 +120,13 @@ def main(argv):
             return f"job group {group}"
         return names.get(group, "(outside the measured window)")
 
-    per_span = collections.Counter()
     per_site = collections.defaultdict(collections.Counter)
-    for group, site in jobs:
-        per_span[label(group)] += 1
+    for group, site in jobs_of(argv[1]):
         per_site[label(group)][site] += 1
-    print(f"{len(jobs)} jobs")
-    print(f"\n{'span':<40} {'calls':>5} {'jobs':>6} {'jobs/call':>9}")
-    for span, n in per_span.most_common():
-        c = calls.get(span, 0)
-        per_call = f"{n / c:9.1f}" if c else f"{'-':>9}"
-        print(f"{span:<40} {c if c else '-':>5} {n:>6} {per_call}")
-    for span, _ in per_span.most_common():
+    for span, sites in sorted(per_site.items(),
+                              key=lambda kv: -sum(kv[1].values())):
         print(f"\n{span}")
-        for site, n in per_site[span].most_common():
+        for site, n in sites.most_common():
             print(f"  {n:>5}  {site}")
 
 
