@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Benchmark runner. Round-14 redesign — the gate signal must survive a
@@ -60,13 +59,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     // Fixture hygiene: every fixture query stamps a UUID warehouse under
     // target/tmp; a long-lived checkout accumulates thousands of dirs and
     // GBs — measured (round 13) to skew fixture-heavy queries via

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan of selected queries
   * so scan pushdown / broadcast / codegen spans can be audited per round.
   * Usage: runMain graft.Explain [queryName ...]  (default: a scan-sensitive
@@ -10,14 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q1_pricing_summary", "q3_shipping_priority", "q_window_topk",
         "dedup_ngram_jaccard", "dedup_minhash", "sim_topk", "text_stats",

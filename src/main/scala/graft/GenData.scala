@@ -43,13 +43,7 @@ object GenData {
     val outDir = if (args.nonEmpty) args(0) else "/root/repo/bench_data/sf1"
     val sf = if (args.length > 1) args(1).toDouble else 1.0
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     generate(spark, outDir, sf)
     spark.stop()
   }

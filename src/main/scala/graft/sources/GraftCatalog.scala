@@ -119,37 +119,23 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
     * lists). Catalog reads of such tables serve through the LIBRARY read
     * ([[TableSink.readVersion]], which applies every sidecar flavor) via
     * a [[ProjectedScanBuilder]] — the raw V2 file scan would resurrect
-    * deleted rows. Only the BRANCH resolution path still refuses: a
-    * branch head mixes staged appends with main-line sidecar history and
-    * has no single-version library read to delegate to. */
+    * deleted rows; a BRANCH head, which mixes staged appends with
+    * main-line sidecar history, serves through the library's two-slice
+    * [[TableSink.readBranch]]. */
   private def pendingDeleteVersions(ident: Identifier, upTo: Int): Seq[Int] = {
     def lp(name: String) = new org.apache.hadoop.fs.Path(logDir(ident), name)
     // ONE listing for every flavor probe (the per-version stat battery
-    // was a measured read-path tax); `#pos`-referenced sidecars (the
-    // MoR UPDATE/MERGE commit shape — atomic with the replacement
-    // appends, so missing them would serve BOTH copies) cost a
-    // version-file read only when some `pos-*` dir exists at all
+    // was a measured read-path tax): every delete sidecar is referenced
+    // from its snapshot (`#pos`/`#keys`/`#del`), so the version-file
+    // reads happen only when some `pos-*`/`keys-*`/`del-*` name exists
     val names = WarehouseIO.childNames(logDir(ident)).toSet
     val anyRef = names.exists(n => n.startsWith("pos-") ||
       n.startsWith("keys-") || n.startsWith("del-"))
-    versions(ident).filter(v => v <= upTo && (
-      names(f"v$v%05d.deletes") ||
-        names(f"v$v%05d_keys") ||
-        names(f"v$v%05d_pos") ||
-        (anyRef && names(f"v$v%05d.list") && {
-          val (p, k, d) = WarehouseIO.snapshotSidecarRefs(
-            lp(f"v$v%05d.list"))
-          (p.toSeq ++ k.toSeq ++ d.toSeq).exists(names)
-        })))
-  }
-
-  private def requireNoPendingDeletes(ident: Identifier, upTo: Int): Unit = {
-    val pending = pendingDeleteVersions(ident, upTo)
-    if (pending.nonEmpty) throw new IllegalArgumentException(
-      s"${ident.name()}: snapshots ${pending.mkString(", ")} carry pending " +
-        "merge-on-read delete predicates this resolution path cannot " +
-        "apply; materialize them first (TableSink.compact) or read " +
-        "through TableSink")
+    if (!anyRef) return Nil
+    versions(ident).filter(v => v <= upTo && names(f"v$v%05d.list") && {
+      val (p, k, d) = WarehouseIO.snapshotSidecarRefs(lp(f"v$v%05d.list"))
+      (p.toSeq ++ k.toSeq ++ d.toSeq).exists(names)
+    })
   }
 
   /** The absolute data-file paths snapshot `v` recorded. Does NOT check
@@ -165,8 +151,8 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
         s"${ident.name()}: snapshot v$v does not exist (expired by a " +
           "rewrite, or never committed); available: " +
           versions(ident).mkString(", "))
-    // layered (manifest-list) or legacy inline snapshot — same resolver
-    // the sink uses, so the SQL door reads any table the library wrote.
+    // the same snapshot resolver the sink uses, so the SQL door reads any
+    // table the library wrote.
     // A shallow CLONE's manifest mixes ABSOLUTE entries (the source's
     // files) with relative ones (own appends): absolute stays absolute
     // (round-14 — prefixing tableDir mangled every clone read)
@@ -616,26 +602,18 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
             // LIBRARY two-slice read (TableSink.readBranch — sidecars
             // committed <= the branch base apply to the base slice,
             // staged appends read raw; round-12, the refusal deleted).
-            // Only a PRE-round-12 branch (no recorded base) still
-            // refuses — it was creatable only with zero sidecars, so
-            // hitting this means out-of-band log surgery.
-            val cfg0 = insertConfig(ident, firstDataFile(ident))
-            val sink0 = new TableSink(cfg0)
             val pendingHead = versions(ident).lastOption
               .map(pendingDeleteVersions(ident, _)).getOrElse(Nil)
             if (pendingHead.nonEmpty) {
-              sink0.branchBaseVersion(version) match {
-                case Some(_) =>
-                  val declared = declaredSchema(ident)
-                  val sink = new TableSink(
-                    cfg0.copy(tableSchema = declared.orElse(cfg0.tableSchema)))
-                  val compute = () =>
-                    sink.readBranch(SparkSession.active, version)
-                  val sch = declared.getOrElse(compute().schema)
-                  return new GraftProjectedTable(ident.toString, sch,
-                    compute, None)
-                case None => requireNoPendingDeletes(ident, v)
-              }
+              val cfg0 = insertConfig(ident, firstDataFile(ident))
+              val declared = declaredSchema(ident)
+              val sink = new TableSink(
+                cfg0.copy(tableSchema = declared.orElse(cfg0.tableSchema)))
+              val compute = () =>
+                sink.readBranch(SparkSession.active, version)
+              val sch = declared.getOrElse(compute().schema)
+              return new GraftProjectedTable(ident.toString, sch,
+                compute, None)
             }
             // branch snapshots reference manifests in the MAIN log dir
             (WarehouseIO.readSnapshotFiles(logDir(ident),

@@ -40,12 +40,12 @@ final class MaterializedView(source: TableSink, path: String,
   private def prevPath = new HPath(path, "_prev_state")
   private def reflectsFile(dir: HPath) = new HPath(dir, "_mv_reflects")
 
-  /** Marker content: source (generation, version) the state reflects —
-    * `(currentGen, 0)` when never refreshed. Version numbers restart
-    * after a source rewrite expires the log, so the generation pin is
-    * what turns silent divergence into [[refresh]]'s loud refusal. Runs
-    * crash recovery first — a half-swapped state must never read as
-    * "never refreshed". */
+  /** Marker content `<generation>:<version>`: the source (generation,
+    * version) the state reflects — `(currentGen, 0)` when never
+    * refreshed. Version numbers restart after a source rewrite expires
+    * the log, so the generation pin is what turns silent divergence into
+    * [[refresh]]'s loud refusal. Runs crash recovery first — a
+    * half-swapped state must never read as "never refreshed". */
   private def reflectsMark(): (String, Int) = {
     recover()
     if (!WarehouseIO.isFile(reflectsFile(statePath)))
@@ -53,7 +53,6 @@ final class MaterializedView(source: TableSink, path: String,
     else WarehouseIO.readString(reflectsFile(statePath)).trim
       .split(':') match {
         case Array(g, v) => (g, v.toInt)
-        case Array(v) => (source.logGeneration(), v.toInt) // legacy marker
         case other => sys.error(s"unreadable view marker: ${other.mkString(":")}")
       }
   }

@@ -337,10 +337,9 @@ private[graft] object WarehouseIO {
   // SMALL list of immutable manifest names; each manifest holds the
   // data-file paths ONE commit added. Commit metadata IO is therefore
   // O(added files + manifest count), never O(table files), and K
-  // snapshots share manifests instead of storing K full copies. A
-  // LEGACY snapshot (no header) inlines its file list — readers accept
-  // both, so pre-layering tables and hand-planted version files keep
-  // resolving.
+  // snapshots share manifests instead of storing K full copies. Every
+  // snapshot file starts with the [[SnapshotHeader]]; readers refuse a
+  // version file without it.
 
   /** First line of a layered (manifest-list) snapshot file. */
   val SnapshotHeader = "#manifests"
@@ -441,15 +440,21 @@ private[graft] object WarehouseIO {
     (SnapshotHeader +: (metadata.map("#" + _) ++ manifestNames))
       .mkString("\n")
 
-  /** Manifest names of a layered snapshot file, in commit order; None
-    * for a legacy inline-list snapshot. `#`-prefixed metadata lines are
-    * not names. O(manifest count) read. */
-  def snapshotManifestNames(snapshotPath: HPath): Option[Seq[String]] = {
+  /** The lines after the header of snapshot file `snapshotPath`;
+    * refuses, by name, a file that does not start with
+    * [[SnapshotHeader]] — no writer produces one. */
+  private def snapshotBody(snapshotPath: HPath): IndexedSeq[String] = {
     val lines = readString(snapshotPath).split("\n", -1).toIndexedSeq
-    if (lines.headOption.contains(SnapshotHeader))
-      Some(lines.tail.filter(l => l.nonEmpty && !l.startsWith("#")))
-    else None
+    require(lines.headOption.contains(SnapshotHeader),
+      s"snapshot file $snapshotPath lacks the $SnapshotHeader header: " +
+        "not a snapshot this table format writes")
+    lines.tail
   }
+
+  /** Manifest names of a snapshot file, in commit order. `#`-prefixed
+    * metadata lines are not names. O(manifest count) read. */
+  def snapshotManifestNames(snapshotPath: HPath): Seq[String] =
+    snapshotBody(snapshotPath).filter(l => l.nonEmpty && !l.startsWith("#"))
 
   /** Stream ids default to checkpoint PATHS, which may contain spaces —
     * and the txn line is space-delimited inside a line-oriented snapshot
@@ -466,66 +471,34 @@ private[graft] object WarehouseIO {
     .replace("%0D", "\r").replace("%0A", "\n")
     .replace("%20", " ").replace("%25", "%")
 
-  /** The `#txn <streamId> <batchId>` metadata line of a layered
-    * snapshot, if any — the exactly-once dedup record a streaming
-    * commit embeds atomically in its claimed snapshot. The id token is
+  /** The `#txn <streamId> <batchId>` metadata line of a snapshot, if
+    * any — the exactly-once dedup record a streaming commit embeds
+    * atomically in its claimed snapshot. The id token is
     * [[encodeTxnId]]-escaped on disk. */
-  def snapshotTxn(snapshotPath: HPath): Option[(String, Long)] = {
-    val lines = readString(snapshotPath).split("\n").toIndexedSeq
-    if (!lines.headOption.contains(SnapshotHeader)) return None
-    lines.tail.find(_.startsWith("#txn ")).flatMap { l =>
+  def snapshotTxn(snapshotPath: HPath): Option[(String, Long)] =
+    snapshotBody(snapshotPath).find(_.startsWith("#txn ")).flatMap { l =>
       l.stripPrefix("#txn ").split(" ") match {
         case Array(id, b) => b.toLongOption.map(decodeTxnId(id) -> _)
         case _ => None
       }
     }
-  }
 
-  /** The `#pos <sidecarDirName>` metadata line of a layered snapshot, if
-    * any — a position-delete sidecar committed ATOMICALLY inside the
-    * claimed snapshot (the merge-on-read UPDATE/MERGE commit shape:
-    * replacement appends and the subtraction of the replaced rows land
-    * in one snapshot, so no reader window shows both copies). */
-  def snapshotPosRef(snapshotPath: HPath): Option[String] =
-    snapshotMetaValue(snapshotPath, "pos")
-
-  /** `#keys <sidecarDirName>` — an erasure-list sidecar committed
-    * atomically inside the claimed snapshot (round-12: ALL delete
-    * flavors moved to pre-written, in-snapshot-referenced sidecars — a
-    * lands-later sidecar is legal for snapshot readers, which see the
-    * pre-delete state, but a CHANGELOG consumer reading the version in
-    * that window emits an empty change and advances its offset past the
-    * delete, losing it forever). */
-  def snapshotKeysRef(snapshotPath: HPath): Option[String] =
-    snapshotMetaValue(snapshotPath, "keys")
-
-  /** `#del <sidecarFileName>` — a predicate-delete sidecar (a pre-written
-    * `del-*` file holding the SQL text) committed atomically inside the
-    * claimed snapshot. The file — rather than in-lining the SQL — keeps
-    * the one-listing index contract: `del-*` names in the log listing
-    * gate the version-file reads that resolve which version owns which
-    * sidecar, exactly like `pos-*`/`keys-*`. */
-  def snapshotDelRef(snapshotPath: HPath): Option[String] =
-    snapshotMetaValue(snapshotPath, "del")
-
-  /** All three sidecar references of a snapshot in ONE file read:
-    * (`#pos`, `#keys`, `#del`). */
+  /** The three sidecar references of a snapshot in ONE file read:
+    * (`#pos`, `#keys`, `#del`). Each names a delete sidecar committed
+    * ATOMICALLY inside the claimed snapshot: `pos` a position-delete
+    * directory (the merge-on-read UPDATE/MERGE shape — replacement
+    * appends and the subtraction of the replaced rows land in one
+    * snapshot), `keys` an erasure-list directory, `del` a file holding a
+    * delete predicate's SQL text. A sidecar that landed after its
+    * snapshot would let a CHANGELOG consumer reading the version in that
+    * window emit an empty change and advance past the delete. */
   def snapshotSidecarRefs(snapshotPath: HPath)
       : (Option[String], Option[String], Option[String]) = {
-    val lines = readString(snapshotPath).split("\n").toIndexedSeq
-    if (!lines.headOption.contains(SnapshotHeader)) return (None, None, None)
-    def v(key: String): Option[String] = lines.tail
+    val lines = snapshotBody(snapshotPath)
+    def v(key: String): Option[String] = lines
       .find(_.startsWith(s"#$key "))
       .map(_.stripPrefix(s"#$key ").trim).filter(_.nonEmpty)
     (v("pos"), v("keys"), v("del"))
-  }
-
-  private def snapshotMetaValue(snapshotPath: HPath,
-      key: String): Option[String] = {
-    val lines = readString(snapshotPath).split("\n").toIndexedSeq
-    if (!lines.headOption.contains(SnapshotHeader)) return None
-    lines.tail.find(_.startsWith(s"#$key "))
-      .map(_.stripPrefix(s"#$key ").trim).filter(_.nonEmpty)
   }
 
   /** Driver-side manifest CONTENT reads since process start (names-only
@@ -537,25 +510,20 @@ private[graft] object WarehouseIO {
     new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Raw `path[\tstats]` lines of a snapshot file — the union of its
-    * manifests' lines, one per path ([[mergeManifestLines]]); a legacy
-    * inline-list snapshot's bare paths. */
+    * manifests' lines, one per path ([[mergeManifestLines]]). */
   def readSnapshotLines(logDir: HPath, snapshotPath: HPath): Seq[String] =
-    snapshotManifestNames(snapshotPath) match {
-      case Some(names) =>
-        mergeManifestLines(names.map(manifestLinesOf(logDir, _)))
-      case None =>
-        readString(snapshotPath).split("\n").filter(_.nonEmpty).toIndexedSeq
-    }
+    mergeManifestLines(
+      snapshotManifestNames(snapshotPath).map(manifestLinesOf(logDir, _)))
 
   /** Data-file paths of manifest `name` under `logDir` (per-line stats
     * stripped). */
   def manifestFilesOf(logDir: HPath, name: String): IndexedSeq[String] =
     manifestLinesOf(logDir, name).map(manifestLinePath)
 
-  /** Resolve a snapshot file to its full data-file list: layered → the
-    * union of its manifests (resolved against `logDir` — branch
-    * snapshots reference manifests in the MAIN log dir), deduped and
-    * sorted for deterministic reads; legacy → the inline list. */
+  /** Resolve a snapshot file to its full data-file list: the union of
+    * its manifests (resolved against `logDir` — branch snapshots
+    * reference manifests in the MAIN log dir), deduped and sorted for
+    * deterministic reads. */
   def readSnapshotFiles(logDir: HPath, snapshotPath: HPath): Seq[String] =
     readSnapshotLines(logDir, snapshotPath).map(manifestLinePath)
 

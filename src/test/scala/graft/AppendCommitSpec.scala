@@ -94,13 +94,17 @@ class AppendCommitSpec extends AnyFunSuite {
     val sink = mkSink("ac_t5")
     sink.append(batch(1L))
     // a concurrent committer lands v2 between our base read and our claim
-    val v2 = new org.apache.hadoop.fs.Path(
-      s"$wh/ac_t5/_graft_log/v00002.list")
+    val log = new org.apache.hadoop.fs.Path(s"$wh/ac_t5/_graft_log")
+    val v2 = new org.apache.hadoop.fs.Path(log, "v00002.list")
     val v1Files = sink.readVersion(spark, 1).inputFiles.toSeq
-    assert(WarehouseIO.writeStringIfAbsent(v2, "cat=a/concurrent.parquet"))
+    val v2Snapshot = WarehouseIO.renderSnapshot(
+      WarehouseIO.snapshotManifestNames(
+        new org.apache.hadoop.fs.Path(log, "v00001.list")) :+
+        WarehouseIO.writeManifest(log, Seq("cat=a/concurrent.parquet")))
+    assert(WarehouseIO.writeStringIfAbsent(v2, v2Snapshot))
     assert(!WarehouseIO.writeStringIfAbsent(v2, "overwrite-attempt"),
       "exclusive create must refuse an existing version file")
-    assert(WarehouseIO.readString(v2) == "cat=a/concurrent.parquet",
+    assert(WarehouseIO.readString(v2) == v2Snapshot,
       "losing claim must not clobber the winner's manifest")
     // our commit retries against the NEW head: v3 = v2's files + ours
     // (the file must physically exist — the commit now verifies its own
@@ -109,13 +113,32 @@ class AppendCommitSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(s"$wh/ac_t5/cat=b/mine.parquet"), "")
     val v = sink.commitAppendedFiles(Seq("cat=b/mine.parquet"))
     assert(v == 3)
-    val log = new org.apache.hadoop.fs.Path(s"$wh/ac_t5/_graft_log")
     val m3 = WarehouseIO.readSnapshotFiles(log,
       new org.apache.hadoop.fs.Path(log, "v00003.list")).toSet
     assert(m3.contains("cat=a/concurrent.parquet"),
       "stale-base overwrite would have lost the concurrent commit")
     assert(m3.contains("cat=b/mine.parquet"))
     assert(v1Files.nonEmpty)
+  }
+
+  test("a header-less version file is refused by name on read and append") {
+    val sink = mkSink("ac_nohdr")
+    sink.append(batch(1L))
+    // an inline file list without the #manifests header: no writer
+    // produces this shape, so readers refuse it instead of guessing
+    WarehouseIO.writeString(new org.apache.hadoop.fs.Path(
+      s"$wh/ac_nohdr/_graft_log/v00002.list"), "cat=b/x.parquet")
+    val onRead = intercept[IllegalArgumentException](
+      sink.read(spark).count())
+    assert(onRead.getMessage.contains("v00002.list") &&
+      onRead.getMessage.contains(WarehouseIO.SnapshotHeader), onRead.getMessage)
+    val onAppend = intercept[IllegalArgumentException](
+      sink.append(batch(3L)))
+    assert(onAppend.getMessage.contains("v00002.list") &&
+      onAppend.getMessage.contains(WarehouseIO.SnapshotHeader),
+      onAppend.getMessage)
+    assert(sink.snapshotVersions() == Seq(1, 2),
+      "a refused append claims no version")
   }
 
   test("racing appends from multiple threads all survive in the head") {
@@ -221,7 +244,7 @@ class AppendCommitSpec extends AnyFunSuite {
 
   private def headManifestCount(name: String, v: Int): Int =
     WarehouseIO.snapshotManifestNames(
-      new HPath(logDir(name), f"v$v%05d.list")).map(_.size).getOrElse(-1)
+      new HPath(logDir(name), f"v$v%05d.list")).size
 
   private def logBytes(name: String): Long =
     WarehouseIO.childNames(logDir(name))
@@ -313,7 +336,7 @@ class AppendCommitSpec extends AnyFunSuite {
     // (the merge commit deletes its own superseded delta)
     val referenced = (1 to 7).flatMap(v =>
       WarehouseIO.snapshotManifestNames(
-        new HPath(logDir("ac_amc"), f"v$v%05d.list")).getOrElse(Nil)).toSet
+        new HPath(logDir("ac_amc"), f"v$v%05d.list"))).toSet
     assert(manifestNamesIn("ac_amc").toSet == referenced,
       "unreferenced manifest debris after merge-on-commit")
   }

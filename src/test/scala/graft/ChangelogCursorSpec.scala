@@ -129,12 +129,10 @@ class ChangelogCursorSpec extends AnyFunSuite {
     src.replicateTo(spark, replica, Seq("id"), cursor)
     def pendingSidecars(): Int = {
       val logDir = new HPath(s"${replica.config.tablePath}/_graft_log")
-      // both sidecar shapes count: legacy std files/dirs and the
-      // round-12 snapshot-referenced `del-`/`keys-`/`pos-` names
+      // the snapshot-referenced `del-`/`keys-`/`pos-` sidecars
       WarehouseIO.childNames(logDir).count(nm =>
-        nm.endsWith(".deletes") || nm.endsWith("_keys") ||
-          nm.endsWith("_pos") || nm.startsWith("del-") ||
-          nm.startsWith("keys-") || nm.startsWith("pos-"))
+        nm.startsWith("del-") || nm.startsWith("keys-") ||
+          nm.startsWith("pos-"))
     }
     // one delete-only source commit per cycle -> one key-list sidecar
     // per apply; without consolidation the replica would accumulate
@@ -406,9 +404,21 @@ class ChangelogCursorSpec extends AnyFunSuite {
     val sink = mkSink("cc3")
     sink.append(Seq((1L, "a", 10.0)).toDF("id", "cat", "v"))
     val cursor = s"$wh/cc3_cursor"
-    WarehouseIO.writeString(new org.apache.hadoop.fs.Path(cursor), "9")
+    WarehouseIO.writeString(new org.apache.hadoop.fs.Path(cursor),
+      s"${sink.logGeneration()}:9")
     val e = intercept[IllegalArgumentException](
       sink.readChangelogSince(spark, cursor))
     assert(e.getMessage.contains("delete the cursor"), e.getMessage)
+  }
+
+  test("a bare-integer cursor is refused as unreadable") {
+    val sink = mkSink("cc_bare")
+    sink.append(Seq((1L, "a", 10.0)).toDF("id", "cat", "v"))
+    val cursor = s"$wh/cc_bare_cursor"
+    WarehouseIO.writeString(new org.apache.hadoop.fs.Path(cursor), "1")
+    val e = intercept[RuntimeException](
+      sink.readChangelogSince(spark, cursor))
+    assert(e.getMessage.contains("unreadable changelog cursor"),
+      e.getMessage)
   }
 }

@@ -32,6 +32,14 @@ class MaintenancePropertySpec extends AnyFunSuite {
     val rnd = new scala.util.Random(42)
     (1 to 4).foreach { trial =>
       val sink = mkSink(s"prop_c$trial")
+      // every sidecar is snapshot-referenced: no per-version
+      // vNNNNN.deletes / vNNNNN_keys / vNNNNN_pos name is ever written
+      def assertNoVersionNamedSidecars(): Unit = {
+        val named = WarehouseIO.childNames(new org.apache.hadoop.fs.Path(
+          sink.config.tablePath, "_graft_log"))
+          .filter(_.matches("""v\d{5}(\.deletes|_keys|_pos)"""))
+        assert(named.isEmpty, s"trial $trial: version-named sidecars $named")
+      }
       var nextId = 11L
       (1 to 5).foreach { _ =>
         rnd.nextInt(3) match {
@@ -45,6 +53,7 @@ class MaintenancePropertySpec extends AnyFunSuite {
             val victims = rnd.shuffle((1L until nextId).toList).take(2)
             sink.deleteKeys(victims.toDF("id"), Seq("id"))
         }
+        assertNoVersionNamedSidecars()
       }
       val before = ids(sink)
       if (sink.snapshotVersions().lastOption.exists(sink.hasPendingDeletes)) {
@@ -53,6 +62,7 @@ class MaintenancePropertySpec extends AnyFunSuite {
           s"trial $trial: consolidation changed the surviving rows")
         assert(sink.snapshotVersions() == Seq(vNew),
           s"trial $trial: history must collapse to the merged commit")
+        assertNoVersionNamedSidecars()
         // and the merged sidecars stay LIVE for later appends: re-adding
         // a deleted id under a still-live predicate keeps it invisible
         // (the same cumulative contract the per-version sidecars had)
@@ -133,7 +143,7 @@ class MaintenancePropertySpec extends AnyFunSuite {
         .filter(n => n.startsWith("m-") && n.endsWith(".mf")).toSet
       val referenced = sink.snapshotVersions().flatMap(v =>
         WarehouseIO.snapshotManifestNames(
-          new HPath(log, f"v$v%05d.list")).getOrElse(Nil)).toSet
+          new HPath(log, f"v$v%05d.list"))).toSet
       assert(onDisk == referenced,
         s"trial $trial: manifest debris ${onDisk -- referenced} / " +
           s"dangling ${referenced -- onDisk}")

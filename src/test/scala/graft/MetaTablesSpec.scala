@@ -79,7 +79,7 @@ class MetaTablesSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(sink.config.tablePath, "_graft_log")
     val head = sink.snapshotVersions().last
     val names = WarehouseIO.snapshotManifestNames(
-      new org.apache.hadoop.fs.Path(logDir, f"v$head%05d.list")).get
+      new org.apache.hadoop.fs.Path(logDir, f"v$head%05d.list"))
     val old = WarehouseIO.manifestLinesOf(logDir, names.head)
     val stripped = old.map(WarehouseIO.manifestLinePath)
     WarehouseIO.writeString(new org.apache.hadoop.fs.Path(logDir, names.head),

@@ -82,10 +82,9 @@ class ReplicationApplySpec extends AnyFunSuite {
       tableSchema = Some(rows(1 to 1, 0.0).schema)))
     val replica = mkReplica("idle_rep")
     val cursor = s"$wh/idle_cursor"
-    // before the source's first commit: an empty declared-schema batch
-    // (own cursor: one committed before the first commit pins the
-    // generation-less history and refuses once the log starts)
-    assert(src.replicateTo(spark, replica, Seq("id"), s"$wh/idle_c0") == Nil)
+    // before the source's first commit: an empty declared-schema batch;
+    // the cursor it commits continues once the log starts
+    assert(src.replicateTo(spark, replica, Seq("id"), cursor) == Nil)
     assert(replica.snapshotVersions().isEmpty)
     src.append(rows(1 to 4, 0.0))
     assert(src.replicateTo(spark, replica, Seq("id"), cursor) == Seq(1L))

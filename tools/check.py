@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local correctness harness mimicking the driver's DuckDB oracle compare.
 
-Usage: python3 tools/check.py [sfDir] [outDir]
+Usage: python3 tools/check.py [sfDir] [outDir] [--no-run]
   1. runs `sbt runMain graft.Verify <sfDir> <outDir>` (unless --no-run)
   2. for each query: loads <outDir>/<name> parquet, runs the oracle SQL in
      DuckDB against the same sfDir tables, compares schema + sorted rows.
@@ -16,8 +16,11 @@ import pandas as pd
 # the checkout this script lives in: sbt runs there, and output defaults
 # under its target/
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-OUT_DIR = (sys.argv[2] if len(sys.argv) > 2
+# positional arguments are the ones that are not flags, wherever the
+# flags appear
+POS = [a for a in sys.argv[1:] if not a.startswith("--")]
+SF_DIR = POS[0] if len(POS) > 0 else "/root/testdata/sf0.01"
+OUT_DIR = (POS[1] if len(POS) > 1
            else os.path.join(ROOT, "target", "verify_out"))
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
