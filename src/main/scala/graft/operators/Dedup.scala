@@ -769,11 +769,14 @@ object Dedup {
       .select(col("a"), explode(col("xs")).as("b"))
       .filter(col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        // 9-dp rounding before the threshold: same borderline-pair armor
-        // as embeddingNearDup / the sim_* rankings
-        round(VectorExpressions.vecDot(spark, col("a.v"), col("b.v")), 9)
-          .as("c9"))
-      .filter(col("c9") >= threshold)
+        VectorExpressions.vecDot(spark, col("a.v"), col("b.v")).as("dot"))
+      // 9-dp rounding before the threshold: same borderline-pair armor
+      // as embeddingNearDup / the sim_* rankings. Rounding moves a value
+      // by at most 5e-10, so no pair with a raw dot below
+      // `threshold - 1e-9` can pass; the raw test runs first and spares
+      // those pairs the rounding's decimal round trip
+      .filter(col("dot") >= threshold - 1e-9 &&
+        round(col("dot"), 9) >= threshold)
       .dropDuplicates("id_a", "id_b")
       .select("id_a", "id_b")
   }

@@ -122,21 +122,8 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
     * deleted rows; a BRANCH head, which mixes staged appends with
     * main-line sidecar history, serves through the library's two-slice
     * [[TableSink.readBranch]]. */
-  private def pendingDeleteVersions(ident: Identifier, upTo: Int): Seq[Int] = {
-    def lp(name: String) = new org.apache.hadoop.fs.Path(logDir(ident), name)
-    // ONE listing for every flavor probe (the per-version stat battery
-    // was a measured read-path tax): every delete sidecar is referenced
-    // from its snapshot (`#pos`/`#keys`/`#del`), so the version-file
-    // reads happen only when some `pos-*`/`keys-*`/`del-*` name exists
-    val names = WarehouseIO.childNames(logDir(ident)).toSet
-    val anyRef = names.exists(n => n.startsWith("pos-") ||
-      n.startsWith("keys-") || n.startsWith("del-"))
-    if (!anyRef) return Nil
-    versions(ident).filter(v => v <= upTo && names(f"v$v%05d.list") && {
-      val (p, k, d) = WarehouseIO.snapshotSidecarRefs(lp(f"v$v%05d.list"))
-      (p.toSeq ++ k.toSeq ++ d.toSeq).exists(names)
-    })
-  }
+  private def pendingDeleteVersions(ident: Identifier, upTo: Int): Seq[Int] =
+    new SidecarIndex(logDir(ident)).pendingVersions(upTo)
 
   /** The absolute data-file paths snapshot `v` recorded. Does NOT check
     * for pending merge-on-read sidecars — callers either serve through

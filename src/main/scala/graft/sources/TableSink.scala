@@ -1598,58 +1598,9 @@ final class TableSink(val config: SinkConfig) {
   // makes the delete O(metadata) and defers the rewrite until compaction
   // amortizes it across many deletes.
 
-  /** The position-delete sidecar directories of version `v`: the
-    * `#pos`-referenced `pos-*` directory committed ATOMICALLY inside the
-    * claimed snapshot ([[deletePositions]] and the merge-on-read
-    * [[updateMor]] shape — that commit also APPENDS replacement rows, so
-    * the subtraction may never lag the claim or a reader would see both
-    * copies). O(1) metadata reads. */
-  private def posDeleteDirs(v: Int): Seq[org.apache.hadoop.fs.Path] =
-    sidecarIndex().posDirs(v)
-
-  /** ONE-LISTING sidecar index: which versions carry which delete-sidecar
-    * flavors, resolved from a SINGLE log-directory listing instead of
-    * per-version metadata probes (and version-file READS) per read —
-    * measured: the per-version probes regressed q_rollback 2.2× the day
-    * they landed. Every delete flavor pre-writes its sidecar under a
-    * unique name (`pos-*`, `keys-*`, `del-*`) and the claimed snapshot
-    * references it (atomic, so a changelog consumer can never observe a
-    * version before its sidecar exists and lose the delta); the
-    * references cost a version-file read ONLY when some such name exists
-    * in the listing at all — on a table with no pending merge-on-read
-    * delete the index is one `listStatus`, full stop. An index is a
-    * point-in-time snapshot of the log; hot paths build ONE index per
-    * logical read instead of re-probing per version. */
-  private final class SidecarIndex {
-    private val names: Set[String] = WarehouseIO.childNames(logPath).toSet
-    private val anyRef = names.exists(n => n.startsWith("pos-") ||
-      n.startsWith("keys-") || n.startsWith("del-"))
-    private val refCache = scala.collection.mutable.Map
-      .empty[Int, (Option[String], Option[String], Option[String])]
-    private def refs(v: Int)
-        : (Option[String], Option[String], Option[String]) =
-      if (!anyRef) (None, None, None)
-      else refCache.getOrElseUpdate(v,
-        if (!names(f"v$v%05d.list")) (None, None, None)
-        else WarehouseIO.snapshotSidecarRefs(logFile(f"v$v%05d.list")))
-    /** Predicate SQL text of version `v`'s `#del`-referenced sidecar. */
-    def predicates(v: Int): Seq[String] =
-      refs(v)._3.filter(names).toSeq
-        .map(n => WarehouseIO.readString(logFile(n)))
-    def keyDirs(v: Int): Seq[org.apache.hadoop.fs.Path] =
-      refs(v)._2.filter(names).toSeq.map(logFile)
-    def posDirs(v: Int): Seq[org.apache.hadoop.fs.Path] =
-      refs(v)._1.filter(names).toSeq.map(logFile)
-    /** Referenced sidecar FILE/DIR names of `v` (cleanup loops must
-      * capture these before deleting the version file). */
-    def refNames(v: Int): Seq[String] = {
-      val (p, k, d) = refs(v)
-      (p.toSeq ++ k.toSeq ++ d.toSeq).filter(names)
-    }
-    def any(v: Int): Boolean = refNames(v).nonEmpty
-  }
-
-  private def sidecarIndex(): SidecarIndex = new SidecarIndex
+  /** A point-in-time [[SidecarIndex]] of this table's log; hot paths
+    * build ONE per logical read instead of re-probing per version. */
+  private def sidecarIndex(): SidecarIndex = new SidecarIndex(logPath)
 
   /** The rows of list sidecars `dirs` (key lists or position lists, one
     * parquet directory per commit), unioned by name. Each directory's

@@ -216,19 +216,34 @@ private[graft] object WarehouseIO {
 
   /** ALL files under `root` (metadata included — this is for whole-tree
     * moves, not data listings), root-relative. */
-  private def listAllFilesRel(root: HPath): Seq[String] = {
+  private[graft] def listAllFilesRel(root: HPath): Seq[String] =
+    walkFiles(root, _ => false).map(_._1).toVector
+
+  /** The files under `root` as (root-relative path, status) pairs, depth
+    * first in listing order, one `listStatus` per directory as the walk
+    * reaches it; a child whose name `skip` accepts is neither returned
+    * nor entered. Empty when `root` is absent.
+    *
+    * Not `listFiles(root, true)`: each `LocatedFileStatus` it builds
+    * copies the file's permissions, and on a local filesystem without
+    * Hadoop's native library loading them forks `ls -ld` per file: on a
+    * 4-core Xeon host, 3.4–5.2 ms per entry over 200 files, against under
+    * 0.1 ms per entry walked this way. */
+  private def walkFiles(root: HPath, skip: String => Boolean)
+      : Iterator[(String, org.apache.hadoop.fs.FileStatus)] = {
     val f = fs(root)
     val q = f.makeQualified(root)
-    if (!f.exists(q)) return Nil
+    if (!f.exists(q)) return Iterator.empty
     val rootStr = q.toString
-    val it = f.listFiles(q, true)
-    val out = Vector.newBuilder[String]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile)
-        out += st.getPath.toString.stripPrefix(rootStr).stripPrefix("/")
-    }
-    out.result()
+    def walk(dir: HPath): Iterator[(String, org.apache.hadoop.fs.FileStatus)] =
+      f.listStatus(dir).iterator.filterNot(st => skip(st.getPath.getName))
+        .flatMap { st =>
+          if (st.isDirectory) walk(st.getPath)
+          else if (st.isFile) Iterator.single(
+            st.getPath.toString.stripPrefix(rootStr).stripPrefix("/") -> st)
+          else Iterator.empty
+        }
+    walk(q)
   }
 
   /** Move the whole tree at `src` to `dst` (no-op when `src` is absent).
@@ -533,26 +548,64 @@ private[graft] object WarehouseIO {
   def listDataFilesRel(root: HPath): Seq[String] =
     dataFileStatuses(root).map(_._1).toVector.sorted
 
-  /** The DATA files under `root` as (root-relative path, status) pairs,
-    * from one recursive listing: any path with a `_`- or `.`-prefixed
-    * segment (metadata dirs such as `_graft_log`/`_staging`/
-    * `_spark_metadata`, `_SUCCESS` markers, checksum sidecars) is
-    * excluded — the same convention Spark's own file index applies. The
-    * listing is a remote ITERATOR, consumed lazily; empty when `root` is
-    * absent. */
+  /** The DATA files under `root` as (root-relative path, status) pairs:
+    * any path with a `_`- or `.`-prefixed segment (metadata dirs such as
+    * `_graft_log`/`_staging`/`_spark_metadata`, `_SUCCESS` markers,
+    * checksum sidecars) is excluded — the same convention Spark's own
+    * file index applies — and such directories are never listed. The
+    * walk is an ITERATOR, consumed lazily ([[walkFiles]]); empty when
+    * `root` is absent. */
   def dataFileStatuses(root: HPath)
-      : Iterator[(String, org.apache.hadoop.fs.FileStatus)] = {
-    val f = fs(root)
-    val q = f.makeQualified(root)
-    if (!f.exists(q)) return Iterator.empty
-    val rootStr = q.toString
-    val it = f.listFiles(q, true)
-    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .filter(_.isFile)
-      .map(st => (st.getPath.toString.stripPrefix(rootStr).stripPrefix("/"),
-        st: org.apache.hadoop.fs.FileStatus))
-      .filterNot { case (rel, _) =>
-        rel.split('/').exists(s => s.startsWith("_") || s.startsWith("."))
-      }
+      : Iterator[(String, org.apache.hadoop.fs.FileStatus)] =
+    walkFiles(root, n => n.startsWith("_") || n.startsWith("."))
+}
+
+/** ONE-LISTING sidecar index of the snapshot log at `logDir`: which
+  * versions carry which merge-on-read delete sidecars, resolved from a
+  * SINGLE listing of the log instead of per-version metadata probes
+  * (and version-file READS) per read — measured: the per-version probes
+  * regressed q_rollback 2.2× the day they landed. Every delete flavor
+  * pre-writes its sidecar under a unique name (`pos-*` position lists,
+  * `keys-*` key lists, `del-*` predicate SQL) and the claimed snapshot
+  * references it (atomic, so a changelog consumer can never observe a
+  * version before its sidecar exists and lose the delta); the references
+  * cost a version-file read ONLY when some such name exists in the
+  * listing at all — on a table with no pending merge-on-read delete the
+  * index is one `listStatus`, full stop. An index is a point-in-time
+  * snapshot of the log. The sink and the SQL catalog both read sidecar
+  * state through it. */
+private[graft] final class SidecarIndex(logDir: HPath) {
+  private val names: Set[String] = WarehouseIO.childNames(logDir).toSet
+  private val anyRef = names.exists(n => n.startsWith("pos-") ||
+    n.startsWith("keys-") || n.startsWith("del-"))
+  private val refCache = scala.collection.mutable.Map
+    .empty[Int, (Option[String], Option[String], Option[String])]
+  private def file(name: String) = new HPath(logDir, name)
+  private def refs(v: Int)
+      : (Option[String], Option[String], Option[String]) =
+    if (!anyRef) (None, None, None)
+    else refCache.getOrElseUpdate(v,
+      if (!names(f"v$v%05d.list")) (None, None, None)
+      else WarehouseIO.snapshotSidecarRefs(file(f"v$v%05d.list")))
+  /** Predicate SQL text of version `v`'s `#del`-referenced sidecar. */
+  def predicates(v: Int): Seq[String] =
+    refs(v)._3.filter(names).toSeq.map(n => WarehouseIO.readString(file(n)))
+  def keyDirs(v: Int): Seq[HPath] = refs(v)._2.filter(names).toSeq.map(file)
+  /** Version `v`'s `#pos`-referenced position-list directory. */
+  def posDirs(v: Int): Seq[HPath] = refs(v)._1.filter(names).toSeq.map(file)
+  /** Referenced sidecar FILE/DIR names of `v` (cleanup loops must
+    * capture these before deleting the version file). */
+  def refNames(v: Int): Seq[String] = {
+    val (p, k, d) = refs(v)
+    (p.toSeq ++ k.toSeq ++ d.toSeq).filter(names)
   }
+  def any(v: Int): Boolean = refNames(v).nonEmpty
+  /** The versions at or before `upTo` that carry a sidecar, oldest first,
+    * read off the same listing. */
+  def pendingVersions(upTo: Int): Seq[Int] =
+    if (!anyRef) Nil
+    else names.toSeq
+      .collect { case n if n.startsWith("v") && n.endsWith(".list") =>
+        n.stripPrefix("v").stripSuffix(".list").toInt }
+      .filter(v => v <= upTo && any(v)).sorted
 }

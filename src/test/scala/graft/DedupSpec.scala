@@ -276,6 +276,39 @@ class DedupSpec extends AnyFunSuite {
     assert(lsh.subsetOf(brute), "LSH must not invent pairs (exact cosine verify)")
   }
 
+  test("embedding LSH decides borderline pairs on the 9-dp rounded cosine") {
+    // four families of six near copies: a family's pairs share sign
+    // buckets, and their cosines carry digits past the 9th place
+    val rnd = new scala.util.Random(11)
+    val bases = Array.fill(4, 8)(rnd.nextGaussian().toFloat)
+    val df = (0 until 24).map { i =>
+      (i.toLong, bases(i / 6).map(_ + 0.05f * rnd.nextFloat()))
+    }.toDF("vec_id", "embedding")
+    def lsh(t: Double) =
+      pairSet(Dedup.embeddingNearDupLsh(df, threshold = t, dim = 8))
+    // every bucketed pair, with its raw cosine and the 9-dp rounding the
+    // threshold is compared against
+    val v = df.select($"vec_id", VectorExpressions.vecNormalize(spark,
+      $"embedding".cast("array<double>")).as("v"))
+    val dots = lsh(-2.0).toSeq.toDF("id_a", "id_b")
+      .join(v.as("a"), $"id_a" === $"a.vec_id")
+      .join(v.as("b"), $"id_b" === $"b.vec_id")
+      .select($"id_a", $"id_b",
+        VectorExpressions.vecDot(spark, $"a.v", $"b.v").as("d"))
+      .select($"id_a", $"id_b", $"d", round($"d", 9).as("c9"))
+      .as[(Long, Long, Double, Double)].collect().toSeq
+    // a pair that rounding lifts passes at its rounded cosine although its
+    // raw cosine is below it; one that rounding lowers fails at its raw
+    // cosine
+    val up = dots.find(r => r._4 > r._3)
+    val down = dots.find(r => r._4 < r._3)
+    assert(up.nonEmpty && down.nonEmpty, s"no borderline pairs in $dots")
+    Seq(up.get._4, up.get._3 + 1e-9, down.get._3, down.get._4).foreach { t =>
+      val want = dots.collect { case (a, b, _, c9) if c9 >= t => (a, b) }
+      assert(lsh(t) == want.toSet, s"threshold $t")
+    }
+  }
+
   test("semantic dedup keeps the min-id survivor of each duplicate set") {
     val data = Seq(
       (1L, Array(1.0f, 0.0f, 0.0f), 0),

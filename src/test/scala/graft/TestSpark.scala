@@ -9,16 +9,12 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import scala.jdk.CollectionConverters._
 
-/** One shared local session for all suites. */
+/** One shared local session for all suites, built the way the engine's
+  * own entry points build theirs. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = GraftSession.builder("graft-test", Some("local[4]"), 4)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // specs assert exact on-disk ≡ referenced manifest parity after
