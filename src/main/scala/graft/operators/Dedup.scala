@@ -740,7 +740,6 @@ object Dedup {
   def embeddingNearDupLsh(embeddings: DataFrame, threshold: Double = 0.5,
       dim: Int = 64, bitsPerTable: Int = 8, numTables: Int = 8,
       maxBucket: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = embeddings.sparkSession
     val planes = hyperplanes(bitsPerTable * numTables, dim)
     // sign bits are computed on the RAW vector (sign(dot(v,p)) is

@@ -137,7 +137,6 @@ object Multimodal {
   }
 
   def featuresQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     extractFeatures(mediaFromDocuments(spark, sfDir))
       .toDF()
       .select(col("doc_id"), col("media_type"), col("n_bytes"),
@@ -147,7 +146,6 @@ object Multimodal {
   }
 
   def resizeQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     resize(mediaFromDocuments(spark, sfDir), w = 64, h = 64)
       .toDF()
       .select(col("doc_id"), col("media_type"), col("n_bytes"),
@@ -166,7 +164,6 @@ object Multimodal {
       |FROM documents ORDER BY doc_id""".stripMargin
 
   def framesQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     frameSample(mediaFromDocuments(spark, sfDir), n = 4)
       .toDF()
       .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"),

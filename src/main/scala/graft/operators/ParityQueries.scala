@@ -1711,7 +1711,6 @@ object ParityQueries {
     * pins that each SQL insert committed its own snapshot (versions
     * [1, 2] → time travel works on SQL-written history). */
   def sqlInsert(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     val e = Tables.events(spark, sfDir)
     val wh = "/root/repo/target/tmp/graft_catalog_wh"
     val tbl = s"events_sqlw_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -1750,7 +1749,6 @@ object ParityQueries {
     * pushdown → V1 filters → SQL text → copy-on-write delete) and that
     * the table stays readable through the catalog afterwards. */
   def sqlDelete(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     val e = Tables.events(spark, sfDir)
     val wh = "/root/repo/target/tmp/graft_catalog_wh"
     val tbl = s"events_sqld_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -2291,7 +2289,6 @@ object ParityQueries {
     * Iceberg rename contract, done with a name mapping instead of field
     * ids. */
   def sqlRename(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val e = Tables.events(spark, sfDir)
     val wh = "/root/repo/target/tmp/graft_catalog_wh"
     val tbl = s"events_ren_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -3314,8 +3311,8 @@ object ParityQueries {
     sink.append(e.filter(pmod($"event_id", lit(3)) === 0))
     val log = java.nio.file.Paths.get(wh, tbl, "_graft_log")
     val t1 = java.nio.file.Files
-      .getLastModifiedTime(log.resolve("v00001.list")).toMillis
-    val m2 = log.resolve("v00002.list")
+      .getLastModifiedTime(log.resolve(TableLog.versionFile(1))).toMillis
+    val m2 = log.resolve(TableLog.versionFile(2))
     if (java.nio.file.Files.getLastModifiedTime(m2).toMillis <= t1)
       java.nio.file.Files.setLastModifiedTime(m2,
         java.nio.file.attribute.FileTime.fromMillis(t1 + 1000L))

@@ -125,7 +125,7 @@ object GraftDml {
   * passes through untouched (zero overhead on the non-DML path). Running
   * inside the resolution fixed-point means Spark's own row-level rewrite
   * (which would refuse the table) never sees the statement. */
-final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
+final class GraftDmlRule extends Rule[LogicalPlan] {
   import GraftDml._
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
@@ -635,7 +635,7 @@ case class GraftMergeCommand(
         "MERGE cardinality violation: a target row matched more than " +
           "one source row — deduplicate the source on the ON keys"))
         .cast("boolean")).otherwise(keep)
-    def classValue(attr: AttributeReference, i: Int, acts: Seq[Bound],
+    def classValue(attr: AttributeReference, acts: Seq[Bound],
         fire: Column, noFire: Column): Column =
       acts.indices.foldRight(noFire) { case (k, els) =>
         val v = acts(k).assigned.get(attr.exprId) match {
@@ -648,10 +648,10 @@ case class GraftMergeCommand(
     val finalCols = target.output.zipWithIndex.map { case (a0, i) =>
       val attr = a0.asInstanceOf[AttributeReference]
       val old = col(s"__gt_$i")
-      when(isMatched, classValue(attr, i, mActs, fm, old))
-        .when(isSourceOnly, classValue(attr, i, iActs, fi,
+      when(isMatched, classValue(attr, mActs, fm, old))
+        .when(isSourceOnly, classValue(attr, iActs, fi,
           lit(null).cast(attr.dataType)))
-        .otherwise(classValue(attr, i, nActs, fn, old))
+        .otherwise(classValue(attr, nActs, fn, old))
         .as(attr.name)
     }
     val firedTarget =

@@ -32,7 +32,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // A RESOLUTION rule on purpose: it must replace the resolved
     // UpdateTable/MergeIntoTable inside the fixed point, before Spark's
     // row-level rewrite refuses the non-SupportsRowLevelOperations table.
-    ext.injectResolutionRule(spark => new GraftDmlRule(spark))
+    ext.injectResolutionRule(_ => new GraftDmlRule)
   }
 }
 

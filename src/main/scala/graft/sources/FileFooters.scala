@@ -124,9 +124,9 @@ object FileFooters {
 
   /** The facts a manifest entry records for data file `path`, read on the
     * driver: one status call plus one footer. */
-  def factsOf(path: HPath, format: String): WarehouseIO.FileFacts = {
+  def factsOf(path: HPath, format: String): TableLog.FileFacts = {
     val st = WarehouseIO.fs(path).getFileStatus(path)
-    WarehouseIO.FileFacts(rowCount(st, format), st.getLen,
+    TableLog.FileFacts(rowCount(st, format), st.getLen,
       st.getModificationTime)
   }
 }

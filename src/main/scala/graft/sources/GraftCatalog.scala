@@ -104,69 +104,47 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
   override def tableExists(ident: Identifier): Boolean =
     isTableName(ident.name()) && WarehouseIO.isDir(tableDir(ident))
 
-  /** Snapshot versions recorded for the table, oldest first. */
-  private def versions(ident: Identifier): Seq[Int] =
-    WarehouseIO.childNames(logDir(ident))
-      .collect { case n if n.startsWith("v") && n.endsWith(".list") =>
-        n.stripPrefix("v").stripSuffix(".list").toInt }
-      .sorted
-
-  private def manifestPath(ident: Identifier, v: Int): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(logDir(ident), f"v$v%05d.list")
-
-  /** Snapshot versions at or before `upTo` carrying UNMATERIALIZED
-    * merge-on-read delete sidecars (predicate SQL, key lists, position
-    * lists). Catalog reads of such tables serve through the LIBRARY read
-    * ([[TableSink.readVersion]], which applies every sidecar flavor) via
-    * a [[ProjectedScanBuilder]] — the raw V2 file scan would resurrect
-    * deleted rows; a BRANCH head, which mixes staged appends with
-    * main-line sidecar history, serves through the library's two-slice
-    * [[TableSink.readBranch]]. */
-  private def pendingDeleteVersions(ident: Identifier, upTo: Int): Seq[Int] =
-    new SidecarIndex(logDir(ident)).pendingVersions(upTo)
-
-  /** The absolute data-file paths snapshot `v` recorded. Does NOT check
-    * for pending merge-on-read sidecars — callers either serve through
-    * the library read (which applies them) or refuse explicitly. */
-  private def manifestFiles(ident: Identifier, v: Int): Seq[String] = {
-    val m = manifestPath(ident, v)
+  /** The absolute data-file paths snapshot `v` of `log` recorded (a
+    * branch log resolves its own versions). Does NOT check for pending
+    * merge-on-read sidecars ([[TableLog.pendingVersions]]): such a
+    * version serves through the LIBRARY read ([[TableSink.readVersion]],
+    * or the two-slice [[TableSink.readBranch]] for a branch head) via a
+    * [[ProjectedScanBuilder]], as does a shallow clone, whose head mixes
+    * file roots — the raw V2 file scan would resurrect deleted rows or
+    * miss a root. */
+  private def manifestFiles(ident: Identifier, log: TableLog,
+      v: Int): Seq[String] = {
     // NOT NoSuchTableException: the analyzer rewrites that into its generic
     // table-not-found error, burying WHICH snapshot is missing — and the
     // table itself does exist
-    if (!WarehouseIO.exists(m))
+    if (!log.has(v))
       throw new IllegalArgumentException(
         s"${ident.name()}: snapshot v$v does not exist (expired by a " +
           "rewrite, or never committed); available: " +
-          versions(ident).mkString(", "))
+          log.versions.mkString(", "))
     // the same snapshot resolver the sink uses, so the SQL door reads any
     // table the library wrote.
     // A shallow CLONE's manifest mixes ABSOLUTE entries (the source's
     // files) with relative ones (own appends): absolute stays absolute
     // (round-14 — prefixing tableDir mangled every clone read)
-    WarehouseIO.readSnapshotFiles(logDir(ident), m)
+    log.files(v)
       .map(rel => if (rel.startsWith("/")) rel
         else s"${tableDir(ident)}/$rel").toIndexedSeq
   }
 
-  /** A shallow clone's log carries the `clone_base` sidecar; its head
-    * mixes file roots, so the raw V2 file scan (single basePath) cannot
-    * serve it — clone idents route through the library read, which
-    * loads each root under its own layout. */
-  private def isClone(ident: Identifier): Boolean =
-    WarehouseIO.isFile(
-      new org.apache.hadoop.fs.Path(logDir(ident), "clone_base"))
-
-  /** Serve a shallow clone's snapshot `v` through the library read
-    * pinned to it (the same projected-table shape as branch-under-MoR
-    * serving): dual-root manifests, the copied rename/tombstone/schema
-    * sidecars, and MoR visibility all come from [[TableSink.readVersion]]
-    * verbatim. Read-only — writes to a clone go through the library. */
-  private def cloneProjected(ident: Identifier, v: Int): Table = {
+  /** Serve `read` of the table's library sink as a read-only projected
+    * table: a shallow clone's snapshot ([[TableSink.readVersion]] — its
+    * dual-root manifests, the copied rename/tombstone/schema sidecars and
+    * MoR visibility verbatim; writes to a clone go through the library)
+    * or a branch head under pending sidecars ([[TableSink.readBranch]]). */
+  private def libraryProjected(ident: Identifier)(
+      read: (TableSink, SparkSession) => org.apache.spark.sql.DataFrame)
+      : Table = {
     val cfg0 = insertConfig(ident, firstDataFile(ident))
     val declared = declaredSchema(ident)
     val sink = new TableSink(
       cfg0.copy(tableSchema = declared.orElse(cfg0.tableSchema)))
-    val compute = () => sink.readVersion(SparkSession.active, v)
+    val compute = () => read(sink, SparkSession.active)
     val sch = declared.getOrElse(compute().schema)
     new GraftProjectedTable(ident.toString, sch, compute, None)
   }
@@ -291,7 +269,7 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
     * persisted spec are unrecoverable from the layout alone and stay
     * read-only. */
   private def fileTable(ident: Identifier, paths: Seq[String],
-      firstFile: Option[String], userSchema: Option[StructType] = None,
+      firstFile: Option[String], userSchema: Option[StructType],
       writable: Boolean = false, morVersion: Option[Int] = None): Table = {
     val spark = SparkSession.active
     val base = tableDir(ident).toString
@@ -534,14 +512,15 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
       // as a table through the by-name door SHOW TABLES never lists
       throw new NoSuchTableException(ident)
     }
-    versions(ident).lastOption match {
+    val log = TableLog(logDir(ident))
+    log.head match {
       case Some(v) =>
-        if (isClone(ident)) return cloneProjected(ident, v)
-        val files = manifestFiles(ident, v)
+        if (log.isClone) return libraryProjected(ident)(_.readVersion(_, v))
+        val files = manifestFiles(ident, log, v)
         fileTable(ident, files, files.headOption, declaredSchema(ident),
           writable = true,
           morVersion =
-            if (pendingDeleteVersions(ident, v).nonEmpty) Some(v) else None)
+            if (log.pendingVersions(v).nonEmpty) Some(v) else None)
       case None =>
         firstDataFile(ident) match {
           case Some(first) =>
@@ -565,67 +544,54 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
   override def loadTable(ident: Identifier, version: String): Table = {
     healInterruptedSwap(ident)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
+    loadVersion(ident, TableLog(logDir(ident)), version)
+  }
+
+  /** [[loadTable]] `VERSION AS OF version`, resolved against one view of
+    * the table's log. */
+  private def loadVersion(ident: Identifier, log: TableLog,
+      version: String): Table = {
     val (files, pinned) = version.toIntOption match {
       case Some(v) =>
-        if (isClone(ident)) return cloneProjected(ident, v)
-        (manifestFiles(ident, v), Some(v))
+        if (log.isClone) return libraryProjected(ident)(_.readVersion(_, v))
+        (manifestFiles(ident, log, v), Some(v))
       case None =>
-        // Same name charset TableSink.branchLogPath enforces on write:
+        // Same name charset TableLog.branchDirName enforces on write:
         // anything else (slashes, '..') must not resolve as a path.
         if (!version.matches("[A-Za-z0-9_-]+"))
           throw new IllegalArgumentException(
             s"${ident.name()}: '$version' is neither an integer snapshot id " +
               "nor a live branch or tag name")
-        val dir =
-          new org.apache.hadoop.fs.Path(logDir(ident), s"branch_$version")
-        val head: Option[Int] = WarehouseIO.childNames(dir)
-          .collect { case n if n.startsWith("v") && n.endsWith(".list") =>
-            n.stripPrefix("v").stripSuffix(".list").toInt }
-          .sorted.lastOption
-        head match {
+        val branch = log.branch(version)
+        branch.head match {
           case Some(v) =>
             // a branch head mixes staged appends with main-line sidecar
             // history: under pending MoR sidecars it serves through the
             // LIBRARY two-slice read (TableSink.readBranch — sidecars
             // committed <= the branch base apply to the base slice,
             // staged appends read raw; round-12, the refusal deleted).
-            val pendingHead = versions(ident).lastOption
-              .map(pendingDeleteVersions(ident, _)).getOrElse(Nil)
-            if (pendingHead.nonEmpty) {
-              val cfg0 = insertConfig(ident, firstDataFile(ident))
-              val declared = declaredSchema(ident)
-              val sink = new TableSink(
-                cfg0.copy(tableSchema = declared.orElse(cfg0.tableSchema)))
-              val compute = () =>
-                sink.readBranch(SparkSession.active, version)
-              val sch = declared.getOrElse(compute().schema)
-              return new GraftProjectedTable(ident.toString, sch,
-                compute, None)
-            }
+            val pendingHead = log.head.map(log.pendingVersions).getOrElse(Nil)
+            if (pendingHead.nonEmpty)
+              return libraryProjected(ident)(_.readBranch(_, version))
             // branch snapshots reference manifests in the MAIN log dir
-            (WarehouseIO.readSnapshotFiles(logDir(ident),
-              new org.apache.hadoop.fs.Path(dir, f"v$v%05d.list"))
-              .map(rel => s"${tableDir(ident)}/$rel").toIndexedSeq, None)
+            (manifestFiles(ident, branch, v), None)
           case None =>
             // not a branch — a TAG resolves to the pinned snapshot
             // (Iceberg's VERSION AS OF accepts branch and tag names alike;
             // branches win on a name collision, checked first above)
-            val tag =
-              new org.apache.hadoop.fs.Path(logDir(ident), s"tag_$version")
-            if (!WarehouseIO.isFile(tag))
+            val tv = log.tagVersion(version).getOrElse(
               throw new IllegalArgumentException(
                 s"${ident.name()}: '$version' is neither an integer " +
-                  "snapshot id nor a live branch or tag name")
-            val tv = WarehouseIO.readString(tag).trim.toInt
-            if (isClone(ident)) return cloneProjected(ident, tv)
-            (manifestFiles(ident, tv).toIndexedSeq, Some(tv))
+                  "snapshot id nor a live branch or tag name"))
+            if (log.isClone)
+              return libraryProjected(ident)(_.readVersion(_, tv))
+            (manifestFiles(ident, log, tv), Some(tv))
         }
     }
     // declared schema governs historical reads too: a snapshot older than
     // an ADD COLUMNS reads NULL-filled, never schema-shifted mid-query
     fileTable(ident, files, files.headOption, declaredSchema(ident),
-      morVersion = pinned.filter(v =>
-        pendingDeleteVersions(ident, v).nonEmpty))
+      morVersion = pinned.filter(log.pendingVersions(_).nonEmpty))
   }
 
   /** `TIMESTAMP AS OF t` (micros since epoch): the last snapshot committed
@@ -634,18 +600,17 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     healInterruptedSwap(ident)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val vs = versions(ident)
-    if (vs.isEmpty) throw new IllegalArgumentException(
+    val log = TableLog(logDir(ident))
+    if (log.versions.isEmpty) throw new IllegalArgumentException(
       s"table ${ident.name()} has no snapshot log (unversioned); " +
         "TIMESTAMP AS OF needs versioned=true commits")
     val cutoffMs = timestampMicros / 1000L
-    val v = vs.filter(v =>
-        WarehouseIO.modifiedAtMs(manifestPath(ident, v)) <= cutoffMs)
+    val v = log.versions.filter(log.committedAtMs(_) <= cutoffMs)
       .lastOption
       .getOrElse(throw new IllegalArgumentException(
         s"${ident.name()}: no snapshot committed at or before timestamp " +
           s"$timestampMicros"))
-    loadTable(ident, v.toString)
+    loadVersion(ident, log, v.toString)
   }
 
   // ------------------------------------------------------------- DDL

@@ -474,7 +474,7 @@ final class BloomSkip(sink: TableSink, bits: Int = 4096, k: Int = 5) {
   private def prunedPaths(spark: SparkSession,
       probes: Seq[(String, Column)], outCol: String): DataFrame =
     sink.manifestStatsDf(spark) match {
-      case Some(stats) => manifestPruned(spark, stats, probes, outCol)
+      case Some(stats) => manifestPruned(stats, probes, outCol)
       case None => sidecarPruned(spark, probes, outCol)
     }
 
@@ -485,7 +485,7 @@ final class BloomSkip(sink: TableSink, bits: Int = 4096, k: Int = 5) {
     * bitmap with builtin string/bit expressions, all codegen'd. An
     * entry whose geometry disagrees with the registry (mid-migration
     * state) is never prunable — conservative, like an absent entry. */
-  private def manifestPruned(spark: SparkSession, stats: DataFrame,
+  private def manifestPruned(stats: DataFrame,
       probes: Seq[(String, Column)], outCol: String): DataFrame = {
     import org.apache.spark.sql.types.DataType
     val (_, specs) = sink.readStatsSpec()

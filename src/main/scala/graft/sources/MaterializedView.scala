@@ -96,13 +96,12 @@ final class MaterializedView(source: TableSink, path: String,
   def refresh(spark: SparkSession): (Int, Int) = {
     recover()
     val (gen, from) = reflectsMark()
-    val curGen = source.logGeneration()
+    val (curGen, head) = source.streamHead()
     require(gen == curGen,
       s"view at $path reflects generation $gen but the source history " +
         s"is now generation $curGen: a rewriting op expired and " +
         "restarted the snapshot log, so the un-folded changes are " +
         "unrecoverable — drop the view state to rebuild from a full read")
-    val head = source.snapshotVersions().lastOption.getOrElse(0)
     require(from <= head,
       s"view at $path reflects v$from but the source head is v$head — " +
         "source history was rolled back; drop the view state to rebuild")

@@ -184,7 +184,7 @@ object TableSink {
   /** One row of the live file inventory behind the `files` and
     * `partitions` metadata tables. */
   private final case class LiveFile(uri: String, partition: String,
-      facts: WarehouseIO.FileFacts)
+      facts: TableLog.FileFacts)
 
   /** Default [[TableSink.removeOrphans]] grace window (24 h) — generous
     * versus the seconds-scale life of a staged write so a concurrent
@@ -534,30 +534,19 @@ final class TableSink(val config: SinkConfig) {
       "manifest stats need a versioned table with at least one commit")
     writeStatsSpec(zone, bloom)
     val schema = config.tableSchema.getOrElse(read(spark).schema)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val head = snapshotVersions().last
-      val rels = manifestFiles(head)
+    claimFoldedHead("stats refold", maxAttempts) { (log, head) =>
+      val rels = log.files(head)
       require(!rels.exists(_.startsWith("/")),
         "stats refold on a shallow clone is not supported — materialize " +
           "the clone first (compact)")
       val stats = manifestStatsFor(spark, rels, schema)
       // the refold replaces every entry: carry each file's recorded facts
-      val facts = WarehouseIO.readSnapshotLines(logPath, snapshotFile(head))
-        .map(l => WarehouseIO.manifestLinePath(l) -> WarehouseIO.entryFacts(l))
+      val facts = log.lines(head)
+        .map(l => TableLog.manifestLinePath(l) -> TableLog.entryFacts(l))
         .toMap
-      val merged = WarehouseIO.writeManifestLines(logPath,
-        rels.distinct.sorted.map(r =>
-          WarehouseIO.renderEntry(r, stats.get(r), facts.getOrElse(r, None))))
-      if (WarehouseIO.writeStringIfAbsent(logFile(f"v${head + 1}%05d.list"),
-          WarehouseIO.renderSnapshot(Seq(merged))))
-        return head + 1
-      WarehouseIO.delete(logFile(merged))
-      require(attempt < maxAttempts,
-        s"stats refold lost the version race $maxAttempts times")
+      rels.distinct.sorted.map(r =>
+        TableLog.renderEntry(r, stats.get(r), facts.getOrElse(r, None)))
     }
-    -1 // unreachable
   }
 
   /** JSON schema of a manifest stats entry. */
@@ -580,16 +569,17 @@ final class TableSink(val config: SinkConfig) {
     * makes for reading 10 files instead of 10 000. */
   private[graft] def planCandidates(spark: SparkSession,
       allPaths: Seq[String],
-      conjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Option[Seq[String]] = {
+      conjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      log: TableLog = openLog()): Option[Seq[String]] = {
     import org.apache.spark.sql.catalyst.expressions._
     val hiddenSpec = config.partitionSpec
       .filter(_.transform != Transform.Identity)
-    val statsOpt = manifestStatsDf(spark)
+    val statsOpt = manifestStatsDf(spark, log)
     // nothing to prune WITH: no manifest stats and no hidden transforms
     if (statsOpt.isEmpty && hiddenSpec.isEmpty) return None
     val schema = config.tableSchema.getOrElse(
-      scala.util.Try(read(spark).schema).getOrElse(return None))
+      scala.util.Try(readLive(log, spark, mergeSchema = false).schema)
+        .getOrElse(return None))
     def litCol(l: Literal): Column =
       org.apache.spark.sql.graft.Bridge.column(l)
     // (column, lo, hi) closed bounds; None side = unbounded
@@ -791,20 +781,21 @@ final class TableSink(val config: SinkConfig) {
     * unversioned, empty, or carries no stats entry at all. The
     * manifests are read by executors (text scan), the driver touches
     * only names: the same scale shape as the batch read's metadata. */
-  private[graft] def manifestStatsDf(spark: SparkSession): Option[DataFrame] = {
+  private[graft] def manifestStatsDf(spark: SparkSession,
+      log: TableLog = openLog()): Option[DataFrame] = {
     if (!config.versioned) return None
     // registry-first probe: analyze always writes the spec before the
-    // refold, so its absence means no stats anywhere — one file stat
-    // instead of reading every manifest's contents (this probe runs at
-    // SQL scan PLANNING, so it must be cheap on stats-less tables)
-    if (!WarehouseIO.isFile(statsSpecPath)) return None
-    val head = snapshotVersions().lastOption.getOrElse(return None)
-    val names = manifestNames(head)
+    // refold, so its absence means no stats anywhere — answered by the
+    // listing instead of reading every manifest's contents (this probe
+    // runs at SQL scan PLANNING, so it must be cheap on stats-less tables)
+    if (!log.contains(statsSpecPath.getName)) return None
+    val head = log.head.getOrElse(return None)
+    val names = log.manifestNames(head)
     if (names.isEmpty) return None
     // cheap driver probe: any stats line at all? (names-only readers kept
     // honest — this reads content, so it counts as manifest reads)
     val hasStats = names.exists(n =>
-      WarehouseIO.manifestLinesOf(logPath, n).exists(_.contains('\t')))
+      log.manifestLines(n).exists(_.contains('\t')))
     if (!hasStats) return None
     val root = config.tablePath.stripSuffix("/")
     Some(spark.read.text(names.map(n => logFile(n).toString): _*)
@@ -824,13 +815,13 @@ final class TableSink(val config: SinkConfig) {
   }
 
   /** Manifest lines for `rels`, files a commit adds: each entry records
-    * the file's [[WarehouseIO.FileFacts]] (one status call and one footer
+    * the file's [[TableLog.FileFacts]] (one status call and one footer
     * read on the driver per file — O(files added)) beside any column
     * stats in `stats`. A file unreadable here keeps an entry without
     * facts; the commit's own existence checks refuse a swept file. */
   private def entryLines(rels: Seq[String],
       stats: Map[String, String] = Map.empty): Seq[String] =
-    rels.distinct.sorted.map(r => WarehouseIO.renderEntry(r, stats.get(r),
+    rels.distinct.sorted.map(r => TableLog.renderEntry(r, stats.get(r),
       scala.util.Try(FileFooters.factsOf(dataPath(r), config.fileFormat))
         .toOption))
 
@@ -872,9 +863,7 @@ final class TableSink(val config: SinkConfig) {
   private[graft] def commitAppendedFiles(added: Seq[String],
       maxAttempts: Int = 20, txn: Option[(String, Long)] = None,
       stats: Map[String, String] = Map.empty,
-      posRef: Option[String] = None,
-      keysRef: Option[String] = None,
-      delRef: Option[String] = None): Int = {
+      sidecars: Seq[(TableLog.Sidecar, String)] = Nil): Int = {
     // LAYERED commit (Iceberg manifest-list shape): this commit's own
     // delta manifest is written ONCE — its content (exactly this write's
     // files) does not depend on which head it lands on — and the claimed
@@ -890,7 +879,7 @@ final class TableSink(val config: SinkConfig) {
     // layer, and stats die with their manifest on expiry/rewrite
     val ownManifest =
       if (added.isEmpty) None
-      else Some(WarehouseIO.writeManifestLines(logPath,
+      else Some(TableLog.writeManifestLines(logPath,
         entryLines(added, stats)))
     // a manifest WE created to represent the base (bootstrap listing of
     // pre-existing unversioned data) — superseded and deleted if the
@@ -907,7 +896,8 @@ final class TableSink(val config: SinkConfig) {
     var attempt = 0
     while (true) {
       attempt += 1
-      val head = snapshotVersions().lastOption
+      val log = openLog() // each claim attempt sees the current head
+      val head = log.head
       // An append racing a REWRITE (delete/update/compact/cluster — ops
       // that swap the table root) can have its already-renamed files
       // swept with the old root before this claim lands; committing
@@ -935,12 +925,12 @@ final class TableSink(val config: SinkConfig) {
       // referencing swept files; readers can observe one only in the
       // claim-to-retract instant, and only under a rewrite that already
       // violated the single-rewriter maintenance-window convention.
-      val genBefore = logGeneration()
+      val genBefore = log.generation
       // O(manifest count) head read — a head contributes its manifest
       // NAMES verbatim; no head bootstraps from a one-time listing of
       // pre-existing unversioned data
       val headNames: Seq[String] = head match {
-        case Some(h) => manifestNames(h)
+        case Some(h) => log.manifestNames(h)
         case None =>
           // a TXN (streaming) first commit must NOT bootstrap-sweep the
           // directory: a batch-0 attempt that crashed between its staged
@@ -954,10 +944,10 @@ final class TableSink(val config: SinkConfig) {
             // the staged write already renamed THIS commit's files into
             // the table, so the bootstrap listing must exclude them —
             // they are the delta manifest's, not pre-existing data
-            val preexisting = listDataFiles().filterNot(added.toSet)
+            val preexisting = dataFilesRel().filterNot(added.toSet)
             if (preexisting.nonEmpty)
               baseManifest =
-                Some(WarehouseIO.writeManifest(logPath, preexisting))
+                Some(TableLog.writeManifestLines(logPath, preexisting))
           }
           baseManifest.toSeq
       }
@@ -973,32 +963,28 @@ final class TableSink(val config: SinkConfig) {
             chained.size > config.manifestMergeThreshold)
           // line-preserving fold: a stats-bearing entry must survive the
           // merge, or compaction would silently drop file skipping
-          Some(WarehouseIO.writeManifestLines(logPath,
-            WarehouseIO.mergeManifestLines(
-              chained.map(WarehouseIO.manifestLinesOf(logPath, _)))))
+          Some(TableLog.writeManifestLines(logPath,
+            TableLog.mergeManifestLines(chained.map(log.manifestLines))))
         else None
       mergedManifest = mergeManifest // exception-path cleanup owns it
       raceWindowCheckHook()
-      if (WarehouseIO.writeStringIfAbsent(logFile(f"v$v%05d.list"),
-          WarehouseIO.renderSnapshot(
+      val claimed = logFile(TableLog.versionFile(v))
+      if (WarehouseIO.writeStringIfAbsent(claimed,
+          TableLog.renderSnapshot(
             mergeManifest.map(Seq(_)).getOrElse(chained),
             // the streaming dedup record rides IN the claimed snapshot —
-            // atomic with the commit, never a separate marker to drift;
-            // the id is escaped (checkpoint-path ids can carry spaces).
+            // atomic with the commit, never a separate marker to drift.
             // A MoR UPDATE/MERGE's position-delete sidecar reference
             // rides the same way: the commit that APPENDS the
             // replacement rows must subtract the replaced rows in the
             // SAME claimed snapshot, or a concurrent reader would see
             // both copies in the sidecar-lands-later window
-            txn.map(t =>
-              s"txn ${WarehouseIO.encodeTxnId(t._1)} ${t._2}").toSeq ++
-              posRef.map(n => s"pos $n").toSeq ++
-              keysRef.map(n => s"keys $n").toSeq ++
-              delRef.map(n => s"del $n").toSeq))) {
-        val genFlip = genBefore != "none" && logGeneration() != genBefore
+            TableLog.commitMetadata(txn, sidecars)))) {
+        val genFlip = genBefore != "none" &&
+          !TableLog.currentGeneration(logPath).contains(genBefore)
         val sweptAfter = if (genFlip) Nil else sweptFiles()
         if (genFlip || sweptAfter.nonEmpty) {
-          WarehouseIO.delete(logFile(f"v$v%05d.list"))
+          WarehouseIO.delete(claimed)
           mergeManifest.foreach(n => WarehouseIO.delete(logFile(n)))
           raceError(s"a rewrite landed inside the commit window " +
             s"(manifest v$v retracted; the append may or may not be in " +
@@ -1013,10 +999,12 @@ final class TableSink(val config: SinkConfig) {
         // retract above and consolidate's claim-to-retract) and refuse;
         // a branch whose base is at or above v sees the sidecar and is
         // fine. The caller's catch deletes the sidecar file itself.
-        if (posRef.isDefined || keysRef.isDefined || delRef.isDefined) {
-          val raced = branchesOrPending().filter(branchBaseVersion(_) < v)
+        if (sidecars.nonEmpty) {
+          val after = openLog()
+          val raced = after.branchesOrPending
+            .filter(branchBaseVersion(after, _) < v)
           if (raced.nonEmpty) {
-            WarehouseIO.delete(logFile(f"v$v%05d.list"))
+            WarehouseIO.delete(claimed)
             mergeManifest.foreach(n => WarehouseIO.delete(logFile(n)))
             throw new IllegalStateException(
               s"a branch (${raced.mkString(", ")}) was created inside " +
@@ -1040,7 +1028,8 @@ final class TableSink(val config: SinkConfig) {
       // race; without this re-check the retry would double-commit the
       // batch id. 0 = "already committed by someone else" (versions
       // start at 1) — the caller discards its staged files.
-      if (txn.exists { case (id, b) => lastTxnBatch(id).exists(_ >= b) }) {
+      if (txn.exists { case (id, b) =>
+          lastTxnBatch(openLog(), id).exists(_ >= b) }) {
         ownManifest.foreach(n => WarehouseIO.delete(logFile(n)))
         return 0
       }
@@ -1066,7 +1055,7 @@ final class TableSink(val config: SinkConfig) {
     * table-relative place, and return exactly those paths — the commit's
     * added-file list, discovered from the write itself rather than a
     * table-wide directory walk. `_staging` is underscore-prefixed, so
-    * readers and [[listDataFiles]] never observe in-flight files; the
+    * readers and [[dataFilesRel]] never observe in-flight files; the
     * renames go through the Hadoop [[org.apache.hadoop.fs.FileSystem]]
     * API (metadata-only moves on HDFS-class stores, and the path to a
     * non-local warehouse). A crash mid-move leaves unreferenced files
@@ -1108,20 +1097,15 @@ final class TableSink(val config: SinkConfig) {
   }
 
   // ------------------------------------------------------- snapshot log
-  // Iceberg-style commit history, LAYERED like Iceberg's manifest lists:
-  // each commit writes one immutable delta manifest
-  // (_graft_log/m-<uuid>.mf, one data-file path per line) holding exactly
-  // the files it added, and the snapshot file (_graft_log/vNNNNN.list) is
-  // a SMALL manifest-name list ("#manifests" header). Readers union the
-  // deltas; K snapshots share manifests instead of storing K full file
-  // lists; commit metadata IO is O(added files + manifest count), never
-  // O(table files). Appends never touch existing files, so every
-  // recorded snapshot stays readable. Rewriting ops (upsert / delete /
-  // compact) replace files in place, which invalidates earlier
-  // manifests — they EXPIRE the history (log resets to a single snapshot
-  // of the post-rewrite state), the same contract as Iceberg snapshot
-  // expiry after rewrite-files maintenance; [[compactManifests]] bounds
-  // the manifest count and [[gcManifests]] reclaims unreferenced deltas.
+  // Iceberg-style layered commit history, laid out and read through
+  // [[TableLog]] (one listing per operation). Appends never touch
+  // existing files, so every recorded snapshot stays readable. Rewriting
+  // ops (upsert / delete / compact) replace files in place, which
+  // invalidates earlier manifests — they EXPIRE the history (log resets
+  // to a single snapshot of the post-rewrite state), the same contract as
+  // Iceberg snapshot expiry after rewrite-files maintenance;
+  // [[compactManifests]] bounds the manifest count and [[gcManifests]]
+  // reclaims unreferenced deltas.
 
   // The snapshot log (_graft_log), every manifest/sidecar read-write, AND
   // the whole-table rewrite/swap protocols below go through
@@ -1139,10 +1123,17 @@ final class TableSink(val config: SinkConfig) {
   private def logFile(name: String) =
     new org.apache.hadoop.fs.Path(logPath, name)
 
+  /** A fresh one-listing view of this table's snapshot log. */
+  private def openLog(): TableLog = TableLog(logPath)
+
   /** Live data-file paths relative to the table root (excludes `_`-prefixed
     * metadata dirs: snapshot log, staging, zone-map stats, streaming sink
-    * log). */
-  private[graft] def dataFilesRel(): Seq[String] = listDataFiles()
+    * log) — a table-wide directory walk, counted in [[directoryWalks]]. */
+  private[graft] def dataFilesRel(): Seq[String] = {
+    directoryWalks += 1
+    WarehouseIO.listDataFilesRel(
+      new org.apache.hadoop.fs.Path(config.tablePath))
+  }
 
   /** Table-wide directory walks taken (test hook: the append commit path
     * must stay at zero once a manifest exists — O(added), not O(table)). */
@@ -1173,31 +1164,18 @@ final class TableSink(val config: SinkConfig) {
     else path
   }
 
-  private def listDataFiles(): Seq[String] = {
-    directoryWalks += 1
-    WarehouseIO.listDataFilesRel(
-      new org.apache.hadoop.fs.Path(config.tablePath))
-  }
-
-  /** Record the current data-file set as the next snapshot version. ONLY
-    * safe when no branch is live (a branch's staged files share the
-    * directory and a whole-directory snapshot would publish them) — the
-    * sole caller is [[expireSnapshots]], reached from rewriting ops, which
-    * all [[requireNoBranches]] first. Appends commit via [[writeAndCommit]]. */
-  private def writeSnapshot(): Int = writeSnapshotOf(listDataFiles())
-
   /** Rewriting ops rewrite/swap the live directory: staged branch rows
     * would be absorbed into the rewritten table and the swap destroys the
     * branch manifests. Refuse instead of silently publishing unaudited
     * data — publish or drop branches first (the documented WAP contract). */
-  private def requireNoBranches(op: String): Unit = {
+  private def requireNoBranches(op: String, log: TableLog = openLog()): Unit = {
     // branchesOrPending: a branch mid-creation (base written, v1 not
     // yet) already pins a base version and must block rewrites too
-    val live = branchesOrPending()
+    val live = log.branchesOrPending
     require(live.isEmpty,
       s"$op rewrites the table and would absorb/destroy staged branch " +
         s"data; publish or drop live branches first: ${live.mkString(", ")}")
-    val pinned = tags()
+    val pinned = log.tags
     require(pinned.isEmpty,
       s"$op rewrites the table and would invalidate the snapshots these " +
         s"tags pin; drop tags first: ${pinned.mkString(", ")}")
@@ -1218,25 +1196,23 @@ final class TableSink(val config: SinkConfig) {
     require(snapshotVersions().isEmpty,
       s"table ${config.tableName} already has committed history; " +
         "adopt only converts a plain directory")
-    val files = listDataFiles()
+    val files = dataFilesRel()
     require(files.nonEmpty,
       s"table ${config.tableName} has no data files to adopt — just " +
         "append; the first commit creates v1")
-    writeSnapshotOf(files)
+    writeFirstSnapshot(files)
   }
 
-  /** Record an EXPLICIT file set as the next main snapshot (used by
-    * [[publishBranch]], whose published state is the branch head's file
-    * list, not whatever happens to be in the live directory; and by
-    * [[adopt]], which commits the pre-existing listing as v1). */
-  private def writeSnapshotOf(files: Seq[String]): Int = {
-    val v = snapshotVersions().lastOption.getOrElse(0) + 1
+  /** Record `files` as snapshot v1 of an empty log: [[adopt]]'s
+    * pre-existing listing, or the live directory that history restarts
+    * from after a rewrite ([[expireSnapshots]]) or a recovered swap. */
+  private def writeFirstSnapshot(files: Seq[String]): Int = {
     val names =
       if (files.isEmpty) Nil
-      else Seq(WarehouseIO.writeManifestLines(logPath, entryLines(files)))
-    WarehouseIO.writeString(logFile(f"v$v%05d.list"),
-      WarehouseIO.renderSnapshot(names))
-    v
+      else Seq(TableLog.writeManifestLines(logPath, entryLines(files)))
+    WarehouseIO.writeString(logFile(TableLog.versionFile(1)),
+      TableLog.renderSnapshot(names))
+    1
   }
 
   /** Drop all history and record the current state as version 1 — called
@@ -1246,7 +1222,9 @@ final class TableSink(val config: SinkConfig) {
     * maintenance — publish audit branches before running rewriting ops. */
   private def expireSnapshots(): Unit = {
     if (WarehouseIO.isDir(logPath)) WarehouseIO.delete(logPath, recursive = true)
-    if (config.versioned) writeSnapshot()
+    // the whole live directory becomes v1: safe only because every
+    // rewriting op refuses live branches (their staged files share it)
+    if (config.versioned) writeFirstSnapshot(dataFilesRel())
   }
 
   /** Iceberg `expire_snapshots` (retain-last) analogue: drop every
@@ -1269,31 +1247,40 @@ final class TableSink(val config: SinkConfig) {
     * append-only history every old file is still in the head manifest, so
     * only manifests are deleted; files die here only when earlier
     * rollbacks/branch drops left them referenced solely by old history. */
-  def expireSnapshotsKeepLast(keepLast: Int): Seq[Int] = {
+  def expireSnapshotsKeepLast(keepLast: Int): Seq[Int] =
+    expireKeepLast(openLog(), keepLast)
+
+  private def expireKeepLast(log: TableLog, keepLast: Int): Seq[Int] = {
     require(keepLast >= 1, "keepLast must be >= 1")
-    val vs = snapshotVersions()
+    val vs = log.versions
     val drop = vs.dropRight(keepLast)
     if (drop.isEmpty) return Nil
-    val dangling = tags().filter(t => drop.contains(tagVersion(t)))
+    val dangling = log.tags.filter(t => drop.contains(tagVersion(log, t)))
     require(dangling.isEmpty,
       s"expiring snapshots ${drop.mkString(", ")} would orphan tags " +
         s"pinning them; drop the tags first: ${dangling.mkString(", ")}")
-    val withSidecars = { val idx = sidecarIndex(); drop.filter(idx.any) }
+    val withSidecars = drop.filter(log.carriesSidecar)
     require(withSidecars.isEmpty,
       s"snapshots ${withSidecars.mkString(", ")} carry merge-on-read " +
         "delete sidecars that still apply to later reads — expiring them " +
         "would resurrect deleted rows; materialize first (compact)")
-    val keepFiles = (vs.takeRight(keepLast).flatMap(manifestFiles) ++
-      branches().flatMap(b => branchVersions(b).flatMap(branchManifest(b, _)))
-      ).toSet
+    val keepFiles =
+      (vs.takeRight(keepLast).flatMap(log.files) ++ branchFiles(log)).toSet
     val root = new org.apache.hadoop.fs.Path(config.tablePath)
-    drop.flatMap(manifestFiles).distinct.filterNot(keepFiles)
+    drop.flatMap(log.files).distinct.filterNot(keepFiles)
       .foreach(rel => WarehouseIO.delete(
         new org.apache.hadoop.fs.Path(root, rel)))
-    drop.foreach(v => WarehouseIO.delete(logFile(f"v$v%05d.list")))
+    drop.foreach(v => WarehouseIO.delete(logFile(TableLog.versionFile(v))))
     gcManifests() // manifests referenced only by the dropped snapshots
     drop
   }
+
+  /** Every data file some version of a live branch references. */
+  private def branchFiles(log: TableLog): Seq[String] =
+    log.branches.flatMap { b =>
+      val bl = log.branch(b)
+      bl.versions.flatMap(bl.files)
+    }
 
   /** Iceberg `expire_snapshots(older_than => ts)` analogue: drop every
     * snapshot whose commit time is strictly before `cutoffMs` — except
@@ -1307,24 +1294,20 @@ final class TableSink(val config: SinkConfig) {
     * when a runaway committer floods the log. */
   def expireSnapshotsOlderThan(cutoffMs: Long, keepLast: Int = 1): Seq[Int] = {
     require(keepLast >= 1, "keepLast must be >= 1")
-    val vs = snapshotVersions()
+    val log = openLog()
+    val vs = log.versions
     // keep everything from the OLDEST post-cutoff version onward — with
     // clock skew between concurrent committers, mtimes need not be
     // monotonic in version order, and a count-based mapping could expire
     // a version NEWER than the cutoff sandwiched behind a slow clock;
     // indexWhere is skew-conservative (over-keeps, never over-drops)
-    val firstYoung = vs.indexWhere(v =>
-      WarehouseIO.modifiedAtMs(logFile(f"v$v%05d.list")) >= cutoffMs)
+    val firstYoung = vs.indexWhere(log.committedAtMs(_) >= cutoffMs)
     val young = if (firstYoung < 0) 0 else vs.length - firstYoung
-    expireSnapshotsKeepLast(math.max(keepLast, young))
+    expireKeepLast(log, math.max(keepLast, young))
   }
 
   /** Committed snapshot versions, oldest first (empty when unversioned). */
-  def snapshotVersions(): Seq[Int] =
-    WarehouseIO.childNames(logPath)
-      .collect { case n if n.startsWith("v") && n.endsWith(".list") =>
-        n.stripPrefix("v").stripSuffix(".list").toInt }
-      .sorted
+  def snapshotVersions(): Seq[Int] = openLog().versions
 
   /** Identity of the CURRENT snapshot history. Rewriting ops expire the
     * log (directory and all) and restart numbering at v1, so a bare
@@ -1334,13 +1317,7 @@ final class TableSink(val config: SinkConfig) {
     * it dies with the history it names and a fresh one is claimed
     * (exclusive-create, racing claimants converge on one winner) on the
     * next read. "none" = no snapshot log yet. */
-  private[graft] def logGeneration(): String = {
-    val p = logFile("generation")
-    if (WarehouseIO.isFile(p)) return WarehouseIO.readString(p).trim
-    if (!WarehouseIO.isDir(logPath)) return "none"
-    WarehouseIO.writeStringIfAbsent(p, java.util.UUID.randomUUID().toString)
-    WarehouseIO.readString(p).trim
-  }
+  private[graft] def logGeneration(): String = openLog().generation
 
   /** Delete manifest files referenced by NO surviving snapshot — main or
     * branch (tags pin versions, which resolve through main snapshots).
@@ -1349,10 +1326,12 @@ final class TableSink(val config: SinkConfig) {
     * touched. Snapshot-history storage therefore grows O(Σ live deltas),
     * not O(snapshots × table files). */
   private def gcManifests(): Unit = {
-    val live = (snapshotVersions().map(v => logFile(f"v$v%05d.list")) ++
-      branches().flatMap(b => branchVersions(b).map(v =>
-        new org.apache.hadoop.fs.Path(branchLogPath(b), f"v$v%05d.list")))
-      ).flatMap(WarehouseIO.snapshotManifestNames).toSet
+    val log = openLog() // after the caller's deletions
+    val live = (log.versions.flatMap(log.manifestNames) ++
+      log.branches.flatMap { b =>
+        val bl = log.branch(b)
+        bl.versions.flatMap(bl.manifestNames)
+      }).toSet
     // an optimistic append writes its delta (and possibly base/merge)
     // manifest BEFORE claiming a version — "referenced by no snapshot"
     // is the normal transient state of an in-flight commit, and some GC
@@ -1361,11 +1340,8 @@ final class TableSink(val config: SinkConfig) {
     // live commit attempt can still be about to reference them; younger
     // orphans age into the next GC pass.
     val now = System.currentTimeMillis()
-    WarehouseIO.childNames(logPath)
-      .filter(n => n.startsWith("m-") && n.endsWith(".mf"))
-      .filterNot(live)
-      .filter(n => scala.util.Try(now - WarehouseIO.modifiedAtMs(logFile(n)) >=
-        WarehouseIO.manifestGcGraceMs).getOrElse(false))
+    log.manifestNamesListed.filterNot(live)
+      .filter(n => now - log.mtimeOf(n) >= WarehouseIO.manifestGcGraceMs)
       .foreach(n => WarehouseIO.delete(logFile(n)))
   }
 
@@ -1381,48 +1357,31 @@ final class TableSink(val config: SinkConfig) {
   def compactManifests(maxAttempts: Int = 20): Int = {
     require(config.versioned && snapshotVersions().nonEmpty,
       "compactManifests needs a versioned table with at least one commit")
+    // line-preserving fold (stats entries survive the compaction)
+    claimFoldedHead("compactManifests", maxAttempts)(_.lines(_))
+  }
+
+  /** Claim `head + 1` as a metadata-only snapshot of ONE manifest holding
+    * `fold(log, head)`'s lines, against a fresh view per attempt; a lost
+    * claim means a concurrent append made the fold stale — drop it and
+    * retry. Returns the new head version. */
+  private def claimFoldedHead(op: String, maxAttempts: Int)(
+      fold: (TableLog, Int) => Seq[String]): Int = {
     var attempt = 0
     while (true) {
       attempt += 1
-      val head = snapshotVersions().last
-      // line-preserving fold (stats entries survive the compaction)
-      val merged = WarehouseIO.writeManifestLines(logPath,
-        WarehouseIO.readSnapshotLines(logPath, snapshotFile(head)))
-      if (WarehouseIO.writeStringIfAbsent(logFile(f"v${head + 1}%05d.list"),
-          WarehouseIO.renderSnapshot(Seq(merged))))
+      val log = openLog()
+      val head = log.versions.last
+      val merged = TableLog.writeManifestLines(logPath, fold(log, head))
+      if (WarehouseIO.writeStringIfAbsent(
+          logFile(TableLog.versionFile(head + 1)),
+          TableLog.renderSnapshot(Seq(merged))))
         return head + 1
-      // lost to a concurrent append: the merge is stale — drop and retry
       WarehouseIO.delete(logFile(merged))
       require(attempt < maxAttempts,
-        s"compactManifests lost the version race $maxAttempts times")
+        s"$op lost the version race $maxAttempts times")
     }
     -1 // unreachable
-  }
-
-  private def snapshotFile(version: Int): org.apache.hadoop.fs.Path = {
-    val manifest = logFile(f"v$version%05d.list")
-    require(WarehouseIO.exists(manifest),
-      s"snapshot v$version does not exist (expired by a rewrite, or never " +
-        s"committed); available: ${snapshotVersions().mkString(", ")}")
-    manifest
-  }
-
-  /** Manifest names snapshot `version` references. O(manifest count)
-    * read — the cheap half of the layered format, enough for commit
-    * chaining, expiry GC, and per-version delta accounting without
-    * touching file lists. */
-  private def manifestNames(version: Int): Seq[String] =
-    WarehouseIO.snapshotManifestNames(snapshotFile(version))
-
-  private def manifestFiles(version: Int): Seq[String] =
-    WarehouseIO.readSnapshotFiles(logPath, snapshotFile(version))
-
-  /** Shallow-clone sidecar: the source table root whose ABSOLUTE manifest
-    * entries this table references (absent for ordinary tables). */
-  private[graft] def cloneBasePath: Option[String] = {
-    val p = logFile("clone_base")
-    if (WarehouseIO.exists(p)) Some(WarehouseIO.readString(p).trim)
-    else None
   }
 
   /** `capturePos = true` appends the `__graft_file`/`__graft_pos`
@@ -1433,11 +1392,11 @@ final class TableSink(val config: SinkConfig) {
     * manifest produces a multi-relation union. [[applyDeletes]] skips
     * its own capture when the columns are already present and drops
     * them unless asked to keep. */
-  private def readFiles(spark: SparkSession, rels: Seq[String],
-      capturePos: Boolean = false): DataFrame = {
+  private def readFiles(log: TableLog, spark: SparkSession,
+      rels: Seq[String], capturePos: Boolean = false): DataFrame = {
     // an empty file set cannot infer a schema — an empty diff (e.g.
     // readChanges(v, v)) borrows the live table's schema instead
-    if (rels.isEmpty) read(spark).limit(0)
+    if (rels.isEmpty) readLive(log, spark, mergeSchema = false).limit(0)
     else {
       val renames = renameMap
       // the declared layer lives in sidecars exactly like the rename
@@ -1455,7 +1414,7 @@ final class TableSink(val config: SinkConfig) {
         val opts = Map("basePath" -> base) ++
           (if (renames.nonEmpty) Map("mergeSchema" -> "true") else Map.empty)
         val r = spark.read.format(config.fileFormat).options(opts)
-        declared.map(augmentWithRenameSources(_, renames))
+        declared.map(TableSink.augmentWithRenameSources(_, renames))
           .orElse(FileFooters.ofFiles(spark, config.fileFormat, files, base,
             opts))
           .fold(r)(s => r.schema(s)).load(files: _*)
@@ -1496,9 +1455,9 @@ final class TableSink(val config: SinkConfig) {
         }
       val parts = localGroups ++ (
         if (ext.isEmpty) None
-        else Some(cap(load(ext, cloneBasePath.getOrElse(sys.error(
+        else Some(cap(load(ext, log.cloneBase.getOrElse(sys.error(
           "manifest has absolute entries but no clone_base sidecar"))))))
-      applyRenames(
+      TableSink.applyRenames(
         parts.reduce(_.unionByName(_,
           allowMissingColumns = renames.nonEmpty || parts.sizeIs > 1)),
         renames)
@@ -1526,21 +1485,17 @@ final class TableSink(val config: SinkConfig) {
     }.toMap
   }
 
-  private def applyRenames(df: DataFrame,
-      renames: Map[String, String]): DataFrame =
-    TableSink.applyRenames(df, renames)
-
-  private def augmentWithRenameSources(declared: StructType,
-      renames: Map[String, String]): StructType =
-    TableSink.augmentWithRenameSources(declared, renames)
-
   /** Time travel: read the table as of snapshot `version`. Partition
     * columns still derive from the directory layout (`basePath`). Fails if
     * the snapshot was expired by a rewriting op. Merge-on-read delete
     * predicates committed at or before `version` are applied
     * ([[deleteWhere]]) — the snapshot's semantics, not its raw files. */
   def readVersion(spark: SparkSession, version: Int): DataFrame =
-    applyDeletes(readFiles(spark, manifestFiles(version),
+    readVersion(openLog(), spark, version)
+
+  private def readVersion(log: TableLog, spark: SparkSession,
+      version: Int): DataFrame =
+    applyDeletes(log, readFiles(log, spark, log.files(version),
       capturePos = true), version)
 
   /** [[readVersion]] with SCAN-PLANNING file pruning: the caller's
@@ -1555,8 +1510,10 @@ final class TableSink(val config: SinkConfig) {
   private[graft] def readVersionCandidates(spark: SparkSession, version: Int,
       conjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : DataFrame = {
-    val rels = manifestFiles(version)
-    if (conjuncts.isEmpty || rels.isEmpty) return readVersion(spark, version)
+    val log = openLog()
+    val rels = log.files(version)
+    if (conjuncts.isEmpty || rels.isEmpty)
+      return readVersion(log, spark, version)
     val abs = rels.map(r =>
       if (r.startsWith("/")) r else s"${config.tablePath}/$r")
     // PRE-FOLD constant subtrees: a freshly-parsed conjunct carries
@@ -1577,14 +1534,13 @@ final class TableSink(val config: SinkConfig) {
         scala.util.Try(Literal.create(e.eval(null), e.dataType))
           .getOrElse(e)
     })
-    planCandidates(spark, abs, folded) match {
+    planCandidates(spark, abs, folded, log) match {
       case Some(survivors) =>
         val keep = survivors.toSet
-        applyDeletes(readFiles(spark,
+        applyDeletes(log, readFiles(log, spark,
           rels.zip(abs).collect { case (r, a) if keep(a) => r },
           capturePos = true), version)
-      case None => applyDeletes(
-        readFiles(spark, rels, capturePos = true), version)
+      case None => readVersion(log, spark, version)
     }
   }
 
@@ -1597,10 +1553,6 @@ final class TableSink(val config: SinkConfig) {
   // write) rewrites every touched partition at delete time; merge-on-read
   // makes the delete O(metadata) and defers the rewrite until compaction
   // amortizes it across many deletes.
-
-  /** A point-in-time [[SidecarIndex]] of this table's log; hot paths
-    * build ONE per logical read instead of re-probing per version. */
-  private def sidecarIndex(): SidecarIndex = new SidecarIndex(logPath)
 
   /** The rows of list sidecars `dirs` (key lists or position lists, one
     * parquet directory per commit), unioned by name. Each directory's
@@ -1615,20 +1567,24 @@ final class TableSink(val config: SinkConfig) {
         .fold(r)(r.schema).parquet(d.toString)
     }.reduce(_ unionByName _)
 
+  /** Position-list sidecar rows under the scan-capture column names. */
+  private def readPositions(spark: SparkSession,
+      dirs: Seq[org.apache.hadoop.fs.Path]): DataFrame =
+    readSidecars(spark, dirs).withColumnRenamed("file_path", "__graft_file")
+      .withColumnRenamed("row_pos", "__graft_pos")
+
   /** Delete predicates committed at or before `version`, in commit order.
     * Stored one per sidecar as SQL text. (Key-list deletes are separate —
     * [[deleteKeys]] — and counted by [[hasPendingDeletes]].) */
   def deletePredicates(version: Int): Seq[String] = {
-    val idx = sidecarIndex()
-    snapshotVersions().filter(_ <= version).flatMap(idx.predicates)
+    val log = openLog()
+    log.versions.filter(_ <= version).flatMap(log.predicates)
   }
 
   /** True when any merge-on-read delete (predicate, key list, or position
     * list) is committed at or before `version` and not yet materialized. */
-  def hasPendingDeletes(version: Int): Boolean = {
-    val idx = sidecarIndex()
-    snapshotVersions().exists(v => v <= version && idx.any(v))
-  }
+  def hasPendingDeletes(version: Int): Boolean =
+    openLog().pendingVersions(version).nonEmpty
 
   /** Apply the head snapshot's pending merge-on-read sidecars to a frame
     * scanned OUTSIDE [[read]] (the data-skipping readers load candidate
@@ -1636,27 +1592,28 @@ final class TableSink(val config: SinkConfig) {
     * pending deletes would resurrect the subtracted rows. */
   private[graft] def applyHeadDeletes(df: DataFrame): DataFrame =
     if (!config.versioned) df
-    else snapshotVersions().lastOption.fold(df)(applyDeletes(df, _))
+    else { val log = openLog(); log.head.fold(df)(applyDeletes(log, df, _)) }
 
-  /** True when the HEAD carries unmaterialized merge-on-read sidecars —
-    * the state in which a partition-scoped rewrite (dynamic overwrite +
-    * history expiry) would resurrect deleted rows in untouched
-    * partitions; [[upsert]] and [[delete]] force the full rewrite-swap
-    * instead. */
-  private def pendingMorDeletes: Boolean =
-    config.versioned && snapshotVersions().lastOption.exists(hasPendingDeletes)
+  /** True when a partition-scoped rewrite (dynamic overwrite + history
+    * expiry) would be wrong, so [[upsert]], [[delete]] and the overwrite
+    * paths force the full rewrite-swap instead: on a shallow clone it
+    * would materialize only the touched partitions (the re-snapshot drops
+    * the rest), and under unmaterialized merge-on-read sidecars at the
+    * HEAD it would resurrect deleted rows in untouched partitions. */
+  private def scopedRewriteUnsafe(log: TableLog = openLog()): Boolean =
+    log.isClone ||
+      config.versioned && log.head.exists(log.pendingVersions(_).nonEmpty)
 
-  private def applyDeletes(df: DataFrame, version: Int,
+  private def applyDeletes(log: TableLog, df: DataFrame, version: Int,
       keepPosCols: Boolean = false): DataFrame = {
-    val versions = snapshotVersions().filter(_ <= version)
-    val idx = sidecarIndex() // ONE listing for the whole fold
+    val versions = log.versions.filter(_ <= version)
     // position-list deletes anti-join on (file, row ordinal) — the
     // `_metadata` struct must be captured from the SCAN relation, before
     // any key-list anti-join makes it unresolvable, so the helper columns
     // ride along through the fold and drop at the end (kept when the
     // caller — deletePositions — needs the coordinates itself)
     val anyPos = keepPosCols || versions.exists(v =>
-      idx.posDirs(v).nonEmpty)
+      log.posDirs(v).nonEmpty)
     // a multi-relation union (mixed-spine or clone manifest) cannot
     // resolve `_metadata` — readFiles captured per relation already
     val hasCaptured = df.columns.contains("__graft_file")
@@ -1694,21 +1651,19 @@ final class TableSink(val config: SinkConfig) {
       }
     }
     val folded = versions.foldLeft(d0) { (d, v) =>
-      val afterSql = idx.predicates(v)
+      val afterSql = log.predicates(v)
         .foldLeft(d)((dd, p) => dd.where(not(foldRenamed(p))))
-      val kds = idx.keyDirs(v)
+      val kds = log.keyDirs(v)
       val afterKeys = if (kds.nonEmpty) {
-        val keys = applyRenames(
+        val keys = TableSink.applyRenames(
           readSidecars(df.sparkSession, kds), renames)
         // anti-join on the key list's own columns; Spark broadcasts a
         // small erasure list and shuffle-joins a huge one (AQE decides)
         afterSql.join(keys, keys.columns.toSeq, "left_anti")
       } else afterSql
-      val pds = idx.posDirs(v)
+      val pds = log.posDirs(v)
       if (pds.nonEmpty) {
-        val pos = readSidecars(df.sparkSession, pds)
-          .withColumnRenamed("file_path", "__graft_file")
-          .withColumnRenamed("row_pos", "__graft_pos")
+        val pos = readPositions(df.sparkSession, pds)
         // a position list is bounded by the matched-row count at commit
         // time — small lists broadcast, huge ones shuffle (AQE decides)
         afterKeys.join(pos, Seq("__graft_file", "__graft_pos"), "left_anti")
@@ -1740,37 +1695,19 @@ final class TableSink(val config: SinkConfig) {
     * only, refused while a branch is live, version-scoped (time travel
     * before the commit shows the rows). Returns the committed version. */
   def deletePositions(spark: SparkSession, conditionSql: String): Int = {
-    requireNoStreamingLog()
-    require(config.versioned,
-      "merge-on-read deletePositions needs versioned=true (position " +
-        "lists are commit metadata); use delete() for copy-on-write on " +
-        "unversioned tables")
-    require(config.fileFormat == "parquet",
-      s"deletePositions needs the parquet reader's _metadata.row_index; " +
-        s"format '${config.fileFormat}' does not expose row ordinals")
-    val live = branchesOrPending()
-    require(live.isEmpty,
-      "deletePositions while a branch is live would make the audit " +
-        s"surface disagree with main; publish or drop first: " +
-        live.mkString(", "))
-    require(snapshotVersions().nonEmpty,
-      "deletePositions needs at least one committed snapshot")
-    val head = snapshotVersions().last
-    // resolve against the head SNAPSHOT'S semantics (earlier deletes of
-    // any flavor already applied) so a row deleted twice costs one entry
-    val matched = applyDeletes(
-      readFiles(spark, manifestFiles(head), capturePos = true), head,
-        keepPosCols = true)
-      .where(expr(conditionSql))
-      .select(col("__graft_file").as("file_path"),
-        col("__graft_pos").as("row_pos"))
-    // pre-written sidecar + in-snapshot reference (see deleteWhere's
-    // atomicity note)
-    val sidecar = s"pos-${java.util.UUID.randomUUID().toString.take(12)}"
-    matched.write.mode("overwrite").parquet(logFile(sidecar).toString)
-    try commitAppendedFiles(Nil, posRef = Some(sidecar))
-    catch { case e: Throwable =>
-      WarehouseIO.delete(logFile(sidecar), recursive = true); throw e
+    requireRowIndex("deletePositions")
+    commitDeleteSidecar("deletePositions", TableLog.Sidecar.Positions,
+        "position lists") { (log, sidecar) =>
+      val head = log.versions.last
+      // resolve against the head SNAPSHOT'S semantics (earlier deletes of
+      // any flavor already applied) so a row deleted twice costs one entry
+      applyDeletes(log,
+        readFiles(log, spark, log.files(head), capturePos = true), head,
+          keepPosCols = true)
+        .where(expr(conditionSql))
+        .select(col("__graft_file").as("file_path"),
+          col("__graft_pos").as("row_pos"))
+        .write.mode("overwrite").parquet(sidecar.toString)
     }
   }
 
@@ -1788,32 +1725,12 @@ final class TableSink(val config: SinkConfig) {
     * and would disagree with main about deleted rows mid-audit. Tags are
     * fine — a tag pins a version, and predicates are version-scoped, so a
     * tagged snapshot's semantics never change. */
-  def deleteWhere(conditionSql: String): Int = {
-    requireNoStreamingLog()
-    require(config.versioned,
-      "merge-on-read deleteWhere needs versioned=true (predicates are " +
-        "commit metadata); use delete() for copy-on-write on " +
-        "unversioned tables")
-    val live = branchesOrPending()
-    require(live.isEmpty,
-      "deleteWhere while a branch is live would make the audit surface " +
-        s"disagree with main; publish or drop first: ${live.mkString(", ")}")
-    require(snapshotVersions().nonEmpty,
-      "deleteWhere needs at least one committed snapshot")
-    expr(conditionSql) // fail on unparseable SQL at commit, not first read
-    // the sidecar is PRE-WRITTEN under a unique name and referenced
-    // INSIDE the claimed snapshot (round-12, all delete flavors): a
-    // sidecar landing after the claim was legal for snapshot readers
-    // (they saw the pre-delete state) but LOSSY for changelog
-    // consumers — one reading the version inside that window emitted an
-    // empty change and advanced its offset past the delete forever.
-    val sidecar = s"del-${java.util.UUID.randomUUID().toString.take(12)}"
-    WarehouseIO.writeString(logFile(sidecar), conditionSql)
-    try commitAppendedFiles(Nil, delRef = Some(sidecar))
-    catch { case e: Throwable =>
-      WarehouseIO.delete(logFile(sidecar)); throw e
+  def deleteWhere(conditionSql: String): Int =
+    commitDeleteSidecar("deleteWhere", TableLog.Sidecar.Predicate,
+        "predicates") { (_, sidecar) =>
+      expr(conditionSql) // fail on unparseable SQL at commit, not first read
+      WarehouseIO.writeString(sidecar, conditionSql)
     }
-  }
 
   /** Merge-on-read ERASURE-LIST delete: commit the distinct `keyCols`
     * tuples of `keys` as a key-list sidecar — the opt-out / right-to-be-
@@ -1838,7 +1755,6 @@ final class TableSink(val config: SinkConfig) {
     * the `distinct` are skipped; every other check still runs. */
   private def deleteKeys(keys: DataFrame, keyCols: Seq[String],
       proven: Boolean): Int = {
-    requireNoStreamingLog()
     require(keyCols.nonEmpty, "deleteKeys needs at least one key column")
     require(keyCols.forall(keys.columns.contains),
       s"key columns ${keyCols.filterNot(keys.columns.contains).mkString(", ")} " +
@@ -1852,26 +1768,55 @@ final class TableSink(val config: SinkConfig) {
       s"deleteKeys list carries NULL in (${keyCols.mkString(", ")}): a " +
         "NULL key never matches the erasure anti-join, so those rows " +
         "would silently survive; filter or repair the list first")
-    require(config.versioned,
-      "merge-on-read deleteKeys needs versioned=true (key lists are " +
-        "commit metadata); use delete() for copy-on-write on " +
-        "unversioned tables")
-    val live = branchesOrPending()
+    commitDeleteSidecar("deleteKeys", TableLog.Sidecar.Keys,
+        "key lists") { (_, sidecar) =>
+      val list = keys.select(keyCols.map(col): _*)
+      (if (proven) list else list.distinct())
+        .write.mode("overwrite").parquet(sidecar.toString)
+    }
+  }
+
+  /** Merge-on-read sidecar commits refuse while a branch is live or
+    * mid-creation: the branch's audit view would disagree with main. */
+  private def requireNoLiveBranch(op: String,
+      log: TableLog = openLog()): Unit = {
+    val live = log.branchesOrPending
     require(live.isEmpty,
-      "deleteKeys while a branch is live would make the audit surface " +
+      s"$op while a branch is live would make the audit surface " +
         s"disagree with main; publish or drop first: ${live.mkString(", ")}")
-    require(snapshotVersions().nonEmpty,
-      "deleteKeys needs at least one committed snapshot")
-    // pre-written sidecar + in-snapshot reference (see deleteWhere's
-    // atomicity note — changelog consumers must never observe the
-    // version before its sidecar)
-    val sidecar = s"keys-${java.util.UUID.randomUUID().toString.take(12)}"
-    val list = keys.select(keyCols.map(col): _*)
-    (if (proven) list else list.distinct())
-      .write.mode("overwrite").parquet(logFile(sidecar).toString)
-    try commitAppendedFiles(Nil, keysRef = Some(sidecar))
-    catch { case e: Throwable =>
-      WarehouseIO.delete(logFile(sidecar), recursive = true); throw e
+  }
+
+  /** Position lists need the parquet reader's `_metadata.row_index`. */
+  private def requireRowIndex(op: String): Unit =
+    require(config.fileFormat == "parquet",
+      s"$op needs the parquet reader's _metadata.row_index; " +
+        s"format '${config.fileFormat}' does not expose row ordinals")
+
+  /** The commit of the three merge-on-read delete flavours: their shared
+    * guards (no streaming log; versioned only, `what` naming the
+    * flavour's metadata; no live or mid-creation branch; a non-empty log),
+    * then `write` pre-writes the sidecar at a fresh path, given the
+    * guards' log view, and ONE commit claims a snapshot referencing it;
+    * any failure deletes the sidecar. The reference rides INSIDE the
+    * claimed snapshot (round-12): a sidecar landing after the claim let a
+    * changelog consumer reading the version in that window emit an empty
+    * change and advance its offset past the delete forever. */
+  private def commitDeleteSidecar(op: String, kind: TableLog.Sidecar,
+      what: String)(
+      write: (TableLog, org.apache.hadoop.fs.Path) => Unit): Int = {
+    requireNoStreamingLog()
+    require(config.versioned,
+      s"merge-on-read $op needs versioned=true ($what are commit " +
+        "metadata); use delete() for copy-on-write on unversioned tables")
+    val log = openLog()
+    requireNoLiveBranch(op, log)
+    require(log.head.nonEmpty, s"$op needs at least one committed snapshot")
+    val name = TableLog.newSidecarName(kind)
+    try {
+      write(log, logFile(name))
+      commitAppendedFiles(Nil, sidecars = Seq(kind -> name))
+    } catch { case e: Throwable =>
+      WarehouseIO.delete(logFile(name), recursive = true); throw e
     }
   }
 
@@ -1902,8 +1847,9 @@ final class TableSink(val config: SinkConfig) {
     * version. */
   def consolidateDeletes(spark: SparkSession): Int = {
     requireNoStreamingLog()
-    requireNoBranches("consolidateDeletes")
-    require(config.versioned && snapshotVersions().nonEmpty,
+    val log = openLog()
+    requireNoBranches("consolidateDeletes", log)
+    require(config.versioned && log.head.nonEmpty,
       "consolidateDeletes needs a versioned table with commits")
     // The merge below captures sidecars from the PRE-claim version set.
     // A concurrent delete flavor that wins a version between capture and
@@ -1914,7 +1860,9 @@ final class TableSink(val config: SinkConfig) {
     var attempt = 0
     while (true) {
       attempt += 1
-      val r = consolidateDeletesOnce(spark)
+      // a re-run must capture the interloper: a fresh view
+      val r = consolidateDeletesOnce(spark,
+        if (attempt == 1) log else openLog())
       if (r >= 0) return r
       require(attempt < 5,
         "consolidateDeletes lost 5 straight races to concurrent delete " +
@@ -1927,23 +1875,22 @@ final class TableSink(val config: SinkConfig) {
     * new head version, or -1 when a sidecar-carrying commit won a
     * version inside the capture-to-claim window (own claim retracted;
     * caller re-runs with the interloper's sidecars in the capture). */
-  private def consolidateDeletesOnce(spark: SparkSession): Int = {
-    val vs = snapshotVersions()
+  private def consolidateDeletesOnce(spark: SparkSession,
+      log: TableLog): Int = {
+    val vs = log.versions
     val head = vs.last
-    val idx = sidecarIndex()
     // capture EVERY sidecar shape (standard files/dirs and the
     // snapshot-referenced ones) up front — the cleanup loop below
     // deletes version files before sidecars, after which a reference
     // is unreadable
-    val predsByV = vs.map(v => v -> idx.predicates(v)).filter(_._2.nonEmpty)
-    val keyDirsByV = vs.map(v => v -> idx.keyDirs(v)).filter(_._2.nonEmpty)
-    val posDirsByV = vs.map(v => v -> idx.posDirs(v)).filter(_._2.nonEmpty)
-    require(predsByV.nonEmpty || keyDirsByV.nonEmpty || posDirsByV.nonEmpty,
+    val preds = vs.flatMap(log.predicates)
+    val keyDirs = vs.flatMap(log.keyDirs)
+    val posDirs = vs.flatMap(log.posDirs)
+    require(preds.nonEmpty || keyDirs.nonEmpty || posDirs.nonEmpty,
       "no delete sidecars to consolidate")
     if (vs.size == 1) return head // already consolidated: no-op
-    val keySchemas = keyDirsByV.flatMap(_._2)
-      .map(kd => readSidecars(spark, Seq(kd)).columns.toSeq)
-      .distinct
+    val keySchemas =
+      keyDirs.map(kd => readSidecars(spark, Seq(kd)).columns.toSeq).distinct
     require(keySchemas.size <= 1,
       s"erasure lists use mixed key-column sets (${keySchemas.map(_.mkString("(", ",", ")")).mkString(", ")}) " +
         "— one merged list cannot anti-join them; materialize with " +
@@ -1954,39 +1901,28 @@ final class TableSink(val config: SinkConfig) {
     // references them atomically (same changelog-safety shape as the
     // flavors themselves; the generation flip at the end makes any
     // concurrent stream refuse loudly regardless)
-    def uuid12 = java.util.UUID.randomUUID().toString.take(12)
-    val delRef =
-      if (predsByV.isEmpty) None
+    import TableLog.Sidecar
+    def merged(kind: Sidecar, parts: Seq[Any])(write: String => Unit) =
+      if (parts.isEmpty) None
       else {
-        val merged = predsByV.flatMap(_._2).map(p => s"($p)").mkString(" OR ")
-        val n = s"del-$uuid12"
-        WarehouseIO.writeString(logFile(n), merged)
-        Some(n)
+        val n = TableLog.newSidecarName(kind)
+        write(logFile(n).toString)
+        Some(kind -> n)
       }
-    val keysRef =
-      if (keyDirsByV.isEmpty) None
-      else {
-        val n = s"keys-$uuid12"
-        readSidecars(spark, keyDirsByV.flatMap(_._2)).distinct()
-          .write.mode("overwrite").parquet(logFile(n).toString)
-        Some(n)
-      }
-    val posRef =
-      if (posDirsByV.isEmpty) None
-      else {
-        val n = s"pos-$uuid12"
-        readSidecars(spark, posDirsByV.flatMap(_._2)).distinct()
-          .write.mode("overwrite").parquet(logFile(n).toString)
-        Some(n)
-      }
+    val refs = Seq(
+      merged(Sidecar.Positions, posDirs)(readSidecars(spark, posDirs)
+        .distinct().write.mode("overwrite").parquet(_)),
+      merged(Sidecar.Keys, keyDirs)(readSidecars(spark, keyDirs)
+        .distinct().write.mode("overwrite").parquet(_)),
+      merged(Sidecar.Predicate, preds)(p => WarehouseIO.writeString(
+        new org.apache.hadoop.fs.Path(p),
+        preds.map(q => s"($q)").mkString(" OR ")))
+    ).flatten
+    def dropRefs(): Unit = refs.foreach { case (_, n) =>
+      WarehouseIO.delete(logFile(n), recursive = true) }
     val vNext =
-      try commitAppendedFiles(Nil, posRef = posRef, keysRef = keysRef,
-        delRef = delRef)
-      catch { case e: Throwable =>
-        (delRef.toSeq ++ keysRef.toSeq ++ posRef.toSeq)
-          .foreach(n => WarehouseIO.delete(logFile(n), recursive = true))
-        throw e
-      }
+      try commitAppendedFiles(Nil, sidecars = refs)
+      catch { case e: Throwable => dropRefs(); throw e }
     // A sidecar-carrying commit in the capture-to-claim window means the
     // merged set is INCOMPLETE — its deletes would vanish with cleanup.
     // Retract our own claim (the accepted post-claim retraction shape —
@@ -2001,12 +1937,12 @@ final class TableSink(val config: SinkConfig) {
     // merges everything. The seam below lets a spec crash exactly here
     // and prove it.
     consolidateClaimHook()
-    val raced = snapshotVersions()
-      .filter(v => v > head && v < vNext).filter(sidecarIndex().any)
+    val now = openLog()
+    val raced = now.versions
+      .filter(v => v > head && v < vNext).filter(now.carriesSidecar)
     if (raced.nonEmpty) {
-      WarehouseIO.delete(logFile(f"v$vNext%05d.list"))
-      (delRef.toSeq ++ keysRef.toSeq ++ posRef.toSeq)
-        .foreach(n => WarehouseIO.delete(logFile(n), recursive = true))
+      WarehouseIO.delete(logFile(TableLog.versionFile(vNext)))
+      dropRefs()
       return -1
     }
     // 2. cleanup — RE-captured below vNext (a concurrent append that won
@@ -2019,16 +1955,16 @@ final class TableSink(val config: SinkConfig) {
     // sidecar ≤ themselves). A crash between the loops strands orphaned
     // sidecar files in _graft_log — unreachable debris, never consulted
     // (applyDeletes only folds sidecars of LISTED versions).
-    val below = snapshotVersions().filter(_ < vNext)
     // snapshot-referenced sidecar names must be captured while the
-    // version files still exist (a RE-captured index: a concurrent
+    // version files still exist (a RE-captured view: a concurrent
     // append that won a version between our read and our claim drops
     // with the rest)
-    val belowIdx = sidecarIndex()
-    val refsBelow = below.flatMap(belowIdx.refNames)
-    below.foreach(v => WarehouseIO.delete(logFile(f"v$v%05d.list")))
+    val belowLog = openLog()
+    val below = belowLog.versions.filter(_ < vNext)
+    val refsBelow = below.flatMap(belowLog.refNames)
+    below.foreach(v => WarehouseIO.delete(logFile(TableLog.versionFile(v))))
     refsBelow.foreach(n => WarehouseIO.delete(logFile(n), recursive = true))
-    WarehouseIO.delete(logFile("generation"))
+    WarehouseIO.delete(logFile(TableLog.GenerationFile))
     gcManifests() // deltas referenced only by the dropped history
     vNext
   }
@@ -2043,9 +1979,8 @@ final class TableSink(val config: SinkConfig) {
   private[graft] def maybeConsolidateDeletes(spark: SparkSession): Unit = {
     val t = config.deleteConsolidateThreshold
     if (t <= 0 || !config.versioned) return
-    val vs = snapshotVersions()
-    val idx = sidecarIndex()
-    val pending = vs.count(idx.any)
+    val log = openLog()
+    val pending = log.versions.count(log.carriesSidecar)
     if (pending > t) { consolidateDeletes(spark); () }
   }
 
@@ -2057,8 +1992,9 @@ final class TableSink(val config: SinkConfig) {
       toVersion: Int): DataFrame = {
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion must be <= toVersion $toVersion")
-    val before = manifestFiles(fromVersion).toSet
-    readFiles(spark, manifestFiles(toVersion).filterNot(before))
+    val log = openLog()
+    val before = log.files(fromVersion).toSet
+    readFiles(log, spark, log.files(toVersion).filterNot(before))
   }
 
   /** Iceberg changelog-scan analogue: every ROW-level change committed
@@ -2083,16 +2019,17 @@ final class TableSink(val config: SinkConfig) {
     * states. Rewriting ops expire history, so a changelog range only
     * ever spans append and merge-on-read commits. */
   def readChangelog(spark: SparkSession, fromVersion: Int,
-      toVersion: Int): DataFrame = {
+      toVersion: Int): DataFrame =
+    readChangelog(openLog(), spark, fromVersion, toVersion)
+
+  /** One log view serves the whole replay: each version file and manifest
+    * is parsed once, however many pre-states the replay touches. */
+  private def readChangelog(log: TableLog, spark: SparkSession,
+      fromVersion: Int, toVersion: Int): DataFrame = {
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion must be <= toVersion $toVersion")
-    val versions = snapshotVersions()
-    val idx = sidecarIndex() // ONE listing for the whole range replay
+    val versions = log.versions
     val rng = versions.filter(v => v > fromVersion && v <= toVersion)
-    // per-version facts once (manifest reads memoized across the v/prev
-    // overlap so each manifest is parsed once for the whole range)
-    val mfCache = scala.collection.mutable.Map.empty[Int, Seq[String]]
-    def mf(v: Int): Seq[String] = mfCache.getOrElseUpdate(v, manifestFiles(v))
     case class VInfo(v: Int, prev: Option[Int], files: Seq[String],
         added: Seq[String], preds: Seq[String],
         keyDirs: Seq[org.apache.hadoop.fs.Path],
@@ -2107,10 +2044,10 @@ final class TableSink(val config: SinkConfig) {
     }
     val infos = rng.map { v =>
       val prev = versions.filter(_ < v).lastOption
-      val prevSet = prev.map(mf(_).toSet).getOrElse(Set.empty)
-      val files = mf(v)
+      val prevSet = prev.map(log.files(_).toSet).getOrElse(Set.empty)
+      val files = log.files(v)
       VInfo(v, prev, files, files.filterNot(prevSet),
-        idx.predicates(v), idx.keyDirs(v), idx.posDirs(v))
+        log.predicates(v), log.keyDirs(v), log.posDirs(v))
     }
     // OPTIMIZATION r15 (guide §2.4 remove scans/shuffles outright): a run
     // of CONSECUTIVE merge-on-read delete commits shares one immutable
@@ -2133,8 +2070,8 @@ final class TableSink(val config: SinkConfig) {
       val first = run.head
       val pv = first.prev.get
       val anyPos = run.exists(_.posDirs.nonEmpty)
-      val base = applyDeletes(
-        readFiles(spark, mf(pv), capturePos = true), pv,
+      val base = applyDeletes(log,
+        readFiles(log, spark, log.files(pv), capturePos = true), pv,
         keepPosCols = anyPos)
       val outCols = base.columns
         .filterNot(c => c == "__graft_file" || c == "__graft_pos")
@@ -2149,10 +2086,7 @@ final class TableSink(val config: SinkConfig) {
           b = b.join(keys.withColumn(m, lit(true)),
             keys.columns.toSeq, "left_outer")
         } else {
-          val pos = readSidecars(spark, vi.posDirs)
-            .withColumnRenamed("file_path", "__graft_file")
-            .withColumnRenamed("row_pos", "__graft_pos")
-            .distinct()
+          val pos = readPositions(spark, vi.posDirs).distinct()
           b = b.join(pos.withColumn(m, lit(true)),
             Seq("__graft_file", "__graft_pos"), "left_outer")
         }
@@ -2181,8 +2115,8 @@ final class TableSink(val config: SinkConfig) {
     // not even present).
     def singleDeleteReplay(in: VInfo): DataFrame = {
       val pv = in.prev.get
-      val base = applyDeletes(
-        readFiles(spark, mf(pv), capturePos = true), pv,
+      val base = applyDeletes(log,
+        readFiles(log, spark, log.files(pv), capturePos = true), pv,
         keepPosCols = in.posDirs.nonEmpty)
       val byPred =
         if (in.preds.isEmpty) None
@@ -2198,9 +2132,7 @@ final class TableSink(val config: SinkConfig) {
       val byPos =
         if (in.posDirs.isEmpty) None
         else {
-          val pos = readSidecars(spark, in.posDirs)
-            .withColumnRenamed("file_path", "__graft_file")
-            .withColumnRenamed("row_pos", "__graft_pos")
+          val pos = readPositions(spark, in.posDirs)
           Some(base.join(pos,
             Seq("__graft_file", "__graft_pos"), "left_semi"))
         }
@@ -2214,8 +2146,8 @@ final class TableSink(val config: SinkConfig) {
     while (i < infos.length) {
       val in = infos(i)
       if (in.added.nonEmpty)
-        parts += applyDeletes(
-          readFiles(spark, in.added, capturePos = true), in.v)
+        parts += applyDeletes(log,
+          readFiles(log, spark, in.added, capturePos = true), in.v)
           .withColumn("_change_type", lit("insert"))
           .withColumn("_change_version", lit(in.v.toLong))
       if (in.hasDel) {
@@ -2245,7 +2177,7 @@ final class TableSink(val config: SinkConfig) {
       // TYPED batch, not an AnalysisException from loading a missing dir
       val base =
         if (WarehouseIO.exists(new org.apache.hadoop.fs.Path(config.tablePath)))
-          read(spark).limit(0)
+          readLive(log, spark, mergeSchema = false).limit(0)
         else config.tableSchema match {
           case Some(s) => spark.createDataFrame(
             java.util.Collections.emptyList[org.apache.spark.sql.Row], s)
@@ -2291,24 +2223,23 @@ final class TableSink(val config: SinkConfig) {
     * [[readChangelog]]'s error suggests that a no-argument caller could
     * not apply itself. */
   def readChangelogAll(spark: SparkSession): DataFrame =
-    readChangelogAllUpTo(spark, snapshotVersions().lastOption.getOrElse(0))
+    readChangelogAllUpTo(spark, Int.MaxValue)
 
   /** [[readChangelogAll]] bounded at `toVersion` — the streaming CDC
     * source's initial batch (its offset pins the head it planned
     * against, so commits landing during planning belong to the NEXT
     * batch, never half of this one). */
   def readChangelogAllUpTo(spark: SparkSession, toVersion: Int): DataFrame = {
-    val vs = snapshotVersions()
-    val unreplayable = vs.headOption.filter(v0 =>
-      v0 <= toVersion && sidecarIndex().any(v0))
+    val log = openLog()
+    val unreplayable = log.versions.headOption.filter(v0 =>
+      v0 <= toVersion && log.carriesSidecar(v0))
     unreplayable match {
-      case None => readChangelog(spark, 0, toVersion)
+      case None => readChangelog(log, spark, 0, toVersion)
       case Some(v0) =>
-        val base = applyDeletes(
-          readFiles(spark, manifestFiles(v0), capturePos = true), v0)
+        readVersion(log, spark, v0)
           .withColumn("_change_type", lit("insert"))
           .withColumn("_change_version", lit(v0.toLong))
-        base.unionByName(readChangelog(spark, v0, toVersion))
+          .unionByName(readChangelog(log, spark, v0, toVersion))
     }
   }
 
@@ -2381,7 +2312,8 @@ final class TableSink(val config: SinkConfig) {
   def readChangelogSince(spark: SparkSession, cursorPath: String,
       startingTimestampMs: Option[Long] = None): (DataFrame, () => Unit) = {
     val p = new org.apache.hadoop.fs.Path(cursorPath)
-    val gen = logGeneration()
+    val log = openLog()
+    val gen = log.generation
     // cursor format "<generation>:<version>": version numbers restart at
     // v1 after a rewriting op expires the log, so a bare number could
     // silently resume against a DIFFERENT history once the new head
@@ -2397,7 +2329,8 @@ final class TableSink(val config: SinkConfig) {
       // instant = no floor = the full replay). An EXISTING cursor wins,
       // exactly like a checkpointed stream restart ignores the option.
       if (!WarehouseIO.isFile(p))
-        (gen, startingTimestampMs.flatMap(versionBefore).getOrElse(0))
+        (gen, startingTimestampMs.flatMap(ms => log.versions
+          .filter(log.committedAtMs(_) < ms).lastOption).getOrElse(0))
       else WarehouseIO.readString(p).trim.split(':') match {
         case Array(g, v) => (g, v.toInt)
         case other => sys.error(
@@ -2410,12 +2343,12 @@ final class TableSink(val config: SinkConfig) {
         "expired and restarted the snapshot log, so the un-consumed " +
         "changes are unrecoverable — delete the cursor and rebuild the " +
         "consumer from a full read")
-    val head = snapshotVersions().lastOption.getOrElse(0)
+    val head = log.head.getOrElse(0)
     require(from <= head,
       s"changelog cursor at $cursorPath points past the head " +
         s"($from > $head) — wrong table, or history was rolled back; " +
         "delete the cursor to restart from the beginning")
-    val batch = readChangelog(spark, from, head)
+    val batch = readChangelog(log, spark, from, head)
     // atomic overwrite: a crash mid-commit must leave the OLD cursor
     // readable (batch replays), never a torn/empty file
     (batch, () => WarehouseIO.writeStringAtomic(p, s"$gen:$head"))
@@ -2574,9 +2507,12 @@ final class TableSink(val config: SinkConfig) {
       // would only add serialization cost
       if (every) projected else projected.localCheckpoint()
     }
+    // one view of the replica for both gates below; the apply ops run
+    // their own guards and claims against fresh views
+    val destLog = dest.openLog()
     // a fresh replica has nothing to delete yet (and deleteKeys would
     // rightly refuse a table with no committed snapshot)
-    if (dest.snapshotVersions().nonEmpty && nDel > 0L)
+    if (destLog.head.nonEmpty && nDel > 0L)
       dest.deleteKeys(del, keyCols, proven = n("ndNull") == 0L)
     if (nIns > 0L) {
       // MERGE-ON-READ apply (round-12): a MoR-capable replica takes the
@@ -2586,7 +2522,7 @@ final class TableSink(val config: SinkConfig) {
       // (time travel across applies) instead of expiring it. Same
       // keyed idempotence, so the at-least-once replay contract holds.
       val morApply = dest.config.versioned &&
-        dest.config.fileFormat == "parquet" && dest.branches().isEmpty
+        dest.config.fileFormat == "parquet" && destLog.branches.isEmpty
       if (!morApply) dest.upsert(ins, keyCols)
       else if (every && n("niNull") == 0L)
         dest.upsertMor(ins, keyCols, provenBounds = Some(bounded.map(c =>
@@ -2675,12 +2611,13 @@ final class TableSink(val config: SinkConfig) {
     * wall-time at millisecond precision (the same clock
     * [[GraftCatalog]]'s TIMESTAMP AS OF resolves against). */
   def metaSnapshots(spark: SparkSession): DataFrame = {
-    require(config.versioned && snapshotVersions().nonEmpty,
+    val log = openLog()
+    require(config.versioned && log.head.nonEmpty,
       "metaSnapshots needs a versioned table with at least one commit")
-    val vs = snapshotVersions()
+    val vs = log.versions
     // rank = position in the RETAINED chain (expiry leaves gaps in the
     // version numbers; parent = previous retained version, as before)
-    val namesOf = vs.map(v => v -> manifestNames(v)).toMap
+    val namesOf = vs.map(v => v -> log.manifestNames(v)).toMap
     val pairs: Seq[(Int, String)] = vs.zipWithIndex.flatMap { case (v, r) =>
       namesOf(v).map(n => r -> logFile(n).toString)
     }
@@ -2739,15 +2676,14 @@ final class TableSink(val config: SinkConfig) {
       case ((v, r), parent) =>
         val (nAdded, nRemoved) = perRank.getOrElse(r, (0L, 0L))
         running += nAdded - nRemoved
-        val committedMs = WarehouseIO.modifiedAtMs(logFile(f"v$v%05d.list"))
         // manifest-layer observability: how many delta manifests this
         // snapshot references (merge-on-commit / compactManifests fold
         // shows as a drop to 1) and the streaming txn line, if the
         // commit carried one
-        (v.toLong, parent.map(_.toLong), new java.sql.Timestamp(committedMs),
+        (v.toLong, parent.map(_.toLong),
+          new java.sql.Timestamp(log.committedAtMs(v)),
           running, nAdded, nRemoved, namesOf(v).size.toLong,
-          WarehouseIO.snapshotTxn(snapshotFile(v))
-            .map { case (id, b) => s"$id#$b" })
+          log.txn(v).map { case (id, b) => s"$id#$b" })
     }
     rows.toDF("version", "parent_version", "committed_at", "n_files",
       "n_added_files", "n_removed_files", "n_manifests", "txn")
@@ -2798,11 +2734,11 @@ final class TableSink(val config: SinkConfig) {
     * the head manifest's entries (the directory listing on an unversioned
     * table), sorted by URI. */
   private def fileInventory(): Seq[TableSink.LiveFile] = {
-    val lines =
-      if (config.versioned && snapshotVersions().nonEmpty)
-        WarehouseIO.readSnapshotLines(logPath,
-          snapshotFile(snapshotVersions().last))
-      else listDataFiles()
+    val log = openLog()
+    val lines = log.head match {
+      case Some(h) if config.versioned => log.lines(h)
+      case _ => dataFilesRel()
+    }
     // the scan's rendering: a qualified URI whose empty authority
     // collapses (`file:/x`, not `file:///x`), path percent-encoded
     def uriOf(p: org.apache.hadoop.fs.Path): String = {
@@ -2811,14 +2747,14 @@ final class TableSink(val config: SinkConfig) {
         Option(q.getAuthority).filter(_.nonEmpty).orNull, q.getPath,
         null).toString
     }
-    val roots = (config.tablePath +: cloneBasePath.toSeq)
+    val roots = (config.tablePath +: log.cloneBase.toSeq)
       .map(r => uriOf(new org.apache.hadoop.fs.Path(r)).stripSuffix("/") + "/")
     lines.map { line =>
-      val path = dataPath(WarehouseIO.manifestLinePath(line))
+      val path = dataPath(TableLog.manifestLinePath(line))
       val uri = uriOf(path)
       val spine = roots.find(uri.startsWith).fold(uri)(uri.stripPrefix)
       TableSink.LiveFile(uri, spine.take(spine.lastIndexOf('/').max(0)),
-        WarehouseIO.entryFacts(line)
+        TableLog.entryFacts(line)
           .getOrElse(FileFooters.factsOf(path, config.fileFormat)))
     }.sortBy(_.uri)
   }
@@ -2836,14 +2772,14 @@ final class TableSink(val config: SinkConfig) {
     import spark.implicits._
     require(config.versioned,
       "delete sidecars are commit metadata — versioned tables only")
-    val idx = sidecarIndex()
-    val rows = snapshotVersions().flatMap { v =>
-      val preds = idx.predicates(v)
+    val log = openLog()
+    val rows = log.versions.flatMap { v =>
+      val preds = log.predicates(v)
       val pred =
         if (preds.isEmpty) None
         else Some((v.toLong, "predicate", preds.size.toLong,
           preds.mkString(" OR ")))
-      val kds = idx.keyDirs(v)
+      val kds = log.keyDirs(v)
       val keys =
         if (kds.isEmpty) None
         else {
@@ -2851,7 +2787,7 @@ final class TableSink(val config: SinkConfig) {
           Some((v.toLong, "keys", k.count(), k.columns.mkString(",")))
         }
       val pos = {
-        val pds = idx.posDirs(v)
+        val pds = log.posDirs(v)
         if (pds.isEmpty) None
         else Some((v.toLong, "positions",
           readSidecars(spark, pds).count(),
@@ -2890,18 +2826,18 @@ final class TableSink(val config: SinkConfig) {
   def removeOrphans(
       graceMs: Long = TableSink.DefaultOrphanGraceMs): Seq[String] = {
     import org.apache.hadoop.fs.{Path => HPath}
-    require(config.versioned && snapshotVersions().nonEmpty,
+    val log = openLog()
+    require(config.versioned && log.head.nonEmpty,
       "removeOrphans needs a versioned table with at least one commit — " +
         "an unversioned directory has no manifest to define 'orphan'")
     require(graceMs >= 0L, "graceMs must be >= 0")
     val now = System.currentTimeMillis()
     // live branches count as references: an unpublished audit branch's
     // files are staged-but-committed (to the branch), not debris
-    val referenced = (snapshotVersions().flatMap(manifestFiles) ++
-      branches().flatMap(b => branchVersions(b).flatMap(branchManifest(b, _)))
-      ).toSet
+    val referenced =
+      (log.versions.flatMap(log.files) ++ branchFiles(log)).toSet
     val root = new HPath(config.tablePath)
-    val orphans = listDataFiles().filterNot(referenced)
+    val orphans = dataFilesRel().filterNot(referenced)
       .filter(rel =>
         now - WarehouseIO.modifiedAtMs(new HPath(root, rel)) >= graceMs)
     orphans.foreach(rel => WarehouseIO.delete(new HPath(root, rel)))
@@ -2909,9 +2845,8 @@ final class TableSink(val config: SinkConfig) {
     // own directory, so anything still under _staging past the grace
     // window is debris from a killed writer
     val staging = new HPath(root, "_staging")
-    val deadStages = WarehouseIO.childNames(staging).filter { n =>
-      now - WarehouseIO.modifiedAtMs(new HPath(staging, n)) >= graceMs
-    }
+    val deadStages = WarehouseIO.listing(staging).getOrElse(Nil)
+      .filter(now - _.getModificationTime >= graceMs).map(_.getPath.getName)
     deadStages.foreach(n =>
       WarehouseIO.delete(new HPath(staging, n), recursive = true))
     // crashed MoR mutations and delete commits: a sidecar written
@@ -2919,17 +2854,10 @@ final class TableSink(val config: SinkConfig) {
     // `pos-*`/`keys-*`/`del-*` entry in the log — never consulted (only
     // snapshot-referenced sidecars of CLAIMED snapshots fold), pure
     // debris. Referenced = every live snapshot's #pos/#keys/#del line.
-    val logNames = WarehouseIO.childNames(logPath).toSet
-    val referencedSc = snapshotVersions().flatMap { v =>
-      val (p, k, d) = WarehouseIO.snapshotSidecarRefs(
-        logFile(f"v$v%05d.list"))
-      p.toSeq ++ k.toSeq ++ d.toSeq
-    }.toSet
-    val deadSc = logNames.filter(n => n.startsWith("pos-") ||
-        n.startsWith("keys-") || n.startsWith("del-"))
-      .filterNot(referencedSc)
-      .filter(n => now - WarehouseIO.modifiedAtMs(logFile(n)) >= graceMs)
-      .toSeq.sorted
+    val referencedSc = log.versions.flatMap(log.refNames).toSet
+    val deadSc = log.sidecarNames.filterNot(referencedSc)
+      .filter(n => now - log.mtimeOf(n) >= graceMs)
+      .sorted
     deadSc.foreach(n => WarehouseIO.delete(logFile(n), recursive = true))
     orphans ++ deadStages.map(n => s"_staging/$n") ++
       deadSc.map(n => s"_graft_log/$n")
@@ -2960,26 +2888,24 @@ final class TableSink(val config: SinkConfig) {
   def rollbackTo(version: Int): Unit = {
     // a tag pinning a post-target snapshot would dangle after its
     // manifest is deleted — refuse loudly (same contract as rewrites)
-    val dangling = tags().filter(tagVersion(_) > version)
+    val log = openLog()
+    val dangling = log.tags.filter(tagVersion(log, _) > version)
     require(dangling.isEmpty,
       s"rollbackTo($version) would orphan tags pinning newer snapshots; " +
         s"drop them first: ${dangling.mkString(", ")}")
     // files a live branch still references survive the rollback — the
     // branch remains readable/publishable against the rolled-back main
-    val keep = (manifestFiles(version) ++
-      branches().flatMap(b => branchVersions(b).flatMap(branchManifest(b, _)))
-      ).toSet
+    val keep = (log.files(version) ++ branchFiles(log)).toSet
     val root = new org.apache.hadoop.fs.Path(config.tablePath)
-    listDataFiles().filterNot(keep)
+    dataFilesRel().filterNot(keep)
       .foreach(rel =>
         WarehouseIO.delete(new org.apache.hadoop.fs.Path(root, rel)))
-    val rbIdx = sidecarIndex()
-    snapshotVersions().filter(_ > version).foreach { v =>
+    log.versions.filter(_ > version).foreach { v =>
       // snapshot-referenced sidecars resolve via the version file, so
       // they are captured BEFORE it is deleted
-      rbIdx.refNames(v).foreach(n =>
+      log.refNames(v).foreach(n =>
         WarehouseIO.delete(logFile(n), recursive = true))
-      WarehouseIO.delete(logFile(f"v$v%05d.list"))
+      WarehouseIO.delete(logFile(TableLog.versionFile(v)))
     }
     gcManifests() // deltas referenced only by the rolled-off snapshots
   }
@@ -2999,12 +2925,6 @@ final class TableSink(val config: SinkConfig) {
   // publishing, and dropping a branch never copies or rewrites a data
   // file. An appendToBranch writes exactly the files a main append would.
 
-  private def branchLogPath(name: String): org.apache.hadoop.fs.Path = {
-    require(name.matches("[A-Za-z0-9_-]+"),
-      s"branch name must be [A-Za-z0-9_-]+, got '$name'")
-    logFile(s"branch_$name")
-  }
-
   /** Live branch names (empty when none or unversioned). A branch is
     * LIVE only once it carries a committed version: [[createBranch]]
     * writes `base` before `v00001.list`, so a crash between the two
@@ -3013,58 +2933,18 @@ final class TableSink(val config: SinkConfig) {
     * and re-running createBranch (which overwrites the stale base) is
     * the natural heal. [[dropBranch]] still removes a phantom dir (it
     * checks the directory, not liveness). */
-  def branches(): Seq[String] =
-    WarehouseIO.childNames(logPath)
-      .collect { case n if n.startsWith("branch_") => n.stripPrefix("branch_") }
-      .filter(n => branchVersions(n).nonEmpty)
-      .sorted
+  def branches(): Seq[String] = openLog().branches
 
-  /** Branch names that are live OR mid-creation (`base` written,
-    * `v00001.list` not yet — [[createBranch]] writes them in that
-    * order). The REFUSAL surfaces (rewrites, sidecar commits) must
-    * count a mid-creation branch as live: its base version is already
-    * pinned, so a sidecar landing above it would silently never apply
-    * to the branch's two-slice read — the audit view would diverge
-    * from main. Read/serving paths keep [[branches]] (a phantom has no
-    * versions to read and heals by re-running createBranch). */
-  private[graft] def branchesOrPending(): Seq[String] =
-    WarehouseIO.childNames(logPath)
-      .collect { case n if n.startsWith("branch_") => n.stripPrefix("branch_") }
-      .filter(n => branchVersions(n).nonEmpty || WarehouseIO.isFile(
-        new org.apache.hadoop.fs.Path(branchLogPath(n), "base")))
-      .sorted
-
-  /** Committed versions on a branch, oldest first. */
-  def branchVersions(name: String): Seq[Int] =
-    WarehouseIO.childNames(branchLogPath(name))
-      .collect { case n if n.startsWith("v") && n.endsWith(".list") =>
-        n.stripPrefix("v").stripSuffix(".list").toInt }
-      .sorted
-
-  private def branchSnapshotFile(name: String,
-      v: Int): org.apache.hadoop.fs.Path = {
-    val m = new org.apache.hadoop.fs.Path(branchLogPath(name), f"v$v%05d.list")
-    require(WarehouseIO.exists(m),
-      s"branch '$name' has no version $v; available: " +
-        branchVersions(name).mkString(", "))
-    m
-  }
-
-  /** Branch snapshots use the same layered format as main and reference
-    * manifests in the MAIN log dir — creating a branch shares the head's
-    * manifests instead of copying a file list, and a branch append
-    * commits one delta manifest exactly like a main append. */
-  private def branchManifest(name: String, v: Int): Seq[String] =
-    WarehouseIO.readSnapshotFiles(logPath, branchSnapshotFile(name, v))
-
-  private def branchManifestNames(name: String, v: Int): Seq[String] =
-    WarehouseIO.snapshotManifestNames(branchSnapshotFile(name, v))
-
-  private def branchHeadFiles(name: String): Seq[String] = {
-    val vs = branchVersions(name)
-    require(vs.nonEmpty, s"branch '$name' does not exist; live branches: " +
-      branches().mkString(", "))
-    branchManifest(name, vs.last)
+  /** Branch `name`'s log, refused when the branch has no committed
+    * version. Branch snapshots use the same layered format as main and
+    * reference manifests in the MAIN log dir — creating a branch shares
+    * the head's manifests instead of copying a file list, and a branch
+    * append commits one delta manifest exactly like a main append. */
+  private def liveBranch(log: TableLog, name: String): TableLog = {
+    val bl = log.branch(name)
+    require(bl.versions.nonEmpty, s"branch '$name' does not exist; live " +
+      s"branches: ${log.branches.mkString(", ")}")
+    bl
   }
 
   /** Create branch `name` at main snapshot `fromVersion` (default: the
@@ -3074,32 +2954,33 @@ final class TableSink(val config: SinkConfig) {
     * (round-12 — creation used to refuse outright, making WAP and MoR
     * deletes mutually exclusive until a compaction ran). */
   def createBranch(name: String, fromVersion: Option[Int] = None): Unit = {
-    require(config.versioned && snapshotVersions().nonEmpty,
+    val log = openLog()
+    require(config.versioned && log.head.nonEmpty,
       "branches need a versioned table with at least one commit")
-    require(branchVersions(name).isEmpty, s"branch '$name' already exists")
-    val v = fromVersion.getOrElse(snapshotVersions().last)
+    val bl = log.branch(name)
+    require(bl.versions.isEmpty, s"branch '$name' already exists")
+    val v = fromVersion.getOrElse(log.versions.last)
     // share the snapshot's manifests by NAME (pure O(manifest count)
     // metadata)
-    val names = manifestNames(v)
+    val names = log.manifestNames(v)
     // base BEFORE v1: the two-slice read must never see a branch whose
     // base slice it cannot scope (sidecar commits are refused while the
     // branch lives, so the set "sidecars <= base" is frozen from here)
-    WarehouseIO.writeString(
-      new org.apache.hadoop.fs.Path(branchLogPath(name), "base"), v.toString)
-    WarehouseIO.writeString(
-      new org.apache.hadoop.fs.Path(branchLogPath(name), "v00001.list"),
-      WarehouseIO.renderSnapshot(names))
+    WarehouseIO.writeString(bl.file(TableLog.BranchBaseFile), v.toString)
+    WarehouseIO.writeString(bl.file(TableLog.versionFile(1)),
+      TableLog.renderSnapshot(names))
   }
 
   /** The main-snapshot version branch `name` was created at
     * ([[createBranch]] writes the `base` file before the branch's first
     * version); refuses a branch directory without one. */
-  private[graft] def branchBaseVersion(name: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(branchLogPath(name), "base")
-    require(WarehouseIO.isFile(p),
-      s"branch '$name' has no base file at $p: not a branch this table " +
+  private def branchBaseVersion(log: TableLog, name: String): Int = {
+    val bl = log.branch(name)
+    val base = bl.baseVersion
+    require(base.isDefined, s"branch '$name' has no base file at " +
+      s"${bl.file(TableLog.BranchBaseFile)}: not a branch this table " +
         "format writes")
-    WarehouseIO.readString(p).trim.toInt
+    base.get
   }
 
   /** Append `df` to branch `name`: the physical write is identical to
@@ -3109,23 +2990,23 @@ final class TableSink(val config: SinkConfig) {
     * catalog) cannot see the new files until [[publishBranch]]. */
   def appendToBranch(name: String, df: DataFrame): Unit = {
     requireNoStreamingLog()
-    branchHeadFiles(name)                     // fails fast if no branch
+    liveBranch(openLog(), name)               // fails fast if no branch
     // same staged O(added)-commit protocol as [[append]], and the same
     // optimistic exclusive-create version claim (concurrent auditors on
     // one branch commute exactly like main appends)
     val added = stagedWrite(clusterForWrite(withDerived(Ops.ensureMessage(df))))
-    val own = WarehouseIO.writeManifestLines(logPath, entryLines(added))
+    val own = TableLog.writeManifestLines(logPath, entryLines(added))
     var attempt = 0
     var committed = false
     while (!committed) {
       attempt += 1
-      val headV = branchVersions(name).last
+      val bl = TableLog.branchOf(logPath, name) // fresh per claim attempt
+      val headV = bl.versions.last
       // O(manifest count) head read, same layered protocol as main
-      val headNames = branchManifestNames(name, headV)
+      val headNames = bl.manifestNames(headV)
       committed = WarehouseIO.writeStringIfAbsent(
-        new org.apache.hadoop.fs.Path(
-          branchLogPath(name), f"v${headV + 1}%05d.list"),
-        WarehouseIO.renderSnapshot((headNames :+ own).distinct))
+        bl.file(TableLog.versionFile(headV + 1)),
+        TableLog.renderSnapshot((headNames :+ own).distinct))
       // only an actual loss counts against the bound — a win on the
       // final attempt is a durable commit, not an error
       require(committed || attempt < 20,
@@ -3148,14 +3029,17 @@ final class TableSink(val config: SinkConfig) {
     * branches live, so the base's sidecar set is frozen and the view is
     * stable for the audit's lifetime. */
   def readBranch(spark: SparkSession, name: String): DataFrame = {
-    val head = branchHeadFiles(name)
-    val base = branchBaseVersion(name)
-    if (!hasPendingDeletes(base)) readFiles(spark, head)
+    val log = openLog()
+    val bl = liveBranch(log, name)
+    val head = bl.files(bl.versions.last)
+    val base = branchBaseVersion(log, name)
+    if (log.pendingVersions(base).isEmpty) readFiles(log, spark, head)
     // capturePos, like every other applyDeletes call site (round-14): a
     // branch over a mixed-spine or clone manifest is a multi-relation
     // union, where a position sidecar's `_metadata` fold is unresolvable
     // unless captured per relation
-    else applyDeletes(readFiles(spark, head, capturePos = true), base)
+    else applyDeletes(log, readFiles(log, spark, head, capturePos = true),
+      base)
   }
 
   /** Publish: main's next snapshot becomes `current main head + the files
@@ -3168,8 +3052,9 @@ final class TableSink(val config: SinkConfig) {
     * metadata — no data file moves. Returns the new main version. The
     * branch stays live; drop it when done. */
   def publishBranch(name: String): Int = {
-    val base = branchManifest(name, 1).toSet
-    val staged = branchHeadFiles(name).filterNot(base)
+    val bl = liveBranch(openLog(), name)
+    val base = bl.files(1).toSet
+    val staged = bl.files(bl.versions.last).filterNot(base)
     // optimistic append-commit of the staged file set: concurrent main
     // appends (legal while a branch is live) merge instead of being lost
     commitAppendedFiles(staged)
@@ -3178,11 +3063,11 @@ final class TableSink(val config: SinkConfig) {
   /** Drop branch `name`. Files only the branch referenced become orphans —
     * [[removeOrphans]] reclaims them (the abandoned-audit cleanup path). */
   def dropBranch(name: String): Unit = {
-    val dir = branchLogPath(name)
-    require(WarehouseIO.isDir(dir),
-      s"branch '$name' does not exist; live branches: " +
-        branches().mkString(", "))
-    WarehouseIO.delete(dir, recursive = true)
+    val log = openLog()
+    val dir = TableLog.branchDirName(name)
+    require(log.contains(dir), s"branch '$name' does not exist; live " +
+      s"branches: ${log.branches.mkString(", ")}")
+    WarehouseIO.delete(logFile(dir), recursive = true)
     gcManifests() // delta manifests only the branch referenced
   }
 
@@ -3194,45 +3079,42 @@ final class TableSink(val config: SinkConfig) {
   // writes. Rewriting ops refuse while tags exist (the same loud-failure
   // contract as branches — a rewrite invalidates the manifests tags pin).
 
-  private def tagPath(name: String): org.apache.hadoop.fs.Path = {
-    require(name.matches("[A-Za-z0-9_-]+"),
-      s"tag name must be [A-Za-z0-9_-]+, got '$name'")
-    logFile(s"tag_$name")
-  }
-
   /** Tag `name` pinning snapshot `version` (default: the current head). */
   def createTag(name: String, version: Option[Int] = None): Unit = {
-    require(config.versioned && snapshotVersions().nonEmpty,
+    val log = openLog()
+    require(config.versioned && log.head.nonEmpty,
       "tags need a versioned table with at least one commit")
-    require(!WarehouseIO.exists(tagPath(name)),
-      s"tag '$name' already exists")
-    val v = version.getOrElse(snapshotVersions().last)
-    manifestFiles(v)                       // fails fast on a bad version
-    WarehouseIO.writeString(tagPath(name), v.toString)
+    val p = logFile(TableLog.tagFileName(name))
+    require(!log.contains(p.getName), s"tag '$name' already exists")
+    val v = version.getOrElse(log.versions.last)
+    log.snapshotFile(v)                    // fails fast on a bad version
+    WarehouseIO.writeString(p, v.toString)
   }
 
   /** Live tag names (empty when none or unversioned). */
-  def tags(): Seq[String] =
-    WarehouseIO.childNames(logPath)
-      .collect { case n if n.startsWith("tag_") => n.stripPrefix("tag_") }
-      .sorted
+  def tags(): Seq[String] = openLog().tags
 
   /** The snapshot version tag `name` pins. */
-  def tagVersion(name: String): Int = {
-    val p = tagPath(name)
-    require(WarehouseIO.exists(p),
-      s"tag '$name' does not exist; live tags: ${tags().mkString(", ")}")
-    WarehouseIO.readString(p).trim.toInt
+  def tagVersion(name: String): Int = tagVersion(openLog(), name)
+
+  private def tagVersion(log: TableLog, name: String): Int = {
+    val v = log.tagVersion(name)
+    require(v.isDefined,
+      s"tag '$name' does not exist; live tags: ${log.tags.mkString(", ")}")
+    v.get
   }
 
   /** Read the snapshot a tag pins — time travel by name. */
-  def readTag(spark: SparkSession, name: String): DataFrame =
-    readVersion(spark, tagVersion(name))
+  def readTag(spark: SparkSession, name: String): DataFrame = {
+    val log = openLog()
+    readVersion(log, spark, tagVersion(log, name))
+  }
 
   def dropTag(name: String): Unit = {
-    val p = tagPath(name)
-    require(WarehouseIO.exists(p),
-      s"tag '$name' does not exist; live tags: ${tags().mkString(", ")}")
+    val log = openLog()
+    val p = logFile(TableLog.tagFileName(name))
+    require(log.contains(p.getName),
+      s"tag '$name' does not exist; live tags: ${log.tags.mkString(", ")}")
     WarehouseIO.delete(p)
     ()
   }
@@ -3290,13 +3172,14 @@ final class TableSink(val config: SinkConfig) {
     * source entirely) or re-clone after source maintenance. */
   def shallowCloneTo(destConfig: SinkConfig): TableSink = {
     require(config.versioned, "shallow clone requires a versioned source")
-    require(cloneBasePath.isEmpty,
+    val log = openLog()
+    require(!log.isClone,
       "cannot clone a clone; clone the original table instead")
-    val head = snapshotVersions().lastOption
+    val head = log.head
       .getOrElse(sys.error("shallow clone requires at least one snapshot"))
-    require(!hasPendingDeletes(head),
+    require(log.pendingVersions(head).isEmpty,
       "source head has pending merge-on-read deletes; compact() it first")
-    val files = manifestFiles(head)
+    val files = log.files(head)
     require(files.nonEmpty, "cannot shallow-clone an empty table")
     val srcRoot = rootUriPath(config.tablePath)
     val abs = files.map(rel =>
@@ -3336,10 +3219,10 @@ final class TableSink(val config: SinkConfig) {
     // the clone's v1 is layered like every snapshot; its one manifest
     // lives in the DEST's log dir (a clone resolves names against its
     // own log, never the source's)
-    WarehouseIO.writeString(dest.logFile("v00001.list"),
-      WarehouseIO.renderSnapshot(
-        Seq(WarehouseIO.writeManifest(dest.logPath, abs))))
-    WarehouseIO.writeString(dest.logFile("clone_base"), srcRoot)
+    WarehouseIO.writeString(dest.logFile(TableLog.versionFile(1)),
+      TableLog.renderSnapshot(
+        Seq(TableLog.writeManifestLines(dest.logPath, abs))))
+    WarehouseIO.writeString(dest.logFile(TableLog.CloneBaseFile), srcRoot)
     dest
   }
 
@@ -3421,7 +3304,8 @@ final class TableSink(val config: SinkConfig) {
     // needs the gate (one bounded pass over the batch, not the table)
     requireConstraints(incoming, "upsert")
     val parts = partitionColNames
-    val current = read(spark)
+    val log = openLog()
+    val current = readLive(log, spark, mergeSchema = false)
     requireAlignedBatch(incoming.columns.toSeq, current.columns.toSeq,
       "upsert")
     val incomingKeys = incoming.select(keyCols.map(col): _*).distinct()
@@ -3429,7 +3313,7 @@ final class TableSink(val config: SinkConfig) {
       val survivors = base.join(incomingKeys, keyCols, "left_anti")
       survivors.unionByName(incoming.select(survivors.columns.map(col): _*))
     }
-    if (parts.isEmpty || cloneBasePath.isDefined || pendingMorDeletes) {
+    if (parts.isEmpty || scopedRewriteUnsafe(log)) {
       // unpartitioned: a merge is a full rewrite either way — swap protocol.
       // A shallow clone ALSO forces the full rewrite (its documented
       // materialization contract): dynamic overwrite would write only the
@@ -3492,21 +3376,16 @@ final class TableSink(val config: SinkConfig) {
       provenBounds: Option[Seq[(String, Any, Any)]]): Unit = {
     require(keyCols.nonEmpty, "upsertMor needs at least one key column")
     requireNoStreamingLog()
-    val liveBranches = branchesOrPending()
-    require(liveBranches.isEmpty,
-      "upsertMor while a branch is live would make the audit surface " +
-        "disagree with main; publish or drop first: " +
-        liveBranches.mkString(", "))
+    requireNoLiveBranch("upsertMor")
     if (provenBounds.isEmpty) requireKeyedBatch(df, keyCols, "upsertMor")
     recoverSwap()
     require(config.versioned,
       "merge-on-read upsert needs versioned=true (position sidecars are " +
         "commit metadata); use upsert() for copy-on-write")
-    require(config.fileFormat == "parquet",
-      s"upsertMor needs the parquet reader's _metadata.row_index; " +
-        s"format '${config.fileFormat}' does not expose row ordinals")
+    requireRowIndex("upsertMor")
     val spark = df.sparkSession
-    if (snapshotVersions().isEmpty) { append(df); return }
+    val log0 = openLog() // after recoverSwap: the head the first attempt uses
+    if (log0.head.isEmpty) { append(df); return }
     // derive partition columns UP FRONT (idempotent in the commit's own
     // withDerived) so the replacement aligns with the head frame's
     // columns on hidden-transform tables too
@@ -3543,8 +3422,8 @@ final class TableSink(val config: SinkConfig) {
     var attempt = 0
     while (attempt < 5) {
       attempt += 1
-      val base = keyEnvelope.fold(readHeadWithPos(spark))(
-        readHeadWithPos(spark).filter(_))
+      val head = readHeadWithPos(spark, if (attempt == 1) log0 else openLog())
+      val base = keyEnvelope.fold(head)(head.filter(_))
       requireAlignedBatch(incoming.columns.toSeq,
         base.columns.toSeq.filterNot(c =>
           c == "__graft_file" || c == "__graft_pos"), "upsertMor")
@@ -3613,11 +3492,6 @@ final class TableSink(val config: SinkConfig) {
   // interleaved copy (its swap is entangled with file-sizing); the
   // _pre_* recovery contract is identical.
 
-  private def rmTree(p: org.apache.hadoop.fs.Path): Unit = {
-    WarehouseIO.delete(p, recursive = true)
-    ()
-  }
-
   /** A swap scratch directory NEXT TO the table root (it cannot live
     * inside — the swap renames the whole root), DOT-PREFIXED so neither
     * the SQL catalog's table listing nor any recursive data scan of the
@@ -3647,7 +3521,7 @@ final class TableSink(val config: SinkConfig) {
     * (two SQL sessions both load-healing, or a reader racing the live
     * writer) can both read a phase-1 marker, and the slower one replays
     * `moveTree(root, trash)` against the already-HEALED root, then
-    * `rmTree(trash)` deletes the entire new table. Acquired by exclusive
+    * deleting `trash` deletes the entire new table. Acquired by exclusive
     * create ([[WarehouseIO.writeStringIfAbsent]] — one winner on any
     * store); released in-band; a crash strands it, so waiters break
     * locks older than [[WarehouseIO.swapLockStaleMs]] by mtime. */
@@ -3739,7 +3613,7 @@ final class TableSink(val config: SinkConfig) {
       WarehouseIO.moveTree(tmp, root, beat)
       WarehouseIO.swapStepHook("moved")
       beat()
-      rmTree(trash)
+      WarehouseIO.delete(trash, recursive = true)
       WarehouseIO.delete(swapMarker)
       ()
     } finally releaseSwapLock(token)
@@ -3783,7 +3657,7 @@ final class TableSink(val config: SinkConfig) {
       }
       if (WarehouseIO.exists(tmp)) WarehouseIO.moveTree(tmp, root, beat)
       beat()
-      rmTree(trash)
+      WarehouseIO.delete(trash, recursive = true)
       WarehouseIO.delete(swapMarker)
       // the interrupted caller never reached its post-swap history
       // reset: the rewritten root carries no _graft_log — snapshot the
@@ -3797,7 +3671,8 @@ final class TableSink(val config: SinkConfig) {
         (WarehouseIO.isFile(new HPath(root, "_graft_config")) &&
           WarehouseIO.readString(new HPath(root, "_graft_config"))
             .contains("versioned=true"))
-      if (declaredVersioned && !WarehouseIO.isDir(logPath)) writeSnapshot()
+      if (declaredVersioned && !WarehouseIO.isDir(logPath))
+        writeFirstSnapshot(dataFilesRel())
       } finally releaseSwapLock(token)
       return
     }
@@ -3805,7 +3680,7 @@ final class TableSink(val config: SinkConfig) {
       val trash = scratchSibling(sfx)
       if (WarehouseIO.exists(trash)) {
         if (!WarehouseIO.exists(root)) WarehouseIO.rename(trash, root)
-        else rmTree(trash)
+        else WarehouseIO.delete(trash, recursive = true)
       }
     }
   }
@@ -3845,7 +3720,7 @@ final class TableSink(val config: SinkConfig) {
     val root = new HPath(config.tablePath)
     val trash = scratchSibling("_pre_rewrite")
     val tmp = scratchSibling("_rewriting")
-    if (WarehouseIO.exists(tmp)) rmTree(tmp)
+    WarehouseIO.delete(tmp, recursive = true) // stale leftover, crashed run
     val parts = partitionColNames
     // preserveLayout: the caller already arranged the physical clustering
     // (a z-order rewrite) — the sink's own repartition would destroy it
@@ -3859,7 +3734,7 @@ final class TableSink(val config: SinkConfig) {
       val rewritten = spark.read.format(config.fileFormat)
         .load(tmp.toString).count()
       if (rewritten != expect) {
-        rmTree(tmp)
+        WarehouseIO.delete(tmp, recursive = true)
         throw new IllegalStateException(
           s"rewrite produced $rewritten rows, expected $expect — aborted, " +
             "original table untouched")
@@ -3895,7 +3770,7 @@ final class TableSink(val config: SinkConfig) {
       tempCols: Seq[String])(cluster: DataFrame => (DataFrame, Long)): Unit = {
     requireNoStreamingLog()
     requireNoBranches(op)
-    require(cloneBasePath.isEmpty || snapshotVersions().nonEmpty,
+    require({ val log = openLog(); !log.isClone || log.head.nonEmpty },
       s"$op on a clone needs a committed manifest")
     recoverSwap()
     val cur = read(spark)
@@ -4001,7 +3876,7 @@ final class TableSink(val config: SinkConfig) {
       val emptied = touchedVals.join(
         survivors.select(parts.map(col): _*).distinct(), parts, "left_anti")
         .limit(1).count() > 0
-      if (emptied || cloneBasePath.isDefined || pendingMorDeletes) {
+      if (emptied || scopedRewriteUnsafe()) {
         // emptied partition: dynamic overwrite cannot express it; shallow
         // clone: dynamic overwrite would materialize only the touched
         // partitions and the re-snapshot would drop the rest (see upsert);
@@ -4075,7 +3950,7 @@ final class TableSink(val config: SinkConfig) {
     }
     requireConstraints(current.filter(cond).select(updatedCols: _*), "update")
     val parts = partitionColNames
-    if (parts.isEmpty || cloneBasePath.isDefined || pendingMorDeletes) {
+    if (parts.isEmpty || scopedRewriteUnsafe()) {
       val totalRows = current.count()
       val nUpdated = current.filter(cond).count()
       if (nUpdated == 0L) return 0L
@@ -4154,30 +4029,25 @@ final class TableSink(val config: SinkConfig) {
     // through (its base sidecar set is frozen at creation). Tags are
     // fine — sidecars are version-scoped, a tagged snapshot's semantics
     // never change.
-    val liveBranches = branchesOrPending()
-    require(liveBranches.isEmpty,
-      "updateMor while a branch is live would make the audit surface " +
-        "disagree with main; publish or drop first: " +
-        liveBranches.mkString(", "))
+    requireNoLiveBranch("updateMor")
     recoverSwap()
     require(config.versioned,
       "merge-on-read update needs versioned=true (position sidecars are " +
         "commit metadata); use update() for copy-on-write")
-    require(config.fileFormat == "parquet",
-      s"updateMor needs the parquet reader's _metadata.row_index; " +
-        s"format '${config.fileFormat}' does not expose row ordinals")
-    require(snapshotVersions().nonEmpty,
+    requireRowIndex("updateMor")
+    val log0 = openLog() // after recoverSwap: the head the first attempt uses
+    require(log0.head.nonEmpty,
       "updateMor needs at least one committed snapshot")
     val cond = coalesce(condition, lit(false)) // NULL predicate keeps rows
     val setMap = set.toMap
-    val colsKnown = read(spark).columns
+    val colsKnown = readLive(log0, spark, mergeSchema = false).columns
     val missing = set.map(_._1).filterNot(colsKnown.contains)
     require(missing.isEmpty,
       s"updateMor SET references unknown columns: ${missing.mkString(", ")}")
     var attempt = 0
     while (true) {
       attempt += 1
-      val base = readHeadWithPos(spark)
+      val base = readHeadWithPos(spark, if (attempt == 1) log0 else openLog())
       // pin matched rows ONCE: the position list and the replacement
       // rows must describe the same physical rows
       val matched = base.where(cond).localCheckpoint()
@@ -4255,18 +4125,16 @@ final class TableSink(val config: SinkConfig) {
     * sidecar references through the rename map. */
   def pendingSidecarColumnRefs(spark: SparkSession): Set[String] = {
     if (!config.versioned) return Set.empty
-    val vs = snapshotVersions()
-    if (vs.isEmpty) return Set.empty
-    val idx = sidecarIndex()
-    vs.iterator.flatMap { v =>
-      val preds = idx.predicates(v).flatMap { p =>
+    val log = openLog()
+    log.versions.iterator.flatMap { v =>
+      val preds = log.predicates(v).flatMap { p =>
         scala.util.Try(org.apache.spark.sql.graft.Bridge
           .parseExpression(spark, p)).toOption.toSeq.flatMap(_.collect {
             case a: org.apache.spark.sql.catalyst.analysis
                 .UnresolvedAttribute => a.nameParts.head.toLowerCase
           })
       }
-      val keys = idx.keyDirs(v).flatMap(kd =>
+      val keys = log.keyDirs(v).flatMap(kd =>
         readSidecars(spark, Seq(kd)).schema.fieldNames
           .map(_.toLowerCase))
       preds ++ keys
@@ -4314,10 +4182,11 @@ final class TableSink(val config: SinkConfig) {
   /** The head snapshot's semantic rows WITH their physical coordinates
     * (`__graft_file`, `__graft_pos`) — the target frame a merge-on-read
     * mutation resolves its position list against. */
-  private[graft] def readHeadWithPos(spark: SparkSession): DataFrame = {
-    val head = snapshotVersions().last
-    applyDeletes(readFiles(spark, manifestFiles(head), capturePos = true),
-      head,
+  private[graft] def readHeadWithPos(spark: SparkSession,
+      log: TableLog = openLog()): DataFrame = {
+    val head = log.versions.last
+    applyDeletes(log,
+      readFiles(log, spark, log.files(head), capturePos = true), head,
       keepPosCols = true)
   }
 
@@ -4339,8 +4208,8 @@ final class TableSink(val config: SinkConfig) {
     * MERGE, or an [[upsertMor]] batch of all-new keys, the steady state
     * of a CDC replica ingesting fresh entities) commits a PLAIN append
     * instead: an empty `#pos` sidecar carries no delete semantics but
-    * would flip `pendingMorDeletes` permanently — every subsequent read
-    * folds a useless empty anti-join, SQL reads degrade to the projected
+    * would leave the head with a pending delete forever — every later
+    * read folds a useless empty anti-join, SQL reads degrade to the projected
     * V1 bridge, and consolidation can never clear it. With nothing
     * pinned to the analysis-time head, a pure append also commutes with
     * concurrent commits, so it takes the normal retrying claim rather
@@ -4358,7 +4227,7 @@ final class TableSink(val config: SinkConfig) {
     * the SQL MERGE), so both describe the same rows. */
   private[graft] def commitMorMutation(spark: SparkSession,
       positions: DataFrame, replacement: DataFrame): Int = {
-    val sidecar = s"pos-${java.util.UUID.randomUUID().toString.take(12)}"
+    val sidecar = TableLog.newSidecarName(TableLog.Sidecar.Positions)
     val sidecarDir = logFile(sidecar)
     var added: Seq[String] = Nil
     try {
@@ -4366,15 +4235,15 @@ final class TableSink(val config: SinkConfig) {
       val nonEmpty = WarehouseIO.dataFileStatuses(sidecarDir).exists {
         case (_, st) => FileFooters.rowCount(st, "parquet") > 0L
       }
-      val sidecarOpt =
-        if (nonEmpty) Some(sidecar)
-        else { WarehouseIO.delete(sidecarDir, recursive = true); None }
+      val sidecarRef =
+        if (nonEmpty) Seq(TableLog.Sidecar.Positions -> sidecar)
+        else { WarehouseIO.delete(sidecarDir, recursive = true); Nil }
       val prepared = clusterForWrite(withDerived(replacement))
       added = stagedWrite(prepared) // constraint gate runs in staging
       commitAppendedFiles(added,
-        maxAttempts = if (sidecarOpt.isDefined) 1 else 20,
+        maxAttempts = if (sidecarRef.nonEmpty) 1 else 20,
         stats = manifestStatsFor(spark, added, prepared.schema),
-        posRef = sidecarOpt)
+        sidecars = sidecarRef)
     } catch {
       case e: Throwable =>
         // the claim never landed: this attempt's sidecar and staged
@@ -4476,7 +4345,7 @@ final class TableSink(val config: SinkConfig) {
     }
     val allIdentity = config.partitionSpec.forall(p =>
       p.transform == Transform.Identity && p.explicitName.isEmpty)
-    if (allIdentity && cloneBasePath.isEmpty && !pendingMorDeletes) {
+    if (allIdentity && !scopedRewriteUnsafe()) {
       requireConstraints(data, "INSERT OVERWRITE (dynamic)")
       dynamicOverwrite(spark, clusterForWrite(data))
       if (config.versioned) expireSnapshots() // rewrites invalidate history
@@ -4524,7 +4393,7 @@ final class TableSink(val config: SinkConfig) {
       if (config.versioned) expireSnapshots()
     }
     if (parts.isEmpty || parts.exists(p => !touched.columns.contains(p)) ||
-        cloneBasePath.isDefined || pendingMorDeletes) { fullFallback(); return }
+        scopedRewriteUnsafe()) { fullFallback(); return }
     if (touched.isEmpty) return // no action fired anywhere: a no-op
     val hasNullPart = touched
       .filter(parts.map(col(_).isNull).reduce(_ || _)).limit(1).count() > 0
@@ -4629,9 +4498,8 @@ final class TableSink(val config: SinkConfig) {
     * newest-first (batch ids are monotonic per stream, so the first hit
     * is the max). Small-file reads, O(retained versions) worst case —
     * in practice 1-2: a live stream's txn line is at or near the head. */
-  private def lastTxnBatch(streamId: String): Option[Long] =
-    snapshotVersions().reverseIterator
-      .flatMap(v => WarehouseIO.snapshotTxn(snapshotFile(v)))
+  private def lastTxnBatch(log: TableLog, streamId: String): Option[Long] =
+    log.versions.reverseIterator.flatMap(log.txn)
       .collectFirst { case (id, b) if id == streamId => b }
 
   /** One micro-batch of [[startStreamVersioned]] (also callable directly
@@ -4646,7 +4514,7 @@ final class TableSink(val config: SinkConfig) {
     require(config.versioned,
       "appendStreamBatch commits through the snapshot log — versioned only")
     requireNoStreamingLog()
-    if (lastTxnBatch(streamId).exists(_ >= batchId)) return false
+    if (lastTxnBatch(openLog(), streamId).exists(_ >= batchId)) return false
     val prepared = clusterForWrite(withDerived(Ops.ensureMessage(df)))
     val added = stagedWrite(prepared)
     persistConfigHints()
@@ -4716,32 +4584,28 @@ final class TableSink(val config: SinkConfig) {
     * Ignored when a `tableSchema` is declared, since the declared schema
     * already pins the read shape.
     */
-  def read(spark: SparkSession, mergeSchema: Boolean = false): DataFrame = {
-    // a shallow clone has no data under its own directory: its live state
-    // IS the head manifest (absolute source entries + local appends), so
-    // the read goes through the manifest, never the directory listing
-    cloneBasePath match {
-      case Some(_) if snapshotVersions().nonEmpty &&
-          manifestFiles(snapshotVersions().last).nonEmpty =>
-        return readVersion(spark, snapshotVersions().last)
-      case _ => ()
-    }
-    // partition-spec evolution (round-13): the directory-scan fast path
-    // below silently DROPS or mis-derives rows when the table holds file
+  def read(spark: SparkSession, mergeSchema: Boolean = false): DataFrame =
+    readLive(openLog(), spark, mergeSchema)
+
+  /** [[read]] through the caller's log view. */
+  private def readLive(log: TableLog, spark: SparkSession,
+      mergeSchema: Boolean): DataFrame = {
+    // Two tables serve the head manifest, not the directory scan below:
+    // a shallow clone has no data under its own directory (its live
+    // state IS the head manifest: absolute source entries + local
+    // appends); and under partition-spec evolution (round-13) the scan
+    // silently DROPS or mis-derives rows when the table holds file
     // generations under different spines (measured: a root-level
-    // unpartitioned file vanished beside identity dirs). The head
-    // manifest pins the exact file set and readFiles reads each
-    // generation under its own layout, so a versioned mixed-spine table
-    // serves snapshot semantics instead. One manifest read to detect —
+    // unpartitioned file vanished beside identity dirs) — readFiles reads
+    // each generation under its own layout. One manifest read to detect,
     // the same metadata class the sidecar fold below already pays.
-    if (config.versioned) {
-      val vs = snapshotVersions()
-      if (vs.nonEmpty) {
-        val expect = partitionColNames
-        val mixed = manifestFiles(vs.last).exists(rel =>
-          !rel.startsWith("/") && TableSink.spineOf(rel) != expect)
-        if (mixed) return readVersion(spark, vs.last)
-      }
+    def mixed(h: Int) = log.files(h).exists(rel =>
+      !rel.startsWith("/") && TableSink.spineOf(rel) != partitionColNames)
+    log.head match {
+      case Some(h) if log.isClone && log.files(h).nonEmpty ||
+          config.versioned && mixed(h) =>
+        return readVersion(log, spark, h)
+      case _ => ()
     }
     val renames = renameMap
     val opts =
@@ -4755,40 +4619,38 @@ final class TableSink(val config: SinkConfig) {
     val declared =
       if (mergeSchema) config.tableSchema
       else config.tableSchema.orElse(alterDeclaredSchema)
-    val df = applyRenames(
-      declared.map(augmentWithRenameSources(_, renames))
+    val df = TableSink.applyRenames(
+      declared.map(TableSink.augmentWithRenameSources(_, renames))
         .orElse(FileFooters.ofDirectory(spark, config.fileFormat,
           config.tablePath, opts))
         .fold(r)(s => r.schema(s)).load(config.tablePath),
       renames)
     // live read = head-snapshot semantics: merge-on-read predicates apply
     // (no-op on unversioned tables — no log, no predicates)
-    snapshotVersions().lastOption.fold(df)(applyDeletes(df, _))
+    log.head.fold(df)(applyDeletes(log, df, _))
   }
 
   /** Like [[read]], but captures the scan's `_metadata.file_path` into
     * `pathCol` BEFORE merge-on-read delete anti-joins make the
     * `_metadata` struct unresolvable — the surface in-plan zone-map
     * skipping ([[ZoneMaps.readBetweenInPlan]]) builds on. */
-  private[graft] def readWithScanPath(spark: SparkSession,
-      pathCol: String): DataFrame = {
+  private[graft] def readWithScanPath(spark: SparkSession, pathCol: String,
+      log: TableLog = openLog()): DataFrame = {
     def captured(df: DataFrame): DataFrame =
       df.withColumn(pathCol, col("_metadata.file_path"))
-    cloneBasePath match {
-      case Some(_) if snapshotVersions().nonEmpty &&
-          manifestFiles(snapshotVersions().last).nonEmpty =>
+    log.head match {
+      case Some(head) if log.isClone && log.files(head).nonEmpty =>
         // a diverged clone's manifest is a multi-relation union where
         // `_metadata` is unresolvable — derive the path column from the
         // per-relation capture instead (round-13)
-        val head = snapshotVersions().last
-        val base = readFiles(spark, manifestFiles(head), capturePos = true)
+        val base = readFiles(log, spark, log.files(head), capturePos = true)
         // multi-relation manifests carry the per-relation capture; a
         // single-relation one resolves `_metadata` directly
         val withPath =
           if (base.columns.contains("__graft_file"))
             base.withColumn(pathCol, col("__graft_file"))
           else base.withColumn(pathCol, col("_metadata.file_path"))
-        return applyDeletes(withPath, head)
+        return applyDeletes(log, withPath, head)
       case _ => ()
     }
     val r = spark.read.format(config.fileFormat)
@@ -4796,7 +4658,7 @@ final class TableSink(val config: SinkConfig) {
       .orElse(FileFooters.ofDirectory(spark, config.fileFormat,
         config.tablePath))
       .fold(r)(s => r.schema(s)).load(config.tablePath))
-    snapshotVersions().lastOption.fold(df)(applyDeletes(df, _))
+    log.head.fold(df)(applyDeletes(log, df, _))
   }
 
   /** Row lineage — Iceberg's `_commit_version` metadata-column analogue:
@@ -4816,18 +4678,19 @@ final class TableSink(val config: SinkConfig) {
     * need a changelog replay; here they are one scan. */
   def readWithCommitVersion(spark: SparkSession,
       versionCol: String = "_commit_version"): DataFrame = {
-    require(config.versioned && snapshotVersions().nonEmpty,
+    val log = openLog()
+    require(config.versioned && log.head.nonEmpty,
       "row lineage needs a versioned table with at least one commit")
     // "first manifest that lists the file", accumulated from each
     // version's NEW delta manifests (O(Σ deltas) — a merged/compacted
     // manifest re-listing old files never re-attributes them, because
     // already-seen paths are skipped)
-    val introduced = snapshotVersions()
+    val introduced = log.versions
       .foldLeft((Map.empty[String, Int], Set.empty[String])) {
         case ((seen, seenNames), v) =>
-          val names = manifestNames(v)
+          val names = log.manifestNames(v)
           val files = names.filterNot(seenNames)
-            .flatMap(WarehouseIO.manifestFilesOf(logPath, _))
+            .flatMap(log.manifestLines(_).map(TableLog.manifestLinePath))
           (seen ++ files.filterNot(seen.contains).map(_ -> v),
             seenNames ++ names)
       }._1
@@ -4838,7 +4701,7 @@ final class TableSink(val config: SinkConfig) {
     }
     import spark.implicits._
     val byPath = pairs.toDF("__lin_path", versionCol)
-    readWithScanPath(spark, "__lin_raw")
+    readWithScanPath(spark, "__lin_raw", log)
       .withColumn("__lin_scan",
         regexp_replace(TableSink.decodePath(col("__lin_raw")),
           "^file:(//)?", ""))
@@ -4851,27 +4714,20 @@ final class TableSink(val config: SinkConfig) {
     * snapshot history: a rewriting op expires the log and restarts
     * numbering at v1, so a bare version in a checkpoint could silently
     * resume against a different history. */
-  def streamHead(): (String, Int) =
-    (logGeneration(), snapshotVersions().lastOption.getOrElse(0))
-
-  /** Last committed snapshot version at or before `cutoffMs` (commit
-    * wall-clock = the snapshot file's mtime — the same clock the SQL
-    * door's TIMESTAMP AS OF resolves against); None when every retained
-    * commit is later. The streaming sources' `startingTimestamp` floor. */
-  def versionAtOrBefore(cutoffMs: Long): Option[Int] =
-    snapshotVersions()
-      .filter(v => WarehouseIO.modifiedAtMs(snapshotFile(v)) <= cutoffMs)
-      .lastOption
+  def streamHead(): (String, Int) = {
+    val log = openLog()
+    (log.generation, log.head.getOrElse(0))
+  }
 
   /** Last committed snapshot version STRICTLY before `cutoffMs`; None
     * when every retained commit is at or after it. The streaming
     * sources' `startingTimestamp` exclusive floor: the consumer must
     * see every commit at or after the instant (the Delta contract), so
     * a commit landing exactly at the cutoff is emitted, not floored. */
-  def versionBefore(cutoffMs: Long): Option[Int] =
-    snapshotVersions()
-      .filter(v => WarehouseIO.modifiedAtMs(snapshotFile(v)) < cutoffMs)
-      .lastOption
+  def versionBefore(cutoffMs: Long): Option[Int] = {
+    val log = openLog()
+    log.versions.filter(log.committedAtMs(_) < cutoffMs).lastOption
+  }
 
   /** The rows commits `(fromVersion, toVersion]` appended — the
     * snapshot-streaming micro-batch. INSERT-ONLY enforcement, precise:
@@ -4888,8 +4744,8 @@ final class TableSink(val config: SinkConfig) {
     * the appended files. */
   def readAppendedBetween(spark: SparkSession, fromVersion: Int,
       toVersion: Int, ignoreChanges: Boolean = false): DataFrame = {
-    val versions = snapshotVersions()
-    val idx = sidecarIndex()
+    val log = openLog()
+    val versions = log.versions
     val rng = versions.filter(v => v > fromVersion && v <= toVersion)
     val parts: Seq[DataFrame] = rng.flatMap { v =>
       // `ignoreChanges` (Delta's escape hatch, round-13): an IDEMPOTENT
@@ -4900,15 +4756,15 @@ final class TableSink(val config: SinkConfig) {
       // (Delta's ignoreDeletes folded in). The default stays the loud
       // refusal: a non-idempotent consumer must not silently double-see
       // updated rows.
-      require(ignoreChanges || !idx.any(v),
+      require(ignoreChanges || !log.carriesSidecar(v),
         s"snapshot streaming: commit v$v carries merge-on-read deletes — " +
           "a stream cannot retract rows it already emitted; run deletes " +
           "with the stream down, compact, and restart the consumer from " +
           "a fresh checkpoint — or opt in with ignoreChanges=true if the " +
           "downstream tolerates re-emitted replacement rows")
       val prevSet = versions.filter(_ < v).lastOption
-        .map(manifestFiles(_).toSet).getOrElse(Set.empty)
-      val cur = manifestFiles(v)
+        .map(log.files(_).toSet).getOrElse(Set.empty)
+      val cur = log.files(v)
       val removed = prevSet -- cur
       require(removed.isEmpty,
         s"snapshot streaming: commit v$v removed or rewrote " +
@@ -4917,10 +4773,11 @@ final class TableSink(val config: SinkConfig) {
           "down and restart the consumer from a fresh checkpoint")
       val added = cur.filterNot(prevSet)
       if (added.isEmpty) None
-      else Some(applyDeletes(
-        readFiles(spark, added, capturePos = true), v))
+      else Some(applyDeletes(log,
+        readFiles(log, spark, added, capturePos = true), v))
     }
-    if (parts.isEmpty) read(spark).limit(0) else parts.reduce(_ unionByName _)
+    if (parts.isEmpty) readLive(log, spark, mergeSchema = false).limit(0)
+    else parts.reduce(_ unionByName _)
   }
 
   /** Streaming read of the table — the Iceberg streaming-read contract
@@ -4995,7 +4852,7 @@ final class TableSink(val config: SinkConfig) {
     * Scale shape: one footer read per generation (generation count is the
     * number of spec changes, a handful) + the per-generation scans Spark
     * plans normally; grouping is driver-side string work over the file
-    * list, the same metadata [[listDataFiles]] already handles. */
+    * list, the same metadata [[dataFilesRel]] already handles. */
   def readEvolved(spark: SparkSession): DataFrame = {
     // VERSIONED tables (round-13): the raw directory listing would
     // include unclaimed staged files and ignore merge-on-read sidecars
@@ -5005,21 +4862,21 @@ final class TableSink(val config: SinkConfig) {
     // per-scan file metadata), and compact() materializes both the
     // deletes and the spec migration. Clones materialize first for the
     // same reason their other rewrites do.
-    require(cloneBasePath.isEmpty,
+    val log = openLog()
+    require(!log.isClone,
       "readEvolved on a shallow clone would scan across two table " +
         "roots; compact() materializes the clone first")
-    val rels =
-      if (config.versioned && snapshotVersions().nonEmpty) {
-        val head = snapshotVersions().last
-        require(!hasPendingDeletes(head),
+    val rels = log.head match {
+      case Some(head) if config.versioned =>
+        require(log.pendingVersions(head).isEmpty,
           "readEvolved with pending merge-on-read deletes would " +
             "resurrect deleted rows (sidecars cannot fold across the " +
             "generation union); compact() first — it materializes them")
-        manifestFiles(head)
-      } else listDataFiles()
+        log.files(head)
+      case _ => dataFilesRel()
+    }
     require(rels.nonEmpty, s"table '${config.tableName}' has no data files")
-    val groups = rels.groupBy(_.split('/').dropRight(1)
-      .takeWhile(_.contains('=')).map(_.takeWhile(_ != '=')).toSeq)
+    val groups = rels.groupBy(TableSink.spineOf)
     val fileCols: Set[String] = groups.valuesIterator.flatMap { files =>
       spark.read.format(config.fileFormat)
         .load(s"${config.tablePath}/${files.head}").schema.fieldNames
@@ -5073,18 +4930,19 @@ final class TableSink(val config: SinkConfig) {
     import org.apache.spark.sql.expressions.Window
     import org.apache.hadoop.fs.{Path => HPath}
     requireNoStreamingLog()
-    requireNoBranches("compactPartitions")
-    require(cloneBasePath.isEmpty,
+    val log = openLog()
+    requireNoBranches("compactPartitions", log)
+    require(!log.isClone,
       "compactPartitions on a shallow clone would materialize only some " +
         "partitions; run compact() to materialize the clone first")
     require(partitionColNames.nonEmpty,
       "unpartitioned tables have no partition granularity; use compact()")
-    snapshotVersions().lastOption.foreach(h => require(!hasPendingDeletes(h),
+    log.head.foreach(h => require(log.pendingVersions(h).isEmpty,
       "compactPartitions with pending merge-on-read deletes would have to " +
         "clear sidecars that still protect untouched partitions; " +
         "materialize with compact() first"))
     val root = new HPath(config.tablePath)
-    val bySpine = listDataFiles()
+    val bySpine = dataFilesRel()
       .groupBy(f => f.split('/').dropRight(1).mkString("/"))
       .filter(_._1.nonEmpty)
     val fsys = WarehouseIO.fs(root)
@@ -5156,14 +5014,14 @@ final class TableSink(val config: SinkConfig) {
     // zero bytes on a fresh clone and early-return, breaking the
     // documented "first rewriting op materializes" contract, and would
     // under-size bytesPerRow for clones with local appends.
-    val cloneBytes = cloneBasePath.fold(0L) { _ =>
-      snapshotVersions().lastOption.map(manifestFiles).getOrElse(Nil)
-        .filter(_.startsWith("/"))
+    val log = openLog()
+    val cloneBytes =
+      if (!log.isClone) 0L
+      else log.head.map(log.files).getOrElse(Nil).filter(_.startsWith("/"))
         .map(abs => WarehouseIO.sizeOf(new HPath(abs))).sum
-    }
     val totalBytes = cloneBytes + WarehouseIO.totalDataBytes(root)
     if (totalBytes == 0) return
-    val cur = read(spark)
+    val cur = readLive(log, spark, mergeSchema = false)
     val totalRows = cur.count()
     if (totalRows == 0) return
     val bytesPerRow = totalBytes.toDouble / totalRows
@@ -5175,7 +5033,7 @@ final class TableSink(val config: SinkConfig) {
         ceil(count(lit(1)).over(Window.partitionBy(parts.map(col): _*)) *
           lit(bytesPerRow) / lit(targetFileBytes.toDouble)).cast("long"))
     val tmp = scratchSibling("_compacting")
-    if (WarehouseIO.exists(tmp)) rmTree(tmp) // stale leftover, crashed run
+    WarehouseIO.delete(tmp, recursive = true) // stale leftover, crashed run
     // window expressions cannot ride inside repartition: materialize the
     // salt as a column, cluster on it, then drop it before the write
     val withSalt = cur
@@ -5195,7 +5053,7 @@ final class TableSink(val config: SinkConfig) {
     val rewrittenRows = spark.read.format(config.fileFormat)
       .load(tmp.toString).count()
     if (rewrittenRows != totalRows) {
-      rmTree(tmp)
+      WarehouseIO.delete(tmp, recursive = true)
       throw new IllegalStateException(
         s"compaction rewrite produced $rewrittenRows rows, expected " +
           s"$totalRows — aborted, original table untouched")

@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 
 /** Warehouse metadata IO, routed through the Hadoop [[FileSystem]] API so
@@ -27,7 +27,7 @@ private[graft] object WarehouseIO {
   private[graft] val metaBytesWritten =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Directory listings ([[childNames]]/[[childDirNames]]) since process
+  /** Directory listings ([[listing]] and its callers) since process
     * start (monotonic; test/attribution hook): the SQL door's
     * per-statement metadata cost is dominated by listings + small-file
     * reads, and split harnesses diff these around a statement to
@@ -60,15 +60,14 @@ private[graft] object WarehouseIO {
 
   def exists(p: HPath): Boolean = fs(p).exists(p)
 
-  def isFile(p: HPath): Boolean = {
-    val f = fs(p)
-    f.exists(p) && f.getFileStatus(p).isFile
-  }
+  /** `p`'s status from ONE filesystem call; None when absent. */
+  private def status(p: HPath): Option[FileStatus] =
+    try Some(fs(p).getFileStatus(p))
+    catch { case _: java.io.FileNotFoundException => None }
 
-  def isDir(p: HPath): Boolean = {
-    val f = fs(p)
-    f.exists(p) && f.getFileStatus(p).isDirectory
-  }
+  def isFile(p: HPath): Boolean = status(p).exists(_.isFile)
+
+  def isDir(p: HPath): Boolean = status(p).exists(_.isDirectory)
 
   def readString(p: HPath): String = {
     metaReads.incrementAndGet()
@@ -230,12 +229,12 @@ private[graft] object WarehouseIO {
     * 4-core Xeon host, 3.4–5.2 ms per entry over 200 files, against under
     * 0.1 ms per entry walked this way. */
   private def walkFiles(root: HPath, skip: String => Boolean)
-      : Iterator[(String, org.apache.hadoop.fs.FileStatus)] = {
+      : Iterator[(String, FileStatus)] = {
     val f = fs(root)
     val q = f.makeQualified(root)
     if (!f.exists(q)) return Iterator.empty
     val rootStr = q.toString
-    def walk(dir: HPath): Iterator[(String, org.apache.hadoop.fs.FileStatus)] =
+    def walk(dir: HPath): Iterator[(String, FileStatus)] =
       f.listStatus(dir).iterator.filterNot(st => skip(st.getPath.getName))
         .flatMap { st =>
           if (st.isDirectory) walk(st.getPath)
@@ -304,22 +303,22 @@ private[graft] object WarehouseIO {
   def delete(p: HPath, recursive: Boolean = false): Boolean =
     fs(p).delete(p, recursive)
 
-  /** Immediate child names of `dir` (empty when absent). */
-  def childNames(dir: HPath): Seq[String] = {
+  /** The immediate children of `dir` as statuses, from ONE `listStatus`;
+    * None when `dir` is absent. */
+  def listing(dir: HPath): Option[Seq[FileStatus]] = {
     dirListings.incrementAndGet()
-    val f = fs(dir)
-    if (!f.exists(dir)) Nil
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
+    try Some(fs(dir).listStatus(dir).toSeq)
+    catch { case _: java.io.FileNotFoundException => None }
   }
+
+  /** Immediate child names of `dir` (empty when absent). */
+  def childNames(dir: HPath): Seq[String] =
+    listing(dir).getOrElse(Nil).map(_.getPath.getName)
 
   /** Immediate child DIRECTORY names of `dir` (empty when absent) — one
     * listing, no per-child stat round-trips. */
-  def childDirNames(dir: HPath): Seq[String] = {
-    dirListings.incrementAndGet()
-    val f = fs(dir)
-    if (!f.exists(dir)) Nil
-    else f.listStatus(dir).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-  }
+  def childDirNames(dir: HPath): Seq[String] =
+    listing(dir).getOrElse(Nil).filter(_.isDirectory).map(_.getPath.getName)
 
   /** First data file under `root` as a root-relative path — the lazy
     * counterpart of [[listDataFilesRel]] for format sniffing and existence
@@ -346,202 +345,6 @@ private[graft] object WarehouseIO {
     require(f.rename(src, dst), s"filesystem refused rename $src -> $dst")
   }
 
-  // ------------------------------------------- layered snapshot format
-  // Iceberg's manifest-list layering (reference README.md:95-105 places
-  // the connector on exactly this commit model): a snapshot file is a
-  // SMALL list of immutable manifest names; each manifest holds the
-  // data-file paths ONE commit added. Commit metadata IO is therefore
-  // O(added files + manifest count), never O(table files), and K
-  // snapshots share manifests instead of storing K full copies. Every
-  // snapshot file starts with the [[SnapshotHeader]]; readers refuse a
-  // version file without it.
-
-  /** First line of a layered (manifest-list) snapshot file. */
-  val SnapshotHeader = "#manifests"
-
-  /** Write an immutable manifest (one data-file path per line) into
-    * `logDir`; returns its name. UUID-named: manifests are shared by
-    * many snapshots and never keyed to one version. A line may carry
-    * per-file column stats after a TAB (`path\tjson` — the Iceberg
-    * manifest-entry stats idea); path-only readers strip them. */
-  def writeManifest(logDir: HPath, files: Seq[String]): String =
-    writeManifestLines(logDir, files)
-
-  /** [[writeManifest]] accepting pre-rendered `path[\tstats]` lines. */
-  def writeManifestLines(logDir: HPath, lines: Seq[String]): String = {
-    val name = s"m-${java.util.UUID.randomUUID().toString.take(18)}.mf"
-    writeString(new HPath(logDir, name), lines.mkString("\n"))
-    name
-  }
-
-  /** What a commit records about each data file it adds, in the manifest
-    * entry's stats JSON: rows (`n`), bytes (`size`) and modification time
-    * in epoch ms (`mtime`) — the `files` and `partitions` metadata tables
-    * answer from these without opening the file. */
-  final case class FileFacts(rows: Long, size: Long, mtimeMs: Long)
-
-  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  /** A manifest line for `path`: its column-stats JSON (if any) with
-    * `facts` (if any) merged in; a bare path when neither is given. */
-  def renderEntry(path: String, stats: Option[String],
-      facts: Option[FileFacts]): String = facts match {
-    case None => stats.fold(path)(j => s"$path\t$j")
-    case Some(f) =>
-      val node = stats.fold(json.createObjectNode())(j =>
-        json.readTree(j).asInstanceOf[
-          com.fasterxml.jackson.databind.node.ObjectNode])
-      node.put("n", f.rows).put("size", f.size).put("mtime", f.mtimeMs)
-      s"$path\t${json.writeValueAsString(node)}"
-  }
-
-  /** The [[FileFacts]] a manifest line records; None for an entry written
-    * without them (a bare path, or column stats alone). */
-  def entryFacts(line: String): Option[FileFacts] = {
-    val i = line.indexOf('\t')
-    if (i < 0) None
-    else {
-      val node = json.readTree(line.substring(i + 1))
-      Seq("n", "size", "mtime").map(k => Option(node.get(k))) match {
-        case Seq(Some(n), Some(s), Some(m)) =>
-          Some(FileFacts(n.asLong, s.asLong, m.asLong))
-        case _ => None
-      }
-    }
-  }
-
-  /** The path of a manifest line (everything before the stats TAB). */
-  def manifestLinePath(line: String): String = {
-    val i = line.indexOf('\t')
-    if (i < 0) line else line.substring(0, i)
-  }
-
-  /** Raw `path[\tstats]` lines of manifest `name` — the merge/compaction
-    * reader: folding manifests must PRESERVE stats entries, not strip
-    * them to paths. */
-  def manifestLinesOf(logDir: HPath, name: String): IndexedSeq[String] = {
-    manifestContentReads.incrementAndGet()
-    readString(new HPath(logDir, name))
-      .split("\n").filter(_.nonEmpty).toIndexedSeq
-  }
-
-  /** Fold manifest lines from several manifests into one line per path:
-    * a stats-bearing line beats a bare path (compaction must not lose
-    * stats), and among stats-bearing duplicates the line from the LATER
-    * chunk wins — explicitly by position, never by line length: a
-    * refreshed stats entry can legitimately render SHORTER than the one
-    * it supersedes (e.g. an analyze that dropped a registered column),
-    * and "longer wins" would keep serving the stale bounds. */
-  def mergeManifestLines(chunks: Seq[Seq[String]]): Seq[String] = {
-    val byPath = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    chunks.foreach(_.foreach { line =>
-      val p = manifestLinePath(line)
-      val bare = line.indexOf('\t') < 0
-      byPath.get(p) match {
-        case Some(prev) if bare && prev.indexOf('\t') >= 0 =>
-          () // a bare path never demotes an existing stats entry
-        case _ => byPath(p) = line // later chunk wins otherwise
-      }
-    })
-    byPath.toSeq.sortBy(_._1).map(_._2)
-  }
-
-  /** Render a layered snapshot pointing at `manifestNames`. Optional
-    * `metadata` entries ride inside the snapshot file as `#`-prefixed
-    * lines (atomic with the commit that claims it) — e.g. the streaming
-    * transaction line `txn <streamId> <batchId>`. */
-  def renderSnapshot(manifestNames: Seq[String],
-      metadata: Seq[String] = Nil): String =
-    (SnapshotHeader +: (metadata.map("#" + _) ++ manifestNames))
-      .mkString("\n")
-
-  /** The lines after the header of snapshot file `snapshotPath`;
-    * refuses, by name, a file that does not start with
-    * [[SnapshotHeader]] — no writer produces one. */
-  private def snapshotBody(snapshotPath: HPath): IndexedSeq[String] = {
-    val lines = readString(snapshotPath).split("\n", -1).toIndexedSeq
-    require(lines.headOption.contains(SnapshotHeader),
-      s"snapshot file $snapshotPath lacks the $SnapshotHeader header: " +
-        "not a snapshot this table format writes")
-    lines.tail
-  }
-
-  /** Manifest names of a snapshot file, in commit order. `#`-prefixed
-    * metadata lines are not names. O(manifest count) read. */
-  def snapshotManifestNames(snapshotPath: HPath): Seq[String] =
-    snapshotBody(snapshotPath).filter(l => l.nonEmpty && !l.startsWith("#"))
-
-  /** Stream ids default to checkpoint PATHS, which may contain spaces —
-    * and the txn line is space-delimited inside a line-oriented snapshot
-    * file, so a raw space would shift the batch-id token (every parse
-    * returns None → replay dedup silently off → duplicates land) and a
-    * raw newline would inject bogus manifest-name lines. Minimal escape
-    * of exactly the structural characters: ids without them round-trip
-    * byte-identical, so pre-encoding snapshots keep resolving. */
-  def encodeTxnId(id: String): String = id
-    .replace("%", "%25").replace(" ", "%20")
-    .replace("\n", "%0A").replace("\r", "%0D")
-
-  def decodeTxnId(id: String): String = id
-    .replace("%0D", "\r").replace("%0A", "\n")
-    .replace("%20", " ").replace("%25", "%")
-
-  /** The `#txn <streamId> <batchId>` metadata line of a snapshot, if
-    * any — the exactly-once dedup record a streaming commit embeds
-    * atomically in its claimed snapshot. The id token is
-    * [[encodeTxnId]]-escaped on disk. */
-  def snapshotTxn(snapshotPath: HPath): Option[(String, Long)] =
-    snapshotBody(snapshotPath).find(_.startsWith("#txn ")).flatMap { l =>
-      l.stripPrefix("#txn ").split(" ") match {
-        case Array(id, b) => b.toLongOption.map(decodeTxnId(id) -> _)
-        case _ => None
-      }
-    }
-
-  /** The three sidecar references of a snapshot in ONE file read:
-    * (`#pos`, `#keys`, `#del`). Each names a delete sidecar committed
-    * ATOMICALLY inside the claimed snapshot: `pos` a position-delete
-    * directory (the merge-on-read UPDATE/MERGE shape — replacement
-    * appends and the subtraction of the replaced rows land in one
-    * snapshot), `keys` an erasure-list directory, `del` a file holding a
-    * delete predicate's SQL text. A sidecar that landed after its
-    * snapshot would let a CHANGELOG consumer reading the version in that
-    * window emit an empty change and advance past the delete. */
-  def snapshotSidecarRefs(snapshotPath: HPath)
-      : (Option[String], Option[String], Option[String]) = {
-    val lines = snapshotBody(snapshotPath)
-    def v(key: String): Option[String] = lines
-      .find(_.startsWith(s"#$key "))
-      .map(_.stripPrefix(s"#$key ").trim).filter(_.nonEmpty)
-    (v("pos"), v("keys"), v("del"))
-  }
-
-  /** Driver-side manifest CONTENT reads since process start (names-only
-    * snapshot reads don't count). Spec seam: metadata surfaces that claim
-    * distributed accounting (metaSnapshots) prove it by diffing this
-    * around a call — zero means no manifest's file list ever
-    * materialized on the driver. */
-  private[graft] val manifestContentReads =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Raw `path[\tstats]` lines of a snapshot file — the union of its
-    * manifests' lines, one per path ([[mergeManifestLines]]). */
-  def readSnapshotLines(logDir: HPath, snapshotPath: HPath): Seq[String] =
-    mergeManifestLines(
-      snapshotManifestNames(snapshotPath).map(manifestLinesOf(logDir, _)))
-
-  /** Data-file paths of manifest `name` under `logDir` (per-line stats
-    * stripped). */
-  def manifestFilesOf(logDir: HPath, name: String): IndexedSeq[String] =
-    manifestLinesOf(logDir, name).map(manifestLinePath)
-
-  /** Resolve a snapshot file to its full data-file list: the union of
-    * its manifests (resolved against `logDir` — branch snapshots
-    * reference manifests in the MAIN log dir), deduped and sorted for
-    * deterministic reads. */
-  def readSnapshotFiles(logDir: HPath, snapshotPath: HPath): Seq[String] =
-    readSnapshotLines(logDir, snapshotPath).map(manifestLinePath)
-
   /** Recursively list DATA files under `root` as root-relative paths
     * (see [[dataFileStatuses]] for what counts as data), sorted for
     * deterministic manifests. */
@@ -555,57 +358,6 @@ private[graft] object WarehouseIO {
     * file index applies — and such directories are never listed. The
     * walk is an ITERATOR, consumed lazily ([[walkFiles]]); empty when
     * `root` is absent. */
-  def dataFileStatuses(root: HPath)
-      : Iterator[(String, org.apache.hadoop.fs.FileStatus)] =
+  def dataFileStatuses(root: HPath): Iterator[(String, FileStatus)] =
     walkFiles(root, n => n.startsWith("_") || n.startsWith("."))
-}
-
-/** ONE-LISTING sidecar index of the snapshot log at `logDir`: which
-  * versions carry which merge-on-read delete sidecars, resolved from a
-  * SINGLE listing of the log instead of per-version metadata probes
-  * (and version-file READS) per read — measured: the per-version probes
-  * regressed q_rollback 2.2× the day they landed. Every delete flavor
-  * pre-writes its sidecar under a unique name (`pos-*` position lists,
-  * `keys-*` key lists, `del-*` predicate SQL) and the claimed snapshot
-  * references it (atomic, so a changelog consumer can never observe a
-  * version before its sidecar exists and lose the delta); the references
-  * cost a version-file read ONLY when some such name exists in the
-  * listing at all — on a table with no pending merge-on-read delete the
-  * index is one `listStatus`, full stop. An index is a point-in-time
-  * snapshot of the log. The sink and the SQL catalog both read sidecar
-  * state through it. */
-private[graft] final class SidecarIndex(logDir: HPath) {
-  private val names: Set[String] = WarehouseIO.childNames(logDir).toSet
-  private val anyRef = names.exists(n => n.startsWith("pos-") ||
-    n.startsWith("keys-") || n.startsWith("del-"))
-  private val refCache = scala.collection.mutable.Map
-    .empty[Int, (Option[String], Option[String], Option[String])]
-  private def file(name: String) = new HPath(logDir, name)
-  private def refs(v: Int)
-      : (Option[String], Option[String], Option[String]) =
-    if (!anyRef) (None, None, None)
-    else refCache.getOrElseUpdate(v,
-      if (!names(f"v$v%05d.list")) (None, None, None)
-      else WarehouseIO.snapshotSidecarRefs(file(f"v$v%05d.list")))
-  /** Predicate SQL text of version `v`'s `#del`-referenced sidecar. */
-  def predicates(v: Int): Seq[String] =
-    refs(v)._3.filter(names).toSeq.map(n => WarehouseIO.readString(file(n)))
-  def keyDirs(v: Int): Seq[HPath] = refs(v)._2.filter(names).toSeq.map(file)
-  /** Version `v`'s `#pos`-referenced position-list directory. */
-  def posDirs(v: Int): Seq[HPath] = refs(v)._1.filter(names).toSeq.map(file)
-  /** Referenced sidecar FILE/DIR names of `v` (cleanup loops must
-    * capture these before deleting the version file). */
-  def refNames(v: Int): Seq[String] = {
-    val (p, k, d) = refs(v)
-    (p.toSeq ++ k.toSeq ++ d.toSeq).filter(names)
-  }
-  def any(v: Int): Boolean = refNames(v).nonEmpty
-  /** The versions at or before `upTo` that carry a sidecar, oldest first,
-    * read off the same listing. */
-  def pendingVersions(upTo: Int): Seq[Int] =
-    if (!anyRef) Nil
-    else names.toSeq
-      .collect { case n if n.startsWith("v") && n.endsWith(".list") =>
-        n.stripPrefix("v").stripSuffix(".list").toInt }
-      .filter(v => v <= upTo && any(v)).sorted
 }

@@ -23,7 +23,7 @@ class AppendCommitSpec extends AnyFunSuite {
       "b.parquet\t{\"n\":2}")
     val newer = Seq("a.parquet\t{\"n\":5,\"z\":{\"x\":[\"2\",\"8\"]}}", // shorter!
       "b.parquet") // bare path: must NOT demote b's stats entry
-    val merged = WarehouseIO.mergeManifestLines(Seq(older, newer))
+    val merged = TableLog.mergeManifestLines(Seq(older, newer))
     assert(merged.contains("a.parquet\t{\"n\":5,\"z\":{\"x\":[\"2\",\"8\"]}}"),
       s"later stats entry must win regardless of length: $merged")
     assert(merged.contains("b.parquet\t{\"n\":2}"),
@@ -97,10 +97,10 @@ class AppendCommitSpec extends AnyFunSuite {
     val log = new org.apache.hadoop.fs.Path(s"$wh/ac_t5/_graft_log")
     val v2 = new org.apache.hadoop.fs.Path(log, "v00002.list")
     val v1Files = sink.readVersion(spark, 1).inputFiles.toSeq
-    val v2Snapshot = WarehouseIO.renderSnapshot(
-      WarehouseIO.snapshotManifestNames(
+    val v2Snapshot = TableLog.renderSnapshot(
+      TableLog.snapshotManifestNames(
         new org.apache.hadoop.fs.Path(log, "v00001.list")) :+
-        WarehouseIO.writeManifest(log, Seq("cat=a/concurrent.parquet")))
+        TableLog.writeManifestLines(log, Seq("cat=a/concurrent.parquet")))
     assert(WarehouseIO.writeStringIfAbsent(v2, v2Snapshot))
     assert(!WarehouseIO.writeStringIfAbsent(v2, "overwrite-attempt"),
       "exclusive create must refuse an existing version file")
@@ -113,7 +113,7 @@ class AppendCommitSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(s"$wh/ac_t5/cat=b/mine.parquet"), "")
     val v = sink.commitAppendedFiles(Seq("cat=b/mine.parquet"))
     assert(v == 3)
-    val m3 = WarehouseIO.readSnapshotFiles(log,
+    val m3 = TableLog.readSnapshotFiles(log,
       new org.apache.hadoop.fs.Path(log, "v00003.list")).toSet
     assert(m3.contains("cat=a/concurrent.parquet"),
       "stale-base overwrite would have lost the concurrent commit")
@@ -131,11 +131,11 @@ class AppendCommitSpec extends AnyFunSuite {
     val onRead = intercept[IllegalArgumentException](
       sink.read(spark).count())
     assert(onRead.getMessage.contains("v00002.list") &&
-      onRead.getMessage.contains(WarehouseIO.SnapshotHeader), onRead.getMessage)
+      onRead.getMessage.contains(TableLog.SnapshotHeader), onRead.getMessage)
     val onAppend = intercept[IllegalArgumentException](
       sink.append(batch(3L)))
     assert(onAppend.getMessage.contains("v00002.list") &&
-      onAppend.getMessage.contains(WarehouseIO.SnapshotHeader),
+      onAppend.getMessage.contains(TableLog.SnapshotHeader),
       onAppend.getMessage)
     assert(sink.snapshotVersions() == Seq(1, 2),
       "a refused append claims no version")
@@ -243,7 +243,7 @@ class AppendCommitSpec extends AnyFunSuite {
       .filter(n => n.startsWith("m-") && n.endsWith(".mf")).sorted
 
   private def headManifestCount(name: String, v: Int): Int =
-    WarehouseIO.snapshotManifestNames(
+    TableLog.snapshotManifestNames(
       new HPath(logDir(name), f"v$v%05d.list")).size
 
   private def logBytes(name: String): Long =
@@ -335,7 +335,7 @@ class AppendCommitSpec extends AnyFunSuite {
     // no debris: every surviving m-*.mf is referenced by SOME snapshot
     // (the merge commit deletes its own superseded delta)
     val referenced = (1 to 7).flatMap(v =>
-      WarehouseIO.snapshotManifestNames(
+      TableLog.snapshotManifestNames(
         new HPath(logDir("ac_amc"), f"v$v%05d.list"))).toSet
     assert(manifestNamesIn("ac_amc").toSet == referenced,
       "unreferenced manifest debris after merge-on-commit")

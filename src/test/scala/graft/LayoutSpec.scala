@@ -464,7 +464,7 @@ class LayoutSpec extends AnyFunSuite {
     val logDir = new HPath(s"$root/_graft_log")
     def statsLines(): Int = WarehouseIO.childNames(logDir)
       .filter(n => n.startsWith("m-") && n.endsWith(".mf"))
-      .map(n => WarehouseIO.manifestLinesOf(logDir, n)
+      .map(n => TableLog.manifestLinesOf(logDir, n)
         .count(_.contains('\t'))).sum
     assert(statsLines() >= 1, "analyze folds stats INTO manifest entries")
     // upkeep is part of the commit: the append's own delta manifest
@@ -514,7 +514,7 @@ class LayoutSpec extends AnyFunSuite {
     val logDir = new HPath(s"${sink.config.tablePath}/_graft_log")
     val statLines = WarehouseIO.childNames(logDir)
       .filter(n => n.startsWith("m-") && n.endsWith(".mf"))
-      .flatMap(n => WarehouseIO.manifestLinesOf(logDir, n))
+      .flatMap(n => TableLog.manifestLinesOf(logDir, n))
       // entries carrying zone bounds (every entry also records per-file
       // facts, so a stats TAB alone no longer marks a zone entry)
       .filter(_.contains("\"z\":"))

@@ -142,7 +142,7 @@ class MaintenancePropertySpec extends AnyFunSuite {
       val onDisk = WarehouseIO.childNames(log)
         .filter(n => n.startsWith("m-") && n.endsWith(".mf")).toSet
       val referenced = sink.snapshotVersions().flatMap(v =>
-        WarehouseIO.snapshotManifestNames(
+        TableLog.snapshotManifestNames(
           new HPath(log, f"v$v%05d.list"))).toSet
       assert(onDisk == referenced,
         s"trial $trial: manifest debris ${onDisk -- referenced} / " +

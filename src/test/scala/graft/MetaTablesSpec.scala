@@ -78,16 +78,16 @@ class MetaTablesSpec extends AnyFunSuite {
     val logDir =
       new org.apache.hadoop.fs.Path(sink.config.tablePath, "_graft_log")
     val head = sink.snapshotVersions().last
-    val names = WarehouseIO.snapshotManifestNames(
+    val names = TableLog.snapshotManifestNames(
       new org.apache.hadoop.fs.Path(logDir, f"v$head%05d.list"))
-    val old = WarehouseIO.manifestLinesOf(logDir, names.head)
-    val stripped = old.map(WarehouseIO.manifestLinePath)
+    val old = TableLog.manifestLinesOf(logDir, names.head)
+    val stripped = old.map(TableLog.manifestLinePath)
     WarehouseIO.writeString(new org.apache.hadoop.fs.Path(logDir, names.head),
-      (s"${stripped.head}\t{\"n\":${WarehouseIO.entryFacts(old.head).get.rows}}"
+      (s"${stripped.head}\t{\"n\":${TableLog.entryFacts(old.head).get.rows}}"
         +: stripped.tail).mkString("\n"))
-    val lines = names.flatMap(WarehouseIO.manifestLinesOf(logDir, _))
-    assert(lines.exists(WarehouseIO.entryFacts(_).isEmpty) &&
-      lines.exists(WarehouseIO.entryFacts(_).isDefined),
+    val lines = names.flatMap(TableLog.manifestLinesOf(logDir, _))
+    assert(lines.exists(TableLog.entryFacts(_).isEmpty) &&
+      lines.exists(TableLog.entryFacts(_).isDefined),
       s"the head must mix entries with and without facts: $lines")
     val served = sink.metaFiles(spark)
       .select($"file_path", $"record_count").as[(String, Long)]
@@ -167,19 +167,19 @@ class MetaTablesSpec extends AnyFunSuite {
     sink.deleteWhere("cat = 'c'")                    // MoR delete commit
     sink.compact(spark)                              // rewrite: fresh v1
     sink.append(Seq((7L, "d", 70.0)).toDF("id", "cat", "v"))
-    val before = WarehouseIO.manifestContentReads.get()
+    val before = TableLog.manifestContentReads.get()
     val rows = sink.metaSnapshots(spark)
       .orderBy($"version")
       .select($"version", $"n_files", $"n_added_files", $"n_removed_files")
       .as[(Long, Long, Long, Long)].collect().toSeq
-    assert(WarehouseIO.manifestContentReads.get() == before,
+    assert(TableLog.manifestContentReads.get() == before,
       "metaSnapshots must not read any manifest's file list on the " +
         "driver — per-version added/removed is a distributed job")
     // counts still exact: cross-check against the driver-side resolver
     val logDir =
       new org.apache.hadoop.fs.Path(sink.config.tablePath, "_graft_log")
     val expect = sink.snapshotVersions().map(v =>
-      WarehouseIO.readSnapshotFiles(logDir,
+      TableLog.readSnapshotFiles(logDir,
         new org.apache.hadoop.fs.Path(logDir, f"v$v%05d.list"))
         .length.toLong)
     assert(rows.map(_._2) == expect,
@@ -207,9 +207,9 @@ class MetaTablesSpec extends AnyFunSuite {
       .toDF("id", "cat", "v"))
     val logDir =
       new org.apache.hadoop.fs.Path(orc.config.tablePath, "_graft_log")
-    val lines = WarehouseIO.readSnapshotLines(logDir,
+    val lines = TableLog.readSnapshotLines(logDir,
       new org.apache.hadoop.fs.Path(logDir, "v00001.list"))
-    assert(lines.nonEmpty && lines.forall(WarehouseIO.entryFacts(_).isDefined),
+    assert(lines.nonEmpty && lines.forall(TableLog.entryFacts(_).isDefined),
       s"every entry records its facts: $lines")
     val parts = orc.metaPartitions(spark)
       .select($"partition", $"record_count").as[(String, Long)].collect().toMap

@@ -73,7 +73,7 @@ class ReadPlanningSpec extends AnyFunSuite {
   }
 
   private def headFiles(sink: TableSink): Seq[String] =
-    WarehouseIO.readSnapshotFiles(logDir(sink), new org.apache.hadoop.fs
+    TableLog.readSnapshotFiles(logDir(sink), new org.apache.hadoop.fs
       .Path(logDir(sink), f"v${sink.snapshotVersions().last}%05d.list"))
       .map(rel => s"${sink.config.tablePath}/$rel")
 

@@ -163,8 +163,8 @@ class VersionedStreamSpec extends AnyFunSuite {
       "replay of a space-bearing stream id must still dedup")
     assert(sink.read(spark).count() == 1)
     // the escaped id round-trips byte-identical through the snapshot file
-    assert(WarehouseIO.decodeTxnId(WarehouseIO.encodeTxnId(sid)) == sid)
+    assert(TableLog.decodeTxnId(TableLog.encodeTxnId(sid)) == sid)
     val weird = "a %20b\nc\r d%"
-    assert(WarehouseIO.decodeTxnId(WarehouseIO.encodeTxnId(weird)) == weird)
+    assert(TableLog.decodeTxnId(TableLog.encodeTxnId(weird)) == weird)
   }
 }
