@@ -229,9 +229,7 @@ case class GraftUpdateCommand(
       .equalsIgnoreCase("mor")
     if (morMode) {
       val sink = new TableSink(cfg)
-      val servable = cfg.versioned && cfg.fileFormat == "parquet" &&
-        sink.snapshotVersions().nonEmpty && sink.branches().isEmpty
-      if (servable) {
+      if (sink.morServable(needsHead = true)) {
         def bareMor(e: Expression): String = e.transform {
           case a: org.apache.spark.sql.catalyst.expressions
               .AttributeReference => GraftDml.QuotedSqlAttr(a)
@@ -291,7 +289,7 @@ case class GraftUpdateCommand(
         case None => Bridge.column(attr).as(attr.name)
       }
     }
-    new TableSink(cfg).replaceAllRows(spark, df.select(finalCols: _*),
+    new TableSink(cfg).replaceAllRows(df.select(finalCols: _*),
       Some(totalRows), "UPDATE")
     Seq.empty
   }
@@ -495,13 +493,13 @@ case class GraftMergeCommand(
       val touchedVals = full.filter(col(firedFlag))
         .select(pCols.map(col): _*).distinct()
       val finalRows = full.filter(col(keepFlag)).drop(keepFlag, firedFlag)
-      new TableSink(cfg).replacePartitionsScoped(spark, finalRows,
-        touchedVals, "MERGE")
+      new TableSink(cfg).replacePartitionsScoped(finalRows, touchedVals,
+        "MERGE")
       return Seq.empty
     }
     val finalRows = j.select(finalCols :+ guardedKeep.as(tid): _*)
       .filter(col(tid)).drop(tid)
-    new TableSink(cfg).replaceAllRows(spark, finalRows, None, "MERGE")
+    new TableSink(cfg).replaceAllRows(finalRows, None, "MERGE")
     Seq.empty
   }
 
@@ -534,9 +532,7 @@ case class GraftMergeCommand(
     if (!spark.conf.get("spark.graft.sql.mergeMode", "cow")
         .equalsIgnoreCase("mor")) return None
     val sink = new TableSink(cfg)
-    if (!(cfg.versioned && cfg.fileFormat == "parquet" &&
-        sink.snapshotVersions().nonEmpty && sink.branches().isEmpty))
-      return None
+    if (!sink.morServable(needsHead = true)) return None
     // bookkeeping-name clash → the COW path (which refuses loudly)
     if (target.output.exists(a =>
         a.name.startsWith("__graft_merge_") || a.name == "__graft_file" ||

@@ -1262,10 +1262,8 @@ private[graft] final class GraftWritableTable(delegate: FileTable,
     val sink = new TableSink(insertCfg)
     val mor = spark.conf.get("spark.graft.sql.deleteMode", "cow")
       .equalsIgnoreCase("mor")
-    val morServable = mor && insertCfg.versioned &&
-      insertCfg.fileFormat == "parquet" &&
-      sink.snapshotVersions().nonEmpty && sink.branches().isEmpty
-    if (morServable) sink.deletePositions(spark, sql)
+    if (mor && sink.morServable(needsHead = true))
+      sink.deletePositions(spark, sql)
     else sink.delete(spark, org.apache.spark.sql.functions.expr(sql))
     ()
   }
@@ -1375,8 +1373,7 @@ private[graft] final class GraftWritableTable(delegate: FileTable,
                 // whole-table replace under the full guard battery:
                 // constraint gate, crash-safe swap, declaration sidecars
                 // carried, history expired (a rewrite invalidates it)
-                sink.replaceAllRows(data.sparkSession, data, None,
-                  "INSERT OVERWRITE")
+                sink.replaceAllRows(data, None, "INSERT OVERWRITE")
               else sink.append(data)
             }
           }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -186,6 +186,18 @@ object TableSink {
   private final case class LiveFile(uri: String, partition: String,
       facts: TableLog.FileFacts)
 
+  /** Partition tuples — values of a sink's partition columns, in order —
+    * with their schema, collected on the driver (one per partition). */
+  private final case class Partitions(tuples: Seq[Row], schema: StructType) {
+    def frame(spark: SparkSession): DataFrame =
+      spark.createDataFrame(tuples.asJava, schema)
+  }
+
+  private object Partitions {
+    /** No partition named: a rewrite replaces where its rows land. */
+    val none: Partitions = Partitions(Nil, new StructType())
+  }
+
   /** Default [[TableSink.removeOrphans]] grace window (24 h) — generous
     * versus the seconds-scale life of a staged write so a concurrent
     * committer's not-yet-claimed files are never swept (Iceberg's
@@ -194,6 +206,7 @@ object TableSink {
 }
 
 final class TableSink(val config: SinkConfig) {
+  import TableSink.Partitions
 
   /** Derived partition columns per the spec (K7 `_partition_records`). */
   def derivedColumns(df: DataFrame): Seq[(String, Column)] =
@@ -318,20 +331,6 @@ final class TableSink(val config: SinkConfig) {
     writeAndCommit(withDerived(Ops.ensureMessage(df)))
   }
 
-  /** Append commit protocol — O(added files), WAP-safe. A versioned append
-    * must NOT snapshot (or even LIST) the whole live directory: a
-    * directory walk per commit is O(total files) driver work — quadratic
-    * over table lifetime, the kind of metadata cost that kills a
-    * 100 TB table with millions of files — and unpublished branch appends
-    * share the directory, so a whole-directory snapshot would also
-    * publish staged, unaudited rows. Instead the write is STAGED
-    * ([[stagedWrite]]): the commit already knows exactly which files it
-    * produced and records `head manifest + exactly those`, touching no
-    * other file metadata. The one remaining walk on this path is the
-    * FIRST commit over pre-existing unversioned data (bootstrapping the
-    * manifest), paid once per table. Files referenced by no manifest
-    * (staged branch files, crash orphans) stay out of main's history —
-    * the same isolation Iceberg's manifest-list commit gives. */
   /** Persist the write-relevant config as a `_graft_config` sidecar so a
     * DIFFERENT writer reaching the same table — the SQL catalog's INSERT
     * path builds its own [[TableSink]] — applies the same
@@ -359,6 +358,20 @@ final class TableSink(val config: SinkConfig) {
       lines.mkString("\n"))
   }
 
+  /** Append commit protocol — O(added files), WAP-safe. A versioned append
+    * must NOT snapshot (or even LIST) the whole live directory: a
+    * directory walk per commit is O(total files) driver work — quadratic
+    * over table lifetime, the kind of metadata cost that kills a
+    * 100 TB table with millions of files — and unpublished branch appends
+    * share the directory, so a whole-directory snapshot would also
+    * publish staged, unaudited rows. Instead the write is STAGED
+    * ([[stagedWrite]]): the commit already knows exactly which files it
+    * produced and records `head manifest + exactly those`, touching no
+    * other file metadata. The one remaining walk on this path is the
+    * FIRST commit over pre-existing unversioned data (bootstrapping the
+    * manifest), paid once per table. Files referenced by no manifest
+    * (staged branch files, crash orphans) stay out of main's history —
+    * the same isolation Iceberg's manifest-list commit gives. */
   private def writeAndCommit(prepared: DataFrame): Unit = {
     if (!config.versioned) {
       // no staging area to validate after the fact — check BEFORE the
@@ -835,17 +848,21 @@ final class TableSink(val config: SinkConfig) {
     * aggregate pass over `df` counting violations per constraint; any
     * violation refuses the write with the per-constraint counts. NULL
     * proves nothing → violation (SQL CHECK semantics). */
-  private def requireConstraints(df: DataFrame, what: String): Unit = {
-    if (config.checkConstraints.isEmpty) return
-    // count(when(...)) — never NULL, so an EMPTY batch (zero rows) passes
-    // as the no-op it is instead of NPE-ing on a null sum
-    val counts = df.select(config.checkConstraints.zipWithIndex.map {
-      case (c, i) =>
-        count(when(!coalesce(expr(c), lit(false)), lit(1))).as(s"c$i")
-    }: _*).head()
-    val violated = config.checkConstraints.zipWithIndex
-      .map { case (c, i) => c -> counts.getLong(i) }
-      .filter(_._2 > 0)
+  private def requireConstraints(df: DataFrame, what: String): Unit =
+    if (config.checkConstraints.nonEmpty)
+      refuseViolations(df.select(violationCounts: _*).head().toSeq, what)
+
+  /** Per constraint, the count of rows violating it, named `c<i>`.
+    * count(when(...)) is never NULL, so an EMPTY batch (zero rows) passes
+    * as the no-op it is instead of NPE-ing on a null sum. */
+  private def violationCounts: Seq[Column] =
+    config.checkConstraints.zipWithIndex.map { case (c, i) =>
+      count(when(!coalesce(expr(c), lit(false)), lit(1))).as(s"c$i")
+    }
+
+  private def refuseViolations(counts: Seq[Any], what: String): Unit = {
+    val violated = config.checkConstraints.zip(counts)
+      .collect { case (c, n: Long) if n > 0 => c -> n }
     require(violated.isEmpty,
       s"$what refused: CHECK constraint violations — " +
         violated.map { case (c, n) => s"'$c' ($n rows)" }.mkString("; "))
@@ -1168,7 +1185,7 @@ final class TableSink(val config: SinkConfig) {
     * would be absorbed into the rewritten table and the swap destroys the
     * branch manifests. Refuse instead of silently publishing unaudited
     * data — publish or drop branches first (the documented WAP contract). */
-  private def requireNoBranches(op: String, log: TableLog = openLog()): Unit = {
+  private def requireNoBranches(op: String, log: TableLog): Unit = {
     // branchesOrPending: a branch mid-creation (base written, v1 not
     // yet) already pins a base version and must block rewrites too
     val live = log.branchesOrPending
@@ -1220,11 +1237,11 @@ final class TableSink(val config: SinkConfig) {
     * Branches expire too (their manifests reference the replaced files),
     * the same contract as Iceberg snapshot expiry after rewrite-files
     * maintenance — publish audit branches before running rewriting ops. */
-  private def expireSnapshots(): Unit = {
+  private def expireSnapshots(): Unit = if (config.versioned) {
     if (WarehouseIO.isDir(logPath)) WarehouseIO.delete(logPath, recursive = true)
     // the whole live directory becomes v1: safe only because every
     // rewriting op refuses live branches (their staged files share it)
-    if (config.versioned) writeFirstSnapshot(dataFilesRel())
+    writeFirstSnapshot(dataFilesRel())
   }
 
   /** Iceberg `expire_snapshots` (retain-last) analogue: drop every
@@ -1594,16 +1611,6 @@ final class TableSink(val config: SinkConfig) {
     if (!config.versioned) df
     else { val log = openLog(); log.head.fold(df)(applyDeletes(log, df, _)) }
 
-  /** True when a partition-scoped rewrite (dynamic overwrite + history
-    * expiry) would be wrong, so [[upsert]], [[delete]] and the overwrite
-    * paths force the full rewrite-swap instead: on a shallow clone it
-    * would materialize only the touched partitions (the re-snapshot drops
-    * the rest), and under unmaterialized merge-on-read sidecars at the
-    * HEAD it would resurrect deleted rows in untouched partitions. */
-  private def scopedRewriteUnsafe(log: TableLog = openLog()): Boolean =
-    log.isClone ||
-      config.versioned && log.head.exists(log.pendingVersions(_).nonEmpty)
-
   private def applyDeletes(log: TableLog, df: DataFrame, version: Int,
       keepPosCols: Boolean = false): DataFrame = {
     val versions = log.versions.filter(_ <= version)
@@ -1785,6 +1792,17 @@ final class TableSink(val config: SinkConfig) {
       s"$op while a branch is live would make the audit surface " +
         s"disagree with main; publish or drop first: ${live.mkString(", ")}")
   }
+
+  /** True when a merge-on-read op can serve this table, from ONE view of
+    * its log: versioned, parquet (position lists need the reader's
+    * `_metadata.row_index`), no live branch, and — when the op `needsHead`
+    * — a committed snapshot. The copy-on-write twins serve the rest. */
+  private[graft] def morServable(needsHead: Boolean,
+      log: => TableLog = openLog()): Boolean =
+    config.versioned && config.fileFormat == "parquet" && {
+      val l = log
+      l.branches.isEmpty && (!needsHead || l.head.nonEmpty)
+    }
 
   /** Position lists need the parquet reader's `_metadata.row_index`. */
   private def requireRowIndex(op: String): Unit =
@@ -2253,8 +2271,9 @@ final class TableSink(val config: SinkConfig) {
     * ([[readChangelogAllUpTo]] — an expiry-orphaned oldest delete
     * commit folds in as its post-state inserts, so a consumer still
     * reconstructs the table); offsets pin (generation, version) exactly
-    * like the snapshot stream. Versioned tables only. */
-  /** Streaming CDC source. `startingVersion` (the Delta source option,
+    * like the snapshot stream. Versioned tables only.
+    *
+    * `startingVersion` (the Delta source option,
     * INCLUSIVE like Delta's) bounds the FIRST batch: `Some("N")` emits
     * the changes starting from commit N — [N, head] — and
     * `Some("latest")` only commits after stream start; by default
@@ -2521,9 +2540,8 @@ final class TableSink(val config: SinkConfig) {
       // touched partition per apply, and the replica keeps history
       // (time travel across applies) instead of expiring it. Same
       // keyed idempotence, so the at-least-once replay contract holds.
-      val morApply = dest.config.versioned &&
-        dest.config.fileFormat == "parquet" && destLog.branches.isEmpty
-      if (!morApply) dest.upsert(ins, keyCols)
+      if (!dest.morServable(needsHead = false, destLog))
+        dest.upsert(ins, keyCols)
       else if (every && n("niNull") == 0L)
         dest.upsertMor(ins, keyCols, provenBounds = Some(bounded.map(c =>
           (c, facts(s"min_$c"), facts(s"max_$c")))))
@@ -3119,30 +3137,6 @@ final class TableSink(val config: SinkConfig) {
     ()
   }
 
-  /** Upsert (merge-by-key): rows whose `keyCols` match an incoming row are
-    * replaced; all other rows are kept; incoming rows append. The copy-on-
-    * write merge Iceberg-class tables provide and an append-only connector
-    * cannot. `incoming` must carry at most one row per key (dedup upstream;
-    * [[startStreamUpsert]] does).
-    *
-    * Scale shape: only AFFECTED partitions are rewritten — both the
-    * partitions the incoming rows land in AND the partitions currently
-    * holding a matching key (a key may move partitions; missing the old
-    * home would leave a stale duplicate). Both sets are bounded
-    * partition-value frames, broadcast into semi-joins; survivors
-    * anti-join the incoming keys and the union lands via DYNAMIC partition
-    * overwrite, which replaces exactly the partitions present in the
-    * written frame. Unaffected partitions' files are never rewritten.
-    *
-    * When a key migration empties an affected partition entirely — which
-    * dynamic overwrite cannot express — or the table is unpartitioned,
-    * the merge falls back to a full crash-safe rewrite-and-swap
-    * ([[delete]]'s protocol).
-    *
-    * The survivors are localCheckpoint-materialized before the dynamic
-    * overwrite: Spark refuses to overwrite a path that is still being
-    * lazily read.
-    */
   /** Zero-copy shallow clone (Delta `SHALLOW CLONE` / Iceberg snapshot-ref
     * semantics): the clone is a NEW versioned table whose v1 manifest
     * references the source head's data files by ABSOLUTE path — an
@@ -3289,66 +3283,50 @@ final class TableSink(val config: SinkConfig) {
         "NULL keys upstream")
   }
 
+  /** Upsert (merge-by-key): rows whose `keyCols` match an incoming row are
+    * replaced; all other rows are kept; incoming rows append. The copy-on-
+    * write merge Iceberg-class tables provide and an append-only connector
+    * cannot. `incoming` must carry at most one row per key (dedup upstream;
+    * [[startStreamUpsert]] does).
+    *
+    * Scale shape: only AFFECTED partitions are rewritten — both the
+    * partitions the incoming rows land in AND the partitions currently
+    * holding a matching key (a key may move partitions; missing the old
+    * home would leave a stale duplicate). Their survivors anti-join the
+    * incoming keys and, with the incoming rows, replace exactly those
+    * partitions through [[copyOnWrite]]; unaffected partitions' files are
+    * never rewritten. A key migration that empties an affected partition,
+    * an unpartitioned table, a clone or pending merge-on-read sidecars
+    * take the full rewrite-and-swap instead ([[copyOnWrite]]'s rule).
+    */
   def upsert(df: DataFrame, keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
-    requireNoStreamingLog()
-    requireNoBranches("upsert")
-    requireKeyedBatch(df, keyCols, "upsert")
-    recoverSwap()
-    val spark = df.sparkSession
-    if (!WarehouseIO.exists(new org.apache.hadoop.fs.Path(config.tablePath))) {
-      append(df); return
+    copyOnWrite("upsert") { log =>
+      requireKeyedBatch(df, keyCols, "upsert")
+      if (!WarehouseIO.exists(new org.apache.hadoop.fs.Path(config.tablePath))) {
+        append(df); ((), None)
+      } else {
+        val incoming = withDerived(Ops.ensureMessage(df))
+        val current = readLive(log, df.sparkSession, mergeSchema = false)
+        requireAlignedBatch(incoming.columns.toSeq, current.columns.toSeq,
+          "upsert")
+        val incomingKeys = incoming.select(keyCols.map(col): _*).distinct()
+        val parts = partitionColNames.map(col)
+        // the partitions the batch lands in and the old homes of its keys
+        val affected = partitionsHolding(incoming.select(parts: _*)
+          .unionByName(current.join(incomingKeys, keyCols, "left_semi")
+            .select(parts: _*)))
+        val survivors = inPartitions(current, affected)
+          .join(incomingKeys, keyCols, "left_anti")
+        // existing rows passed at their own append; only the incoming
+        // batch needs the gate (one bounded pass over the batch). An
+        // empty batch touches no partition and commits nothing.
+        ((), if (affected.tuples.isEmpty) None
+          else Some(new Rewrite(survivors.unionByName(
+              incoming.select(survivors.columns.map(col): _*)),
+            Some(affected), fresh = Some(incoming))))
+      }
     }
-    val incoming = withDerived(Ops.ensureMessage(df))
-    // existing rows passed at their own append; only the incoming batch
-    // needs the gate (one bounded pass over the batch, not the table)
-    requireConstraints(incoming, "upsert")
-    val parts = partitionColNames
-    val log = openLog()
-    val current = readLive(log, spark, mergeSchema = false)
-    requireAlignedBatch(incoming.columns.toSeq, current.columns.toSeq,
-      "upsert")
-    val incomingKeys = incoming.select(keyCols.map(col): _*).distinct()
-    def merged(base: DataFrame): DataFrame = {
-      val survivors = base.join(incomingKeys, keyCols, "left_anti")
-      survivors.unionByName(incoming.select(survivors.columns.map(col): _*))
-    }
-    if (parts.isEmpty || scopedRewriteUnsafe(log)) {
-      // unpartitioned: a merge is a full rewrite either way — swap protocol.
-      // A shallow clone ALSO forces the full rewrite (its documented
-      // materialization contract): dynamic overwrite would write only the
-      // touched partitions into the clone's own directory, and the
-      // post-rewrite re-snapshot (local listing) would silently drop every
-      // untouched partition still referenced via the source's absolute
-      // manifest entries.
-      // Pending merge-on-read sidecars force it too: the partition-scoped
-      // path leaves untouched partitions' files physically intact while
-      // expireSnapshots drops the sidecars that still subtracted their
-      // deleted rows — resurrecting them at the head. The full rewrite
-      // materializes survivors (read() applies the sidecars) first.
-      rewriteSwap(spark, merged(current), expectRows = None)
-    } else {
-      val affected = incoming.select(parts.map(col): _*)
-        .unionByName(current.join(incomingKeys, keyCols, "left_semi")
-          .select(parts.map(col): _*))
-        .distinct() // bounded: partition values of the incoming batch + old key homes
-      val touched = current.join(broadcast(affected), parts, "left_semi")
-      // OPTIMIZATION r15 (guide §5 / §2.4): materialize the survivors
-      // FIRST — the emptied-partition probe then reads this checkpoint
-      // instead of re-scanning every touched partition a second time
-      // (merged(touched) ≡ survivors ∪ incoming by definition, so the
-      // probed partition set is identical).
-      val survivors = touched.join(incomingKeys, keyCols, "left_anti")
-        .localCheckpoint() // cut lineage off the files about to be replaced
-      val finalRows =
-        survivors.unionByName(incoming.select(survivors.columns.map(col): _*))
-      val emptied = affected.join(
-        finalRows.select(parts.map(col): _*).distinct(), parts, "left_anti")
-        .limit(1).count() > 0
-      if (emptied) rewriteSwap(spark, merged(current), expectRows = None)
-      else dynamicOverwrite(spark, clusterForWrite(finalRows))
-    }
-    if (config.versioned) expireSnapshots() // rewrites invalidate history
   }
 
   /** MERGE-ON-READ keyed upsert — the non-rewriting twin of [[upsert]]
@@ -3419,10 +3397,8 @@ final class TableSink(val config: SinkConfig) {
       if (lo == null) None // empty batch: no envelope
       else Some(col(c) >= lit(lo) && col(c) <= lit(hi))
     }.reduceOption(_ && _)
-    var attempt = 0
-    while (attempt < 5) {
-      attempt += 1
-      val head = readHeadWithPos(spark, if (attempt == 1) log0 else openLog())
+    retryLostRace(log0) { log =>
+      val head = readHeadWithPos(spark, log)
       val base = keyEnvelope.fold(head)(head.filter(_))
       requireAlignedBatch(incoming.columns.toSeq,
         base.columns.toSeq.filterNot(c =>
@@ -3433,24 +3409,30 @@ final class TableSink(val config: SinkConfig) {
       val matched = base.join(incomingKeys, keyCols, "left_semi")
         .select(col("__graft_file").as("file_path"),
           col("__graft_pos").as("row_pos"))
-      try {
-        // select resolves case-insensitively (a batch may legally carry
-        // case-different names — round-14); toDF pins the TABLE's
-        // canonical names on the written files either way
-        val tableCols = base.columns.filterNot(c =>
-          c == "__graft_file" || c == "__graft_pos")
-        commitMorMutation(spark, matched,
-          incoming.select(tableCols.map(col): _*).toDF(tableCols: _*))
-        return
-      } catch {
-        case e: Throwable =>
-          val lostRace = e.isInstanceOf[IllegalArgumentException] &&
-            Option(e.getMessage).exists(_.contains("lost the version race"))
-          if (!lostRace || attempt >= 5) throw e
-        // else loop: re-resolve positions against the new head
-      }
+      // select resolves case-insensitively (a batch may legally carry
+      // case-different names — round-14); toDF pins the TABLE's
+      // canonical names on the written files either way
+      val tableCols = base.columns.filterNot(c =>
+        c == "__graft_file" || c == "__graft_pos")
+      commitMorMutation(spark, matched,
+        incoming.select(tableCols.map(col): _*).toDF(tableCols: _*))
+      ()
     }
   }
+
+  /** Run a merge-on-read `mutation` that resolves its positions against
+    * the given log view and commits with ONE claim
+    * ([[commitMorMutation]]); a lost version race re-runs it against a
+    * fresh view, at most 5 attempts in all — first-committer-wins, never
+    * a position list resolved against one head landing on another. */
+  private def retryLostRace[T](log: TableLog, attempt: Int = 1)(
+      mutation: TableLog => T): T =
+    try mutation(log)
+    catch {
+      case e: IllegalArgumentException if attempt < 5 &&
+          Option(e.getMessage).exists(_.contains("lost the version race")) =>
+        retryLostRace(openLog(), attempt + 1)(mutation)
+    }
 
   /** The key columns of `schema` whose min/max can bound a parquet scan
     * (row-group stats): numeric, string, timestamp and date keys. */
@@ -3471,8 +3453,9 @@ final class TableSink(val config: SinkConfig) {
     * present in `df` are replaced, every other partition is untouched.
     * `df`'s lineage must not read the table's own files (checkpoint first).
     */
-  private def dynamicOverwrite(spark: SparkSession, df: DataFrame): Unit = {
+  private def dynamicOverwrite(df: DataFrame): Unit = {
     val parts = partitionColNames
+    val spark = df.sparkSession
     val key = "spark.sql.sources.partitionOverwriteMode"
     val prevMode = spark.conf.getOption(key)
     spark.conf.set(key, "dynamic")
@@ -3488,9 +3471,8 @@ final class TableSink(val config: SinkConfig) {
   }
 
   // ------------------------------------------- crash-safe rewrite & swap
-  // Shared by delete and upsert's fallback path. compact keeps its own
-  // interleaved copy (its swap is entangled with file-sizing); the
-  // _pre_* recovery contract is identical.
+  // Every copy-on-write op commits through [[copyOnWrite]], which picks a
+  // partition-scoped dynamic overwrite or this full swap.
 
   /** A swap scratch directory NEXT TO the table root (it cannot live
     * inside — the swap renames the whole root), DOT-PREFIXED so neither
@@ -3676,6 +3658,8 @@ final class TableSink(val config: SinkConfig) {
       } finally releaseSwapLock(token)
       return
     }
+    // `_pre_compact`: the trash name compaction swapped through before it
+    // shared rewriteSwap — a crash of that version can still leave one
     Seq("_pre_rewrite", "_pre_compact").foreach { sfx =>
       val trash = scratchSibling(sfx)
       if (WarehouseIO.exists(trash)) {
@@ -3710,28 +3694,24 @@ final class TableSink(val config: SinkConfig) {
     }
   }
 
-  /** Rewrite the whole table as `finalRows` via temp-dir + double rename.
-    * When `expectRows` is set the rewrite aborts (table untouched) on a
-    * row-count mismatch; None skips the check (callers whose expected
-    * count is not independently known). */
-  private def rewriteSwap(spark: SparkSession, finalRows: DataFrame,
-      expectRows: Option[Long], preserveLayout: Boolean = false): Unit = {
+  /** Rewrite the whole table as `finalRows`, written as arranged, via
+    * temp-dir + double rename. When `expectRows` is set the rewrite aborts
+    * (table untouched) on a row-count mismatch; None skips the check
+    * (callers whose expected count is not independently known). */
+  private def rewriteSwap(finalRows: DataFrame,
+      expectRows: Option[Long]): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
     val root = new HPath(config.tablePath)
     val trash = scratchSibling("_pre_rewrite")
     val tmp = scratchSibling("_rewriting")
     WarehouseIO.delete(tmp, recursive = true) // stale leftover, crashed run
     val parts = partitionColNames
-    // preserveLayout: the caller already arranged the physical clustering
-    // (a z-order rewrite) — the sink's own repartition would destroy it
-    val arranged =
-      if (preserveLayout) finalRows else clusterForWrite(finalRows)
-    val writer = arranged.write.mode("overwrite")
+    val writer = finalRows.write.mode("overwrite")
       .format(config.fileFormat).options(config.extraOptions)
     (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
       .save(tmp.toString)
     expectRows.foreach { expect =>
-      val rewritten = spark.read.format(config.fileFormat)
+      val rewritten = finalRows.sparkSession.read.format(config.fileFormat)
         .load(tmp.toString).count()
       if (rewritten != expect) {
         WarehouseIO.delete(tmp, recursive = true)
@@ -3743,6 +3723,177 @@ final class TableSink(val config: SinkConfig) {
     carryDeclarationSidecars(root, tmp)
     executeSwap(tmp, trash)
   }
+
+  /** A copy-on-write rewrite as an op computes it. `rows` become the
+    * contents of the partitions it replaces: the whole table when
+    * `partitions` is None; exactly those `rows` land in when it is
+    * [[Partitions.none]]; otherwise the partitions named there (at least
+    * one; one may end up empty) and those `rows` land in. `fresh` holds
+    * the rows the op adds or changes, which pass the CHECK-constraint
+    * gate — rows the table already holds passed it at their own write. A full rewrite
+    * verifies the row count `expect` before its swap (evaluated only
+    * there; None skips the check). `preserveLayout`: `rows` carry the
+    * op's own physical clustering, which the sink's write repartition
+    * would destroy. */
+  private final class Rewrite(val rows: DataFrame,
+      val partitions: Option[Partitions] = None,
+      val fresh: Option[DataFrame] = None,
+      expect: => Option[Long] = None,
+      val preserveLayout: Boolean = false) {
+    lazy val expectRows: Option[Long] = expect
+  }
+
+  /** The partitions holding `df`'s rows and their total row count, from
+    * ONE aggregate (bounded: one row per partition). An unpartitioned
+    * table is one partition, the empty tuple. */
+  private def partitionsOf(df: DataFrame): (Partitions, Long) = {
+    val parts = df.select(partitionColNames.map(col): _*)
+    val counted = parts.groupBy(parts.columns.map(col).toSeq: _*).count()
+      .collect().toSeq.filter(r => r.getLong(r.length - 1) > 0L)
+    (Partitions(counted.map(r => Row.fromSeq(r.toSeq.init)), parts.schema),
+      counted.map(r => r.getLong(r.length - 1)).sum)
+  }
+
+  /** [[partitionsOf]] without the count, so an unpartitioned table
+    * launches no job. */
+  private def partitionsHolding(df: DataFrame): Partitions =
+    if (partitionColNames.isEmpty) Partitions(Seq(Row.empty), new StructType())
+    else partitionsOf(df)._1
+
+  /** `df` joined (`how`: `left_semi` or `left_anti`) to the partition
+    * tuples in `tuples`, NULL-safely: a NULL partition value is a
+    * partition like any other. */
+  private def byPartition(df: DataFrame, tuples: DataFrame,
+      how: String): DataFrame = {
+    val parts = partitionColNames
+    val tv = parts.map(_ + "__graft_tv")
+    val clash = tv.filter(df.columns.contains)
+    require(clash.isEmpty,
+      s"partition bookkeeping columns collide with ${clash.mkString(", ")}" +
+        " — rename those columns first")
+    df.join(broadcast(tuples.toDF(tv: _*)),
+      parts.zip(tv).map { case (p, t) => col(p) <=> col(t) }.reduce(_ && _),
+      how)
+  }
+
+  /** `df`'s rows in the partitions `p` names; all of them on an
+    * unpartitioned table, which is one partition. */
+  private def inPartitions(df: DataFrame, p: Partitions): DataFrame =
+    if (partitionColNames.isEmpty) df
+    else if (p.tuples.isEmpty)
+      df.sparkSession.createDataFrame(java.util.List.of[Row](), df.schema)
+    else byPartition(df, p.frame(df.sparkSession), "left_semi")
+
+  /** The whole table's final rows for a partition-scoped [[Rewrite]]:
+    * every row of the partitions it leaves alone, then `rows`. */
+  private def withUntouched(log: TableLog, rows: DataFrame,
+      named: Partitions): DataFrame = {
+    val spark = rows.sparkSession
+    val landed = rows.select(partitionColNames.map(col): _*)
+    val replaced =
+      if (named.tuples.isEmpty) landed
+      else landed.unionByName(named.frame(spark))
+    byPartition(readLive(log, spark, mergeSchema = false), replaced,
+      "left_anti").unionByName(rows)
+  }
+
+  /** The commit of every copy-on-write op. Runs the guards once — no
+    * streaming-sink log, an interrupted swap healed, no live branch or tag
+    * — and hands `plan` the log view they read; `plan` returns the op's
+    * result and its [[Rewrite]], None when nothing changes (an op that
+    * touches no partition returns None too). The fresh rows pass the
+    * constraint gate, then ONE rule picks the write:
+    *  - a partition-scoped DYNAMIC OVERWRITE of exactly the replaced
+    *    partitions, O(touched) rather than O(table), on a partitioned
+    *    table — unless it is a shallow clone (the re-snapshot would drop
+    *    the partitions it still references in its source), pending
+    *    merge-on-read sidecars sit at the head (expiry would drop them
+    *    while untouched partitions still hold the rows they subtract),
+    *    its head holds files of an earlier partition spec (their rows
+    *    read with NULL new-spec partition values, which no dynamic
+    *    overwrite of the new spine replaces), or a named partition ends
+    *    up empty, which a dynamic overwrite cannot express;
+    *  - otherwise the row-count-verified full [[rewriteSwap]].
+    * Before any write but the scoped one of an op that names
+    * [[Partitions.none]] (its rows replace exactly where they land),
+    * `rows` are pinned — the overwrite must not read the files it
+    * replaces — and the pin's own pass observes where they land, plus the
+    * constraint counts when every row is fresh. A NULL partition value is
+    * a partition like any other. History expires once, after either
+    * write. */
+  private def copyOnWrite[T](op: String)(
+      plan: TableLog => (T, Option[Rewrite])): T = {
+    requireNoStreamingLog()
+    recoverSwap()
+    val log = openLog()
+    requireNoBranches(op, log)
+    val (result, rewrite) = plan(log)
+    rewrite.foreach { rw =>
+      val rows = withDerived(rw.rows)
+      def arranged(df: DataFrame) =
+        if (rw.preserveLayout) df else clusterForWrite(df)
+      // a mixed-spine head reads an earlier spec's rows with NULL derived
+      // partition values (readLive); the full rewrite derives them from
+      // their source columns, so they land, and prune, where they belong
+      def swap(df: DataFrame): Unit = rewriteSwap(arranged(
+        if (!mixedSpine(log)) df
+        else derivedColumns(df).foldLeft(df) { case (d, (n, c)) =>
+          d.withColumn(n, coalesce(col(n), c)) }), rw.expectRows)
+      val named = rw.partitions.filter(_ => partitionColNames.nonEmpty)
+      lazy val scoped = !(log.isClone || mixedSpine(log) ||
+        log.head.exists(log.pendingVersions(_).nonEmpty))
+      val pins = named.exists(p => !(scoped && (p eq Partitions.none)))
+      // every row fresh and about to be pinned: the pin's pass gates them
+      val gateInPin = pins && rw.fresh.exists(_ eq rw.rows) &&
+        config.checkConstraints.nonEmpty
+      if (!gateInPin) rw.fresh.foreach(requireConstraints(_, op))
+      named match {
+        case None => swap(rows)
+        case Some(_) if !pins => dynamicOverwrite(arranged(rows))
+        case Some(p) =>
+          val (pinned, seen) = pinObserved(rows, collect_set(
+            struct(partitionColNames.map(col): _*)).as("landed") +:
+            (if (gateInPin) violationCounts else Nil))
+          if (gateInPin)
+            refuseViolations(config.checkConstraints.indices.map(i =>
+              seen(s"c$i")), op)
+          val landed = seen("landed").asInstanceOf[Seq[Row]]
+            .map(_.toSeq).toSet
+          if (scoped && p.tuples.forall(t => landed(t.toSeq)))
+            dynamicOverwrite(arranged(pinned))
+          else swap(withUntouched(log, pinned, p))
+      }
+      expireSnapshots() // a rewrite invalidates history
+    }
+    result
+  }
+
+  /** Shared protocol of both clustered rewrites ([[clusterBy]],
+    * [[clusterByHilbert]]): [[copyOnWrite]]'s guards plus the clone
+    * manifest and TEMP-COLUMN CLASHES (a destructive rewrite silently
+    * replacing-then-dropping a real column of a temp name would lose its
+    * data with history expired), then its row-count-verified full
+    * rewrite with the sink's own repartition suppressed. One body so a
+    * guard added for one curve cannot drift away from the other. */
+  private def clusteredRewrite(spark: SparkSession, op: String,
+      tempCols: Seq[String])(cluster: DataFrame => (DataFrame, Long)): Unit =
+    copyOnWrite(op) { log =>
+      require(!log.isClone || log.head.nonEmpty,
+        s"$op on a clone needs a committed manifest")
+      val cur = readLive(log, spark, mergeSchema = false)
+      val clash = tempCols.filter(cur.columns.contains)
+      require(clash.isEmpty,
+        s"$op's temp layout columns collide with table columns " +
+          s"${clash.mkString(", ")} — rename them first")
+      // OPTIMIZATION r15 (guide §2.4 one pass, not two): the callback's
+      // bounds aggregate already scans the table once, so it reports the
+      // row count from the SAME pass — the former separate cur.count()
+      // was a second full scan just to seed the swap verification.
+      val (clustered, totalRows) = cluster(cur)
+      ((), if (totalRows == 0) None
+        else Some(new Rewrite(clustered, expect = Some(totalRows),
+          preserveLayout = true)))
+    }
 
   /** Z-ORDER clustered rewrite — Delta `OPTIMIZE ZORDER BY` / Iceberg
     * `rewrite_data_files(sort_order => zorder(...))` analogue: the whole
@@ -3758,36 +3909,6 @@ final class TableSink(val config: SinkConfig) {
     * same contract as [[compact]]. Stale zone-map/Bloom stats become
     * conservative, not wrong; re-run analyze for the tight zones.
     * Row-count-verified before the destructive step. */
-  /** Shared protocol of both clustered rewrites ([[clusterBy]],
-    * [[clusterByHilbert]]): guards (streaming log, branches/tags, clone
-    * manifest, TEMP-COLUMN CLASHES — a destructive rewrite silently
-    * replacing-then-dropping a real column of a temp name would lose its
-    * data with history expired), swap recovery, row-count-verified
-    * rewrite-swap with the sink's own repartition suppressed, and
-    * history expiry. One body so a guard added for one curve cannot
-    * drift away from the other. */
-  private def clusteredRewrite(spark: SparkSession, op: String,
-      tempCols: Seq[String])(cluster: DataFrame => (DataFrame, Long)): Unit = {
-    requireNoStreamingLog()
-    requireNoBranches(op)
-    require({ val log = openLog(); !log.isClone || log.head.nonEmpty },
-      s"$op on a clone needs a committed manifest")
-    recoverSwap()
-    val cur = read(spark)
-    val clash = tempCols.filter(cur.columns.contains)
-    require(clash.isEmpty,
-      s"$op's temp layout columns collide with table columns " +
-        s"${clash.mkString(", ")} — rename them first")
-    // OPTIMIZATION r15 (guide §2.4 one pass, not two): the callback's
-    // bounds aggregate already scans the table once, so it reports the
-    // row count from the SAME pass — the former separate cur.count()
-    // was a second full scan just to seed the swap verification.
-    val (clustered, totalRows) = cluster(cur)
-    if (totalRows == 0) return
-    rewriteSwap(spark, clustered, Some(totalRows), preserveLayout = true)
-    if (config.versioned) expireSnapshots() // rewrites invalidate history
-  }
-
   def clusterBy(spark: SparkSession, dimExprs: Seq[String],
       nRanges: Int = 48, bits: Int = 16): Unit = {
     require(dimExprs.nonEmpty, "clusterBy needs at least one dimension")
@@ -3835,63 +3956,27 @@ final class TableSink(val config: SinkConfig) {
     * the predicate is coalesced to false, never silently dropping
     * NULL-predicate rows).
     *
-    * Two commit paths, chosen by what the predicate sweeps:
-    *  - normal case — every touched partition keeps at least one row:
-    *    rewrite ONLY the touched partitions via dynamic overwrite (same
-    *    shape as [[upsert]]);
-    *  - a partition is emptied entirely (or the table is unpartitioned):
-    *    dynamic overwrite CANNOT express an emptied partition (it only
-    *    replaces partitions present in the written frame — the stale
-    *    directory would silently survive), so the whole surviving table
-    *    rewrites and swaps via [[rewriteSwap]], row-count-verified before
-    *    the destructive step.
+    * One aggregate finds the partitions holding matched rows and the
+    * count; their survivors replace exactly those partitions through
+    * [[copyOnWrite]]. A partition the predicate sweeps entirely (dynamic
+    * overwrite CANNOT express an emptied partition — the stale directory
+    * would silently survive) and an unpartitioned table take the whole
+    * surviving table's rewrite and swap instead, row-count-verified
+    * before the destructive step.
     */
-  def delete(spark: SparkSession, condition: Column): Long = {
-    requireNoStreamingLog()
-    requireNoBranches("delete")
-    recoverSwap()
-    if (!WarehouseIO.exists(new org.apache.hadoop.fs.Path(config.tablePath)))
-      return 0L
-    val current = read(spark)
-    val cond = coalesce(condition, lit(false)) // NULL predicate keeps the row
-    val parts = partitionColNames
-    if (parts.isEmpty) {
-      val totalRows = current.count()
-      val nDeleted = current.filter(cond).count()
-      if (nDeleted == 0L) return 0L
-      rewriteSwap(spark, current.filter(!cond), Some(totalRows - nDeleted))
-      if (config.versioned) expireSnapshots()
-      return nDeleted
-    }
-    // matched partition values: a bounded, column-pruned projection —
-    // cached so the count, the distinct set, and the sweep check share one
-    // scan instead of re-reading the table per question
-    val matchedParts = current.filter(cond).select(parts.map(col): _*).cache()
-    try {
-      val nDeleted = matchedParts.count()
-      if (nDeleted == 0L) return 0L
-      val touchedVals = matchedParts.distinct()
-      val touched = current.join(broadcast(touchedVals), parts, "left_semi")
-      val survivors = touched.filter(!cond)
-      val emptied = touchedVals.join(
-        survivors.select(parts.map(col): _*).distinct(), parts, "left_anti")
-        .limit(1).count() > 0
-      if (emptied || scopedRewriteUnsafe()) {
-        // emptied partition: dynamic overwrite cannot express it; shallow
-        // clone: dynamic overwrite would materialize only the touched
-        // partitions and the re-snapshot would drop the rest (see upsert);
-        // pending merge-on-read sidecars: expireSnapshots would drop them
-        // while untouched partitions' files still hold the subtracted
-        // rows, resurrecting them (see upsert) — materialize fully
-        val totalRows = current.count()
-        rewriteSwap(spark, current.filter(!cond), Some(totalRows - nDeleted))
-      } else {
-        dynamicOverwrite(spark, clusterForWrite(survivors.localCheckpoint()))
+  def delete(spark: SparkSession, condition: Column): Long =
+    copyOnWrite("delete") { log =>
+      if (!WarehouseIO.exists(new org.apache.hadoop.fs.Path(config.tablePath)))
+        (0L, None)
+      else {
+        val current = readLive(log, spark, mergeSchema = false)
+        val cond = coalesce(condition, lit(false)) // NULL predicate keeps the row
+        val (touched, nDeleted) = partitionsOf(current.filter(cond))
+        (nDeleted, if (nDeleted == 0L) None
+          else Some(new Rewrite(inPartitions(current, touched).filter(!cond),
+            Some(touched), expect = Some(current.count() - nDeleted))))
       }
-      if (config.versioned) expireSnapshots() // rewrites invalidate history
-      nDeleted
-    } finally matchedParts.unpersist()
-  }
+    }
 
   /** SQL-standard UPDATE — rows matching `condition` take the `set`
     * values (cast to their column's type, ANSI store-assignment), every
@@ -3912,8 +3997,8 @@ final class TableSink(val config: SinkConfig) {
     * via dynamic overwrite ([[delete]]'s shape — at 100 TB an update
     * touching one partition rewrites one partition, not the table);
     * unpartitioned tables, shallow clones, and tables with pending
-    * merge-on-read sidecars take the full row-count-verified
-    * [[rewriteSwap]] for exactly [[upsert]]'s documented reasons.
+    * merge-on-read sidecars take [[copyOnWrite]]'s full
+    * row-count-verified rewrite.
     * Changed rows re-pass the CHECK-constraint gate (one bounded pass
     * over the matched rows, not the table). Returns the updated-row
     * count.
@@ -3924,67 +4009,41 @@ final class TableSink(val config: SinkConfig) {
     require(set.map(_._1).distinct.size == set.size,
       "update assigns a column more than once: " +
         set.map(_._1).diff(set.map(_._1).distinct).distinct.mkString(", "))
-    requireNoStreamingLog()
-    requireNoBranches("update")
-    recoverSwap()
-    if (!WarehouseIO.exists(new org.apache.hadoop.fs.Path(config.tablePath)))
-      return 0L
-    val current = read(spark)
-    val missing = set.map(_._1).filterNot(current.columns.contains)
-    require(missing.isEmpty,
-      s"update SET references unknown columns: ${missing.mkString(", ")}")
-    val partitionAffecting =
-      (partitionColNames ++ config.partitionSpec.map(_.source)).toSet
-    val partHit = set.map(_._1).filter(partitionAffecting)
-    require(partHit.isEmpty,
-      s"update SET touches partition-deriving columns ${partHit.mkString(", ")}" +
-        " — an updated row could move partitions; use delete + append or upsert")
-    val cond = coalesce(condition, lit(false)) // NULL predicate keeps the row
-    val setMap = set.toMap
-    val updatedCols = current.schema.fields.toIndexedSeq.map { f =>
-      setMap.get(f.name) match {
-        case Some(v) => when(cond, v.cast(f.dataType))
-          .otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
+    copyOnWrite("update") { log =>
+      if (!WarehouseIO.exists(new org.apache.hadoop.fs.Path(config.tablePath)))
+        (0L, None)
+      else {
+        val current = readLive(log, spark, mergeSchema = false)
+        val missing = set.map(_._1).filterNot(current.columns.contains)
+        require(missing.isEmpty,
+          s"update SET references unknown columns: ${missing.mkString(", ")}")
+        val partitionAffecting =
+          (partitionColNames ++ config.partitionSpec.map(_.source)).toSet
+        val partHit = set.map(_._1).filter(partitionAffecting)
+        require(partHit.isEmpty,
+          s"update SET touches partition-deriving columns ${partHit.mkString(", ")}" +
+            " — an updated row could move partitions; use delete + append or upsert")
+        val cond = coalesce(condition, lit(false)) // NULL predicate keeps the row
+        val setMap = set.toMap
+        val updatedCols = current.schema.fields.toIndexedSeq.map { f =>
+          setMap.get(f.name) match {
+            case Some(v) => when(cond, v.cast(f.dataType))
+              .otherwise(col(f.name)).as(f.name)
+            case None => col(f.name)
+          }
+        }
+        val (touched, nUpdated) = partitionsOf(current.filter(cond))
+        // partition columns are untouched by the SET (guarded above), so
+        // every row stays home: only the touched partitions rewrite, and
+        // only the changed rows re-pass the constraint gate
+        (nUpdated, if (nUpdated == 0L) None
+          else Some(new Rewrite(
+            inPartitions(current, touched).select(updatedCols: _*),
+            Some(touched),
+            fresh = Some(current.filter(cond).select(updatedCols: _*)),
+            expect = Some(current.count()))))
       }
     }
-    requireConstraints(current.filter(cond).select(updatedCols: _*), "update")
-    val parts = partitionColNames
-    if (parts.isEmpty || scopedRewriteUnsafe()) {
-      val totalRows = current.count()
-      val nUpdated = current.filter(cond).count()
-      if (nUpdated == 0L) return 0L
-      rewriteSwap(spark, current.select(updatedCols: _*), Some(totalRows))
-      if (config.versioned) expireSnapshots() // rewrites invalidate history
-      return nUpdated
-    }
-    val matchedParts = current.filter(cond).select(parts.map(col): _*).cache()
-    try {
-      val nUpdated = matchedParts.count()
-      if (nUpdated == 0L) return 0L
-      // NULL-SAFE semi join: a matched row living in the NULL partition
-      // (cat=__HIVE_DEFAULT_PARTITION__) must still select its partition
-      // for rewrite — the usingColumns join's null-unsafe equality would
-      // silently drop it while nUpdated still reported it. (delete/upsert
-      // don't need this: their `emptied` anti-join is null-unsafe the
-      // conservative way — a NULL partition value routes them to the full
-      // rewrite.) Renamed columns keep the self-join lineage unambiguous.
-      val tvCols = parts.map(_ + "__graft_tv")
-      val tvClash = tvCols.filter(current.columns.contains)
-      require(tvClash.isEmpty,
-        s"update bookkeeping columns collide with ${tvClash.mkString(", ")}" +
-          " — rename those columns first")
-      val touchedVals = broadcast(matchedParts.distinct().toDF(tvCols: _*))
-      val semiCond = parts.zip(tvCols)
-        .map { case (p, tv) => col(p) <=> col(tv) }.reduce(_ && _)
-      val touched = current.join(touchedVals, semiCond, "left_semi")
-      // partition columns are untouched by the SET (guarded above), so
-      // every row stays home — rewrite exactly the touched partitions
-      val rewritten = touched.select(updatedCols: _*).localCheckpoint()
-      dynamicOverwrite(spark, clusterForWrite(rewritten))
-      if (config.versioned) expireSnapshots() // rewrites invalidate history
-      nUpdated
-    } finally matchedParts.unpersist()
   }
 
   /** MERGE-ON-READ update — the non-rewriting twin of [[update]] and the
@@ -4044,38 +4103,28 @@ final class TableSink(val config: SinkConfig) {
     val missing = set.map(_._1).filterNot(colsKnown.contains)
     require(missing.isEmpty,
       s"updateMor SET references unknown columns: ${missing.mkString(", ")}")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val base = readHeadWithPos(spark, if (attempt == 1) log0 else openLog())
+    retryLostRace(log0) { log =>
+      val base = readHeadWithPos(spark, log)
       // pin matched rows ONCE: the position list and the replacement
       // rows must describe the same physical rows
       val matched = base.where(cond).localCheckpoint()
       val n = matched.count()
-      if (n == 0L) return 0L
-      val dataCols = base.schema.fields.toIndexedSeq
-        .filterNot(f => f.name == "__graft_file" || f.name == "__graft_pos")
-        .map { f =>
-          setMap.get(f.name) match {
-            case Some(v) => v.cast(f.dataType).as(f.name)
-            case None => col(f.name)
+      if (n > 0L) {
+        val dataCols = base.schema.fields.toIndexedSeq
+          .filterNot(f => f.name == "__graft_file" || f.name == "__graft_pos")
+          .map { f =>
+            setMap.get(f.name) match {
+              case Some(v) => v.cast(f.dataType).as(f.name)
+              case None => col(f.name)
+            }
           }
-        }
-      try {
         commitMorMutation(spark,
           matched.select(col("__graft_file").as("file_path"),
             col("__graft_pos").as("row_pos")),
           matched.select(dataCols: _*))
-        return n
-      } catch {
-        case e: Throwable =>
-          val lostRace = e.isInstanceOf[IllegalArgumentException] &&
-            Option(e.getMessage).exists(_.contains("lost the version race"))
-          if (!lostRace || attempt >= 5) throw e
-        // else loop: re-resolve positions against the new head
       }
+      n
     }
-    -1L // unreachable
   }
 
   /** Rename entries whose OLD physical name is still a field of
@@ -4264,25 +4313,21 @@ final class TableSink(val config: SinkConfig) {
     * columns re-derive for any fresh rows, and the write is [[rewriteSwap]]'s
     * crash-safe swap (which also honors the shallow-clone materialization
     * contract — a full rewrite IS the materialization). */
-  private[graft] def replaceAllRows(spark: SparkSession, finalRows: DataFrame,
-      expectRows: Option[Long], op: String): Unit = {
-    requireNoStreamingLog()
-    requireNoBranches(op)
-    recoverSwap()
-    requireConstraints(finalRows, op)
-    rewriteSwap(spark, withDerived(finalRows), expectRows)
-    if (config.versioned) expireSnapshots() // rewrites invalidate history
-  }
+  private[graft] def replaceAllRows(finalRows: DataFrame,
+      expectRows: Option[Long], op: String): Unit =
+    copyOnWrite(op) { _ =>
+      ((), Some(new Rewrite(finalRows, fresh = Some(finalRows),
+        expect = expectRows)))
+    }
 
   /** SQL `INSERT OVERWRITE … PARTITION(...)` / `INSERT INTO … REPLACE
     * WHERE` semantics (the DSv2 SupportsOverwrite contract: delete the
     * rows matching `conditionSql`, insert `newRows` — one atomic
-    * commit): the final row set is survivors ∪ new rows, and on an
-    * identity-partitioned table the write rewrites ONLY the partitions
-    * that lost rows plus the partitions receiving new rows
-    * ([[replacePartitionsScoped]] — Delta's dynamic replaceWhere
-    * shape); otherwise the guarded full rewrite. A NULL condition
-    * deletes nothing (SQL three-valued logic). */
+    * commit): the final row set is survivors ∪ new rows, and the write
+    * replaces ONLY the partitions that lose rows plus the partitions
+    * receiving new rows (Delta's dynamic replaceWhere shape) through
+    * [[copyOnWrite]]. A NULL condition deletes nothing (SQL three-valued
+    * logic). */
   private[graft] def replaceWhere(spark: SparkSession, newRows: DataFrame,
       conditionSql: String): Unit = {
     val cond = coalesce(expr(conditionSql), lit(false))
@@ -4300,118 +4345,59 @@ final class TableSink(val config: SinkConfig) {
       // empty/new table: the overwrite is just the insert
       append(newRows); return
     }
-    val current = read(spark)
-    val finalRows = current.filter(!cond)
-      .unionByName(newRows.select(current.columns.map(col): _*))
-    val parts = partitionColNames
-    val allIdentity = config.partitionSpec.nonEmpty &&
-      config.partitionSpec.forall(p =>
-        p.transform == Transform.Identity && p.explicitName.isEmpty)
-    if (!allIdentity) {
-      replaceAllRows(spark, finalRows, None, "INSERT OVERWRITE (filtered)")
-      return
+    copyOnWrite("INSERT OVERWRITE (filtered)") { log =>
+      val current = readLive(log, spark, mergeSchema = false)
+      val inserted = withDerived(newRows).select(current.columns.map(col): _*)
+      val parts = partitionColNames.map(col)
+      val touched = partitionsHolding(current.filter(cond).select(parts: _*)
+        .unionByName(inserted.select(parts: _*)))
+      // nothing matched and nothing inserted: a no-op commits nothing
+      ((), if (touched.tuples.isEmpty) None
+        else Some(new Rewrite(
+          inPartitions(current, touched).filter(!cond).unionByName(inserted),
+          Some(touched), fresh = Some(inserted))))
     }
-    val touched = current.filter(cond).select(parts.map(col): _*).distinct()
-      .unionByName(newRows.select(parts.map(col): _*).distinct())
-      .distinct()
-    replacePartitionsScoped(spark, finalRows, touched,
-      "INSERT OVERWRITE (filtered)")
   }
 
   /** DYNAMIC partition overwrite (Spark's
     * `partitionOverwriteMode=dynamic` semantics as a LIBRARY API):
     * exactly the partitions the incoming rows land in are replaced,
-    * every other partition is untouched. On a plain
-    * identity-partitioned table this is ONE dynamic-overwrite write
-    * (O(incoming)); an unpartitioned table replaces everything (the
-    * mode's own semantics); hidden transforms, explicit partition
-    * names, clones, and pending merge-on-read sidecars take the
-    * guarded full-rewrite equivalent (survivors outside the touched
-    * partitions ∪ incoming — same result, the documented conservative
-    * cost). The pure-SQL `INSERT OVERWRITE` dynamic form reaches this
-    * through [[graft.GraftDynamicOverwriteCommand]] (round-12): Spark's
-    * dynamic-overwrite plan has no V1 write fallback, so the session
-    * extension rule resolves it into this op before the capability
-    * check — alongside the `PARTITION(...)` / `REPLACE WHERE` routes. */
-  def overwriteDynamic(spark: SparkSession,
-      data: DataFrame): Unit = {
-    requireNoStreamingLog()
-    requireNoBranches("INSERT OVERWRITE (dynamic)")
-    recoverSwap()
-    val parts = partitionColNames
-    if (parts.isEmpty) {
-      replaceAllRows(spark, data, None, "INSERT OVERWRITE (dynamic)")
-      return
+    * every other partition is untouched — ONE dynamic-overwrite write,
+    * O(incoming); an unpartitioned table replaces everything (the mode's
+    * own semantics); clones and pending merge-on-read sidecars take
+    * [[copyOnWrite]]'s full-rewrite equivalent (survivors outside the
+    * touched partitions ∪ incoming — same result, the documented
+    * conservative cost). The pure-SQL `INSERT OVERWRITE` dynamic form
+    * reaches this through [[graft.GraftDynamicOverwriteCommand]]
+    * (round-12): Spark's dynamic-overwrite plan has no V1 write fallback,
+    * so the session extension rule resolves it into this op before the
+    * capability check — alongside the `PARTITION(...)` / `REPLACE WHERE`
+    * routes. */
+  def overwriteDynamic(@scala.annotation.unused spark: SparkSession,
+      data: DataFrame): Unit =
+    copyOnWrite("INSERT OVERWRITE (dynamic)") { _ =>
+      ((), Some(new Rewrite(data,
+        Some(Partitions.none), fresh = Some(data))))
     }
-    val allIdentity = config.partitionSpec.forall(p =>
-      p.transform == Transform.Identity && p.explicitName.isEmpty)
-    if (allIdentity && !scopedRewriteUnsafe()) {
-      requireConstraints(data, "INSERT OVERWRITE (dynamic)")
-      dynamicOverwrite(spark, clusterForWrite(data))
-      if (config.versioned) expireSnapshots() // rewrites invalidate history
-      return
-    }
-    // conservative equivalent: survivors outside the incoming rows'
-    // partitions ∪ incoming, committed as the guarded full rewrite
-    // (null-SAFE partition equality — rows landing in the NULL
-    // partition replace it like any other)
-    val current = read(spark)
-    val dataD = withDerived(data)
-    val tv = parts.map(_ + "__graft_dyn")
-    val touched = broadcast(
-      dataD.select(parts.map(col): _*).distinct().toDF(tv: _*))
-    val cond = parts.zip(tv).map { case (p, t) => col(p) <=> col(t) }
-      .reduce(_ && _)
-    val survivors = current.join(touched, cond, "left_anti")
-    val finalRows = survivors.select(current.columns.map(col).toIndexedSeq: _*)
-      .unionByName(dataD.select(current.columns.map(col).toIndexedSeq: _*))
-    replaceAllRows(spark, finalRows, None, "INSERT OVERWRITE (dynamic)")
-  }
 
-  /** PARTITION-SCOPED commit primitive for the SQL MERGE front door:
-    * `finalRows` is the statement's COMPLETE final row set (computed
-    * against the analyzer's own resolved plans — it cannot be re-derived
-    * from [[read]] here) and `touchedVals` the distinct partition-column
+  /** PARTITION-SCOPED commit for the SQL MERGE front door: `finalRows`
+    * is the statement's COMPLETE final row set (computed against the
+    * analyzer's own resolved plans — it cannot be re-derived from
+    * [[read]] here) and `touchedVals` the distinct partition-column
     * tuples in which ANY merge action fired (update, delete, or insert).
-    * Only those partitions rewrite (dynamic overwrite over `finalRows`
-    * restricted to them) — O(touched), not O(table), the same commit
-    * shape [[update]]'s scoped path uses. Falls back to the guarded full
-    * rewrite exactly where [[delete]] does: a touched partition left
-    * EMPTY (dynamic overwrite cannot express an emptied partition), a
-    * NULL partition value among the touched tuples (conservative), a
-    * shallow clone, or pending merge-on-read sidecars. */
-  private[graft] def replacePartitionsScoped(spark: SparkSession,
-      finalRows: DataFrame, touchedVals: DataFrame, op: String): Unit = {
-    requireNoStreamingLog()
-    requireNoBranches(op)
-    recoverSwap()
-    val parts = partitionColNames
-    val touched = touchedVals.localCheckpoint() // bounded: distinct tuples
-    def fullFallback(): Unit = {
-      requireConstraints(finalRows, op)
-      rewriteSwap(spark, withDerived(finalRows), None)
-      if (config.versioned) expireSnapshots()
+    * Only those partitions rewrite, with `finalRows` restricted to them —
+    * O(touched), not O(table) — under [[copyOnWrite]]'s rule; a
+    * statement in which no action fired commits nothing. */
+  private[graft] def replacePartitionsScoped(finalRows: DataFrame,
+      touchedVals: DataFrame, op: String): Unit =
+    copyOnWrite(op) { _ =>
+      val touched = partitionsHolding(touchedVals)
+      if (touched.tuples.isEmpty) ((), None)
+      else {
+        val rows = inPartitions(finalRows, touched)
+        ((), Some(new Rewrite(rows, Some(touched), fresh = Some(rows))))
+      }
     }
-    if (parts.isEmpty || parts.exists(p => !touched.columns.contains(p)) ||
-        scopedRewriteUnsafe()) { fullFallback(); return }
-    if (touched.isEmpty) return // no action fired anywhere: a no-op
-    val hasNullPart = touched
-      .filter(parts.map(col(_).isNull).reduce(_ || _)).limit(1).count() > 0
-    if (hasNullPart) { fullFallback(); return }
-    val restricted = finalRows
-      .join(broadcast(touched.select(parts.map(col): _*)), parts, "left_semi")
-      .localCheckpoint()
-    // a fully-emptied touched partition cannot be expressed by dynamic
-    // overwrite (no rows -> no directory rewritten -> stale files remain)
-    val emptied = touched.select(parts.map(col): _*)
-      .join(restricted.select(parts.map(col): _*).distinct(),
-        parts, "left_anti")
-      .limit(1).count() > 0
-    if (emptied) { fullFallback(); return }
-    requireConstraints(restricted, op)
-    dynamicOverwrite(spark, clusterForWrite(restricted))
-    if (config.versioned) expireSnapshots() // rewrites invalidate history
-  }
 
   /** Streaming path (§3.1): micro-batch append with checkpointed recovery.
     * The reference's size-OR-time buffer flush (connector.py:147-199) maps
@@ -4483,9 +4469,7 @@ final class TableSink(val config: SinkConfig) {
         // bounding the sidecar stack at any trigger rate.
         if (!batch.isEmpty) {
           val deduped = batch.dropDuplicates(keyCols)
-          val morApply = config.versioned &&
-            config.fileFormat == "parquet" && branches().isEmpty
-          if (morApply) {
+          if (morServable(needsHead = false)) {
             upsertMor(deduped, keyCols)
             maybeConsolidateDeletes(batch.sparkSession)
           } else upsert(deduped, keyCols)
@@ -4587,6 +4571,12 @@ final class TableSink(val config: SinkConfig) {
   def read(spark: SparkSession, mergeSchema: Boolean = false): DataFrame =
     readLive(openLog(), spark, mergeSchema)
 
+  /** True when the versioned head holds files written under another
+    * partition spec than the sink's (spec evolution, round-13). */
+  private def mixedSpine(log: TableLog): Boolean =
+    config.versioned && log.head.exists(h => log.files(h).exists(rel =>
+      !rel.startsWith("/") && TableSink.spineOf(rel) != partitionColNames))
+
   /** [[read]] through the caller's log view. */
   private def readLive(log: TableLog, spark: SparkSession,
       mergeSchema: Boolean): DataFrame = {
@@ -4599,11 +4589,9 @@ final class TableSink(val config: SinkConfig) {
     // unpartitioned file vanished beside identity dirs) — readFiles reads
     // each generation under its own layout. One manifest read to detect,
     // the same metadata class the sidecar fold below already pays.
-    def mixed(h: Int) = log.files(h).exists(rel =>
-      !rel.startsWith("/") && TableSink.spineOf(rel) != partitionColNames)
     log.head match {
       case Some(h) if log.isClone && log.files(h).nonEmpty ||
-          config.versioned && mixed(h) =>
+          mixedSpine(log) =>
         return readVersion(log, spark, h)
       case _ => ()
     }
@@ -4891,26 +4879,16 @@ final class TableSink(val config: SinkConfig) {
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Table maintenance: rewrite each partition's files into
-    * ~`targetFileBytes` outputs — the compaction dual of the reference's
-    * `batch_size` knob (small batches → small files; the reference has no
-    * maintenance story for them). Per-partition output counts are derived
-    * from on-disk bytes, so a hot partition compacts to many files while a
-    * cold one collapses to one; rows are salted into exactly that many
-    * writers. The rewrite lands in a temp dir and swaps in with directory
-    * renames (single-FS semantics; an object-store deployment swaps a
-    * metadata pointer instead — Iceberg's rewrite-files commit).
-    */
   /** INCREMENTAL compaction — the 100 TB maintenance shape. Full
     * [[compact]] rewrites every partition (it is also the merge-on-read
     * materializer); at scale a maintenance job compacts only what
     * fragmentation pays for. This selects partitions with more than
     * `maxFiles` files (or, when `minAvgFileBytes` > 0, a mean file size
     * under it), rewrites ONLY those via dynamic partition overwrite
-    * (salted to ~`targetFileBytes` outputs, sink sort order preserved),
-    * and leaves every other partition's files physically untouched — the
-    * rewrite cost is proportional to the FRAGMENTED bytes, not the
-    * table. Returns the rewritten partition directory spines.
+    * (sized like [[compact]], sink sort order preserved), and leaves
+    * every other partition's files physically untouched — the rewrite
+    * cost is proportional to the FRAGMENTED bytes, not the table. Returns
+    * the rewritten partition directory spines.
     *
     * Selection is driver-side file metadata (the same class the snapshot
     * log handles); the rewrite reads exactly the fragmented directories
@@ -4926,142 +4904,119 @@ final class TableSink(val config: SinkConfig) {
   def compactPartitions(spark: SparkSession,
       targetFileBytes: Long = 128L * 1024 * 1024,
       maxFiles: Int = 8,
-      minAvgFileBytes: Long = 0L): Seq[String] = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.hadoop.fs.{Path => HPath}
-    requireNoStreamingLog()
-    val log = openLog()
-    requireNoBranches("compactPartitions", log)
-    require(!log.isClone,
-      "compactPartitions on a shallow clone would materialize only some " +
-        "partitions; run compact() to materialize the clone first")
-    require(partitionColNames.nonEmpty,
-      "unpartitioned tables have no partition granularity; use compact()")
-    log.head.foreach(h => require(log.pendingVersions(h).isEmpty,
-      "compactPartitions with pending merge-on-read deletes would have to " +
-        "clear sidecars that still protect untouched partitions; " +
-        "materialize with compact() first"))
-    val root = new HPath(config.tablePath)
-    val bySpine = dataFilesRel()
-      .groupBy(f => f.split('/').dropRight(1).mkString("/"))
-      .filter(_._1.nonEmpty)
-    val fsys = WarehouseIO.fs(root)
-    // one listStatus per partition directory, memoized — NOT one
-    // getFileStatus RPC per file (and never twice per selected spine):
-    // on object-store warehouses per-file status calls would dominate
-    // the selection phase in exactly the many-small-files regime this
-    // op exists for
-    val bytesBySpine = scala.collection.mutable.HashMap.empty[String, Long]
-    def spineBytes(spine: String): Long =
-      bytesBySpine.getOrElseUpdate(spine,
-        fsys.listStatus(new HPath(root, spine)).iterator
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(_.getLen).sum)
-    val fragmented = bySpine.filter { case (spine, fl) =>
-      fl.size > maxFiles || (minAvgFileBytes > 0L && fl.size > 1 &&
-        spineBytes(spine) / fl.size < minAvgFileBytes)
+      minAvgFileBytes: Long = 0L): Seq[String] =
+    copyOnWrite("compactPartitions") { log =>
+      import org.apache.hadoop.fs.{Path => HPath}
+      require(!log.isClone,
+        "compactPartitions on a shallow clone would materialize only some " +
+          "partitions; run compact() to materialize the clone first")
+      require(partitionColNames.nonEmpty,
+        "unpartitioned tables have no partition granularity; use compact()")
+      log.head.foreach(h => require(log.pendingVersions(h).isEmpty,
+        "compactPartitions with pending merge-on-read deletes would have to " +
+          "clear sidecars that still protect untouched partitions; " +
+          "materialize with compact() first"))
+      val root = new HPath(config.tablePath)
+      val bySpine = dataFilesRel()
+        .groupBy(f => f.split('/').dropRight(1).mkString("/"))
+        .filter(_._1.nonEmpty)
+      val fsys = WarehouseIO.fs(root)
+      // one listStatus per partition directory, memoized — NOT one
+      // getFileStatus RPC per file (and never twice per selected spine):
+      // on object-store warehouses per-file status calls would dominate
+      // the selection phase in exactly the many-small-files regime this
+      // op exists for
+      val bytesBySpine = scala.collection.mutable.HashMap.empty[String, Long]
+      def spineBytes(spine: String): Long =
+        bytesBySpine.getOrElseUpdate(spine,
+          fsys.listStatus(new HPath(root, spine)).iterator
+            .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+              !st.getPath.getName.startsWith("."))
+            .map(_.getLen).sum)
+      val fragmented = bySpine.filter { case (spine, fl) =>
+        fl.size > maxFiles || (minAvgFileBytes > 0L && fl.size > 1 &&
+          spineBytes(spine) / fl.size < minAvgFileBytes)
+      }.keys.toSeq.sorted
+      // read exactly the fragmented directories; partition columns derive
+      // from the spine via basePath. The pin cuts lineage off the files
+      // the dynamic overwrite is about to replace.
+      lazy val cur = {
+        val r = spark.read.format(config.fileFormat)
+          .option("basePath", config.tablePath)
+        config.tableSchema.fold(r)(s => r.schema(s))
+          .load(fragmented.map(s => s"${config.tablePath}/$s"): _*)
+          .localCheckpoint()
+      }
+      val fragRows = if (fragmented.isEmpty) 0L else cur.count()
+      if (fragRows == 0L) (Nil, None)
+      else (fragmented, Some(new Rewrite(
+        sizedForFiles(cur, fragmented.map(spineBytes).sum.toDouble / fragRows,
+          targetFileBytes, fragRows),
+        Some(Partitions.none), preserveLayout = true)))
     }
-    if (fragmented.isEmpty) return Nil
-    val fragBytes = fragmented.keysIterator.map(spineBytes).sum
-    // read exactly the fragmented directories; partition columns derive
-    // from the spine via basePath. Checkpoint cuts lineage off the files
-    // the dynamic overwrite is about to replace.
-    val r = spark.read.format(config.fileFormat)
-      .option("basePath", config.tablePath)
-    val cur = config.tableSchema.fold(r)(s => r.schema(s))
-      .load(fragmented.keys.toSeq.sorted.map(s => s"${config.tablePath}/$s"): _*)
-      .localCheckpoint()
-    val fragRows = cur.count()
-    if (fragRows == 0) return Nil
-    val bytesPerRow = fragBytes.toDouble / fragRows
-    val parts = partitionColNames
-    val nf = greatest(lit(1L),
-      ceil(count(lit(1)).over(Window.partitionBy(parts.map(col): _*)) *
-        lit(bytesPerRow) / lit(targetFileBytes.toDouble)).cast("long"))
-    val withSalt = cur
-      .withColumn("__salt", pmod(hash(cur.columns.map(col).toSeq: _*), nf))
-    val clustered = withSalt
-      .repartition((parts.map(col) :+ col("__salt")): _*)
-      .drop("__salt")
-    val prepared =
-      if (config.sortOrder.nonEmpty)
-        clustered.sortWithinPartitions(config.sortOrder.map(col): _*)
-      else clustered
-    dynamicOverwrite(spark, prepared)
-    if (config.versioned) expireSnapshots() // rewrite invalidates history
-    fragmented.keys.toSeq.sorted
-  }
 
-  def compact(spark: SparkSession,
-      targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
+  /** `cur` salted into writers of about `targetFileBytes` per partition —
+    * its rows × `bytesPerRow` / target of them, at least one — clustered
+    * on the partition columns and sorted per the sink's order: the
+    * compaction dual of the reference's `batch_size` knob (small batches
+    * → small files; the reference has no maintenance story for them), so
+    * a hot partition compacts to many files and a cold one to one.
+    * `totalRows` (all of `cur`) sizes an unpartitioned table, whose one
+    * partition needs no window count. */
+  private def sizedForFiles(cur: DataFrame, bytesPerRow: Double,
+      targetFileBytes: Long, totalRows: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    requireNoStreamingLog()
-    requireNoBranches("compact")
-    val root = new HPath(config.tablePath)
-    val trash = scratchSibling("_pre_compact")
-    // crash recovery BEFORE the existence check: an interrupted swap is
-    // rolled forward (marker) or its stranded trash restored/dropped
-    recoverSwap()
-    if (!WarehouseIO.exists(root)) return
-    // Sizing is bytes-per-row × per-partition row count — deliberately NOT
-    // a join on file paths: input_file_name() is percent-encoded while the
-    // FS listing is raw (and Hive-style dirs escape specials themselves),
-    // and a silent key mismatch there would DROP the affected partition.
-    // A shallow clone's bytes live (partly or wholly) under the SOURCE
-    // root via absolute manifest entries — the local walk alone would see
-    // zero bytes on a fresh clone and early-return, breaking the
-    // documented "first rewriting op materializes" contract, and would
-    // under-size bytesPerRow for clones with local appends.
-    val log = openLog()
-    val cloneBytes =
-      if (!log.isClone) 0L
-      else log.head.map(log.files).getOrElse(Nil).filter(_.startsWith("/"))
-        .map(abs => WarehouseIO.sizeOf(new HPath(abs))).sum
-    val totalBytes = cloneBytes + WarehouseIO.totalDataBytes(root)
-    if (totalBytes == 0) return
-    val cur = readLive(log, spark, mergeSchema = false)
-    val totalRows = cur.count()
-    if (totalRows == 0) return
-    val bytesPerRow = totalBytes.toDouble / totalRows
-    val parts = partitionColNames
-    val nf =
-      if (parts.isEmpty) // unpartitioned: global count is already known
-        lit(math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes))
-      else greatest(lit(1L),
-        ceil(count(lit(1)).over(Window.partitionBy(parts.map(col): _*)) *
-          lit(bytesPerRow) / lit(targetFileBytes.toDouble)).cast("long"))
-    val tmp = scratchSibling("_compacting")
-    WarehouseIO.delete(tmp, recursive = true) // stale leftover, crashed run
+    val parts = partitionColNames.map(col)
+    val rows =
+      if (parts.isEmpty) lit(totalRows)
+      else count(lit(1)).over(Window.partitionBy(parts: _*))
+    val nf = greatest(lit(1L),
+      ceil(rows * lit(bytesPerRow) / lit(targetFileBytes.toDouble)).cast("long"))
     // window expressions cannot ride inside repartition: materialize the
     // salt as a column, cluster on it, then drop it before the write
-    val withSalt = cur
+    val clustered = cur
       .withColumn("__salt", pmod(hash(cur.columns.map(col).toSeq: _*), nf))
-    val clustered = withSalt
-      .repartition((parts.map(col) :+ col("__salt")): _*)
+      .repartition((parts :+ col("__salt")): _*)
       .drop("__salt")
-    val prepared = // preserve the sink's sorted-within-file invariant
-      if (config.sortOrder.nonEmpty)
-        clustered.sortWithinPartitions(config.sortOrder.map(col): _*)
-      else clustered
-    val writer = prepared.write.mode("overwrite")
-      .format(config.fileFormat).options(config.extraOptions)
-    (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
-      .save(tmp.toString)
-    // verify BEFORE the destructive swap: a rewrite that lost rows aborts
-    val rewrittenRows = spark.read.format(config.fileFormat)
-      .load(tmp.toString).count()
-    if (rewrittenRows != totalRows) {
-      WarehouseIO.delete(tmp, recursive = true)
-      throw new IllegalStateException(
-        s"compaction rewrite produced $rewrittenRows rows, expected " +
-          s"$totalRows — aborted, original table untouched")
-    }
-    // swap: old table -> trash, compacted -> table, drop trash (a crash
-    // mid-swap rolls FORWARD via the intent marker on the next call)
-    carryDeclarationSidecars(root, tmp)
-    executeSwap(tmp, trash)
-    if (config.versioned) expireSnapshots() // rewrite invalidates history
+    if (config.sortOrder.nonEmpty)
+      clustered.sortWithinPartitions(config.sortOrder.map(col): _*)
+    else clustered
   }
+
+  /** Table maintenance: rewrite each partition's files into
+    * ~`targetFileBytes` outputs ([[sizedForFiles]]), materializing every
+    * pending merge-on-read delete and a shallow clone on the way. The
+    * rewrite is [[rewriteSwap]]'s: it lands in a temp dir, is
+    * row-count-verified, and swaps in through the intent marker (an
+    * object-store deployment would swap a metadata pointer instead —
+    * Iceberg's rewrite-files commit); history expires.
+    */
+  def compact(spark: SparkSession,
+      targetFileBytes: Long = 128L * 1024 * 1024): Unit =
+    copyOnWrite("compact") { log =>
+      import org.apache.hadoop.fs.{Path => HPath}
+      val root = new HPath(config.tablePath)
+      // Sizing is bytes-per-row × per-partition row count — deliberately
+      // NOT a join on file paths: input_file_name() is percent-encoded
+      // while the FS listing is raw (and Hive-style dirs escape specials
+      // themselves), and a silent key mismatch there would DROP the
+      // affected partition. A shallow clone's bytes live (partly or
+      // wholly) under the SOURCE root via absolute manifest entries — the
+      // local walk alone would see zero bytes on a fresh clone and
+      // early-return, breaking the documented "first rewriting op
+      // materializes" contract, and would under-size bytesPerRow for
+      // clones with local appends.
+      val totalBytes =
+        if (!WarehouseIO.exists(root)) 0L
+        else WarehouseIO.totalDataBytes(root) + (if (!log.isClone) 0L
+          else log.head.map(log.files).getOrElse(Nil).filter(_.startsWith("/"))
+            .map(abs => WarehouseIO.sizeOf(new HPath(abs))).sum)
+      lazy val cur = readLive(log, spark, mergeSchema = false)
+      val totalRows = if (totalBytes == 0L) 0L else cur.count()
+      ((), if (totalRows == 0L) None
+        else Some(new Rewrite(
+          sizedForFiles(cur, totalBytes.toDouble / totalRows, targetFileBytes,
+            totalRows),
+          expect = Some(totalRows), preserveLayout = true)))
+    }
 }

@@ -70,8 +70,8 @@ private[graft] object WarehouseIO {
   def isDir(p: HPath): Boolean = status(p).exists(_.isDirectory)
 
   def readString(p: HPath): String = {
+    val in = fs(p).open(p) // a probe of an absent file throws uncounted
     metaReads.incrementAndGet()
-    val in = fs(p).open(p)
     try new String(in.readAllBytes(), UTF_8)
     finally in.close()
   }

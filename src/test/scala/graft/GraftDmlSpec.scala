@@ -165,6 +165,127 @@ class GraftDmlSpec extends AnyFunSuite {
       "the NULL-partition row must actually take the update")
   }
 
+  /** A table partitioned by `cat` with one row in `cat=a` and two in the
+    * NULL partition; `filesOf(part)` maps partition `part`'s data files to
+    * their mtimes. */
+  private def nullPartTable(name: String): (TableSink, String => Map[String, Long]) = {
+    val dir = TestSpark.tmpDir(name)
+    val sink = new TableSink(SinkConfig(tableName = "t", warehousePath = dir,
+      versioned = true,
+      partitionSpec = Seq(PartitionField("cat", Transform.Identity))))
+    sink.append(Seq((1L, Some("a"), 1.0), (2L, None, 2.0), (3L, None, 3.0))
+      .toDF("id", "cat", "v"))
+    def filesOf(part: String): Map[String, Long] = {
+      val d = java.nio.file.Paths.get(s"$dir/t/cat=$part")
+      if (!java.nio.file.Files.isDirectory(d)) return Map.empty
+      import scala.jdk.CollectionConverters._
+      val s = java.nio.file.Files.list(d)
+      try s.iterator().asScala
+        .filterNot(_.getFileName.toString.startsWith("_"))
+        .map(p => p.getFileName.toString ->
+          java.nio.file.Files.getLastModifiedTime(p).toMillis).toMap
+      finally s.close()
+    }
+    (sink, filesOf)
+  }
+
+  private def idToV(sink: TableSink): Map[Long, Double] =
+    sink.read(spark).select("id", "v").as[(Long, Double)].collect().toMap
+
+  test("library delete reaches rows in the NULL partition: a kept row " +
+    "rewrites only that partition, an emptied one is exact") {
+    val (sink, filesOf) = nullPartTable("del_nullpart")
+    val beforeA = filesOf("a")
+    assert(sink.delete(spark, expr("id = 2")) == 1L)
+    assert(idToV(sink) == Map(1L -> 1.0, 3L -> 3.0))
+    assert(filesOf("a") == beforeA,
+      "a delete in the NULL partition must not rewrite cat=a")
+    assert(sink.delete(spark, expr("cat IS NULL")) == 1L)
+    assert(idToV(sink) == Map(1L -> 1.0))
+  }
+
+  test("library upsert reaches rows in the NULL partition") {
+    val (sink, filesOf) = nullPartTable("ups_nullpart")
+    val beforeA = filesOf("a")
+    sink.upsert(Seq((3L, Option.empty[String], 30.0),
+      (4L, Option.empty[String], 4.0)).toDF("id", "cat", "v"), Seq("id"))
+    assert(idToV(sink) == Map(1L -> 1.0, 2L -> 2.0, 3L -> 30.0, 4L -> 4.0))
+    assert(filesOf("a") == beforeA,
+      "an upsert into the NULL partition must not rewrite cat=a")
+    // both NULL-partition keys move out: the emptied partition is exact
+    sink.upsert(Seq((2L, Some("b"), 20.0), (3L, Some("b"), 30.0),
+      (4L, Some("b"), 40.0)).toDF("id", "cat", "v"), Seq("id"))
+    assert(idToV(sink) == Map(1L -> 1.0, 2L -> 20.0, 3L -> 30.0, 4L -> 40.0))
+    assert(sink.read(spark).where("cat IS NULL").count() == 0L)
+  }
+
+  test("library overwriteDynamic replaces the NULL partition like any other") {
+    val (sink, filesOf) = nullPartTable("dyn_nullpart")
+    val beforeA = filesOf("a")
+    sink.overwriteDynamic(spark,
+      Seq((9L, Option.empty[String], 9.0)).toDF("id", "cat", "v"))
+    assert(idToV(sink) == Map(1L -> 1.0, 9L -> 9.0))
+    assert(filesOf("a") == beforeA,
+      "overwriting the NULL partition must not rewrite cat=a")
+  }
+
+  test("SQL MERGE reaches rows in the NULL partition") {
+    val t = fresh()
+    val sink = new TableSink(SinkConfig(tableName = t, warehousePath = wh,
+      versioned = true,
+      partitionSpec = Seq(PartitionField("cat", Transform.Identity))))
+    sink.append(Seq((1L, Some("a"), 1.0), (2L, None, 2.0), (3L, None, 3.0))
+      .toDF("id", "cat", "v"))
+    Seq((3L, Option.empty[String], 30.0), (5L, Option.empty[String], 5.0))
+      .toDF("id", "cat", "v").createOrReplaceTempView(s"src_$t")
+    spark.sql(s"""MERGE INTO gdml.$t t USING src_$t s ON t.id = s.id
+      WHEN MATCHED THEN UPDATE SET v = s.v
+      WHEN NOT MATCHED THEN INSERT (id, cat, v) VALUES (s.id, s.cat, s.v)""")
+    assert(idToV(sink) == Map(1L -> 1.0, 2L -> 2.0, 3L -> 30.0, 5L -> 5.0))
+    // a MERGE that deletes every NULL-partition row empties it exactly
+    spark.sql(s"""MERGE INTO gdml.$t t USING src_$t s ON t.cat IS NULL
+      AND t.id = s.id WHEN MATCHED THEN DELETE
+      WHEN NOT MATCHED BY SOURCE AND t.cat IS NULL THEN DELETE""")
+    assert(idToV(sink) == Map(1L -> 1.0))
+  }
+
+  test("a REPLACE WHERE or INSERT OVERWRITE PARTITION that changes nothing " +
+    "commits nothing and keeps the table's history") {
+    val t = fresh()
+    val sink = new TableSink(SinkConfig(tableName = t, warehousePath = wh,
+      versioned = true,
+      partitionSpec = Seq(PartitionField("cat", Transform.Identity))))
+    sink.append(Seq((1L, 1.0, "a")).toDF("id", "v", "cat"))
+    sink.append(Seq((2L, 2.0, "b")).toDF("id", "v", "cat"))
+    val versions = sink.snapshotVersions()
+    assert(versions.size == 2)
+    Seq.empty[(Long, Double, String)].toDF("id", "v", "cat")
+      .createOrReplaceTempView(s"empty_$t")
+    spark.sql(s"INSERT INTO gdml.$t REPLACE WHERE cat = 'z' " +
+      s"SELECT id, v, cat FROM empty_$t")
+    spark.sql(s"INSERT OVERWRITE gdml.$t PARTITION (cat = 'z') " +
+      s"SELECT id, v FROM empty_$t")
+    assert(sink.snapshotVersions() == versions)
+    assert(idToV(sink) == Map(1L -> 1.0, 2L -> 2.0))
+  }
+
+  test("SQL MERGE's partition-scoped route is gated by CHECK constraints") {
+    val t = fresh()
+    val sink = new TableSink(SinkConfig(tableName = t, warehousePath = wh,
+      versioned = true, checkConstraints = Seq("v >= 0"),
+      partitionSpec = Seq(PartitionField("cat", Transform.Identity))))
+    sink.append(Seq((1L, 1.0, "a"), (2L, 2.0, "b")).toDF("id", "v", "cat"))
+    Seq((2L, -2.0)).toDF("id", "v").createOrReplaceTempView(s"neg_$t")
+    val e = intercept[Exception](spark.sql(s"MERGE INTO gdml.$t t " +
+      s"USING neg_$t s ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v"))
+    assert(e.getMessage.contains("CHECK constraint"), e.getMessage)
+    assert(idToV(sink) == Map(1L -> 1.0, 2L -> 2.0))
+    Seq((2L, 20.0)).toDF("id", "v").createOrReplaceTempView(s"pos_$t")
+    spark.sql(s"MERGE INTO gdml.$t t USING pos_$t s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v")
+    assert(idToV(sink) == Map(1L -> 1.0, 2L -> 20.0))
+  }
+
   test("SQL UPDATE works on hidden-transform tables; legacy spec-less " +
     "partitioned tables refuse as read-only") {
     // hidden-transform partitioning is now writable through the catalog

@@ -113,4 +113,55 @@ class PartitionEvolutionSpec extends AnyFunSuite {
     assert(rows(s2.readEvolved(spark)) == live, "post-compact readEvolved")
     assert(rows(s2.read(spark)) == live, "post-compact read")
   }
+
+  /** A VERSIONED table whose ids 1-3 were written under identity(cat) and
+    * ids 4-5 under Day(ts): its head mixes two partition spines, and the
+    * gen-1 rows read with a NULL `ts_day`. */
+  private def mixedSpineTable(): TableSink = {
+    val gen1 = SinkConfig(tableName = "t", warehousePath = freshWh(),
+      versioned = true,
+      partitionSpec = Seq(PartitionField("cat", Transform.Identity)))
+    new TableSink(gen1).append(rows(
+      (1L, "a", 10.0, "2024-01-01 10:00:00"),
+      (2L, "b", 20.0, "2024-01-02 10:00:00"),
+      (3L, "b", 30.0, "2024-01-03 10:00:00")))
+    val s2 = new TableSink(gen1.copy(
+      partitionSpec = Seq(PartitionField("ts", Transform.Day))))
+    s2.append(rows(
+      (4L, "a", 40.0, "2024-01-02 12:00:00"),
+      (5L, "c", 50.0, "2024-01-04 10:00:00")))
+    s2
+  }
+
+  /** The rows as (id, cat, v), once every row's `ts_day` is derived:
+    * a rewrite must not leave gen-1 rows in the NULL day partition, which
+    * any `ts` predicate prunes. */
+  private def idCatV(sink: TableSink): Seq[(Long, String, Double)] = {
+    val df = sink.read(spark)
+    assert(df.where($"ts_day".isNull).count() == 0L, "underived ts_day")
+    df.select($"id", $"cat", $"v").as[(Long, String, Double)]
+      .collect().sortBy(_._1).toSeq
+  }
+
+  test("copy-on-write ops on a VERSIONED mixed-spine table touching gen-1 " +
+    "rows read back exact, each row in its derived partition") {
+    val all = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "b", 30.0),
+      (4L, "a", 40.0), (5L, "c", 50.0))
+    val del = mixedSpineTable()
+    assert(del.delete(spark, $"id" === 2L) == 1L)
+    assert(idCatV(del) == all.filterNot(_._1 == 2L))
+    // the table no longer mixes spines: a second delete is exact too
+    assert(del.delete(spark, $"id" === 3L) == 1L)
+    assert(idCatV(del) == all.filterNot(r => r._1 == 2L || r._1 == 3L))
+
+    val upd = mixedSpineTable()
+    assert(upd.update(spark, $"id" === 1L, Seq("v" -> lit(11.0))) == 1L)
+    assert(idCatV(upd) == all.map(r => if (r._1 == 1L) r.copy(_3 = 11.0) else r))
+
+    val ups = mixedSpineTable()
+    ups.upsert(rows((3L, "b", 33.0, "2024-01-03 10:00:00"),
+      (6L, "d", 60.0, "2024-01-05 10:00:00")), Seq("id"))
+    assert(idCatV(ups) ==
+      all.map(r => if (r._1 == 3L) r.copy(_3 = 33.0) else r) :+ ((6L, "d", 60.0)))
+  }
 }

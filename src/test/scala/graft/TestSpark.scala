@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
@@ -26,10 +28,25 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
-  /** A fresh path under the checkout's `target/tmp` (the forked test JVM
-    * runs in the project directory). */
+  /** This test JVM's own scratch root under the checkout's `target/tmp`
+    * (the forked test JVM runs in the project directory), deleted when
+    * the JVM exits, so test warehouses do not pile up across runs. */
+  private lazy val tmpRoot: Path = {
+    val base = Paths.get(sys.props("user.dir"), "target", "tmp")
+    Files.createDirectories(base)
+    val root = Files.createTempDirectory(base, "run_")
+    sys.addShutdownHook {
+      val paths = Files.walk(root) // depth-first, symlinks not followed
+      try paths.sorted(Comparator.reverseOrder[Path]())
+        .forEach(p => scala.util.Try(Files.deleteIfExists(p)))
+      finally paths.close()
+    }
+    root
+  }
+
+  /** A fresh path under this JVM's scratch root. */
   def tmpDir(prefix: String): String =
-    s"${sys.props("user.dir")}/target/tmp/${prefix}_${java.util.UUID.randomUUID()}"
+    tmpRoot.resolve(s"${prefix}_${java.util.UUID.randomUUID()}").toString
 
   /** Each Spark job started while `body` runs, named by the action of its
     * SQL execution (adaptive execution submits shuffle stages from a pool

@@ -3,7 +3,8 @@ package graft
 import org.apache.hadoop.fs.{Path => HPath}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[WarehouseIO]]'s tree walks against Hadoop's own recursive listing. */
+/** [[WarehouseIO]]'s tree walks against Hadoop's own recursive listing,
+  * and its metadata-read counter. */
 class WarehouseIOSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -54,5 +55,16 @@ class WarehouseIOSpec extends AnyFunSuite {
       .map { case (rel, st) => rel -> st.getLen }.toVector == data)
     assert(WarehouseIO.listAllFilesRel(root) == listed.map(_._1))
     assert(WarehouseIO.dataFileStatuses(new HPath(s"$wh/absent")).isEmpty)
+  }
+
+  test("a probe of an absent file leaves metaReads unchanged") {
+    val p = new HPath(TestSpark.tmpDir("wio_probe"), "generation")
+    val before = WarehouseIO.metaReads.get()
+    intercept[java.io.FileNotFoundException](WarehouseIO.readString(p))
+    assert(WarehouseIO.metaReads.get() == before,
+      "a read that never opened a file counted as a metadata read")
+    WarehouseIO.writeString(p, "g")
+    assert(WarehouseIO.readString(p) == "g")
+    assert(WarehouseIO.metaReads.get() == before + 1)
   }
 }
