@@ -176,14 +176,6 @@ object LayoutQueries {
       .withColumn("in_plan", lit(true))
   }
 
-  /** The clustered-REWRITE path to the same layout `q_zonemap_prune`
-    * reaches by clustered APPEND: events land unclustered (plain append,
-    * sink-salted files — the worst case for zones), then
-    * [[TableSink.clusterBy]] rewrites the table z-ordered in place, zone
-    * maps are computed, and the identical 2-D rectangle is answered from
-    * the pruned file set. Equality with the full-scan oracle proves the
-    * rewrite lost/duplicated nothing AND the layout actually tightened
-    * (pruning pinned engaged — unclustered salted files would prune ~0). */
   /** Shared harness of the two clustered-rewrite queries: worst-case
     * salted append, the given in-place rewrite, zone analysis, and the
     * pruned 2-D rectangle aggregate — both curves must hash-match ONE
@@ -227,6 +219,14 @@ object LayoutQueries {
        |             AND TIMESTAMP '2024-01-12 23:59:59.999999'
        |  AND value BETWEEN 100.0 AND 200.0""".stripMargin
 
+  /** The clustered-REWRITE path to the same layout `q_zonemap_prune`
+    * reaches by clustered APPEND: events land unclustered (plain append,
+    * sink-salted files — the worst case for zones), then
+    * [[TableSink.clusterBy]] rewrites the table z-ordered in place, zone
+    * maps are computed, and the identical 2-D rectangle is answered from
+    * the pruned file set. Equality with the full-scan oracle proves the
+    * rewrite lost/duplicated nothing AND the layout actually tightened
+    * (pruning pinned engaged — unclustered salted files would prune ~0). */
   def clusterRewrite(spark: SparkSession, sfDir: String): DataFrame =
     rewriteHarness(spark, sfDir, "events_cr", "rewrite_pruned")(
       _.clusterBy(spark, Seq("unix_micros(ts)",

@@ -1107,7 +1107,7 @@ object ParityQueries {
 
   /** Delete-layer minor compaction end-to-end: two appends, then ALL
     * THREE merge-on-read delete flavors (predicate, erasure list,
-    * position list) accumulate as separate commits, then
+    * deletion vectors) accumulate as separate commits, then
     * [[TableSink.consolidateDeletes]] merges them into one commit
     * WITHOUT touching a data file — and the consolidated read must equal
     * the oracle's direct survivor computation. Any flavor dropped, any
@@ -1154,7 +1154,7 @@ object ParityQueries {
     * three-flavor fixture: each sidecar's version, flavor, ENTRY COUNT,
     * and detail — with the counts derived independently by the oracle
     * from the same modulus/threshold arithmetic (the erasure-list count
-    * is the distinct qualifying user_ids; the position-list count is the
+    * is the distinct qualifying user_ids; the deletion-vector count is the
     * rows VISIBLE at its commit that matched — resolved-at-commit
     * semantics pinned). */
   def metaDeletes(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1780,7 +1780,7 @@ object ParityQueries {
 
   /** `DELETE … WHERE` through the pure-SQL door in MERGE-ON-READ mode
     * (`spark.graft.sql.deleteMode=mor`): the statement commits a
-    * position-list sidecar — O(matched rows) metadata, ZERO data files
+    * deletion-vector sidecar — O(matched rows) metadata, ZERO data files
     * rewritten — and the catalog read path serves the table THROUGH the
     * pending sidecar (the scan executes the library read, which applies
     * it), so the post-delete SELECT runs with no compaction in between.
@@ -1810,9 +1810,8 @@ object ParityQueries {
     val before = sink.dataFilesRel().toSet
     // a SELECTIVE predicate — the position flavor's intended workload:
     // the sidecar is O(matched rows), so a targeted delete (a few users)
-    // commits tiny metadata and the read-through anti-join broadcasts.
-    // (The broad-predicate COW twin is q_sql_delete; a 35%-selectivity
-    // delete would make the position list data-sized — wrong tool.)
+    // commits tiny metadata. (The broad-predicate COW twin is
+    // q_sql_delete.)
     try {
       spark.conf.set("spark.graft.sql.deleteMode", "mor")
       spark.sql(s"DELETE FROM graft_cat.$tbl " +
@@ -1840,7 +1839,7 @@ object ParityQueries {
     * position-deletes the matched rows and appends their replacements —
     * O(matched rows) data IO, ZERO pre-existing data files rewritten or
     * removed, history preserved (no expiry). The sidecar is referenced
-    * INSIDE the claimed snapshot (`#pos` line — the `#txn` pattern), so
+    * INSIDE the claimed snapshot (`#dv` line — the `#txn` pattern), so
     * no reader window ever shows old and new copies together. The
     * `mor_no_rewrite` flag is ORACLE-GATED: TRUE only when every
     * pre-update data file survives BY NAME AND the pre-update snapshot
@@ -3171,9 +3170,9 @@ object ParityQueries {
     * filter set is empty (oracle FILTER semantics).
     *
     * Scale shape: commit cost is one filtered scan of the head snapshot
-    * writing only matched coordinates; read cost is one anti-join on
-    * (file, pos) that broadcasts when the list is small (AQE decides) —
-    * the surgical-delete path for "these specific corrupt rows", where a
+    * writing only matched coordinates; read cost is one filter on
+    * (file, pos) over broadcast deletion vectors — the surgical-delete
+    * path for "these specific corrupt rows", where a
     * predicate would over-delete future data. */
   def posDelete(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._

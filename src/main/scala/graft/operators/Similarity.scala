@@ -51,17 +51,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
   }
 
-  /** LSH-bucketed ANN: generate candidates from shared hyperplane-sign
-    * buckets across `numTables` independent tables, exact-rerank only the
-    * candidates. Returns up to k neighbors per query (fewer if the buckets
-    * are sparse — the recall/cost dial is bitsPerTable × numTables).
-    */
-  /** IVF (inverted-file) ANN: a coarse k-means quantizer partitions the
-    * corpus into `nlist` cells; each query exact-searches only its
-    * `nprobe` nearest cells. The standard billion-scale layout: the
-    * centroid table is metadata-sized, cell assignment is one scan, and
-    * the probe join touches ~nprobe/nlist of the corpus per query.
-    */
   /** Fitted coarse quantizers, keyed by caller-provided identity — an IVF
     * index is built once and queried many times; retraining k-means per
     * query batch would dominate the probe cost. Seeded fit ⇒ deterministic
@@ -93,6 +82,12 @@ object Similarity {
     }
   }
 
+  /** IVF (inverted-file) ANN: a coarse k-means quantizer partitions the
+    * corpus into `nlist` cells; each query exact-searches only its
+    * `nprobe` nearest cells. The standard billion-scale layout: the
+    * centroid table is metadata-sized, cell assignment is one scan, and
+    * the probe join touches ~nprobe/nlist of the corpus per query.
+    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 16, nprobe: Int = 4,
       centroidCacheKey: Option[String] = None,
@@ -200,6 +195,11 @@ object Similarity {
       .select(col("doc_id"), col("rank"), col("rrf_e9"), col("n_lists"))
   }
 
+  /** LSH-bucketed ANN: generate candidates from shared hyperplane-sign
+    * buckets across `numTables` independent tables, exact-rerank only the
+    * candidates. Returns up to k neighbors per query (fewer if the buckets
+    * are sparse — the recall/cost dial is bitsPerTable × numTables).
+    */
   def annTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       dim: Int = 64, bitsPerTable: Int = 8, numTables: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {

@@ -508,7 +508,7 @@ case class GraftMergeCommand(
     * delete) and appends the survivors' new values plus the fired
     * inserts — O(changed rows) data IO, zero pre-existing files
     * rewritten, history preserved; untouched target rows are never
-    * read-modified-written at all. The sidecar is `#pos`-referenced
+    * read-modified-written at all. The deletion vectors are `#dv`-referenced
     * INSIDE the claimed snapshot ([[TableSink.commitMorMutation]]), so
     * no reader window shows a row's old and new copies together.
     *
@@ -666,8 +666,7 @@ case class GraftMergeCommand(
       .localCheckpoint()
     if (changed.isEmpty) return Some(Seq.empty) // no-op: nothing fired
     val positions = changed.filter(col(posFlag))
-      .select(col("__graft_file").as("file_path"),
-        col("__graft_pos").as("row_pos")).distinct()
+      .select(col("__graft_file"), col("__graft_pos"))
     val replacement = changed.filter(col(keepFlag) && col(chgFlag))
       .select(target.output.map(a => q(a.name)): _*)
     try sink.commitMorMutation(spark, positions, replacement)

@@ -124,21 +124,6 @@ object VectorExpressions {
     r
   }
 
-  /** Rolling polynomial codepoint hash mod M61 — the same fold the DuckDB
-    * oracle writes as
-    * `list_reduce(list_prepend(CAST(0 AS HUGEINT), [unicode(c) ...]),
-    *  (acc,x) -> (acc*31+x) % (2^61-1))`,
-    * so MinHash signatures are oracle-reproducible (and ~64× cheaper than
-    * rehashing the full shingle bytes once per lane).
-    *
-    * Collision bound: two distinct shingles collide with probability
-    * ≲ len/2^61 under the polynomial-hash model — at 10^9 distinct
-    * shingles the expected number of colliding pairs is ~10^18/2^61 ≈
-    * 10^-0.4, i.e. O(1) collisions corpus-wide, each biasing only pairs
-    * containing the two colliding shingles. The previous mod-(1e9+7)
-    * (~2^30) fingerprint expected ~10^17/2^30 ≈ 10^8 colliding pairs at
-    * that scale, and a collision biased EVERY lane identically because all
-    * lanes are affine in the one fingerprint. */
   /** OPTIMIZATION r14 (guide §4 per-row work): fold the code points of a
     * UTF8String without `toString` — the UTF-16 transcode allocated a
     * String + char[] per shingle in the former form, and these folds sit
@@ -170,6 +155,21 @@ object VectorExpressions {
     acc
   }
 
+  /** Rolling polynomial codepoint hash mod M61 — the same fold the DuckDB
+    * oracle writes as
+    * `list_reduce(list_prepend(CAST(0 AS HUGEINT), [unicode(c) ...]),
+    *  (acc,x) -> (acc*31+x) % (2^61-1))`,
+    * so MinHash signatures are oracle-reproducible (and ~64× cheaper than
+    * rehashing the full shingle bytes once per lane).
+    *
+    * Collision bound: two distinct shingles collide with probability
+    * ≲ len/2^61 under the polynomial-hash model — at 10^9 distinct
+    * shingles the expected number of colliding pairs is ~10^18/2^61 ≈
+    * 10^-0.4, i.e. O(1) collisions corpus-wide, each biasing only pairs
+    * containing the two colliding shingles. The previous mod-(1e9+7)
+    * (~2^30) fingerprint expected ~10^17/2^30 ≈ 10^8 colliding pairs at
+    * that scale, and a collision biased EVERY lane identically because all
+    * lanes are affine in the one fingerprint. */
   private[graft] def codepointFp(s: org.apache.spark.unsafe.types.UTF8String): Long =
     foldCp(s, 0L) { (acc, cp) =>
       val fp = mulmodM61(acc, 31L) + cp

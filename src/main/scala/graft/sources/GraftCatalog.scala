@@ -295,18 +295,11 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
     // plain v2 file scan would serve NULL from old files. Renames only
     // arise via ALTER, which always freezes a declared schema first.
     val renames = renamesOf(ident)
-    // MERGE-ON-READ serving: a snapshot with pending delete sidecars
-    // cannot be served by the raw V2 file scan (it would resurrect the
-    // subtracted rows), so the scan executes the LIBRARY read pinned to
-    // the loaded version — readVersion applies every sidecar flavor
-    // (predicate / key-list / position), renames, and clone resolution.
-    // Filters a query pushes still reach the parquet scan: the
-    // ProjectedScanBuilder re-applies them as SQL inside the frame and
-    // Catalyst pushes deterministic predicates through the anti-joins
-    // down to the file source. This replaces the old loud refusal — the
-    // SQL door no longer goes dark between a MoR delete and its
-    // compaction. Scan-planning stats pruning stays off in this mode
-    // (conservative; the sidecar anti-join needs the full row stream).
+    // LIBRARY serving ([[snapshotFiles]]): the scan executes readVersion
+    // pinned to the loaded version — every sidecar flavor, renames, the
+    // mixed-spine union. Pushed filters still reach the parquet scan: the
+    // ProjectedScanBuilder re-applies them as SQL inside the frame, and
+    // they prune the file list (morFilterCompute below).
     // translate pushed source Filters to catalyst conjuncts for
     // scan-planning file pruning (planCandidates' input shape); an
     // untranslatable filter simply contributes nothing — conservative
@@ -325,22 +318,15 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
           SparkSession.active, sql)).toOption
       }.flatMap(split(_))
     }
-    val morOverride: Option[(StructType, () => org.apache.spark.sql.DataFrame)] =
-      morVersion.map { v =>
-        val declared = userSchema.getOrElse(delegate.schema)
-        (declared, () => morCompute(cfg, v, declared, Nil))
-      }
-    // filter-AWARE variant of the same compute: the pushed filters also
-    // prune the FILE LIST (manifest stats + hidden-partition transform
-    // bounds) before the library read — a pending MoR sidecar no longer
-    // costs selective queries their scan-planning skipping
-    val morFilterCompute: Option[Array[org.apache.spark.sql.sources.Filter] =>
-        org.apache.spark.sql.DataFrame] =
-      morVersion.map { v =>
-        val declared = userSchema.getOrElse(delegate.schema)
-        (filters: Array[org.apache.spark.sql.sources.Filter]) =>
-          morCompute(cfg, v, declared, filterConjuncts(filters))
-      }
+    // the library read pinned to `morVersion`; its filter-AWARE variant
+    // also prunes the FILE LIST by the pushed filters (manifest stats +
+    // hidden-partition transform bounds) before the read
+    lazy val morDeclared = userSchema.getOrElse(delegate.schema)
+    val morOverride = morVersion.map(v =>
+      (morDeclared, () => morCompute(cfg, v, morDeclared, Nil)))
+    val morFilterCompute = morVersion.map(v =>
+      (filters: Array[org.apache.spark.sql.sources.Filter]) =>
+        morCompute(cfg, v, morDeclared, filterConjuncts(filters)))
     val renameOverride: Option[(StructType, () => org.apache.spark.sql.DataFrame)] =
       if (renames.isEmpty) None
       else {
@@ -480,11 +466,6 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
     else procedures.keys.toArray.sorted
       .map(n => Identifier.of(Array("system"), n))
 
-  /** Latest state. A VERSIONED table resolves through its newest manifest
-    * — not the live directory — so data files a crashed or in-flight write
-    * left behind stay invisible until their commit lands (Iceberg's
-    * snapshot-isolation contract). Unversioned tables have no manifest and
-    * read the live directory. */
   /** A swap interrupted mid-move leaves a durable intent marker beside
     * the table root ([[TableSink.executeSwap]]); serving the directory
     * then would read a PARTIAL table. A pure SQL reader heals it here —
@@ -501,6 +482,11 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
       location = Some(tableDir(ident).toString))).recoverSwap()
   }
 
+  /** Latest state. A VERSIONED table resolves through its newest manifest
+    * — not the live directory — so data files a crashed or in-flight write
+    * left behind stay invisible until their commit lands (Iceberg's
+    * snapshot-isolation contract). Unversioned tables have no manifest and
+    * read the live directory. */
   override def loadTable(ident: Identifier): Table = {
     healInterruptedSwap(ident)
     if (!tableExists(ident)) {
@@ -516,11 +502,9 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
     log.head match {
       case Some(v) =>
         if (log.isClone) return libraryProjected(ident)(_.readVersion(_, v))
-        val files = manifestFiles(ident, log, v)
+        val (files, library) = snapshotFiles(ident, log, v)
         fileTable(ident, files, files.headOption, declaredSchema(ident),
-          writable = true,
-          morVersion =
-            if (log.pendingVersions(v).nonEmpty) Some(v) else None)
+          writable = true, morVersion = Some(v).filter(_ => library))
       case None =>
         firstDataFile(ident) match {
           case Some(first) =>
@@ -551,10 +535,14 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
     * the table's log. */
   private def loadVersion(ident: Identifier, log: TableLog,
       version: String): Table = {
-    val (files, pinned) = version.toIntOption match {
+    def pinnedAt(v: Int): (Seq[String], Option[Int]) = {
+      val (files, library) = snapshotFiles(ident, log, v)
+      (files, Some(v).filter(_ => library))
+    }
+    val (files, morVersion) = version.toIntOption match {
       case Some(v) =>
         if (log.isClone) return libraryProjected(ident)(_.readVersion(_, v))
-        (manifestFiles(ident, log, v), Some(v))
+        pinnedAt(v)
       case None =>
         // Same name charset TableLog.branchDirName enforces on write:
         // anything else (slashes, '..') must not resolve as a path.
@@ -585,13 +573,33 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
                   "snapshot id nor a live branch or tag name"))
             if (log.isClone)
               return libraryProjected(ident)(_.readVersion(_, tv))
-            (manifestFiles(ident, log, tv), Some(tv))
+            pinnedAt(tv)
         }
     }
     // declared schema governs historical reads too: a snapshot older than
     // an ADD COLUMNS reads NULL-filled, never schema-shifted mid-query
     fileTable(ident, files, files.headOption, declaredSchema(ident),
-      morVersion = pinned.filter(log.pendingVersions(_).nonEmpty))
+      morVersion = morVersion)
+  }
+
+  /** Snapshot `v`'s files for the native file table, and whether its rows
+    * serve through the library read ([[TableSink.readVersion]]) instead:
+    * the native scan would resurrect the rows of pending merge-on-read
+    * sidecars, and Spark's partition inference refuses files written
+    * under more than one partition spine ([[TableSink.spineOf]]). The
+    * native table of a mixed-spine snapshot holds the files of one spine
+    * (the table's current spec when any file has it), for its schema. */
+  private def snapshotFiles(ident: Identifier, log: TableLog,
+      v: Int): (Seq[String], Boolean) = {
+    val files = manifestFiles(ident, log, v)
+    val bySpine = log.files(v).groupBy(TableSink.spineOf)
+    if (bySpine.sizeIs <= 1) (files, log.pendingVersions(v).nonEmpty)
+    else {
+      val spec = insertConfig(ident, files.headOption).partitionSpec
+        .map(_.columnName)
+      (bySpine.getOrElse(spec, bySpine.values.head)
+        .map(rel => s"${tableDir(ident)}/$rel"), true)
+    }
   }
 
   /** `TIMESTAMP AS OF t` (micros since epoch): the last snapshot committed
@@ -992,24 +1000,6 @@ private[graft] final class GraftReadOnlyTable(delegate: FileTable,
     delegate.newScanBuilder(options)
 }
 
-/** Writable catalog table: reads delegate to the native v2 file scan;
-  * `INSERT INTO` routes through [[TableSink.append]] via the V1 write
-  * bridge, so a SQL append takes the SAME staged write + optimistic
-  * manifest commit (and CHECK-constraint gate) as the library API — the
-  * invariant the read-only facade exists to protect. `INSERT OVERWRITE`
-  * (whole-table) routes through [[TableSink.replaceAllRows]]'s guarded
-  * crash-safe swap — gate, sidecars, history expiry included; FILTERED
-  * overwrites stay refused (partial overwrite is upsert/delete's job,
-  * with their partition-scoped protocols).
-  *
-  * `DELETE FROM … WHERE` routes through [[TableSink.delete]] (copy-on-
-  * write) by default, or [[TableSink.deletePositions]] (merge-on-read,
-  * O(matched) metadata, zero files rewritten) when the session sets
-  * `spark.graft.sql.deleteMode=mor` — the catalog read path serves
-  * tables with pending sidecars through the library read, so the MoR
-  * flavor keeps the SQL door fully readable. Predicates the filter
-  * translator cannot express in SQL text refuse at `canDeleteWhere`
-  * with Spark's standard error rather than deleting the wrong rows. */
 /** A metadata table (`cat.t.snapshots` / `files` / `partitions` /
   * `deletes` / `changes`): read-only, served as a DSv2
   * [[org.apache.spark.sql.connector.read.V1Scan]] whose relation executes
@@ -1213,6 +1203,24 @@ private[graft] final case class GraftStatsPlanner(
     plan: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
       Option[Seq[String]])
 
+/** Writable catalog table: reads delegate to the native v2 file scan;
+  * `INSERT INTO` routes through [[TableSink.append]] via the V1 write
+  * bridge, so a SQL append takes the SAME staged write + optimistic
+  * manifest commit (and CHECK-constraint gate) as the library API — the
+  * invariant the read-only facade exists to protect. `INSERT OVERWRITE`
+  * (whole-table) routes through [[TableSink.replaceAllRows]]'s guarded
+  * crash-safe swap — gate, sidecars, history expiry included; FILTERED
+  * overwrites stay refused (partial overwrite is upsert/delete's job,
+  * with their partition-scoped protocols).
+  *
+  * `DELETE FROM … WHERE` routes through [[TableSink.delete]] (copy-on-
+  * write) by default, or [[TableSink.deletePositions]] (merge-on-read,
+  * O(matched) metadata, zero files rewritten) when the session sets
+  * `spark.graft.sql.deleteMode=mor` — the catalog read path serves
+  * tables with pending sidecars through the library read, so the MoR
+  * flavor keeps the SQL door fully readable. Predicates the filter
+  * translator cannot express in SQL text refuse at `canDeleteWhere`
+  * with Spark's standard error rather than deleting the wrong rows. */
 private[graft] final class GraftWritableTable(delegate: FileTable,
     fullName: String, declaredSchema: Option[StructType],
     private[graft] val insertCfg: SinkConfig,
@@ -1243,7 +1251,7 @@ private[graft] final class GraftWritableTable(delegate: FileTable,
     *  - `cow` (default): copy-on-write through [[TableSink.delete]] —
     *    touched partitions rewrite, cost O(matching partitions' data).
     *  - `mor`: merge-on-read through [[TableSink.deletePositions]] —
-    *    the predicate resolves ONCE, now, to a position list committed
+    *    the predicate resolves ONCE, now, to deletion vectors committed
     *    as O(matched-row) metadata; ZERO data files rewrite, and the
     *    catalog's read path applies the sidecar, so the statement is
     *    O(scan + matches) instead of O(data rewritten). Exactly SQL

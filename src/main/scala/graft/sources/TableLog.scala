@@ -14,11 +14,13 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
   * immutable delta manifest `m-<uuid>.mf` (one data-file path per line,
   * optional stats after a TAB) and claims the version file `vNNNNN.list`:
   * the [[TableLog.SnapshotHeader]], `#`-prefixed commit metadata (the
-  * streaming `#txn` record, the `#pos`/`#keys`/`#del` sidecar
+  * streaming `#txn` record, the `#dv`/`#keys`/`#del` sidecar
   * references) and its manifest names. Commit metadata IO is therefore
   * O(added files + manifest count), and snapshots share manifests.
-  * Beside them live the delete sidecars (`pos-*` position lists, `keys-*`
-  * key lists, `del-*` predicate SQL), branch logs `branch_<name>/` (own
+  * Beside them live the delete sidecars (`dv-*` deletion vectors, one
+  * roaring bitmap of row ordinals per data file ([[DeletionVectors]]);
+  * `keys-*` key lists; `del-*` predicate SQL), branch logs
+  * `branch_<name>/` (own
   * version files and a `base` file, manifests shared with the main log),
   * tag files `tag_<name>`, the history `generation` and `clone_base`.
   *
@@ -108,8 +110,11 @@ private[graft] final class TableLog private (val dir: HPath,
   /** Version `v`'s `#keys` key-list directory. */
   def keyDirs(v: Int): Seq[HPath] = named(v, Sidecar.Keys).map(file)
 
-  /** Version `v`'s `#pos` position-list directory. */
-  def posDirs(v: Int): Seq[HPath] = named(v, Sidecar.Positions).map(file)
+  private val vectors = mutable.HashMap.empty[String, DeletionVectors.Vectors]
+  /** Version `v`'s `#dv` deletion vectors, when it has them. */
+  def deletionVectors(v: Int): Option[DeletionVectors.Vectors] =
+    named(v, Sidecar.DeletionVectors).headOption.map(n => vectors
+      .getOrElseUpdate(n, DeletionVectors.parse(WarehouseIO.readString(file(n)))))
 
   /** Sidecar names version `v` references (a cleanup must capture them
     * before deleting the version file). */
@@ -238,10 +243,10 @@ private[graft] object TableLog {
     * their files and the snapshot metadata key that references them. */
   sealed abstract class Sidecar(val prefix: String, val key: String)
   object Sidecar {
-    case object Positions extends Sidecar("pos-", "pos")
+    case object DeletionVectors extends Sidecar("dv-", "dv")
     case object Keys extends Sidecar("keys-", "keys")
     case object Predicate extends Sidecar("del-", "del")
-    val all: Seq[Sidecar] = Seq(Positions, Keys, Predicate)
+    val all: Seq[Sidecar] = Seq(DeletionVectors, Keys, Predicate)
   }
 
   /** A fresh, unique sidecar name of flavour `kind`. */
@@ -366,13 +371,21 @@ private[graft] object TableLog {
 
   /** The lines after the header of snapshot file `snapshotPath`;
     * refuses, by name, a file that does not start with
-    * [[SnapshotHeader]] — no writer produces one. */
+    * [[SnapshotHeader]], and one that references a position-list sidecar
+    * (`#pos`, a `pos-*` name): no writer produces either, and a snapshot
+    * is never served without its deletes. */
   private def snapshotBody(snapshotPath: HPath): IndexedSeq[String] = {
     val lines = WarehouseIO.readString(snapshotPath).split("\n", -1)
       .toIndexedSeq
     require(lines.headOption.contains(SnapshotHeader),
       s"snapshot file $snapshotPath lacks the $SnapshotHeader header: " +
         "not a snapshot this table format writes")
+    val posRef = lines.find(l =>
+      l.startsWith("#pos ") || l.startsWith("#") && l.contains(" pos-"))
+    require(posRef.isEmpty, s"snapshot file $snapshotPath references a " +
+      s"position-list sidecar ('${posRef.get}'), a delete format this table " +
+      "no longer reads (deletes are `dv-*` deletion vectors); it is " +
+      "refused rather than read without its deletes")
     lines.tail
   }
 

@@ -991,7 +991,7 @@ final class TableSink(val config: SinkConfig) {
             mergeManifest.map(Seq(_)).getOrElse(chained),
             // the streaming dedup record rides IN the claimed snapshot —
             // atomic with the commit, never a separate marker to drift.
-            // A MoR UPDATE/MERGE's position-delete sidecar reference
+            // A MoR UPDATE/MERGE's deletion-vector reference
             // rides the same way: the commit that APPENDS the
             // replacement rows must subtract the replaced rows in the
             // SAME claimed snapshot, or a concurrent reader would see
@@ -1402,13 +1402,10 @@ final class TableSink(val config: SinkConfig) {
   }
 
   /** `capturePos = true` appends the `__graft_file`/`__graft_pos`
-    * coordinates PER SCAN RELATION, before any union: `_metadata` is not
-    * resolvable on a union frame, so a caller that will fold
-    * position-delete sidecars ([[applyDeletes]]) must ask for the
-    * capture here — a mixed-spine (partition-spec-evolved) or clone
-    * manifest produces a multi-relation union. [[applyDeletes]] skips
-    * its own capture when the columns are already present and drops
-    * them unless asked to keep. */
+    * coordinates PER SCAN RELATION of a multi-relation union (a
+    * mixed-spine or clone manifest), where `_metadata` is not resolvable:
+    * every [[applyDeletes]] caller asks for it, and applyDeletes drops
+    * the columns unless asked to keep them. */
   private def readFiles(log: TableLog, spark: SparkSession,
       rels: Seq[String], capturePos: Boolean = false): DataFrame = {
     // an empty file set cannot infer a schema — an empty diff (e.g.
@@ -1454,12 +1451,9 @@ final class TableSink(val config: SinkConfig) {
       // One group in the uniform case — the plan is unchanged there.
       val localFileGroups = local.groupBy(TableSink.spineOf)
         .toSeq.sortBy(_._1.mkString(","))
-      // capture ONLY when the union will have several relations: a
-      // single-relation frame resolves `_metadata` lazily inside
-      // applyDeletes when (and only when) a position sidecar actually
-      // folds — capturing unconditionally here made every snapshot read
-      // materialize `row_index` per row (measured 3.8x on q_time_travel,
-      // same-window A/B) for sidecars that do not exist
+      // a single-relation frame resolves `_metadata` inside applyDeletes
+      // only when deletion vectors fold (materializing `row_index` on
+      // every read costs 3.8x on q_time_travel)
       val multi = localFileGroups.size + (if (ext.isEmpty) 0 else 1) > 1
       def cap(df: DataFrame): DataFrame =
         if (!capturePos || !multi) df
@@ -1562,17 +1556,14 @@ final class TableSink(val config: SinkConfig) {
   }
 
   // --------------------------------------------- merge-on-read deletes
-  // Iceberg-v2-style equality deletes: [[deleteWhere]] commits a delete
-  // PREDICATE as pure metadata (the snapshot keeps the head's file list;
-  // a sidecar records the predicate), readers subtract matching rows at
-  // scan time, and [[compact]] materializes — rewriting files and
-  // clearing the predicates. The 100 TB rationale: [[delete]] (copy-on-
-  // write) rewrites every touched partition at delete time; merge-on-read
-  // makes the delete O(metadata) and defers the rewrite until compaction
-  // amortizes it across many deletes.
+  // A delete commits as metadata — a predicate ([[deleteWhere]]), a key
+  // list ([[deleteKeys]]) or deletion vectors ([[deletePositions]]) —
+  // that readers subtract at scan time until [[compact]] materializes
+  // it: the delete is O(metadata), and the rewrite waits until
+  // compaction amortizes it across many deletes.
 
-  /** The rows of list sidecars `dirs` (key lists or position lists, one
-    * parquet directory per commit), unioned by name. Each directory's
+  /** The rows of key-list sidecars `dirs` (one parquet directory per
+    * commit), unioned by name. Each directory's
     * schema comes from its footer on the driver ([[FileFooters]]): every
     * planning of a pending-delete read loads its sidecars, and schema
     * inference would launch one job per directory. */
@@ -1584,12 +1575,6 @@ final class TableSink(val config: SinkConfig) {
         .fold(r)(r.schema).parquet(d.toString)
     }.reduce(_ unionByName _)
 
-  /** Position-list sidecar rows under the scan-capture column names. */
-  private def readPositions(spark: SparkSession,
-      dirs: Seq[org.apache.hadoop.fs.Path]): DataFrame =
-    readSidecars(spark, dirs).withColumnRenamed("file_path", "__graft_file")
-      .withColumnRenamed("row_pos", "__graft_pos")
-
   /** Delete predicates committed at or before `version`, in commit order.
     * Stored one per sidecar as SQL text. (Key-list deletes are separate —
     * [[deleteKeys]] — and counted by [[hasPendingDeletes]].) */
@@ -1598,8 +1583,8 @@ final class TableSink(val config: SinkConfig) {
     log.versions.filter(_ <= version).flatMap(log.predicates)
   }
 
-  /** True when any merge-on-read delete (predicate, key list, or position
-    * list) is committed at or before `version` and not yet materialized. */
+  /** True when any merge-on-read delete (predicate, key list, or deletion
+    * vector) is committed at or before `version` and not yet materialized. */
   def hasPendingDeletes(version: Int): Boolean =
     openLog().pendingVersions(version).nonEmpty
 
@@ -1614,72 +1599,65 @@ final class TableSink(val config: SinkConfig) {
   private def applyDeletes(log: TableLog, df: DataFrame, version: Int,
       keepPosCols: Boolean = false): DataFrame = {
     val versions = log.versions.filter(_ <= version)
-    // position-list deletes anti-join on (file, row ordinal) — the
-    // `_metadata` struct must be captured from the SCAN relation, before
-    // any key-list anti-join makes it unresolvable, so the helper columns
-    // ride along through the fold and drop at the end (kept when the
-    // caller — deletePositions — needs the coordinates itself)
-    val anyPos = keepPosCols || versions.exists(v =>
-      log.posDirs(v).nonEmpty)
+    // deletion vectors filter on (file, row ordinal), all versions' ORed
+    // into one expression — the `_metadata` struct must be captured from
+    // the SCAN relation, so the helper columns ride along and drop at the
+    // end (kept when the caller — deletePositions — needs the coordinates
+    // itself)
+    val dvs = DeletionVectors.union(versions.flatMap(log.deletionVectors))
+    val anyPos = keepPosCols || dvs.nonEmpty
     // a multi-relation union (mixed-spine or clone manifest) cannot
     // resolve `_metadata` — readFiles captured per relation already
     val hasCaptured = df.columns.contains("__graft_file")
-    val d0 =
+    val captured =
       if (anyPos && !hasCaptured)
         df.withColumn("__graft_file", col("_metadata.file_path"))
           .withColumn("__graft_pos", col("_metadata.row_index"))
       else df
-    // a sidecar records column names AS OF ITS COMMIT; a later RENAME
-    // folds those physical generations under the new name, so the
-    // sidecar's references must fold identically (round-14). Without
-    // this, a pending predicate on the OLD name resolved BENEATH the
-    // rename projection (Spark lets a filter reference a dropped
-    // column) — old files served their physical value but post-rename
-    // files served NULL, and `not(NULL)` SILENTLY DROPPED every row
-    // appended after the rename; a key-list anti-join on the old name
-    // died in an unresolved-column error. Substitution is unambiguous:
-    // the ALTER door refuses re-ADDing or renaming onto a superseded
-    // physical name, so an attribute matching a rename key can only
-    // mean that old generation.
+    val d0 = if (dvs.isEmpty) captured
+      else captured.where(!deletedBy(df.sparkSession, dvs))
     val renames = renameMap
-    def foldRenamed(p: String): Column = {
-      if (renames.isEmpty) expr(p)
-      else {
-        import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-        val e = org.apache.spark.sql.graft.Bridge
-          .parseExpression(df.sparkSession, p).transform {
-            case a: UnresolvedAttribute if a.nameParts.lengthIs == 1 &&
-                renames.keys.exists(_.equalsIgnoreCase(a.nameParts.head)) =>
-              UnresolvedAttribute(Seq(renames.collectFirst {
-                case (o, n) if o.equalsIgnoreCase(a.nameParts.head) => n
-              }.get))
-          }
-        org.apache.spark.sql.graft.Bridge.column(e)
-      }
-    }
     val folded = versions.foldLeft(d0) { (d, v) =>
-      val afterSql = log.predicates(v)
-        .foldLeft(d)((dd, p) => dd.where(not(foldRenamed(p))))
+      val afterSql = log.predicates(v).foldLeft(d)((dd, p) =>
+        dd.where(not(renamedPredicate(df.sparkSession, p, renames))))
       val kds = log.keyDirs(v)
-      val afterKeys = if (kds.nonEmpty) {
+      if (kds.nonEmpty) {
         val keys = TableSink.applyRenames(
           readSidecars(df.sparkSession, kds), renames)
         // anti-join on the key list's own columns; Spark broadcasts a
         // small erasure list and shuffle-joins a huge one (AQE decides)
         afterSql.join(keys, keys.columns.toSeq, "left_anti")
       } else afterSql
-      val pds = log.posDirs(v)
-      if (pds.nonEmpty) {
-        val pos = readPositions(df.sparkSession, pds)
-        // a position list is bounded by the matched-row count at commit
-        // time — small lists broadcast, huge ones shuffle (AQE decides)
-        afterKeys.join(pos, Seq("__graft_file", "__graft_pos"), "left_anti")
-      } else afterKeys
     }
     if ((anyPos || hasCaptured) && !keepPosCols)
       folded.drop("__graft_file", "__graft_pos")
     else folded
   }
+
+  /** Delete predicate `p` with its column references folded through
+    * `renames`: a sidecar records names AS OF ITS COMMIT, and on the old
+    * name it would resolve beneath the rename projection, where
+    * post-rename files read NULL and `not(NULL)` drops their rows. (The
+    * ALTER door refuses renaming onto a superseded physical name.) */
+  private def renamedPredicate(spark: SparkSession, p: String,
+      renames: Map[String, String]): Column =
+    if (renames.isEmpty) expr(p)
+    else {
+      import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+      org.apache.spark.sql.graft.Bridge.column(org.apache.spark.sql.graft
+        .Bridge.parseExpression(spark, p).transform {
+          case a: UnresolvedAttribute if a.nameParts.lengthIs == 1 &&
+              renames.keys.exists(_.equalsIgnoreCase(a.nameParts.head)) =>
+            UnresolvedAttribute(Seq(renames.collectFirst {
+              case (o, n) if o.equalsIgnoreCase(a.nameParts.head) => n
+            }.get))
+        })
+    }
+
+  /** True for the rows `dvs` deletes, read off the captured coordinates. */
+  private def deletedBy(spark: SparkSession,
+      dvs: DeletionVectors.Vectors): Column =
+    DeletionVectors.deleted(spark, dvs, col("__graft_file"), col("__graft_pos"))
 
   /** Merge-on-read POSITION delete: resolve `conditionSql` ONCE, at commit
     * time, to the (file, row-ordinal) pairs it matches at the current head
@@ -1689,12 +1667,14 @@ final class TableSink(val config: SinkConfig) {
     * [[deleteWhere]]: the predicate is evaluated against the snapshot the
     * delete commits on, so rows appended LATER that happen to match the
     * condition are untouched — "delete these physical rows", not "filter
-    * all rows forever". Readers subtract with an anti-join on
-    * (`_metadata.file_path`, `_metadata.row_index`) — data files are
-    * immutable, so the physical coordinates stay valid until a rewrite
-    * materializes everything ([[compact]], which clears the sidecars).
+    * all rows forever". The positions commit as deletion vectors
+    * ([[DeletionVectors]]: one bitmap of row ordinals per data file);
+    * readers drop the rows with one filter on (`_metadata.file_path`,
+    * `_metadata.row_index`) — data files are immutable, so the physical
+    * coordinates stay valid until a rewrite materializes everything
+    * ([[compact]], which clears the sidecars).
     *
-    * Position lists store the scan-reported file path verbatim (the same
+    * Vectors key the scan-reported file path verbatim (the same
     * percent-encoded URI both commit and read observe) — normalizing it
     * would re-open the encoding mismatch [[compact]]'s sizing comment
     * documents. Parquet only: `_metadata.row_index` is a parquet reader
@@ -1703,18 +1683,13 @@ final class TableSink(val config: SinkConfig) {
     * before the commit shows the rows). Returns the committed version. */
   def deletePositions(spark: SparkSession, conditionSql: String): Int = {
     requireRowIndex("deletePositions")
-    commitDeleteSidecar("deletePositions", TableLog.Sidecar.Positions,
-        "position lists") { (log, sidecar) =>
-      val head = log.versions.last
+    commitDeleteSidecar("deletePositions", TableLog.Sidecar.DeletionVectors,
+        "deletion vectors") { (log, sidecar) =>
       // resolve against the head SNAPSHOT'S semantics (earlier deletes of
-      // any flavor already applied) so a row deleted twice costs one entry
-      applyDeletes(log,
-        readFiles(log, spark, log.files(head), capturePos = true), head,
-          keepPosCols = true)
-        .where(expr(conditionSql))
-        .select(col("__graft_file").as("file_path"),
-          col("__graft_pos").as("row_pos"))
-        .write.mode("overwrite").parquet(sidecar.toString)
+      // any flavor already applied)
+      WarehouseIO.writeString(sidecar, DeletionVectors.render(
+        DeletionVectors.collect(readHeadWithPos(spark, log)
+          .where(expr(conditionSql)).select("__graft_file", "__graft_pos"))))
     }
   }
 
@@ -1794,7 +1769,7 @@ final class TableSink(val config: SinkConfig) {
   }
 
   /** True when a merge-on-read op can serve this table, from ONE view of
-    * its log: versioned, parquet (position lists need the reader's
+    * its log: versioned, parquet (deletion vectors need the reader's
     * `_metadata.row_index`), no live branch, and — when the op `needsHead`
     * — a committed snapshot. The copy-on-write twins serve the rest. */
   private[graft] def morServable(needsHead: Boolean,
@@ -1804,7 +1779,7 @@ final class TableSink(val config: SinkConfig) {
       l.branches.isEmpty && (!needsHead || l.head.nonEmpty)
     }
 
-  /** Position lists need the parquet reader's `_metadata.row_index`. */
+  /** Deletion vectors need the parquet reader's `_metadata.row_index`. */
   private def requireRowIndex(op: String): Unit =
     require(config.fileFormat == "parquet",
       s"$op needs the parquet reader's _metadata.row_index; " +
@@ -1842,7 +1817,8 @@ final class TableSink(val config: SinkConfig) {
     * `rewrite_position_delete_files` maintenance analogue, extended to
     * all three sidecar flavors: every live delete sidecar is merged into
     * a single new commit (one OR-joined predicate, one erasure list, one
-    * position list) and older history is dropped, WITHOUT rewriting any
+    * set of deletion vectors, ORed on the driver) and older history is
+    * dropped, WITHOUT rewriting any
     * data file. A table that has accumulated N delete commits pays N
     * predicate evaluations + N anti-joins on every read; after
     * consolidation it pays at most one of each, and [[compact]]'s full
@@ -1903,8 +1879,8 @@ final class TableSink(val config: SinkConfig) {
     // is unreadable
     val preds = vs.flatMap(log.predicates)
     val keyDirs = vs.flatMap(log.keyDirs)
-    val posDirs = vs.flatMap(log.posDirs)
-    require(preds.nonEmpty || keyDirs.nonEmpty || posDirs.nonEmpty,
+    val dvs = vs.flatMap(log.deletionVectors)
+    require(preds.nonEmpty || keyDirs.nonEmpty || dvs.nonEmpty,
       "no delete sidecars to consolidate")
     if (vs.size == 1) return head // already consolidated: no-op
     val keySchemas =
@@ -1920,22 +1896,19 @@ final class TableSink(val config: SinkConfig) {
     // flavors themselves; the generation flip at the end makes any
     // concurrent stream refuse loudly regardless)
     import TableLog.Sidecar
-    def merged(kind: Sidecar, parts: Seq[Any])(write: String => Unit) =
-      if (parts.isEmpty) None
-      else {
-        val n = TableLog.newSidecarName(kind)
-        write(logFile(n).toString)
-        Some(kind -> n)
-      }
+    def merged(kind: Sidecar, any: Boolean)(
+        write: org.apache.hadoop.fs.Path => Unit) = Option.when(any) {
+      val n = TableLog.newSidecarName(kind)
+      write(logFile(n))
+      kind -> n
+    }
     val refs = Seq(
-      merged(Sidecar.Positions, posDirs)(readSidecars(spark, posDirs)
-        .distinct().write.mode("overwrite").parquet(_)),
-      merged(Sidecar.Keys, keyDirs)(readSidecars(spark, keyDirs)
-        .distinct().write.mode("overwrite").parquet(_)),
-      merged(Sidecar.Predicate, preds)(p => WarehouseIO.writeString(
-        new org.apache.hadoop.fs.Path(p),
-        preds.map(q => s"($q)").mkString(" OR ")))
-    ).flatten
+      merged(Sidecar.DeletionVectors, dvs.nonEmpty)(WarehouseIO.writeString(_,
+        DeletionVectors.render(DeletionVectors.union(dvs)))),
+      merged(Sidecar.Keys, keyDirs.nonEmpty)(p => readSidecars(spark, keyDirs)
+        .distinct().write.mode("overwrite").parquet(p.toString)),
+      merged(Sidecar.Predicate, preds.nonEmpty)(WarehouseIO.writeString(_,
+        preds.map(q => s"($q)").mkString(" OR ")))).flatten
     def dropRefs(): Unit = refs.foreach { case (_, n) =>
       WarehouseIO.delete(logFile(n), recursive = true) }
     val vNext =
@@ -1972,11 +1945,8 @@ final class TableSink(val config: SinkConfig) {
     // the merged sidecars; surviving old versions still see every
     // sidecar ≤ themselves). A crash between the loops strands orphaned
     // sidecar files in _graft_log — unreachable debris, never consulted
-    // (applyDeletes only folds sidecars of LISTED versions).
-    // snapshot-referenced sidecar names must be captured while the
-    // version files still exist (a RE-captured view: a concurrent
-    // append that won a version between our read and our claim drops
-    // with the rest)
+    // (applyDeletes only folds sidecars of LISTED versions). Sidecar
+    // names are captured while the version files still exist.
     val belowLog = openLog()
     val below = belowLog.versions.filter(_ < vNext)
     val refsBelow = below.flatMap(belowLog.refNames)
@@ -2022,7 +1992,7 @@ final class TableSink(val config: SinkConfig) {
     * [[readChanges]] is the file-level incremental read (appends only),
     * the changelog also replays merge-on-read DELETE commits — predicate
     * sidecars ([[deleteWhere]]), erasure key lists ([[deleteKeys]]), and
-    * position lists ([[deletePositions]]) — each evaluated against its
+    * deletion vectors ([[deletePositions]]) — each evaluated against its
     * PRE-commit snapshot's semantics: exactly the rows that commit
     * removed from readers. Inserts are filtered by the sidecars in force
     * at their commit (a row appended under an older still-live predicate
@@ -2031,11 +2001,10 @@ final class TableSink(val config: SinkConfig) {
     * insert and its delete) — the standard changelog contract.
     *
     * Scale shape: inserts are manifest file-set diffs (no rescan of
-    * history); each delete commit replays as ONE filtered or
-    * semi-joined scan of its pre-commit snapshot — O(changed rows +
-    * one scan per delete commit), never a diff of materialized table
-    * states. Rewriting ops expire history, so a changelog range only
-    * ever spans append and merge-on-read commits. */
+    * history); a run of delete commits replays as ONE marked scan of its
+    * pre-commit snapshot, never a diff of materialized table states.
+    * Rewriting ops expire history, so a changelog range only ever spans
+    * append and merge-on-read commits. */
   def readChangelog(spark: SparkSession, fromVersion: Int,
       toVersion: Int): DataFrame =
     readChangelog(openLog(), spark, fromVersion, toVersion)
@@ -2051,67 +2020,57 @@ final class TableSink(val config: SinkConfig) {
     case class VInfo(v: Int, prev: Option[Int], files: Seq[String],
         added: Seq[String], preds: Seq[String],
         keyDirs: Seq[org.apache.hadoop.fs.Path],
-        posDirs: Seq[org.apache.hadoop.fs.Path]) {
+        dvs: Option[DeletionVectors.Vectors]) {
       def hasDel: Boolean =
-        preds.nonEmpty || keyDirs.nonEmpty || posDirs.nonEmpty
-      // exactly one sidecar flavor — the shape every public delete op
-      // commits; the fused run replay relies on it (see below)
-      def oneFlavor: Boolean =
-        Seq(preds.nonEmpty, keyDirs.nonEmpty, posDirs.nonEmpty)
-          .count(identity) == 1
+        preds.nonEmpty || keyDirs.nonEmpty || dvs.nonEmpty
     }
     val infos = rng.map { v =>
       val prev = versions.filter(_ < v).lastOption
       val prevSet = prev.map(log.files(_).toSet).getOrElse(Set.empty)
       val files = log.files(v)
       VInfo(v, prev, files, files.filterNot(prevSet),
-        log.predicates(v), log.keyDirs(v), log.posDirs(v))
+        log.predicates(v), log.keyDirs(v), log.deletionVectors(v))
     }
-    // OPTIMIZATION r15 (guide §2.4 remove scans/shuffles outright): a run
-    // of CONSECUTIVE merge-on-read delete commits shares one immutable
-    // data-file set, so their replays fold into ONE pre-state scan — each
-    // row's `_change_version` is the FIRST run version whose sidecar
-    // matches it (exactly the old per-version semantics: version v's
+    // A run of CONSECUTIVE merge-on-read delete commits shares one
+    // immutable data-file set, so their replays fold into ONE pre-state
+    // scan — each row's `_change_version` is the FIRST run version whose
+    // sidecars match it (exactly the per-version semantics: version v's
     // pre-state is the run head's pre-state minus rows deleted earlier in
     // the run, which first-match reproduces because a row matching v3 is
-    // claimed by v3 and never reaches v4's pre-state). Key/position lists
-    // become left-join markers on DISTINCT sidecar rows — multiplicity-
-    // and NULL-identical to the old left_semi. Eligibility is exactly
-    // "nothing else moved": no files added, same manifest set, the
-    // contiguous predecessor, and one sidecar flavor per commit (every
-    // public delete op commits one flavor; a mixed commit falls back to
-    // the per-version path, as does any singleton run — their plans are
-    // unchanged). Measured: each fixture delete-pair replay paid two full
-    // pre-state scans (mv_refresh stage dump: 200k rows in for a 100k
-    // table); the fold halves that.
-    def fusedDeleteRun(run: Seq[VInfo]): DataFrame = {
-      val first = run.head
-      val pv = first.prev.get
-      val anyPos = run.exists(_.posDirs.nonEmpty)
+    // claimed by v3 and never reaches v4's pre-state). A version's marker
+    // ORs its flavors: its predicates, a left-join marker on its DISTINCT
+    // key-list rows (multiplicity- and NULL-identical to a left_semi) and
+    // its deletion vectors' filter expression. A run extends while
+    // nothing else moved: no files added, same manifest set, the
+    // contiguous predecessor; any other delete commit (one that also
+    // adds files) is a run of one. The pre-state's physical coordinates
+    // are kept ONLY when deletion vectors need them (an unconditional
+    // capture makes every scan materialize `_metadata.row_index`, 3.8x
+    // on q_time_travel).
+    def deleteRun(run: Seq[VInfo]): DataFrame = {
+      val pv = run.head.prev.get
       val base = applyDeletes(log,
         readFiles(log, spark, log.files(pv), capturePos = true), pv,
-        keepPosCols = anyPos)
+        keepPosCols = run.exists(_.dvs.nonEmpty))
       val outCols = base.columns
         .filterNot(c => c == "__graft_file" || c == "__graft_pos")
+      val renames = renameMap
       var b = base
       val markers = run.map { vi =>
         val m = s"__graft_del_${vi.v}"
-        if (vi.preds.nonEmpty)
-          b = b.withColumn(m, vi.preds
-            .map(p => coalesce(expr(p), lit(false))).reduce(_ || _))
-        else if (vi.keyDirs.nonEmpty) {
+        val byKeys = if (vi.keyDirs.isEmpty) None else {
           val keys = readSidecars(spark, vi.keyDirs).distinct()
           b = b.join(keys.withColumn(m, lit(true)),
             keys.columns.toSeq, "left_outer")
-        } else {
-          val pos = readPositions(spark, vi.posDirs).distinct()
-          b = b.join(pos.withColumn(m, lit(true)),
-            Seq("__graft_file", "__graft_pos"), "left_outer")
+          Some(coalesce(col(m), lit(false)))
         }
+        b = b.withColumn(m, (vi.preds.map(p =>
+          coalesce(renamedPredicate(spark, p, renames), lit(false))) ++
+          byKeys ++ vi.dvs.map(deletedBy(spark, _))).reduce(_ || _))
         m
       }
       val firstMatch = run.zip(markers).map { case (vi, m) =>
-        (coalesce(col(m), lit(false)), lit(vi.v.toLong))
+        (col(m), lit(vi.v.toLong))
       }.foldLeft(Option.empty[Column]) {
         case (None, (c, v)) => Some(when(c, v))
         case (Some(acc), (c, v)) => Some(acc.when(c, v))
@@ -2121,43 +2080,6 @@ final class TableSink(val config: SinkConfig) {
         .withColumn("_change_type", lit("delete"))
         .select((outCols.toSeq :+ "_change_type" :+ "_change_version")
           .map(col): _*)
-    }
-    // the pre-r15 per-version replay, kept verbatim for singleton runs
-    // and for any shape the fused path declines (mixed-flavor commits,
-    // commits that also add files): ONE filtered or semi-joined scan of
-    // the version's pre-commit snapshot. The pre-state's physical
-    // coordinates are kept ONLY when a position list actually needs
-    // replaying against them (unconditional keepPosCols forced per-row
-    // `_metadata.row_index` materialization — the 3.8x row_index tax
-    // round 13 measured on q_time_travel — for sidecar flavors that are
-    // not even present).
-    def singleDeleteReplay(in: VInfo): DataFrame = {
-      val pv = in.prev.get
-      val base = applyDeletes(log,
-        readFiles(log, spark, log.files(pv), capturePos = true), pv,
-        keepPosCols = in.posDirs.nonEmpty)
-      val byPred =
-        if (in.preds.isEmpty) None
-        else Some(base.where(in.preds
-          .map(p => coalesce(expr(p), lit(false)))
-          .reduce(_ || _)))
-      val byKeys =
-        if (in.keyDirs.isEmpty) None
-        else {
-          val keys = readSidecars(spark, in.keyDirs)
-          Some(base.join(keys, keys.columns.toSeq, "left_semi"))
-        }
-      val byPos =
-        if (in.posDirs.isEmpty) None
-        else {
-          val pos = readPositions(spark, in.posDirs)
-          Some(base.join(pos,
-            Seq("__graft_file", "__graft_pos"), "left_semi"))
-        }
-      Seq(byPred, byKeys, byPos).flatten.reduce(_ unionByName _)
-        .drop("__graft_file", "__graft_pos")
-        .withColumn("_change_type", lit("delete"))
-        .withColumn("_change_version", lit(in.v.toLong))
     }
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var i = 0
@@ -2174,20 +2096,14 @@ final class TableSink(val config: SinkConfig) {
             "pre-commit snapshot was expired; start the range after " +
             s"v${in.v} or retain more history (expireSnapshotsKeepLast)")
         var j = i
-        if (in.added.isEmpty && in.oneFlavor) {
+        if (in.added.isEmpty)
           while (j + 1 < infos.length && {
             val nx = infos(j + 1)
-            nx.hasDel && nx.oneFlavor && nx.added.isEmpty &&
+            nx.hasDel && nx.added.isEmpty &&
               nx.prev.contains(infos(j).v) && nx.files == in.files
           }) j += 1
-        }
-        if (j > i) {
-          parts += fusedDeleteRun(infos.slice(i, j + 1))
-          i = j + 1
-        } else {
-          parts += singleDeleteReplay(in)
-          i += 1
-        }
+        parts += deleteRun(infos.slice(i, j + 1))
+        i = j + 1
       } else i += 1
     }
     if (parts.isEmpty) {
@@ -2548,7 +2464,7 @@ final class TableSink(val config: SinkConfig) {
       else dest.upsertMor(ins, keyCols)
     }
     // bounded read cost: sidecars stack one per apply (delete key lists
-    // AND the MoR upsert's position lists) — fold past the replica
+    // AND the MoR upsert's deletion vectors) — fold past the replica
     // config's threshold (amortized, like the manifest merge). The
     // replication key set is uniform, so the merged list always
     // anti-joins cleanly.
@@ -2781,11 +2697,11 @@ final class TableSink(val config: SinkConfig) {
     * LIVE merge-on-read delete sidecar — `(version, flavor, n_entries,
     * detail)` where flavor ∈ 'predicate' | 'keys' | 'positions',
     * `n_entries` is the sidecar's entry count (1 for a predicate; list
-    * rows otherwise) and `detail` names the predicate text or the key
-    * columns. The maintenance dashboard behind
+    * rows or deleted positions otherwise) and `detail` names the
+    * predicate text or the key columns. The maintenance dashboard behind
     * [[consolidateDeletes]]/[[compact]] decisions: read amplification is
-    * proportional to the rows here. Cost: driver manifest metadata plus
-    * one tiny parquet count per list sidecar. */
+    * proportional to the rows here. Cost: driver manifest metadata and
+    * deletion vectors, plus one tiny parquet count per key list. */
   def metaDeletes(spark: SparkSession): DataFrame = {
     import spark.implicits._
     require(config.versioned,
@@ -2793,24 +2709,13 @@ final class TableSink(val config: SinkConfig) {
     val log = openLog()
     val rows = log.versions.flatMap { v =>
       val preds = log.predicates(v)
-      val pred =
-        if (preds.isEmpty) None
-        else Some((v.toLong, "predicate", preds.size.toLong,
-          preds.mkString(" OR ")))
+      val pred = Option.when(preds.nonEmpty)((v.toLong, "predicate",
+        preds.size.toLong, preds.mkString(" OR ")))
       val kds = log.keyDirs(v)
-      val keys =
-        if (kds.isEmpty) None
-        else {
-          val k = readSidecars(spark, kds)
-          Some((v.toLong, "keys", k.count(), k.columns.mkString(",")))
-        }
-      val pos = {
-        val pds = log.posDirs(v)
-        if (pds.isEmpty) None
-        else Some((v.toLong, "positions",
-          readSidecars(spark, pds).count(),
-          "file_path,row_pos"))
-      }
+      val keys = Option.when(kds.nonEmpty)(readSidecars(spark, kds)).map(k =>
+        (v.toLong, "keys", k.count(), k.columns.mkString(",")))
+      val pos = log.deletionVectors(v).map(dv => (v.toLong, "positions",
+        DeletionVectors.cardinality(dv), "file_path,row_pos"))
       Seq(pred, keys, pos).flatten
     }
     rows.toDF("version", "flavor", "n_entries", "detail")
@@ -2869,9 +2774,9 @@ final class TableSink(val config: SinkConfig) {
       WarehouseIO.delete(new HPath(staging, n), recursive = true))
     // crashed MoR mutations and delete commits: a sidecar written
     // before a claim that never landed strands an unreferenced
-    // `pos-*`/`keys-*`/`del-*` entry in the log — never consulted (only
+    // `dv-*`/`keys-*`/`del-*` entry in the log — never consulted (only
     // snapshot-referenced sidecars of CLAIMED snapshots fold), pure
-    // debris. Referenced = every live snapshot's #pos/#keys/#del line.
+    // debris. Referenced = every live snapshot's #dv/#keys/#del line.
     val referencedSc = log.versions.flatMap(log.refNames).toSet
     val deadSc = log.sidecarNames.filterNot(referencedSc)
       .filter(n => now - log.mtimeOf(n) >= graceMs)
@@ -3042,7 +2947,7 @@ final class TableSink(val config: SinkConfig) {
     * filtered the way it WILL be once published — predicate and
     * key-list sidecars are row-scoped on this engine (a later append
     * matching a live predicate is subtracted on main too), while
-    * position sidecars reference only base-file coordinates, so staged
+    * deletion vectors reference only base-file coordinates, so staged
     * rows pass them untouched. Sidecar commits are refused while
     * branches live, so the base's sidecar set is frozen and the view is
     * stable for the audit's lifetime. */
@@ -3054,7 +2959,7 @@ final class TableSink(val config: SinkConfig) {
     if (log.pendingVersions(base).isEmpty) readFiles(log, spark, head)
     // capturePos, like every other applyDeletes call site (round-14): a
     // branch over a mixed-spine or clone manifest is a multi-relation
-    // union, where a position sidecar's `_metadata` fold is unresolvable
+    // union, where a deletion vector's `_metadata` fold is unresolvable
     // unless captured per relation
     else applyDeletes(log, readFiles(log, spark, head, capturePos = true),
       base)
@@ -3334,7 +3239,7 @@ final class TableSink(val config: SinkConfig) {
     * position-deletes the head rows whose key tuple appears in `df` and
     * appends `df`'s rows — no partition rewrite however big the
     * replica, no history expiry (time travel across applies comes
-    * free). Same atomic `#pos`-in-snapshot shape as [[updateMor]], same
+    * free). Same atomic `#dv`-in-snapshot shape as [[updateMor]], same
     * lost-race re-resolution, same key contract as [[upsert]] (keys
     * unique within the batch, non-null — ENFORCED since round-13, one
     * O(batch) pass), then one bounded aggregate for the batch's key
@@ -3358,7 +3263,7 @@ final class TableSink(val config: SinkConfig) {
     if (provenBounds.isEmpty) requireKeyedBatch(df, keyCols, "upsertMor")
     recoverSwap()
     require(config.versioned,
-      "merge-on-read upsert needs versioned=true (position sidecars are " +
+      "merge-on-read upsert needs versioned=true (deletion vectors are " +
         "commit metadata); use upsert() for copy-on-write")
     requireRowIndex("upsertMor")
     val spark = df.sparkSession
@@ -3372,16 +3277,11 @@ final class TableSink(val config: SinkConfig) {
     // the batch's key tuples distinct: the semi-join's build side and the
     // envelope aggregate need no distinct of their own
     val incomingKeys = incoming.select(keyCols.map(col): _*)
-    // OPTIMIZATION r15 (guide §3.2 / §6): the position resolve only needs
-    // head rows whose key COULD match a batch key, so bound the scan by
-    // the batch's per-column key envelope (two values per key column)
-    // pushed as a range predicate into the head scan: parquet row-group
-    // stats then skip everything outside the envelope, instead of
-    // re-reading the whole replica per batch. Conservative superset —
-    // the semi-join still decides exact membership; non-orderable key
-    // types simply skip their bound. Batch keys are non-null (enforced
-    // by requireKeyedBatch above, or proved by the caller), so dropping
-    // null-key head rows is sound: they can never match the semi-join.
+    // the position resolve only needs head rows whose key COULD match a
+    // batch key: the batch's per-column key envelope, pushed into the
+    // head scan, lets parquet row-group stats skip the rest of the
+    // replica. A superset — the semi-join decides membership; batch keys
+    // are non-null, so dropping null-key head rows is sound.
     val bounds = provenBounds.getOrElse {
       val boundable = boundableKeys(incoming.schema, keyCols)
       if (boundable.isEmpty) Nil
@@ -3403,12 +3303,11 @@ final class TableSink(val config: SinkConfig) {
       requireAlignedBatch(incoming.columns.toSeq,
         base.columns.toSeq.filterNot(c =>
           c == "__graft_file" || c == "__graft_pos"), "upsertMor")
-      // the position list is evaluated ONCE, by commitMorMutation's
-      // write: it describes exactly the head rows this commit's appends
+      // the positions are evaluated ONCE, by commitMorMutation's
+      // vectors: they describe exactly the head rows this commit's appends
       // replace (the appends are the batch itself, not derived from it)
       val matched = base.join(incomingKeys, keyCols, "left_semi")
-        .select(col("__graft_file").as("file_path"),
-          col("__graft_pos").as("row_pos"))
+        .select("__graft_file", "__graft_pos")
       // select resolves case-insensitively (a batch may legally carry
       // case-different names — round-14); toDF pins the TABLE's
       // canonical names on the written files either way
@@ -3424,7 +3323,7 @@ final class TableSink(val config: SinkConfig) {
     * the given log view and commits with ONE claim
     * ([[commitMorMutation]]); a lost version race re-runs it against a
     * fresh view, at most 5 attempts in all — first-committer-wins, never
-    * a position list resolved against one head landing on another. */
+    * positions resolved against one head landing on another. */
   private def retryLostRace[T](log: TableLog, attempt: Int = 1)(
       mutation: TableLog => T): T =
     try mutation(log)
@@ -3711,8 +3610,10 @@ final class TableSink(val config: SinkConfig) {
     (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
       .save(tmp.toString)
     expectRows.foreach { expect =>
-      val rewritten = finalRows.sparkSession.read.format(config.fileFormat)
-        .load(tmp.toString).count()
+      // the written files' footers count the rows, with no Spark job (a
+      // scan of the dot-prefixed scratch directory is a hidden path)
+      val rewritten = WarehouseIO.dataFileStatuses(tmp).map { case (_, st) =>
+        FileFooters.rowCount(st, config.fileFormat) }.sum
       if (rewritten != expect) {
         WarehouseIO.delete(tmp, recursive = true)
         throw new IllegalStateException(
@@ -4056,20 +3957,8 @@ final class TableSink(val config: SinkConfig) {
     * matched rows' deletes plus the replacements' inserts at one
     * version, and [[compact]] materializes later.
     *
-    * ATOMICITY: the sidecar is referenced INSIDE the claimed snapshot
-    * (a `#pos <dir>` metadata line, the streaming `#txn` pattern) —
-    * writing it after the claim, the [[deletePositions]] shape, would
-    * open a window where a reader sees the replacement rows AND the
-    * originals. For pure deletes that window legally shows the
-    * PRE-delete state; for an update it would show duplicates, which no
-    * snapshot ever contained.
-    *
-    * CONCURRENCY: the commit claims with `maxAttempts = 1`; losing the
-    * version race re-resolves the positions against the new head and
-    * retries (bounded) — first-committer-wins snapshot isolation, never
-    * a position list resolved against one head landing on another.
-    * A crash between sidecar/staging and the claim strands unreferenced
-    * debris only ([[removeOrphans]]' contract).
+    * Atomic and first-committer-wins through [[commitMorMutation]]: a
+    * lost version race re-resolves the positions against the new head.
     *
     * Unlike [[update]], SET may touch partition-deriving columns: the
     * replacement rows re-derive their partitions and land wherever they
@@ -4083,15 +3972,12 @@ final class TableSink(val config: SinkConfig) {
       "updateMor assigns a column more than once: " +
         set.map(_._1).diff(set.map(_._1).distinct).distinct.mkString(", "))
     requireNoStreamingLog()
-    // same branch contract as the delete flavors: a NEW sidecar while a
-    // branch is live would change rows the branch's audit view reads
-    // through (its base sidecar set is frozen at creation). Tags are
-    // fine — sidecars are version-scoped, a tagged snapshot's semantics
-    // never change.
+    // the delete flavors' branch contract: a branch's audit view reads
+    // through the sidecar set frozen at its creation (tags are fine)
     requireNoLiveBranch("updateMor")
     recoverSwap()
     require(config.versioned,
-      "merge-on-read update needs versioned=true (position sidecars are " +
+      "merge-on-read update needs versioned=true (deletion vectors are " +
         "commit metadata); use update() for copy-on-write")
     requireRowIndex("updateMor")
     val log0 = openLog() // after recoverSwap: the head the first attempt uses
@@ -4105,7 +3991,7 @@ final class TableSink(val config: SinkConfig) {
       s"updateMor SET references unknown columns: ${missing.mkString(", ")}")
     retryLostRace(log0) { log =>
       val base = readHeadWithPos(spark, log)
-      // pin matched rows ONCE: the position list and the replacement
+      // pin matched rows ONCE: the deletion vectors and the replacement
       // rows must describe the same physical rows
       val matched = base.where(cond).localCheckpoint()
       val n = matched.count()
@@ -4118,10 +4004,8 @@ final class TableSink(val config: SinkConfig) {
               case None => col(f.name)
             }
           }
-        commitMorMutation(spark,
-          matched.select(col("__graft_file").as("file_path"),
-            col("__graft_pos").as("row_pos")),
-          matched.select(dataCols: _*))
+        commitMorMutation(spark, matched.select("__graft_file",
+          "__graft_pos"), matched.select(dataCols: _*))
       }
       n
     }
@@ -4230,7 +4114,7 @@ final class TableSink(val config: SinkConfig) {
 
   /** The head snapshot's semantic rows WITH their physical coordinates
     * (`__graft_file`, `__graft_pos`) — the target frame a merge-on-read
-    * mutation resolves its position list against. */
+    * mutation resolves its deletion vectors against. */
   private[graft] def readHeadWithPos(spark: SparkSession,
       log: TableLog = openLog()): DataFrame = {
     val head = log.versions.last
@@ -4240,64 +4124,42 @@ final class TableSink(val config: SinkConfig) {
   }
 
   /** ONE atomic merge-on-read MUTATION commit — the shared primitive
-    * under [[updateMor]] and the SQL MERGE mor mode: `positions`
-    * (`file_path`, `row_pos`) subtract and `replacement` rows append in
-    * the SAME claimed snapshot (the sidecar is `#pos`-referenced inside
-    * it — a reader can never see old and new copies together). SINGLE
-    * claim attempt by design: the caller resolved the positions against
-    * the current head, so a lost version race must re-resolve, not
-    * retry blindly — [[updateMor]] loops with re-resolution; the SQL
-    * MERGE surfaces the conflict (its join is pinned to the
-    * analysis-time file set and cannot see the interloper's rows).
+    * under [[updateMor]], [[upsertMor]] and the SQL MERGE mor mode:
+    * `positions` (file path, row ordinal) subtract and `replacement` rows
+    * append in the SAME claimed snapshot, whose `#dv` line references the
+    * deletion vectors — a reader never sees old and new copies together.
+    * SINGLE claim attempt: the caller resolved the positions against the
+    * current head, so a lost version race must re-resolve, not retry
+    * blindly ([[retryLostRace]]; the SQL MERGE surfaces the conflict).
     * Replacement rows re-derive partitions and pass the staged
-    * CHECK-constraint gate; any failure retracts the sidecar and the
-    * staged files (nothing referenced them yet).
-    *
-    * An INSERT-ONLY mutation (no matched target rows — an insert-heavy
-    * MERGE, or an [[upsertMor]] batch of all-new keys, the steady state
-    * of a CDC replica ingesting fresh entities) commits a PLAIN append
-    * instead: an empty `#pos` sidecar carries no delete semantics but
-    * would leave the head with a pending delete forever — every later
-    * read folds a useless empty anti-join, SQL reads degrade to the projected
-    * V1 bridge, and consolidation can never clear it. With nothing
-    * pinned to the analysis-time head, a pure append also commutes with
-    * concurrent commits, so it takes the normal retrying claim rather
-    * than this primitive's single-attempt contract.
-    *
-    * `positions` is evaluated exactly once, by the sidecar write, and
-    * whether it was empty comes from the written files' footers (the
-    * row counts of the statuses one listing returns) — no pin and no
-    * emptiness probe. An empty sidecar is deleted before the commit; a
-    * crash between its write and that delete leaves an unreferenced
-    * `pos-*` directory in the log, which no snapshot folds and
-    * [[removeOrphans]] (or [[vacuum]]) reclaims once it ages past the
-    * grace window. A caller whose replacement rows derive from the same
-    * lineage as the positions pins that lineage first ([[updateMor]],
-    * the SQL MERGE), so both describe the same rows. */
+    * CHECK-constraint gate. `positions` is evaluated once: its tasks build
+    * the bitmaps ([[DeletionVectors.collect]]) and the driver writes one
+    * `dv-*` file. With no matched row the commit is a PLAIN retrying
+    * append (empty vectors would leave a pending delete that consolidation
+    * never clears). A failure before the claim deletes the vectors and
+    * the staged files; a crash there strands them unreferenced, for
+    * [[removeOrphans]]. A caller whose replacement rows derive from the
+    * positions' lineage pins it first, so both describe the same rows. */
   private[graft] def commitMorMutation(spark: SparkSession,
       positions: DataFrame, replacement: DataFrame): Int = {
-    val sidecar = TableLog.newSidecarName(TableLog.Sidecar.Positions)
-    val sidecarDir = logFile(sidecar)
+    val sidecar = TableLog.newSidecarName(TableLog.Sidecar.DeletionVectors)
+    val sidecarFile = logFile(sidecar)
     var added: Seq[String] = Nil
     try {
-      positions.write.mode("overwrite").parquet(sidecarDir.toString)
-      val nonEmpty = WarehouseIO.dataFileStatuses(sidecarDir).exists {
-        case (_, st) => FileFooters.rowCount(st, "parquet") > 0L
+      val dvs = DeletionVectors.collect(positions)
+      val ref = Option.when(dvs.nonEmpty) {
+        WarehouseIO.writeString(sidecarFile, DeletionVectors.render(dvs))
+        TableLog.Sidecar.DeletionVectors -> sidecar
       }
-      val sidecarRef =
-        if (nonEmpty) Seq(TableLog.Sidecar.Positions -> sidecar)
-        else { WarehouseIO.delete(sidecarDir, recursive = true); Nil }
       val prepared = clusterForWrite(withDerived(replacement))
       added = stagedWrite(prepared) // constraint gate runs in staging
-      commitAppendedFiles(added,
-        maxAttempts = if (sidecarRef.nonEmpty) 1 else 20,
+      commitAppendedFiles(added, maxAttempts = if (ref.nonEmpty) 1 else 20,
         stats = manifestStatsFor(spark, added, prepared.schema),
-        sidecars = sidecarRef)
+        sidecars = ref.toSeq)
     } catch {
       case e: Throwable =>
-        // the claim never landed: this attempt's sidecar and staged
-        // files are unreferenced — drop them before propagating
-        WarehouseIO.delete(sidecarDir, recursive = true)
+        // the claim never landed: drop this attempt's unreferenced files
+        WarehouseIO.delete(sidecarFile)
         added.foreach(rel => WarehouseIO.delete(
           new org.apache.hadoop.fs.Path(config.tablePath, rel)))
         throw e
@@ -4845,8 +4707,8 @@ final class TableSink(val config: SinkConfig) {
     // VERSIONED tables (round-13): the raw directory listing would
     // include unclaimed staged files and ignore merge-on-read sidecars
     // (deleted rows resurrected silently). The head manifest pins the
-    // claimed file set; pending sidecars refuse precisely — a position
-    // list cannot fold across this surface's generation union (it needs
+    // claimed file set; pending sidecars refuse precisely — deletion
+    // vectors cannot fold across this surface's generation union (they need
     // per-scan file metadata), and compact() materializes both the
     // deletes and the spec migration. Clones materialize first for the
     // same reason their other rewrites do.

@@ -311,10 +311,6 @@ private[graft] object WarehouseIO {
     catch { case _: java.io.FileNotFoundException => None }
   }
 
-  /** Immediate child names of `dir` (empty when absent). */
-  def childNames(dir: HPath): Seq[String] =
-    listing(dir).getOrElse(Nil).map(_.getPath.getName)
-
   /** Immediate child DIRECTORY names of `dir` (empty when absent) — one
     * listing, no per-child stat round-trips. */
   def childDirNames(dir: HPath): Seq[String] =

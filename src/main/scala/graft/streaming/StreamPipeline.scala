@@ -735,13 +735,6 @@ object StreamPipeline {
     spark.table(name).orderBy($"cohort_week")
   }
 
-  /** Table-as-stream-source end-to-end ([[TableSink.readStream]] —
-    * Iceberg's streaming-read contract): the fixture commits to a
-    * versioned partitioned table in two waves, a stream consumes the
-    * TABLE (the second append lands after the stream starts, so file
-    * discovery — not a static scan — must pick it up), and the running
-    * aggregate over everything consumed must equal the batch aggregate
-    * over the whole fixture. */
   /** Streaming CDC consumption ([[graft.TableSink.readChangesStream]] —
     * the change-feed twin of the snapshot table source): a versioned
     * table takes two append commits BEFORE the stream starts (the
@@ -884,6 +877,13 @@ object StreamPipeline {
       |WHERE NOT coalesce(value < 100.0, FALSE) AND user_id % 7 <> 0
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
+  /** Table-as-stream-source end-to-end ([[TableSink.readStream]] —
+    * Iceberg's streaming-read contract): the fixture commits to a
+    * versioned partitioned table in two waves, a stream consumes the
+    * TABLE (the second append lands after the stream starts, so file
+    * discovery — not a static scan — must pick it up), and the running
+    * aggregate over everything consumed must equal the batch aggregate
+    * over the whole fixture. */
   def streamTableSource(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val name = "stream_tbl_" + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -933,25 +933,6 @@ object StreamPipeline {
   val docsRawSchema: StructType = StructType.fromDDL(
     "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
 
-  /** Streaming MinHash/LSH near-duplicate detection — the continuous-
-    * ingestion twin of [[Dedup.minhashLsh]]: each arriving document's
-    * 64-lane MinHash signature is banded (16 × 4) and each (band, bucket)
-    * keeps ONE long of state — the smallest doc_id it has ever seen — via
-    * `flatMapGroupsWithState`. A document that lands in a bucket already
-    * holding a smaller id is emitted as a near-dup candidate with that
-    * first-seen id; the post-stream reduction takes the min across a
-    * doc's 16 buckets. State is O(populated buckets) longs — bounded by
-    * corpus bands, never by pair count — and per-batch work is one
-    * signature pass + one bucket shuffle: the arrival-streaming shape of
-    * the batch LSH posting-list design.
-    *
-    * Determinism for the oracle: within a group each batch is folded in
-    * doc_id order, and the fixture arrives as ONE `processAllAvailable`
-    * batch, so "first seen" ≡ "smallest doc_id sharing a band" — the
-    * order-independent definition the DuckDB replay computes. A
-    * multi-batch production deployment keeps the same state shape but
-    * first-seen becomes arrival-order (the standard streaming-dedup
-    * contract, as [[streamDedupWatermarked]] documents for eviction). */
   /** The stateful core of [[streamNearDup]]: signature → band buckets →
     * one smallest-doc_id-seen long of state per (band, bucket), emitting
     * `(doc_id, bucket_first)` whenever a doc lands in a bucket already
@@ -990,6 +971,25 @@ object StreamPipeline {
       }.toDF("doc_id", "bucket_first")
   }
 
+  /** Streaming MinHash/LSH near-duplicate detection — the continuous-
+    * ingestion twin of [[Dedup.minhashLsh]]: each arriving document's
+    * 64-lane MinHash signature is banded (16 × 4) and each (band, bucket)
+    * keeps ONE long of state — the smallest doc_id it has ever seen — via
+    * `flatMapGroupsWithState`. A document that lands in a bucket already
+    * holding a smaller id is emitted as a near-dup candidate with that
+    * first-seen id; the post-stream reduction takes the min across a
+    * doc's 16 buckets. State is O(populated buckets) longs — bounded by
+    * corpus bands, never by pair count — and per-batch work is one
+    * signature pass + one bucket shuffle: the arrival-streaming shape of
+    * the batch LSH posting-list design.
+    *
+    * Determinism for the oracle: within a group each batch is folded in
+    * doc_id order, and the fixture arrives as ONE `processAllAvailable`
+    * batch, so "first seen" ≡ "smallest doc_id sharing a band" — the
+    * order-independent definition the DuckDB replay computes. A
+    * multi-batch production deployment keeps the same state shape but
+    * first-seen becomes arrival-order (the standard streaming-dedup
+    * contract, as [[streamDedupWatermarked]] documents for eviction). */
   def streamNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val name = "stream_neardup_" +

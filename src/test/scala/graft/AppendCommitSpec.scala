@@ -214,7 +214,7 @@ class AppendCommitSpec extends AnyFunSuite {
     sink.append(batch(1L, 2L, 3L))
     sink.append(batch(4L))
     val staging = new org.apache.hadoop.fs.Path(s"$wh/ac_t4/_staging")
-    assert(WarehouseIO.childNames(staging).isEmpty,
+    assert(TestSpark.childNames(staging).isEmpty,
       "every staged write cleans its staging dir")
   }
 
@@ -239,7 +239,7 @@ class AppendCommitSpec extends AnyFunSuite {
   private def logDir(name: String) = new HPath(s"$wh/$name/_graft_log")
 
   private def manifestNamesIn(name: String): Seq[String] =
-    WarehouseIO.childNames(logDir(name))
+    TestSpark.childNames(logDir(name))
       .filter(n => n.startsWith("m-") && n.endsWith(".mf")).sorted
 
   private def headManifestCount(name: String, v: Int): Int =
@@ -247,7 +247,7 @@ class AppendCommitSpec extends AnyFunSuite {
       new HPath(logDir(name), f"v$v%05d.list")).size
 
   private def logBytes(name: String): Long =
-    WarehouseIO.childNames(logDir(name))
+    TestSpark.childNames(logDir(name))
       .filterNot(_.startsWith(".")) // checksum sidecars fluctuate
       .map(n => WarehouseIO.sizeOf(new HPath(logDir(name), n))).sum
 

@@ -129,10 +129,10 @@ class ChangelogCursorSpec extends AnyFunSuite {
     src.replicateTo(spark, replica, Seq("id"), cursor)
     def pendingSidecars(): Int = {
       val logDir = new HPath(s"${replica.config.tablePath}/_graft_log")
-      // the snapshot-referenced `del-`/`keys-`/`pos-` sidecars
-      WarehouseIO.childNames(logDir).count(nm =>
+      // the snapshot-referenced `del-`/`keys-`/`dv-` sidecars
+      TestSpark.childNames(logDir).count(nm =>
         nm.startsWith("del-") || nm.startsWith("keys-") ||
-          nm.startsWith("pos-"))
+          nm.startsWith("dv-"))
     }
     // one delete-only source commit per cycle -> one key-list sidecar
     // per apply; without consolidation the replica would accumulate
@@ -163,7 +163,7 @@ class ChangelogCursorSpec extends AnyFunSuite {
       src0.replicateTo(spark, replica0, Seq("id"), cursor0)
     }
     val logDir0 = new HPath(s"${replica0.config.tablePath}/_graft_log")
-    assert(WarehouseIO.childNames(logDir0)
+    assert(TestSpark.childNames(logDir0)
       .count(nm => nm.endsWith("_keys") || nm.startsWith("keys-")) == 4,
       "threshold 0 must leave every sidecar in place")
     assert(replica0.read(spark).select($"id").as[Long].collect().toSet

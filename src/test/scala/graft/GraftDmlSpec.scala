@@ -748,7 +748,7 @@ class GraftDmlSpec extends AnyFunSuite {
     assert(!sink.hasPendingDeletes(sink.snapshotVersions().last),
       "an insert-only merge must not flip the pending-deletes bit")
     val log = new java.io.File(s"$wh/$t/_graft_log")
-    assert(!log.listFiles().map(_.getName).exists(_.startsWith("pos-")),
+    assert(!log.listFiles().map(_.getName).exists(_.startsWith("dv-")),
       "no position sidecar may exist for an insert-only merge")
     assert(spark.sql(s"SELECT id FROM gdml.$t").as[Long].collect().toSet
       == Set(1L, 2L, 3L, 4L))

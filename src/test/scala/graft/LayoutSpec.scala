@@ -462,7 +462,7 @@ class LayoutSpec extends AnyFunSuite {
       !WarehouseIO.exists(new HPath(s"$root/_graft_bloom")),
       "versioned analyze must not create parquet sidecars")
     val logDir = new HPath(s"$root/_graft_log")
-    def statsLines(): Int = WarehouseIO.childNames(logDir)
+    def statsLines(): Int = TestSpark.childNames(logDir)
       .filter(n => n.startsWith("m-") && n.endsWith(".mf"))
       .map(n => TableLog.manifestLinesOf(logDir, n)
         .count(_.contains('\t'))).sum
@@ -484,10 +484,10 @@ class LayoutSpec extends AnyFunSuite {
       "bloom stats must survive manifest compaction")
     // expiry drops superseded manifests — their stats die with them,
     // with no separate stats GC to run or forget
-    val before = WarehouseIO.childNames(logDir)
+    val before = TestSpark.childNames(logDir)
       .count(n => n.startsWith("m-") && n.endsWith(".mf"))
     sink.expireSnapshotsKeepLast(1)
-    val after = WarehouseIO.childNames(logDir)
+    val after = TestSpark.childNames(logDir)
       .count(n => n.startsWith("m-") && n.endsWith(".mf"))
     assert(after < before, "expiry reclaims superseded stats-bearing " +
       s"manifests ($before -> $after)")
@@ -512,7 +512,7 @@ class LayoutSpec extends AnyFunSuite {
     new ZoneMaps(sink).analyze(spark, Seq("t"))
     // the persisted bounds are pure digits (epoch micros), not rendered
     val logDir = new HPath(s"${sink.config.tablePath}/_graft_log")
-    val statLines = WarehouseIO.childNames(logDir)
+    val statLines = TestSpark.childNames(logDir)
       .filter(n => n.startsWith("m-") && n.endsWith(".mf"))
       .flatMap(n => TableLog.manifestLinesOf(logDir, n))
       // entries carrying zone bounds (every entry also records per-file
@@ -550,7 +550,7 @@ class LayoutSpec extends AnyFunSuite {
     new ZoneMaps(sink).analyze(spark, Seq("t"))
     // rewrite the manifest entry into the PRE-fix rendered form
     val logDir = new HPath(s"${sink.config.tablePath}/_graft_log")
-    WarehouseIO.childNames(logDir)
+    TestSpark.childNames(logDir)
       .filter(n => n.startsWith("m-") && n.endsWith(".mf")).foreach { n =>
         val p = new HPath(logDir, n)
         val rewritten = WarehouseIO.readString(p)

@@ -35,7 +35,7 @@ class MaintenancePropertySpec extends AnyFunSuite {
       // every sidecar is snapshot-referenced: no per-version
       // vNNNNN.deletes / vNNNNN_keys / vNNNNN_pos name is ever written
       def assertNoVersionNamedSidecars(): Unit = {
-        val named = WarehouseIO.childNames(new org.apache.hadoop.fs.Path(
+        val named = TestSpark.childNames(new org.apache.hadoop.fs.Path(
           sink.config.tablePath, "_graft_log"))
           .filter(_.matches("""v\d{5}(\.deletes|_keys|_pos)"""))
         assert(named.isEmpty, s"trial $trial: version-named sidecars $named")
@@ -139,7 +139,7 @@ class MaintenancePropertySpec extends AnyFunSuite {
       // zero debris: every on-disk manifest is referenced by a retained
       // snapshot, and every referenced manifest exists
       val log = new HPath(s"$wh/$name/_graft_log")
-      val onDisk = WarehouseIO.childNames(log)
+      val onDisk = TestSpark.childNames(log)
         .filter(n => n.startsWith("m-") && n.endsWith(".mf")).toSet
       val referenced = sink.snapshotVersions().flatMap(v =>
         TableLog.snapshotManifestNames(

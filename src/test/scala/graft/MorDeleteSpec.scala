@@ -55,7 +55,7 @@ class MorDeleteSpec extends AnyFunSuite {
     val names = new java.io.File(log).listFiles().map(_.getName).toSet
     assert(names.exists(_.startsWith("del-")) &&
       names.exists(_.startsWith("keys-")) &&
-      names.exists(_.startsWith("pos-")), s"referenced sidecars: $names")
+      names.exists(_.startsWith("dv-")), s"referenced sidecars: $names")
     // semantics unchanged: reads subtract, the changelog replays each
     // delete against its pre-commit snapshot
     assert(sink.read(spark).count() == 0)

@@ -289,7 +289,7 @@ class MorUpdateSpec extends AnyFunSuite {
         "every subsequent read would fold a useless empty anti-join and " +
         "SQL reads would degrade to the projected V1 bridge")
     val log = new java.io.File(s"$wh/u14b/_graft_log")
-    assert(!log.listFiles().map(_.getName).exists(_.startsWith("pos-")),
+    assert(!log.listFiles().map(_.getName).exists(_.startsWith("dv-")),
       "no position sidecar may exist for an insert-only commit")
     assert(state(sink) == Set((1L, "a", 10.0), (2L, "b", 20.0),
       (3L, "a", 30.0), (7L, "c", 70.0), (8L, "c", 80.0)))
@@ -333,19 +333,19 @@ class MorUpdateSpec extends AnyFunSuite {
     val sink = mkSink("u14")
     sink.updateMor(spark, $"id" === 1L, Seq("v" -> lit(99.0)))
     // a hard JVM crash between the sidecar write and the claim strands
-    // an unreferenced pos-* dir in the log — fake one (the in-process
+    // an unreferenced dv-* entry in the log — fake one (the in-process
     // failure paths clean up after themselves, so only a kill makes it)
-    val stranded = s"$wh/u14/_graft_log/pos-deadbeef0000"
+    val stranded = s"$wh/u14/_graft_log/dv-deadbeef0000"
     Seq(("f", 0L)).toDF("file_path", "row_pos")
       .write.mode("overwrite").parquet(stranded)
     val live = new java.io.File(s"$wh/u14/_graft_log").listFiles()
-      .map(_.getName).filter(_.startsWith("pos-")).toSet
+      .map(_.getName).filter(_.startsWith("dv-")).toSet
     assert(live.size == 2)
     val removed = sink.removeOrphans(graceMs = 0L)
-    assert(removed.exists(_.endsWith("pos-deadbeef0000")),
+    assert(removed.exists(_.endsWith("dv-deadbeef0000")),
       s"the stranded sidecar must be swept: $removed")
-    assert(!removed.exists(r => r.contains("pos-") &&
-      !r.endsWith("pos-deadbeef0000")),
+    assert(!removed.exists(r => r.contains("dv-") &&
+      !r.endsWith("dv-deadbeef0000")),
       "the live #pos-referenced sidecar must survive the sweep")
     // and the table still serves the update through the live sidecar
     assert(state(sink).contains((1L, "a", 99.0)))

@@ -143,6 +143,23 @@ class PartitionEvolutionSpec extends AnyFunSuite {
       .collect().sortBy(_._1).toSeq
   }
 
+  test("the catalog serves a VERSIONED mixed-spine table, at the head and " +
+    "as of a version, through the library read") {
+    val sink = mixedSpineTable()
+    spark.conf.set("spark.sql.catalog.gpe", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gpe.warehouse",
+      sink.config.warehousePath)
+    def ids(sql: String): Set[Long] =
+      spark.sql(sql).as[Long].collect().toSet
+    assert(ids("SELECT id FROM gpe.t WHERE ts >= '2024-01-01'") ==
+      Set(1L, 2L, 3L, 4L, 5L))
+    assert(ids("SELECT id FROM gpe.t WHERE ts >= '2024-01-03'") ==
+      Set(3L, 5L))
+    assert(ids("SELECT id FROM gpe.t VERSION AS OF 2 WHERE cat = 'a'") ==
+      Set(1L, 4L))
+    assert(ids("SELECT id FROM gpe.t VERSION AS OF 1") == Set(1L, 2L, 3L))
+  }
+
   test("copy-on-write ops on a VERSIONED mixed-spine table touching gen-1 " +
     "rows read back exact, each row in its derived partition") {
     val all = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "b", 30.0),

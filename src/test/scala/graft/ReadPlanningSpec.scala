@@ -110,9 +110,9 @@ class ReadPlanningSpec extends AnyFunSuite {
 
   test("schema parity: key-list and position-list sidecars") {
     val sink = pendingTable("par_side")
-    val names = WarehouseIO.childNames(logDir(sink))
-    val dirs = names.filter(n => n.startsWith("keys-") || n.startsWith("pos-"))
-    assert(dirs.exists(_.startsWith("keys-")) && dirs.exists(_.startsWith("pos-")))
+    val names = TestSpark.childNames(logDir(sink))
+    val dirs = names.filter(_.startsWith("keys-"))
+    assert(dirs.nonEmpty && names.exists(_.startsWith("dv-")))
     dirs.foreach(d => assertDirParity(s"${logDir(sink)}/$d"))
   }
 

@@ -342,7 +342,7 @@ class SinkSpec extends AnyFunSuite {
     // atomic: no commit, no staged debris, no orphaned data files
     assert(sink.snapshotVersions() == Seq(1), "violating batch must not commit")
     assert(sink.read(spark).count() == 2)
-    assert(WarehouseIO.childNames(
+    assert(TestSpark.childNames(
       new org.apache.hadoop.fs.Path(s"$wh/chk/_staging")).isEmpty,
       "aborted staging dir must be cleaned")
     assert(sink.removeOrphans(graceMs = 0L).isEmpty,

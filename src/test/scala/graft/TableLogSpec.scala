@@ -65,7 +65,7 @@ class TableLogSpec extends AnyFunSuite {
     val root = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main",
       "scala")
     val layout = Seq("%05d.list", "\".list\"", "\"branch_", "\"tag_",
-      "\"pos-", "\"keys-", "\"del-")
+      "\"dv-", "\"keys-", "\"del-")
     val sources = {
       val s = java.nio.file.Files.walk(root)
       try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector

@@ -44,6 +44,11 @@ object TestSpark {
     root
   }
 
+  /** Immediate child names of `dir` (empty when absent), from one
+    * [[WarehouseIO.listing]]. */
+  def childNames(dir: org.apache.hadoop.fs.Path): Seq[String] =
+    WarehouseIO.listing(dir).getOrElse(Nil).map(_.getPath.getName)
+
   /** A fresh path under this JVM's scratch root. */
   def tmpDir(prefix: String): String =
     tmpRoot.resolve(s"${prefix}_${java.util.UUID.randomUUID()}").toString

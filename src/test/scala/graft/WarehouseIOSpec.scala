@@ -31,7 +31,7 @@ class WarehouseIOSpec extends AnyFunSuite {
       try s.iterator().asScala.map(_.getFileName.toString).toSet
       finally s.close()
     }
-    assert(onDisk.exists(_.startsWith("pos-")) &&
+    assert(onDisk.exists(_.startsWith("dv-")) &&
       onDisk.exists(_.startsWith("keys-")) && onDisk("_SUCCESS") &&
       onDisk.exists(_.endsWith(".crc")), s"fixture: $onDisk")
 
@@ -49,7 +49,7 @@ class WarehouseIOSpec extends AnyFunSuite {
     }
     assert(data.exists(_._1.startsWith("cat=a/")) &&
       data.exists(_._1.startsWith("extra/cat=d/")) &&
-      listed.exists(_._1.startsWith("_graft_log/pos-")), s"listed: $listed")
+      listed.exists(_._1.startsWith("_graft_log/dv-")), s"listed: $listed")
 
     assert(WarehouseIO.dataFileStatuses(root)
       .map { case (rel, st) => rel -> st.getLen }.toVector == data)
