@@ -1809,9 +1809,9 @@ object ParityQueries {
       warehousePath = wh, versioned = true))
     val before = sink.dataFilesRel().toSet
     // a SELECTIVE predicate — the position flavor's intended workload:
-    // the sidecar is O(matched rows), so a targeted delete (a few users)
-    // commits tiny metadata. (The broad-predicate COW twin is
-    // q_sql_delete.)
+    // every read loads all pending vectors on the driver and broadcasts
+    // their union, up to a bit per row of each file they touch; the
+    // broad-predicate twin is q_sql_delete (copy-on-write).
     try {
       spark.conf.set("spark.graft.sql.deleteMode", "mor")
       spark.sql(s"DELETE FROM graft_cat.$tbl " +

@@ -95,7 +95,8 @@ private[graft] final class DeletionVectorProbe(dvs: DeletionVectors.Vectors) {
 }
 
 /** [[DeletionVectors.deleted]]'s expression. Each generated class holds
-  * its own probe, so tasks share no cursor. */
+  * its own probe, so tasks share no cursor. (`CodegenFallback` would take
+  * the filter and its scan out of whole-stage codegen.) */
 private[graft] final case class DeletedRow(left: Expression,
     right: Expression, vectors: Broadcast[DeletionVectors.Vectors])
     extends BinaryExpression {

@@ -253,8 +253,12 @@ private[graft] object TableLog {
   def newSidecarName(kind: Sidecar): String =
     kind.prefix + java.util.UUID.randomUUID().toString.take(12)
 
+  /** Prefix of the position-list sidecars deletion vectors replaced: a
+    * reference is refused, and a stranded one is swept as a sidecar. */
+  val LegacyPositionPrefix = "pos-"
+
   def isSidecarName(name: String): Boolean =
-    Sidecar.all.exists(k => name.startsWith(k.prefix))
+    (LegacyPositionPrefix +: Sidecar.all.map(_.prefix)).exists(name.startsWith)
 
   // ------------------------------------------- layered snapshot format
 
@@ -372,16 +376,16 @@ private[graft] object TableLog {
   /** The lines after the header of snapshot file `snapshotPath`;
     * refuses, by name, a file that does not start with
     * [[SnapshotHeader]], and one that references a position-list sidecar
-    * (`#pos`, a `pos-*` name): no writer produces either, and a snapshot
-    * is never served without its deletes. */
+    * (`#pos`, or a `pos-*` name on a sidecar line): no writer produces
+    * either, and a snapshot is never served without its deletes. */
   private def snapshotBody(snapshotPath: HPath): IndexedSeq[String] = {
     val lines = WarehouseIO.readString(snapshotPath).split("\n", -1)
       .toIndexedSeq
     require(lines.headOption.contains(SnapshotHeader),
       s"snapshot file $snapshotPath lacks the $SnapshotHeader header: " +
         "not a snapshot this table format writes")
-    val posRef = lines.find(l =>
-      l.startsWith("#pos ") || l.startsWith("#") && l.contains(" pos-"))
+    val posRef = lines.find(l => l.startsWith("#pos ") ||
+      Sidecar.all.exists(k => l.startsWith(s"#${k.key} $LegacyPositionPrefix")))
     require(posRef.isEmpty, s"snapshot file $snapshotPath references a " +
       s"position-list sidecar ('${posRef.get}'), a delete format this table " +
       "no longer reads (deletes are `dv-*` deletion vectors); it is " +

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
@@ -1079,7 +1080,6 @@ final class TableSink(val config: SinkConfig) {
     * that [[removeOrphans]] reclaims — the same contract as a crash
     * between write and manifest commit. */
   private def stagedWrite(prepared: DataFrame): Seq[String] = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val stage = new HPath(config.tablePath,
       s"_staging/append-${java.util.UUID.randomUUID().toString.take(12)}")
     val writer = prepared.write.mode("overwrite")
@@ -2748,7 +2748,6 @@ final class TableSink(val config: SinkConfig) {
     * orphan CANDIDATE — not per table file). */
   def removeOrphans(
       graceMs: Long = TableSink.DefaultOrphanGraceMs): Seq[String] = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val log = openLog()
     require(config.versioned && log.head.nonEmpty,
       "removeOrphans needs a versioned table with at least one commit — " +
@@ -2774,9 +2773,10 @@ final class TableSink(val config: SinkConfig) {
       WarehouseIO.delete(new HPath(staging, n), recursive = true))
     // crashed MoR mutations and delete commits: a sidecar written
     // before a claim that never landed strands an unreferenced
-    // `dv-*`/`keys-*`/`del-*` entry in the log — never consulted (only
-    // snapshot-referenced sidecars of CLAIMED snapshots fold), pure
-    // debris. Referenced = every live snapshot's #dv/#keys/#del line.
+    // `dv-*`/`keys-*`/`del-*` (or an older writer's `pos-*`) entry in the
+    // log — never consulted (only snapshot-referenced sidecars of CLAIMED
+    // snapshots fold), pure debris. Referenced = every live snapshot's
+    // #dv/#keys/#del line.
     val referencedSc = log.versions.flatMap(log.refNames).toSet
     val deadSc = log.sidecarNames.filterNot(referencedSc)
       .filter(n => now - log.mtimeOf(n) >= graceMs)
@@ -3476,7 +3476,6 @@ final class TableSink(val config: SinkConfig) {
     * restore-the-old. */
   private def executeSwap(tmp: org.apache.hadoop.fs.Path,
       trash: org.apache.hadoop.fs.Path): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val root = new HPath(config.tablePath)
     def mark(phase: Int): String =
       s"$phase\n${trash.getName}\n${tmp.getName}"
@@ -3510,7 +3509,6 @@ final class TableSink(val config: SinkConfig) {
     * dirs: data stranded with no root is restored, trash beside an
     * intact root is dropped. */
   private[graft] def recoverSwap(): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val root = new HPath(config.tablePath)
     if (WarehouseIO.isFile(swapMarker)) {
       // serialize against the live writer and any other healer, then
@@ -3584,7 +3582,6 @@ final class TableSink(val config: SinkConfig) {
     * is conservative — re-run analyze). */
   private def carryDeclarationSidecars(root: org.apache.hadoop.fs.Path,
       tmp: org.apache.hadoop.fs.Path): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     Seq("_graft_config", "_graft_schema", "_graft_versioned",
         "_graft_tombstones", "_graft_renames").foreach { n =>
       val src = new HPath(root, n)
@@ -3599,7 +3596,6 @@ final class TableSink(val config: SinkConfig) {
     * (callers whose expected count is not independently known). */
   private def rewriteSwap(finalRows: DataFrame,
       expectRows: Option[Long]): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val root = new HPath(config.tablePath)
     val trash = scratchSibling("_pre_rewrite")
     val tmp = scratchSibling("_rewriting")
@@ -4768,7 +4764,6 @@ final class TableSink(val config: SinkConfig) {
       maxFiles: Int = 8,
       minAvgFileBytes: Long = 0L): Seq[String] =
     copyOnWrite("compactPartitions") { log =>
-      import org.apache.hadoop.fs.{Path => HPath}
       require(!log.isClone,
         "compactPartitions on a shallow clone would materialize only some " +
           "partitions; run compact() to materialize the clone first")
@@ -4856,7 +4851,6 @@ final class TableSink(val config: SinkConfig) {
   def compact(spark: SparkSession,
       targetFileBytes: Long = 128L * 1024 * 1024): Unit =
     copyOnWrite("compact") { log =>
-      import org.apache.hadoop.fs.{Path => HPath}
       val root = new HPath(config.tablePath)
       // Sizing is bytes-per-row × per-partition row count — deliberately
       // NOT a join on file paths: input_file_name() is percent-encoded

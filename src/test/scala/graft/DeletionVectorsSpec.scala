@@ -52,17 +52,20 @@ class DeletionVectorsSpec extends AnyFunSuite {
       "spark.sql.codegen.factoryMode").foreach(spark.conf.unset)
   }
 
-  test("removeOrphans sweeps a stranded dv-* file and keeps the " +
-    "referenced one") {
+  test("removeOrphans sweeps a stranded dv-* file, and an older writer's " +
+    "stranded pos-* directory, and keeps the referenced one") {
     val sink = new TableSink(SinkConfig(tableName = "t_orphan",
       warehousePath = wh, versioned = true))
     sink.append(Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v"))
     sink.deletePositions(spark, "id = 1")
-    // a crash between a vectors write and its claim strands the file
-    WarehouseIO.writeString(
-      new HPath(s"$wh/t_orphan/_graft_log/dv-deadbeef0000"), "")
+    // a crash between a sidecar write and its claim strands it
+    val log = s"$wh/t_orphan/_graft_log"
+    WarehouseIO.writeString(new HPath(s"$log/dv-deadbeef0000"), "")
+    Seq(("file_path", 0L)).toDF("file_path", "row_pos").write
+      .parquet(s"$log/pos-deadbeef0000")
+    assert(sink.removeOrphans(graceMs = 60000L).isEmpty, "inside the grace")
     assert(sink.removeOrphans(graceMs = 0L) ==
-      Seq("_graft_log/dv-deadbeef0000"))
+      Seq("_graft_log/dv-deadbeef0000", "_graft_log/pos-deadbeef0000"))
     assert(sink.read(spark).as[(Long, Double)].collect().toSeq ==
       Seq((2L, 2.0)))
   }
@@ -95,5 +98,21 @@ class DeletionVectorsSpec extends AnyFunSuite {
       refused("consolidateDeletes")(sink.consolidateDeletes(spark))
       assert(sink.snapshotVersions() == Seq(1, 2), "nothing committed")
     }
+  }
+
+  test("a streaming txn id that starts with pos- is not a position-list " +
+    "reference") {
+    val sink = new TableSink(SinkConfig(tableName = "t_txn_pos",
+      warehousePath = wh, versioned = true))
+    assert(sink.appendStreamBatch(Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v"),
+      "pos-orders", 0L))
+    sink.deletePositions(spark, "id = 1")
+    assert(sink.appendStreamBatch(Seq((3L, 3.0)).toDF("id", "v"),
+      "pos-orders", 1L))
+    assert(!sink.appendStreamBatch(Seq((3L, 3.0)).toDF("id", "v"),
+      "pos-orders", 1L), "a replayed batch is skipped")
+    assert(sink.consolidateDeletes(spark) > 0)
+    assert(sink.read(spark).as[(Long, Double)].collect().sortBy(_._1).toSeq ==
+      Seq((2L, 2.0), (3L, 3.0)))
   }
 }
