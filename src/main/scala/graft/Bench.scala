@@ -61,15 +61,16 @@ object Bench {
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(2)
     val spark = GraftSession.local(cpus.toInt)
     // Fixture hygiene: every fixture query stamps a UUID warehouse under
-    // target/tmp; a long-lived checkout accumulates thousands of dirs and
-    // GBs — measured (round 13) to skew fixture-heavy queries via
-    // directory-op and page-cache pressure, so records start clean.
+    // target/tmp (Fixtures); a JVM deletes its own at exit, but a killed
+    // one strands them, and thousands of stranded dirs and GBs were
+    // measured to skew fixture-heavy queries via directory-op and
+    // page-cache pressure, so records start clean.
     // AGE-GUARDED (round-14 advice): only entries idle > 20 min are
     // swept, so a concurrently running correctness/scratch session's
     // live warehouses and checkpoints survive. SPARK_GRAFT_BENCH_CLEAN:
     // 'all' sweeps everything, 'off' skips the sweep.
     val cleanMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_CLEAN", "aged")
-    val tmp = java.nio.file.Paths.get("/root/repo/target/tmp")
+    val tmp = Fixtures.base
     if (cleanMode != "off" && java.nio.file.Files.isDirectory(tmp)) {
       import scala.jdk.CollectionConverters._
       val cutoff = System.currentTimeMillis() - 20L * 60 * 1000
@@ -154,7 +155,7 @@ object Bench {
         "\"" + k + "\":[" + v._4.map(f4).mkString(",") + "]"
       }.mkString("{", ",", "}")}}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "/root/repo/target/bench.json")
+      "target/bench.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), fullJson)
     catch { case NonFatal(e) =>
       System.err.println(s"WARN could not write bench record to $out: $e") }

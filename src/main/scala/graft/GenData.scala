@@ -40,7 +40,7 @@ object GenData {
     element_at(array(choices.map(lit): _*), (b % choices.size).cast("int") + 1)
 
   def main(args: Array[String]): Unit = {
-    val outDir = if (args.nonEmpty) args(0) else "/root/repo/bench_data/sf1"
+    val outDir = if (args.nonEmpty) args(0) else "bench_data/sf1"
     val sf = if (args.length > 1) args(1).toDouble else 1.0
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val spark = GraftSession.local(cpus.toInt)

@@ -69,8 +69,8 @@ final case class SinkConfig(
     // apply leaves more than this many snapshot versions carrying
     // pending delete sidecars, the apply folds them into ONE merged
     // sidecar commit (TableSink.consolidateDeletes) — so a long-running
-    // replication's read cost stays bounded at `threshold` anti-joins
-    // instead of growing with every delete batch ever applied. Consulted
+    // replication's read cost stays bounded at `threshold` deletion
+    // vectors instead of growing with every apply ever made. Consulted
     // only by the replication apply path (consolidation drops replica
     // history, which is the replica contract — time travel belongs to
     // the source); library users consolidate explicitly. 0 disables.

@@ -139,7 +139,7 @@ object LayoutQueries {
       sfDir: String): (TableSink, ZoneMaps) =
     zonemapFixture.computeIfAbsent(sfDir, _ => {
       val e = withDims(Tables.events(spark, sfDir))
-      val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+      val dest = Fixtures.fresh("graft_wh")
       val sink = new TableSink(SinkConfig("events_z", dest, versioned = true))
       val b = ZOrder.boundsOf(e, Seq("x_us", "y_c"))
       sink.appendClustered(
@@ -185,7 +185,7 @@ object LayoutQueries {
       table: String, flag: String)(
       rewrite: TableSink => Unit): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(table, dest, numPartitions = 8))
     sink.append(e) // unclustered: 8 salted writers, zones span everything
     rewrite(sink)
@@ -275,7 +275,7 @@ object LayoutQueries {
       sfDir: String): (TableSink, BloomSkip) =
     bloomFixture.computeIfAbsent(sfDir, _ => {
       val e = Tables.events(spark, sfDir)
-      val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+      val dest = Fixtures.fresh("graft_wh")
       val sink = new TableSink(SinkConfig("events_bloom", dest,
         versioned = true))
       sink.appendClustered(e.repartition(48, col("user_id")))

@@ -433,7 +433,7 @@ object ParityQueries {
   def sinkRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_rt",
       warehousePath = dest,
@@ -468,7 +468,7 @@ object ParityQueries {
   def tableClone(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val base = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val base = Fixtures.fresh("graft_wh")
     val src = new TableSink(SinkConfig(
       tableName = "events_clone_src", warehousePath = base,
       versioned = true,
@@ -503,7 +503,7 @@ object ParityQueries {
   def sinkRoundtripOrc(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_rt_orc",
       warehousePath = dest,
@@ -538,7 +538,7 @@ object ParityQueries {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
       .select($"event_id", $"ts", $"event_type", $"value")
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_merge",
       warehousePath = dest,
@@ -590,7 +590,7 @@ object ParityQueries {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
       .select($"event_id", $"event_type", $"value")
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_evolve",
       warehousePath = dest,
@@ -639,7 +639,7 @@ object ParityQueries {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
       .select($"event_id", $"event_type", $"value")
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_del",
       warehousePath = dest,
@@ -679,7 +679,7 @@ object ParityQueries {
   def timeTravel(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_tt",
       warehousePath = dest,
@@ -710,7 +710,7 @@ object ParityQueries {
   def snapshotDiff(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_cdc",
       warehousePath = dest,
@@ -746,7 +746,7 @@ object ParityQueries {
   def changelogCdc(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_chg", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -795,7 +795,7 @@ object ParityQueries {
   def changelogIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_chg_inc", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -844,7 +844,7 @@ object ParityQueries {
   def changelogSinceTs(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_chg_ts", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -891,17 +891,17 @@ object ParityQueries {
 
   /** CDC replication end-to-end: the four-commit fixture's changelog is
     * applied to a DOWNSTREAM replica via [[TableSink.replicateTo]] in two
-    * cursor micro-batches (after the appends, after the deletes) — insert
-    * versions as keyed upserts, delete versions as merge-on-read key
-    * lists, in source commit order — and the replica's final state must
-    * equal the oracle's direct computation of the survivors
-    * (v1 ∪ v2, minus the predicate delete, minus the erasure delete).
+    * cursor micro-batches (after the appends, after the deletes), each
+    * applied as its net changes in one replica commit — and the replica's
+    * final state must equal the oracle's direct computation of the
+    * survivors (v1 ∪ v2, minus the predicate delete, minus the erasure
+    * delete).
     * Any ordering, idempotency, or batch-boundary defect in the apply
     * loop shows up as a membership difference here. */
   def changelogReplicate(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     def cfg(name: String) = SinkConfig(
       tableName = name, warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -952,7 +952,7 @@ object ParityQueries {
       sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_vstream", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -990,7 +990,7 @@ object ParityQueries {
   def streamIgnoreChanges(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_igch", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -1040,7 +1040,7 @@ object ParityQueries {
   def mvRefresh(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val src = new TableSink(SinkConfig(
       tableName = "events_mv_src", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -1080,7 +1080,7 @@ object ParityQueries {
   def rowLineage(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_lineage", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -1116,7 +1116,7 @@ object ParityQueries {
   def consolidateDeletes(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_consol", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -1160,7 +1160,7 @@ object ParityQueries {
   def metaDeletes(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_metadel", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -1207,7 +1207,7 @@ object ParityQueries {
   def rollback(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_rb", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -1246,7 +1246,7 @@ object ParityQueries {
   def metaHistory(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_meta", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -1296,7 +1296,7 @@ object ParityQueries {
   def metaPartitions(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_parts", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -1334,7 +1334,7 @@ object ParityQueries {
   def branchWap(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_wap",
       warehousePath = dest,
@@ -1424,7 +1424,7 @@ object ParityQueries {
   def jsonlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val d = Tables.documents(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_jsonl_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_jsonl")
     d.write.json(dest)
     TextSources.jsonl(spark, dest, d.schema)
       .groupBy($"source")
@@ -1458,7 +1458,7 @@ object ParityQueries {
     val e = Tables.events(spark, sfDir)
       .select($"event_id", $"event_type", $"value",
         concat(lit("evt_"), $"event_type").as("dest"))
-    val wh = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val wh = Fixtures.fresh("graft_wh")
     def cfg(t: String) = SinkConfig(tableName = t, warehousePath = wh,
       numPartitions = 2, sortOrder = Seq("event_id"))
     TableRouter.appendRouted(e, "dest", cfg)
@@ -1488,7 +1488,7 @@ object ParityQueries {
   def csvRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val d = Tables.documents(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_csv_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_csv")
     d.write.option("header", "true").csv(dest)
     TextSources.csv(spark, dest, d.schema, header = true, multiLine = true)
       .groupBy($"source")
@@ -1557,7 +1557,7 @@ object ParityQueries {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
       .select($"event_id", $"event_type", $"value")
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_compact",
       warehousePath = dest,
@@ -1592,7 +1592,7 @@ object ParityQueries {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
       .select($"event_id", $"event_type", $"value")
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_partial",
       warehousePath = dest,
@@ -1642,7 +1642,7 @@ object ParityQueries {
   def incrementalAgg(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_mv",
       warehousePath = dest,
@@ -1682,7 +1682,7 @@ object ParityQueries {
     // fixed warehouse + unique table name: catalog plugin instances (and
     // their options) are cached per session, so the warehouse must be
     // stable across invocations while each run still gets a fresh table
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_ct_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -1712,7 +1712,7 @@ object ParityQueries {
     * [1, 2] → time travel works on SQL-written history). */
   def sqlInsert(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_sqlw_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -1750,7 +1750,7 @@ object ParityQueries {
     * the table stays readable through the catalog afterwards. */
   def sqlDelete(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_sqld_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -1794,7 +1794,7 @@ object ParityQueries {
     * `write.delete.mode=merge-on-read` names the same trade. */
   def sqlDeleteMor(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_sqldm_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -1849,7 +1849,7 @@ object ParityQueries {
     * write mode is non-rewriting appends (connector.py:233-245). */
   def sqlUpdateMor(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_squm_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -1912,7 +1912,7 @@ object ParityQueries {
     * identical on both engines (same trick as [[sqlUpdateMor]]). */
   def changelogEvolved(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl =
       s"events_chev_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
@@ -1973,7 +1973,7 @@ object ParityQueries {
     * here would zero half of `total_amt`. */
   def changelogRenamed(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl =
       s"events_chrn_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
@@ -2028,7 +2028,7 @@ object ParityQueries {
     * schema, if the narrow generation NULL-filled or truncated. */
   def changelogWidened(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl =
       s"events_chwd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
@@ -2087,7 +2087,7 @@ object ParityQueries {
     * recomputed over the source plus the sentinel row. */
   def sqlWiden(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_sqlw_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2128,7 +2128,7 @@ object ParityQueries {
   def sqlReplaceWhere(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_rw_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2172,7 +2172,7 @@ object ParityQueries {
     * through the catalog afterwards. */
   def sqlUpdate(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_squ_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2211,7 +2211,7 @@ object ParityQueries {
   def sqlPartitioned(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_sqp_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2249,7 +2249,7 @@ object ParityQueries {
   def sqlHiddenPartition(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_shp_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2289,7 +2289,7 @@ object ParityQueries {
     * ids. */
   def sqlRename(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_ren_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2335,7 +2335,7 @@ object ParityQueries {
   def sqlHiddenPrune(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_shpr_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2401,7 +2401,7 @@ object ParityQueries {
     * aggregate. The oracle is the filter itself. */
   def sqlOverwrite(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_sqo_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2436,7 +2436,7 @@ object ParityQueries {
     * agree with the snapshot log. */
   def metaSql(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_mts_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2483,7 +2483,7 @@ object ParityQueries {
   def changesSql(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_chg_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2526,7 +2526,7 @@ object ParityQueries {
     * data-size-dependent) stay out of the hash. */
   def sqlCall(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_cal_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2565,7 +2565,7 @@ object ParityQueries {
   def sqlAdopt(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_adp_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2608,7 +2608,7 @@ object ParityQueries {
     * lossless — the whole manifest-layer lifecycle, hash-checked. */
   def manifestCompact(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_mfc_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2664,7 +2664,7 @@ object ParityQueries {
     * data file. */
   def sqlBranch(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_wap_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2728,7 +2728,7 @@ object ParityQueries {
     * to the projection. */
   def sqlDropColumn(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_drp_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2766,7 +2766,7 @@ object ParityQueries {
     * category derivation with a CASE over the source. */
   def sqlAlter(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_sqa_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2808,7 +2808,7 @@ object ParityQueries {
     * (GraftDmlSpec). */
   def sqlMerge(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_sqm_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2869,7 +2869,7 @@ object ParityQueries {
     * the position flavor's workload), not-matched insert. */
   def sqlMergeMor(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_sqmm_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -2947,7 +2947,7 @@ object ParityQueries {
     * degrade to a whole-table overwrite fails the hash. */
   def sqlDynamicOverwrite(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_sqdo_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -3003,7 +3003,7 @@ object ParityQueries {
   def tagPin(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
+    val wh = Fixtures.path("graft_catalog_wh")
     val tbl = s"events_tag_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
@@ -3061,7 +3061,7 @@ object ParityQueries {
   def partitionEvolution(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val gen1 = SinkConfig(tableName = "events_pe", warehousePath = dest,
       numPartitions = 4,
       partitionSpec = Seq(PartitionField("event_type", Transform.Identity)),
@@ -3090,7 +3090,7 @@ object ParityQueries {
   def partitionEvolutionVersioned(spark: SparkSession,
       sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val gen1 = SinkConfig(tableName = "events_pev", warehousePath = dest,
       versioned = true, numPartitions = 4,
       partitionSpec = Seq(PartitionField("event_type", Transform.Identity)),
@@ -3134,7 +3134,7 @@ object ParityQueries {
   def morDelete(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_mor", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -3177,7 +3177,7 @@ object ParityQueries {
   def posDelete(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_posdel", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -3224,7 +3224,7 @@ object ParityQueries {
   def erasureDelete(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new TableSink(SinkConfig(
       tableName = "events_erase", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -3273,58 +3273,4 @@ object ParityQueries {
       |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total,
       |  MIN(ts) AS ts_min, MAX(ts) AS ts_max
       |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** As-of-TIMESTAMP resolution through the SQL front door — the third leg
-    * of the time-travel contract next to latest ([[GraftCatalog.loadTable]])
-    * and `VERSION AS OF` ([[catalogTimeTravel]]): `TIMESTAMP AS OF t` must
-    * resolve to the LAST snapshot whose manifest committed at or before
-    * `t`, by commit wall-time against the sink's `_graft_log` — Iceberg's
-    * as-of-timestamp rule (reference connector.py:358-393 loads catalogs
-    * whose readers rely on exactly this resolution). Two commits land; the
-    * query asks for the first commit's own timestamp, so it must see v1's
-    * file set and NOT the second commit — a hash match against the v1
-    * oracle proves the cutoff is inclusive on the left and exclusive of
-    * later snapshots.
-    *
-    * Determinism: commit times are wall-clock, so the literal is READ BACK
-    * from the v1 manifest's mtime (millisecond precision — micros→ms
-    * truncation in the catalog then reproduces it exactly), and v2's mtime
-    * is bumped 1 s past v1's if the two appends landed in the same
-    * millisecond. Timezone: the literal is rendered in the session
-    * timezone, which is what Spark uses to convert it to epoch micros. */
-  def catalogTimestampTravel(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val e = Tables.events(spark, sfDir)
-    val wh = "/root/repo/target/tmp/graft_catalog_wh"
-    val tbl = s"events_tt_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    spark.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    val sink = new TableSink(SinkConfig(
-      tableName = tbl,
-      warehousePath = wh,
-      numPartitions = 4,
-      versioned = true,
-      partitionSpec = Seq(PartitionField("event_type", Transform.Identity)),
-      sortOrder = Seq("event_id")))
-    sink.append(e.filter(pmod($"event_id", lit(3)) =!= 0))
-    sink.append(e.filter(pmod($"event_id", lit(3)) === 0))
-    val log = java.nio.file.Paths.get(wh, tbl, "_graft_log")
-    val t1 = java.nio.file.Files
-      .getLastModifiedTime(log.resolve(TableLog.versionFile(1))).toMillis
-    val m2 = log.resolve(TableLog.versionFile(2))
-    if (java.nio.file.Files.getLastModifiedTime(m2).toMillis <= t1)
-      java.nio.file.Files.setLastModifiedTime(m2,
-        java.nio.file.attribute.FileTime.fromMillis(t1 + 1000L))
-    val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
-    val asOf = java.time.Instant.ofEpochMilli(t1).atZone(zone).toLocalDateTime
-      .format(java.time.format.DateTimeFormatter
-        .ofPattern("yyyy-MM-dd HH:mm:ss.SSS"))
-    spark.sql(
-      s"""SELECT event_type, COUNT(*) AS n,
-         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-         |FROM graft_cat.$tbl TIMESTAMP AS OF '$asOf'
-         |GROUP BY event_type ORDER BY event_type""".stripMargin)
-  }
-
-  val catalogTimestampTravelSql: String = timeTravelSql
 }

@@ -77,7 +77,7 @@ object PipelineE2E {
     // fingerprint-surviving) without re-deriving their quality.
     val sink = new TableSink(SinkConfig(
       tableName = "corpus",
-      warehousePath = s"/root/repo/target/tmp/pipeline_${java.util.UUID.randomUUID()}",
+      warehousePath = Fixtures.fresh("pipeline"),
       numPartitions = 4,
       partitionSpec = Seq(PartitionField("lang", Transform.Identity)),
       sortOrder = Seq("doc_id")))

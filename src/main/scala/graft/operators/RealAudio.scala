@@ -92,9 +92,9 @@ object RealAudio {
     * generator cost to the decode path). */
   def stage(spark: SparkSession, sfDir: String, force: Boolean = false): String = {
     import spark.implicits._
-    val dir = "/root/repo/target/tmp/media_wav_" +
+    val dir = Fixtures.path("media_wav_" +
       java.nio.file.Paths.get(sfDir).toAbsolutePath.toString
-        .replaceAll("[^A-Za-z0-9.]", "_")
+        .replaceAll("[^A-Za-z0-9.]", "_"))
     if (force || !java.nio.file.Files.exists(
         java.nio.file.Paths.get(dir, "_SUCCESS"))) {
       Tables.documents(spark, sfDir).select(col("doc_id")).as[Long]

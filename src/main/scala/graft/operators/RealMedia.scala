@@ -110,9 +110,9 @@ object RealMedia {
     * generator cost to the decode path. Pass `force = true` to rebuild. */
   def stage(spark: SparkSession, sfDir: String, force: Boolean = false): String = {
     import spark.implicits._
-    val dir = "/root/repo/target/tmp/media_png_" +
+    val dir = Fixtures.path("media_png_" +
       java.nio.file.Paths.get(sfDir).toAbsolutePath.toString
-        .replaceAll("[^A-Za-z0-9.]", "_")
+        .replaceAll("[^A-Za-z0-9.]", "_"))
     if (force || !java.nio.file.Files.exists(
         java.nio.file.Paths.get(dir, "_SUCCESS"))) {
       Tables.documents(spark, sfDir).select(col("doc_id")).as[Long]

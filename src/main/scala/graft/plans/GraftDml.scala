@@ -669,7 +669,7 @@ case class GraftMergeCommand(
       .select(col("__graft_file"), col("__graft_pos"))
     val replacement = changed.filter(col(keepFlag) && col(chgFlag))
       .select(target.output.map(a => q(a.name)): _*)
-    try sink.commitMorMutation(spark, positions, replacement)
+    try sink.commitMorMutation(spark, positions, Some(replacement))
     catch {
       case e: IllegalArgumentException
           if Option(e.getMessage).exists(

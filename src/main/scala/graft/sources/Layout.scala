@@ -171,6 +171,18 @@ object Hilbert {
   }
 }
 
+/** The parquet stats an unversioned table's analyze writes under an
+  * `_`-prefixed directory ([[ZoneMaps]], [[BloomSkip]]). */
+private object StatsSidecar {
+
+  /** The rows of the stats directory `dir`, read from its listed part
+    * files: Spark's reader treats the `_`-prefixed directory itself as a
+    * hidden path. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(WarehouseIO.dataFileStatuses(
+      new org.apache.hadoop.fs.Path(dir)).map(_._2.getPath.toString).toSeq: _*)
+}
+
 /** File-level zone maps (per-file column min/max) + data-skipping reads —
   * the Iceberg/Delta manifest-stats idea for a path-based table: skip
   * files by METADATA, before any footer or row is touched. At 100 TB the
@@ -275,7 +287,7 @@ final class ZoneMaps(sink: TableSink) {
           // stats `file` is a percent-encoded URI while the FS listing is
           // a raw path — decode inside the scan so the keys meet (a
           // mismatch is conservative: the file reads as "unanalyzed")
-          Some(spark.read.parquet(statsPath)
+          Some(StatsSidecar.read(spark, statsPath)
             .select(regexp_replace(TableSink.decodePath(col("file")),
               "^file:(//)?", "")
               .as("path"), pred.as("keep")))
@@ -323,7 +335,7 @@ final class ZoneMaps(sink: TableSink) {
           val keep = coalesce(bounds.map { case (c, lo, hi) =>
             col(s"max_$c") >= lo && col(s"min_$c") <= hi
           }.reduce(_ && _), lit(false))
-          Some(spark.read.parquet(statsPath)
+          Some(StatsSidecar.read(spark, statsPath)
             .where(!keep)
             .select(regexp_replace(TableSink.decodePath(col("file")),
               "^file:(//)?", "")
@@ -513,7 +525,7 @@ final class BloomSkip(sink: TableSink, bits: Int = 4096, k: Int = 5) {
   private def sidecarPruned(spark: SparkSession,
       probes: Seq[(String, Column)], outCol: String): DataFrame = {
     import org.apache.spark.sql.types.DataType
-    val stats = spark.read.parquet(statsPath)
+    val stats = StatsSidecar.read(spark, statsPath)
     probes.map { case (c, v) =>
       val stamps = stats.where(col("col") === c)
         .select(col("bits"), col("k"), col("dtype"))

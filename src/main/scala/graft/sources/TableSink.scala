@@ -1722,41 +1722,39 @@ final class TableSink(val config: SinkConfig) {
     * from a 100 TB table is O(list) at commit time and one join term at
     * read time, materialized later by [[compact]]. Same commit rules as
     * [[deleteWhere]]: versioned tables only, refused while a branch is
-    * live, version-scoped (time travel before the commit still shows the
-    * rows). A NULL in the list is REFUSED (round-13): it never matches
-    * the anti-join (SQL join semantics), so the erasure it stands for
-    * would silently not happen — the one failure mode a
-    * right-to-be-forgotten path must not have. The list is committed as
-    * its distinct key tuples. Returns the committed version. */
-  def deleteKeys(keys: DataFrame, keyCols: Seq[String]): Int =
-    deleteKeys(keys, keyCols, proven = false)
-
-  /** [[deleteKeys]]. `proven`: the caller has proved the key tuples of
-    * `keys` distinct and non-null (the replication apply's net-delete
-    * winners, whose NULL count its pin observed), so the NULL probe and
-    * the `distinct` are skipped; every other check still runs. */
-  private def deleteKeys(keys: DataFrame, keyCols: Seq[String],
-      proven: Boolean): Int = {
+    * live (time travel before the commit still shows the rows). A NULL in
+    * the list is REFUSED: it never matches the anti-join, so the erasure
+    * it stands for would silently not happen. Returns the committed
+    * version.
+    *
+    * The list is ROW-scoped: it hides every row its keys name, including
+    * rows appended AFTER it commits, until [[compact]] — an erasure must
+    * also catch a late re-ingest. (Iceberg equality deletes apply only to
+    * older data files; [[replicateTo]], whose replica must show a key the
+    * source re-inserts, deletes by position instead.) */
+  def deleteKeys(keys: DataFrame, keyCols: Seq[String]): Int = {
     require(keyCols.nonEmpty, "deleteKeys needs at least one key column")
     require(keyCols.forall(keys.columns.contains),
       s"key columns ${keyCols.filterNot(keys.columns.contains).mkString(", ")} " +
         "missing from the key DataFrame")
-    // one bounded pass over the LIST (never the table): a NULL key tuple
-    // anti-joins against nothing, so committing it would record an
-    // erasure that never erases — refuse with the row, not a warning
-    require(proven ||
-      keys.where(keyCols.map(col(_).isNull).reduceLeft(_ || _))
-        .limit(1).collect().isEmpty,
-      s"deleteKeys list carries NULL in (${keyCols.mkString(", ")}): a " +
-        "NULL key never matches the erasure anti-join, so those rows " +
-        "would silently survive; filter or repair the list first")
+    // one bounded pass over the LIST (never the table)
+    requireNoNullKey(keys.where(keyCols.map(col(_).isNull).reduceLeft(_ || _))
+      .limit(1).collect().isEmpty, keyCols)
     commitDeleteSidecar("deleteKeys", TableLog.Sidecar.Keys,
         "key lists") { (_, sidecar) =>
-      val list = keys.select(keyCols.map(col): _*)
-      (if (proven) list else list.distinct())
+      keys.select(keyCols.map(col): _*).distinct()
         .write.mode("overwrite").parquet(sidecar.toString)
     }
   }
+
+  /** The refusal of a delete-key list with a NULL tuple (`clean` false):
+    * a NULL key matches no row, so the delete it stands for would
+    * silently not happen. */
+  private def requireNoNullKey(clean: Boolean, keyCols: Seq[String]): Unit =
+    require(clean,
+      s"deleteKeys list carries NULL in (${keyCols.mkString(", ")}): a " +
+        "NULL key never matches the erasure anti-join, so those rows " +
+        "would silently survive; filter or repair the list first")
 
   /** Merge-on-read sidecar commits refuse while a branch is live or
     * mid-creation: the branch's audit view would disagree with main. */
@@ -1960,7 +1958,7 @@ final class TableSink(val config: SinkConfig) {
   /** Fold pending delete sidecars when MORE than
     * [[SinkConfig.deleteConsolidateThreshold]] versions carry one — the
     * replication apply's amortized upkeep (replica reads stay bounded at
-    * `threshold` sidecar anti-joins under any run of delete-only
+    * `threshold` deletion vectors under any run of delete-only
     * batches). No-op when disabled (0), unversioned, or under the
     * threshold. Drops history below the merged commit, which is the
     * replica contract. */
@@ -2296,32 +2294,28 @@ final class TableSink(val config: SinkConfig) {
     *
     * The batch applies as NET CHANGES — per key, the highest-version
     * change wins (a commit is either all-insert or all-delete, so there
-    * is no tie), surviving inserts land as ONE keyed [[upsert]] and net
-    * deletes as ONE [[deleteKeys]] — the standard CDC change-compaction:
-    * a backlog of N source commits costs two replica ops, not N
-    * rewrites, and the result equals applying them in commit order
-    * because the changelog already encodes visibility (a row re-inserted
-    * under a still-live delete predicate never enters it). Intermediate
-    * source states never materialize on the replica — the replica
-    * contract is the final state of each consumed batch. Both ops are
-    * IDEMPOTENT under the keys, so the cursor's at-least-once replay (a
-    * crash between apply and commit re-applies the batch) converges to
-    * exactly-once replica state. Keys must be unique within a source
-    * commit and non-null (the same keyed-upsert contract the library API
-    * has). A batch whose winners pin proves that — every insert row is
-    * its key's sole insert and winner, no NULL key — skips
-    * [[upsertMor]]'s key check and envelope aggregate and [[deleteKeys]]'
-    * NULL probe and distinct; any other batch meets those entries' own
-    * checks and refusals.
+    * is no tie) — in ONE replica commit: the standard CDC
+    * change-compaction, so N source commits cost one replica snapshot,
+    * and the result equals applying them in commit order because the
+    * changelog already encodes visibility. Intermediate source states
+    * never materialize on the replica — the replica contract is the
+    * final state of each consumed batch. The keyed apply is IDEMPOTENT,
+    * so the cursor's at-least-once replay (a crash between apply and
+    * commit re-applies the batch) converges to exactly-once replica
+    * state. Keys must be unique within a source commit and non-null (the
+    * keyed-upsert contract); a NULL-key net delete is refused before any
+    * commit, with [[deleteKeys]]' message.
     *
     * Returns the source versions consumed, observed by the batch pin's
-    * own pass (no separate job). The replica must be versioned
-    * (deletes land as merge-on-read key lists). A MoR-capable replica
-    * (parquet, no live branch) takes each insert batch as ONE
-    * position-delete + append commit ([[upsertMor]]) — O(batch) data IO
-    * per apply and PRESERVED replica history; other replicas keep the
-    * copy-on-write apply, whose rewriting commits expire their history.
-    * Sidecars fold past [[SinkConfig.deleteConsolidateThreshold]]. */
+    * own pass (no separate job). The replica must be versioned. A
+    * MoR-capable replica (parquet, no live branch) takes the apply as
+    * ONE [[upsertMor]] commit whose deletion vector removes both the
+    * replaced and the net-deleted rows — O(batch) data IO, PRESERVED
+    * replica history, and, the deletes being positions, a key the source
+    * re-inserts later shows again, as at the source. Other replicas take
+    * ONE copy-on-write [[upsert]] rewrite that drops the deleted keys
+    * too. Deletion vectors fold past
+    * [[SinkConfig.deleteConsolidateThreshold]]. */
   def replicateTo(spark: SparkSession, dest: TableSink,
       keyCols: Seq[String], cursorPath: String): Seq[Long] = {
     require(keyCols.nonEmpty, "replicateTo needs at least one key column")
@@ -2337,10 +2331,11 @@ final class TableSink(val config: SinkConfig) {
     versions
   }
 
+  /** A replica is versioned and is not this table. */
   private def requireReplica(dest: TableSink): Unit = {
     require(dest.config.versioned,
-      "the replica must be versioned=true — changelog deletes apply as " +
-        "merge-on-read key lists")
+      "the replica must be versioned=true — each changelog apply lands " +
+        "as one snapshot commit")
     require(dest.config.tablePath != config.tablePath,
       "a table cannot replicate onto itself")
   }
@@ -2356,21 +2351,20 @@ final class TableSink(val config: SinkConfig) {
     (pinned, obs.get)
   }
 
-  /** Apply one changelog batch to `dest` as NET CHANGES (see
-    * [[replicateTo]]'s contract notes — per key the highest-version
-    * change wins, surviving inserts land as ONE keyed upsert and net
-    * deletes as ONE deleteKeys, both idempotent under the keys).
+  /** Apply one changelog batch to `dest` as NET CHANGES in ONE commit
+    * (see [[replicateTo]]'s contract notes — per key the highest-version
+    * change wins; the net deletes' key tuples join the surviving inserts'
+    * keyed upsert, idempotent under the keys).
     *
     * The key checks the public entries run as separate jobs are facts
     * the winners pin already observes. Net-delete keys are one row per
-    * key group, so [[deleteKeys]]'s `distinct` is skipped, and so is its
-    * NULL probe when no delete winner has a NULL key. When every insert
+    * key group, and a NULL among them is refused here. When every insert
     * row is its key's sole insert and winner and none has a NULL key,
     * the insert batch provably meets [[upsertMor]]'s key contract: its
-    * uniqueness check is skipped, and the observed min/max of the insert
+    * uniqueness check is skipped, and the observed min/max of the
     * winners' keys are its key envelope. Any other batch goes through
-    * the public entries unchanged, so a duplicate key within a source
-    * commit or a NULL key is refused with their messages. */
+    * the upsert's own check, so a duplicate key within a source commit
+    * or a NULL insert key is refused with its message. */
   private def applyChangeBatch(dest: TableSink, b: DataFrame,
       keyCols: Seq[String]): Unit = {
     // per key, the highest-version change wins; WITHIN one version a
@@ -2379,17 +2373,12 @@ final class TableSink(val config: SinkConfig) {
     // post-state ('insert' > 'delete', so the struct-max tie-break is
     // exact; pure delete commits have no same-version insert to tie with)
     //
-    // OPTIMIZATION r15 (guide §2.3 / §8): the net-change WINNERS are
-    // decided on NARROW metadata — (key, version, type), ~24 bytes/row —
-    // with a partially-aggregating max(struct(version, type)) instead of
-    // the former full-payload row_number window + full-payload net
-    // checkpoint. max(struct(v, t)) picks exactly the row the window's
-    // orderBy(version desc, type desc) ranked first. Net DELETES need
-    // only their key tuple, so a retraction batch (the expensive case:
-    // the r15 fixture's delete batch is 88.5k of 100k rows) never
-    // shuffles or checkpoints a payload byte; net INSERT payloads attach
-    // once, by (key, version) semi-join against the checkpointed batch.
-    // The winners frame is checkpointed (O(batch) narrow rows).
+    // The WINNERS are decided on NARROW metadata — (key, version, type)
+    // — by a partially-aggregating max(struct(version, type)), and the
+    // winners frame is checkpointed (O(batch) narrow rows): net DELETES
+    // need only their key tuple, so a retraction batch never shuffles or
+    // checkpoints a payload byte; net INSERT payloads attach once, by
+    // (key, version) semi-join against the checkpointed batch.
     val verCol = col("_change_version")
     val typCol = col("_change_type")
     val isIns = typCol === "insert"
@@ -2397,10 +2386,11 @@ final class TableSink(val config: SinkConfig) {
     val nullKey = keyCols.map(col(_).isNull).reduceLeft(_ || _)
     val bounded = boundableKeys(b.schema, keyCols)
     // the winners pin's own pass decides both branches and whether the
-    // insert attach needs a join at all: nDel/nIns gate the apply ops;
+    // insert attach needs a join at all: nd/niW gate the apply;
     // `every` is true iff every batch insert row is its key's winner
     // (per-key insert count ≤ 1 and the sole insert, when present, is
-    // the winner) — the CDC steady state
+    // the winner) — the CDC steady state. The key envelope spans every
+    // winner: deleted and inserted keys meet the head in one semi-join.
     val (winners, facts) = pinObserved(
       b.groupBy(keyCols.map(col): _*)
         .agg(max(struct(verCol.as("v"), typCol.as("t"))).as("__w"),
@@ -2413,12 +2403,18 @@ final class TableSink(val config: SinkConfig) {
           (col("__ni") === 1 && !isIns), 1)).as("nSuperseded"),
         count(when(isDel && nullKey, 1)).as("ndNull"),
         count(when(isIns && nullKey, 1)).as("niNull")) ++
-        bounded.flatMap(c => Seq(min(when(isIns, col(c))).as(s"min_$c"),
-          max(when(isIns, col(c))).as(s"max_$c"))))
+        bounded.flatMap(c => Seq(min(col(c)).as(s"min_$c"),
+          max(col(c)).as(s"max_$c"))))
     def n(name: String) = facts(name).asInstanceOf[Long]
-    val (nDel, nIns, every) = (n("nd"), n("niW"), n("nSuperseded") == 0L)
-    val del = winners.filter(isDel).select(keyCols.map(col): _*)
-    lazy val ins = {
+    val every = n("nSuperseded") == 0L
+    // one view of the replica for the gates below; the apply op runs
+    // its own guards and claim against a fresh view
+    val destLog = dest.openLog()
+    // a fresh replica has nothing to delete yet
+    val del = Option.when(n("nd") > 0L && destLog.head.nonEmpty)(
+      winners.filter(isDel).select(keyCols.map(col): _*))
+    requireNoNullKey(del.isEmpty || n("ndNull") == 0L, keyCols)
+    val ins = Option.when(n("niW") > 0L) {
       val bIns = b.filter(isIns)
       // steady state (every insert row is its key's winner — keys unique
       // within a commit, none superseded in the batch): no join needed.
@@ -2436,53 +2432,42 @@ final class TableSink(val config: SinkConfig) {
             .map(c => col(c) <=> col(s"__w_$c")).reduce(_ && _), "left_semi")
         }
       val projected = raw.drop("_change_type", "_change_version")
-      // the join result is pinned ONCE (upsertMor references its batch
+      // the join result is pinned ONCE (the upsert references its batch
       // several times); the no-join shape is already a cheap filter over
       // the caller's checkpointed batch, so a second payload checkpoint
       // would only add serialization cost
       if (every) projected else projected.localCheckpoint()
     }
-    // one view of the replica for both gates below; the apply ops run
-    // their own guards and claims against fresh views
-    val destLog = dest.openLog()
-    // a fresh replica has nothing to delete yet (and deleteKeys would
-    // rightly refuse a table with no committed snapshot)
-    if (destLog.head.nonEmpty && nDel > 0L)
-      dest.deleteKeys(del, keyCols, proven = n("ndNull") == 0L)
-    if (nIns > 0L) {
-      // MERGE-ON-READ apply (round-12): a MoR-capable replica takes the
-      // insert batch as ONE position-delete + append commit
-      // ([[upsertMor]]) — O(batch) data IO instead of rewriting every
-      // touched partition per apply, and the replica keeps history
-      // (time travel across applies) instead of expiring it. Same
-      // keyed idempotence, so the at-least-once replay contract holds.
+    if (ins.nonEmpty || del.nonEmpty) {
+      // MERGE-ON-READ apply: a MoR-capable replica takes the
+      // whole batch as ONE deletion-vector + append commit — O(batch)
+      // data IO instead of rewriting every touched partition per apply,
+      // and the replica keeps history (time travel across applies)
       if (!dest.morServable(needsHead = false, destLog))
-        dest.upsert(ins, keyCols)
-      else if (every && n("niNull") == 0L)
-        dest.upsertMor(ins, keyCols, provenBounds = Some(bounded.map(c =>
+        dest.upsert(ins.getOrElse(b.limit(0).drop("_change_type",
+          "_change_version")), keyCols, del)
+      else dest.upsertMor(ins, keyCols, del,
+        Option.when(every && n("niNull") == 0L)(bounded.map(c =>
           (c, facts(s"min_$c"), facts(s"max_$c")))))
-      else dest.upsertMor(ins, keyCols)
     }
-    // bounded read cost: sidecars stack one per apply (delete key lists
-    // AND the MoR upsert's deletion vectors) — fold past the replica
-    // config's threshold (amortized, like the manifest merge). The
-    // replication key set is uniform, so the merged list always
-    // anti-joins cleanly.
+    // bounded read cost: deletion vectors stack one per apply — fold
+    // past the replica config's threshold (amortized, like the manifest
+    // merge)
     dest.maybeConsolidateDeletes(b.sparkSession)
   }
 
   /** RESIDENT-stream CDC replication — [[replicateTo]] as a continuous
     * query: the [[readChangesStream]] feed applies to `dest` per
-    * micro-batch through the same net-change compaction, so the replica
+    * micro-batch through the same net-change compaction — one replica
+    * commit per non-empty micro-batch, deletes included — so the replica
     * tracks this table with the trigger's latency instead of a
     * scheduler's. Delivery: `foreachBatch` replays a batch whose apply
     * completed but whose checkpoint commit did not — at-least-once —
-    * and both apply ops are IDEMPOTENT under the keys (keyed upsert,
-    * keyed delete list), so replica STATE converges to exactly-once,
-    * the same argument as the cursor variant. Source maintenance
-    * windows apply: a history rewrite fails the stream loudly
-    * (generation-pinned offsets); restart it from a fresh checkpoint
-    * after the replica is rebuilt or verified. */
+    * and the keyed apply is IDEMPOTENT, so replica STATE converges to
+    * exactly-once, the same argument as the cursor variant. Source
+    * maintenance windows apply: a history rewrite fails the stream
+    * loudly (generation-pinned offsets); restart it from a fresh
+    * checkpoint after the replica is rebuilt or verified. */
   def startReplication(spark: SparkSession, dest: TableSink,
       keyCols: Seq[String], checkpointLocation: String,
       intervalSeconds: Int = 15): StreamingQuery = {
@@ -3204,7 +3189,13 @@ final class TableSink(val config: SinkConfig) {
     * an unpartitioned table, a clone or pending merge-on-read sidecars
     * take the full rewrite-and-swap instead ([[copyOnWrite]]'s rule).
     */
-  def upsert(df: DataFrame, keyCols: Seq[String]): Unit = {
+  def upsert(df: DataFrame, keyCols: Seq[String]): Unit =
+    upsert(df, keyCols, deletes = None)
+
+  /** [[upsert]] whose rewrite also drops the rows keyed by `deletes`
+    * (distinct, non-null key tuples: the replication apply's net deletes). */
+  private def upsert(df: DataFrame, keyCols: Seq[String],
+      deletes: Option[DataFrame]): Unit = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     copyOnWrite("upsert") { log =>
       requireKeyedBatch(df, keyCols, "upsert")
@@ -3216,13 +3207,14 @@ final class TableSink(val config: SinkConfig) {
         requireAlignedBatch(incoming.columns.toSeq, current.columns.toSeq,
           "upsert")
         val incomingKeys = incoming.select(keyCols.map(col): _*).distinct()
+        val keys = deletes.fold(incomingKeys)(incomingKeys.unionByName(_))
         val parts = partitionColNames.map(col)
         // the partitions the batch lands in and the old homes of its keys
         val affected = partitionsHolding(incoming.select(parts: _*)
-          .unionByName(current.join(incomingKeys, keyCols, "left_semi")
+          .unionByName(current.join(keys, keyCols, "left_semi")
             .select(parts: _*)))
         val survivors = inPartitions(current, affected)
-          .join(incomingKeys, keyCols, "left_anti")
+          .join(keys, keyCols, "left_anti")
         // existing rows passed at their own append; only the incoming
         // batch needs the gate (one bounded pass over the batch). An
         // empty batch touches no partition and commits nothing.
@@ -3248,46 +3240,50 @@ final class TableSink(val config: SinkConfig) {
     * or [[compact]]. Versioned parquet tables only; a table with no
     * commits yet takes the plain append. */
   def upsertMor(df: DataFrame, keyCols: Seq[String]): Unit =
-    upsertMor(df, keyCols, provenBounds = None)
+    upsertMor(Some(df), keyCols, deletes = None, provenBounds = None)
 
-  /** [[upsertMor]]. `provenBounds`: the caller has proved the key tuples
-    * of `df` non-null and unique (the replication apply, from its
-    * winners pin) and supplies their (column, min, max) over
-    * [[boundableKeys]], so the key-contract pass and the envelope
-    * aggregate are skipped; every other check still runs. */
-  private def upsertMor(df: DataFrame, keyCols: Seq[String],
+  /** [[upsertMor]] for the replication apply: `df` is None when nothing
+    * is inserted, and the head rows keyed by `deletes` (distinct, non-null
+    * key tuples) join the same deletion vector. `provenBounds`: the caller
+    * proved `df`'s keys non-null and unique and supplies every key's
+    * (column, min, max) over [[boundableKeys]], so the key-contract pass
+    * and the envelope aggregate are skipped. */
+  private def upsertMor(df: Option[DataFrame], keyCols: Seq[String],
+      deletes: Option[DataFrame],
       provenBounds: Option[Seq[(String, Any, Any)]]): Unit = {
     require(keyCols.nonEmpty, "upsertMor needs at least one key column")
     requireNoStreamingLog()
     requireNoLiveBranch("upsertMor")
-    if (provenBounds.isEmpty) requireKeyedBatch(df, keyCols, "upsertMor")
+    if (provenBounds.isEmpty)
+      df.foreach(requireKeyedBatch(_, keyCols, "upsertMor"))
     recoverSwap()
     require(config.versioned,
       "merge-on-read upsert needs versioned=true (deletion vectors are " +
         "commit metadata); use upsert() for copy-on-write")
     requireRowIndex("upsertMor")
-    val spark = df.sparkSession
+    val spark = df.orElse(deletes).get.sparkSession
     val log0 = openLog() // after recoverSwap: the head the first attempt uses
-    if (log0.head.isEmpty) { append(df); return }
+    if (log0.head.isEmpty) { df.foreach(append); return }
     // derive partition columns UP FRONT (idempotent in the commit's own
     // withDerived) so the replacement aligns with the head frame's
     // columns on hidden-transform tables too
-    val incoming = withDerived(Ops.ensureMessage(df))
+    val incoming = df.map(d => withDerived(Ops.ensureMessage(d)))
     // the key contract (enforced above, or proved by the caller) makes
-    // the batch's key tuples distinct: the semi-join's build side and the
-    // envelope aggregate need no distinct of their own
-    val incomingKeys = incoming.select(keyCols.map(col): _*)
+    // the batch's key tuples distinct, and disjoint from `deletes`: the
+    // semi-join's build side and the envelope aggregate need no distinct
+    val keys = (incoming.map(_.select(keyCols.map(col): _*)) ++ deletes)
+      .reduce(_ unionByName _)
     // the position resolve only needs head rows whose key COULD match a
     // batch key: the batch's per-column key envelope, pushed into the
     // head scan, lets parquet row-group stats skip the rest of the
     // replica. A superset — the semi-join decides membership; batch keys
     // are non-null, so dropping null-key head rows is sound.
     val bounds = provenBounds.getOrElse {
-      val boundable = boundableKeys(incoming.schema, keyCols)
+      val boundable = boundableKeys(keys.schema, keyCols)
       if (boundable.isEmpty) Nil
       else {
         val aggs = boundable.flatMap(c => Seq(min(col(c)), max(col(c))))
-        val row = incomingKeys.agg(aggs.head, aggs.tail: _*).head()
+        val row = keys.agg(aggs.head, aggs.tail: _*).head()
         boundable.zipWithIndex.map { case (c, i) =>
           (c, row.get(2 * i), row.get(2 * i + 1))
         }
@@ -3300,22 +3296,21 @@ final class TableSink(val config: SinkConfig) {
     retryLostRace(log0) { log =>
       val head = readHeadWithPos(spark, log)
       val base = keyEnvelope.fold(head)(head.filter(_))
-      requireAlignedBatch(incoming.columns.toSeq,
-        base.columns.toSeq.filterNot(c =>
-          c == "__graft_file" || c == "__graft_pos"), "upsertMor")
+      val tableCols = base.columns.filterNot(c =>
+        c == "__graft_file" || c == "__graft_pos")
+      incoming.foreach(i => requireAlignedBatch(i.columns.toSeq,
+        tableCols.toSeq, "upsertMor"))
       // the positions are evaluated ONCE, by commitMorMutation's
       // vectors: they describe exactly the head rows this commit's appends
-      // replace (the appends are the batch itself, not derived from it)
-      val matched = base.join(incomingKeys, keyCols, "left_semi")
+      // replace or its deletes remove (the appends are the batch itself,
+      // not derived from it)
+      val matched = base.join(keys, keyCols, "left_semi")
         .select("__graft_file", "__graft_pos")
       // select resolves case-insensitively (a batch may legally carry
       // case-different names — round-14); toDF pins the TABLE's
       // canonical names on the written files either way
-      val tableCols = base.columns.filterNot(c =>
-        c == "__graft_file" || c == "__graft_pos")
       commitMorMutation(spark, matched,
-        incoming.select(tableCols.map(col): _*).toDF(tableCols: _*))
-      ()
+        incoming.map(_.select(tableCols.map(col): _*).toDF(tableCols: _*)))
     }
   }
 
@@ -4001,7 +3996,7 @@ final class TableSink(val config: SinkConfig) {
             }
           }
         commitMorMutation(spark, matched.select("__graft_file",
-          "__graft_pos"), matched.select(dataCols: _*))
+          "__graft_pos"), Some(matched.select(dataCols: _*)))
       }
       n
     }
@@ -4132,12 +4127,13 @@ final class TableSink(val config: SinkConfig) {
     * the bitmaps ([[DeletionVectors.collect]]) and the driver writes one
     * `dv-*` file. With no matched row the commit is a PLAIN retrying
     * append (empty vectors would leave a pending delete that consolidation
-    * never clears). A failure before the claim deletes the vectors and
+    * never clears); with no `replacement` the vectors commit alone, or
+    * nothing does. A failure before the claim deletes the vectors and
     * the staged files; a crash there strands them unreferenced, for
     * [[removeOrphans]]. A caller whose replacement rows derive from the
     * positions' lineage pins it first, so both describe the same rows. */
   private[graft] def commitMorMutation(spark: SparkSession,
-      positions: DataFrame, replacement: DataFrame): Int = {
+      positions: DataFrame, replacement: Option[DataFrame]): Unit = {
     val sidecar = TableLog.newSidecarName(TableLog.Sidecar.DeletionVectors)
     val sidecarFile = logFile(sidecar)
     var added: Seq[String] = Nil
@@ -4147,11 +4143,14 @@ final class TableSink(val config: SinkConfig) {
         WarehouseIO.writeString(sidecarFile, DeletionVectors.render(dvs))
         TableLog.Sidecar.DeletionVectors -> sidecar
       }
-      val prepared = clusterForWrite(withDerived(replacement))
-      added = stagedWrite(prepared) // constraint gate runs in staging
-      commitAppendedFiles(added, maxAttempts = if (ref.nonEmpty) 1 else 20,
-        stats = manifestStatsFor(spark, added, prepared.schema),
-        sidecars = ref.toSeq)
+      val prepared = replacement.map(r => clusterForWrite(withDerived(r)))
+      // the constraint gate runs in staging
+      added = prepared.fold(Seq.empty[String])(stagedWrite)
+      if (ref.nonEmpty || prepared.nonEmpty)
+        commitAppendedFiles(added, maxAttempts = if (ref.nonEmpty) 1 else 20,
+          stats = prepared.fold(Map.empty[String, String])(p =>
+            manifestStatsFor(spark, added, p.schema)),
+          sidecars = ref.toSeq)
     } catch {
       case e: Throwable =>
         // the claim never landed: drop this attempt's unreferenced files

@@ -43,8 +43,8 @@ object StreamPipeline {
     import java.nio.file.{Files, LinkOption, Path, Paths}
     import scala.jdk.CollectionConverters._
     val target = Paths.get(sfDir).toAbsolutePath.resolve(s"$table.parquet")
-    val dir = Paths.get(
-      s"/root/repo/target/tmp/stream_src_${table}_${target.getParent.toString.replaceAll("[^A-Za-z0-9.]", "_")}")
+    val dir = Paths.get(Fixtures.path(
+      s"stream_src_${table}_${target.getParent.toString.replaceAll("[^A-Za-z0-9.]", "_")}"))
     Files.createDirectories(dir)
     def link(name: String, tgt: Path): Unit = {
       val l = dir.resolve(name)
@@ -748,7 +748,7 @@ object StreamPipeline {
     import spark.implicits._
     val name = "stream_cdc_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new graft.TableSink(graft.SinkConfig(
       tableName = "events_cdc_src", warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -768,8 +768,7 @@ object StreamPipeline {
           sum($"value".cast("decimal(18,2)")).cast("double").as("total"))
         .writeStream.outputMode("complete")
         .format("memory").queryName(name)
-        .option("checkpointLocation",
-          s"/root/repo/target/tmp/cdc_cp_${java.util.UUID.randomUUID()}")
+        .option("checkpointLocation", Fixtures.fresh("cdc_cp"))
         .start()
       try {
         q.processAllAvailable()                                // v1+v2 feed
@@ -801,7 +800,7 @@ object StreamPipeline {
     val name = "stream_cdcst_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new graft.TableSink(graft.SinkConfig(
       tableName = "events_cdcst_src", warehousePath = dest,
       numPartitions = 4, versioned = true,
@@ -817,8 +816,7 @@ object StreamPipeline {
           sum($"value".cast("decimal(18,2)")).cast("double").as("total"))
         .writeStream.outputMode("complete")
         .format("memory").queryName(name)
-        .option("checkpointLocation",
-          s"/root/repo/target/tmp/cdcst_cp_${java.util.UUID.randomUUID()}")
+        .option("checkpointLocation", Fixtures.fresh("cdcst_cp"))
         .start()
       try q.processAllAvailable() finally q.stop()
     }
@@ -835,14 +833,14 @@ object StreamPipeline {
     * ([[graft.TableSink.startReplication]]): a replica table tracks the
     * source through two append commits consumed at stream start and two
     * merge-on-read delete commits landing MID-STREAM (streamed as
-    * retractions, applied as one keyed delete). The replica's final
-    * aggregate must equal the oracle's direct computation of the
-    * survivors — same contract as the cursor-driven
+    * retractions, applied by position in one replica commit). The
+    * replica's final aggregate must equal the oracle's direct
+    * computation of the survivors — same contract as the cursor-driven
     * `q_changelog_replicate`, now with the trigger's latency. */
   def streamReplication(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     def cfg(name: String) = graft.SinkConfig(
       tableName = name, warehousePath = dest, numPartitions = 4,
       versioned = true,
@@ -888,7 +886,7 @@ object StreamPipeline {
     import spark.implicits._
     val name = "stream_tbl_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val e = Tables.events(spark, sfDir)
-    val dest = s"/root/repo/target/tmp/graft_wh_${java.util.UUID.randomUUID()}"
+    val dest = Fixtures.fresh("graft_wh")
     val sink = new graft.TableSink(graft.SinkConfig(
       tableName = "events_src", warehousePath = dest, numPartitions = 4,
       versioned = true,

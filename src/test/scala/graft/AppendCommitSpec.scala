@@ -12,7 +12,7 @@ class AppendCommitSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("appendcommit_wh")
+  private val wh = Fixtures.fresh("appendcommit_wh")
 
   test("mergeManifestLines: later chunk wins among stats-bearing " +
     "duplicates even when its line is SHORTER; bare never demotes stats") {

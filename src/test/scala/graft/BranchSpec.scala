@@ -10,7 +10,7 @@ class BranchSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("branch_wh")
+  private val wh = Fixtures.fresh("branch_wh")
   spark.conf.set("spark.sql.catalog.gbr", classOf[GraftCatalog].getName)
   spark.conf.set("spark.sql.catalog.gbr.warehouse", wh)
 

@@ -10,7 +10,7 @@ class CatalogSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("catalog_wh")
+  private val wh = Fixtures.fresh("catalog_wh")
   spark.conf.set("spark.sql.catalog.gtest", classOf[GraftCatalog].getName)
   spark.conf.set("spark.sql.catalog.gtest.warehouse", wh)
 

@@ -11,7 +11,7 @@ class ChangelogCursorSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("chgcursor_wh")
+  private val wh = Fixtures.fresh("chgcursor_wh")
 
   private def mkSink(name: String): TableSink =
     new TableSink(SinkConfig(tableName = name, warehousePath = wh,
@@ -134,7 +134,7 @@ class ChangelogCursorSpec extends AnyFunSuite {
         nm.startsWith("del-") || nm.startsWith("keys-") ||
           nm.startsWith("dv-"))
     }
-    // one delete-only source commit per cycle -> one key-list sidecar
+    // one delete-only source commit per cycle -> one deletion vector
     // per apply; without consolidation the replica would accumulate
     // `cycles` sidecars and every read would fold them all
     var maxPending = 0
@@ -164,7 +164,7 @@ class ChangelogCursorSpec extends AnyFunSuite {
     }
     val logDir0 = new HPath(s"${replica0.config.tablePath}/_graft_log")
     assert(TestSpark.childNames(logDir0)
-      .count(nm => nm.endsWith("_keys") || nm.startsWith("keys-")) == 4,
+      .count(_.startsWith("dv-")) == 4,
       "threshold 0 must leave every sidecar in place")
     assert(replica0.read(spark).select($"id").as[Long].collect().toSet
       == Set(5L, 6L))

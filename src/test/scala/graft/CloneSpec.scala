@@ -10,7 +10,7 @@ class CloneSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("clone_wh")
+  private val wh = Fixtures.fresh("clone_wh")
 
   private def mkSource(name: String): TableSink = {
     val sink = new TableSink(SinkConfig(tableName = name, warehousePath = wh,

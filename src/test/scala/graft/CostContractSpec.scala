@@ -3,18 +3,19 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The cost contract of each copy-on-write and merge-on-read `TableSink`
-  * operation, of each SQL DML door in merge-on-read mode and of the reads
-  * of a table with pending deletes: one row per operation on a fixed
-  * small table, recording the Spark jobs it launches
-  * ([[TestSpark.jobsDuring]]) and the directory listings it makes
-  * ([[WarehouseIO.dirListings]]). Each ceiling is a measured count, at or
-  * below the count of the change before it; a change that lowers a count
-  * tightens its row, one that raises a count says why. */
+  * operation, of each SQL DML door in merge-on-read mode, of the
+  * replication apply and of the reads of a table with pending deletes:
+  * one row per operation on a fixed small table, recording the Spark jobs
+  * it launches ([[TestSpark.jobsDuring]]) and the directory listings it
+  * makes ([[WarehouseIO.dirListings]]); its metadata reads are
+  * reported. Each ceiling is a measured count, at or below the count of
+  * the change before it; a change that lowers a count tightens its row,
+  * one that raises a count says why. */
 class CostContractSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("cost_wh")
+  private val wh = Fixtures.fresh("cost_wh")
   spark.conf.set("spark.sql.catalog.gcost", classOf[GraftCatalog].getName)
   spark.conf.set("spark.sql.catalog.gcost.warehouse", wh)
 
@@ -131,8 +132,53 @@ class CostContractSpec extends AnyFunSuite {
         "GROUP BY cat").collect(); () } }),
     new Op("deletes metadata table", 1, 1)(t => {
       table(t).deletePositions(spark, "id = 3")
-      () => { spark.sql(s"SELECT * FROM gcost.$t.deletes").collect(); () } })
+      () => { spark.sql(s"SELECT * FROM gcost.$t.deletes").collect(); () } }),
+    new Op("deleteKeys", 2, 3)(t => {
+      val s = table(t)
+      () => { s.deleteKeys(Seq(3L, 4L).toDF("id"), Seq("id")); () } }),
+    new Op("replicateTo, steady apply", 7, 7)(t => {
+      val (src, apply) = replica(t)
+      src.updateMor(spark, $"id" <= 2L, Seq("v" -> ($"v" + 1.0)))
+      src.append(Seq((41L, "a", 41.0)).toDF("id", "cat", "v"))
+      apply }),
+    new Op("replicateTo, delete-only apply", 5, 7)(t => {
+      val (src, apply) = replica(t)
+      src.deletePositions(spark, "id <= 2")
+      apply }),
+    new Op("replicateTo, mixed apply", 7, 7)(t => {
+      val (src, apply) = replica(t)
+      mixedChange(src)
+      apply }),
+    new Op("replica head read after a mixed apply", 2, 3)(t => {
+      val (src, apply) = replica(t)
+      mixedChange(src)
+      apply()
+      () => { spark.sql(s"SELECT cat, count(*), sum(v) FROM gcost.${t}_rep " +
+        "GROUP BY cat").collect(); () } })
   )
+
+  /** A source table holding [[base]] and its replica after the initial
+    * copy and one mixed apply (so the replica head carries a deletion
+    * vector), with the call that replicates the next change. */
+  private def replica(t: String): (TableSink, () => Unit) = {
+    val src = table(t)
+    val rep = new TableSink(SinkConfig(tableName = s"${t}_rep",
+      warehousePath = wh, versioned = true))
+    val cursor = s"$wh/${t}_cursor"
+    val apply = () => { src.replicateTo(spark, rep, Seq("id"), cursor); () }
+    apply()
+    src.updateMor(spark, $"id" === 40L, Seq("v" -> ($"v" + 1.0)))
+    src.deletePositions(spark, "id = 39")
+    apply()
+    (src, apply)
+  }
+
+  /** Updates of two live keys, a delete of a third and one new key. */
+  private def mixedChange(src: TableSink): Unit = {
+    src.updateMor(spark, $"id" <= 2L, Seq("v" -> ($"v" + 1.0)))
+    src.deletePositions(spark, "id = 5")
+    src.append(Seq((41L, "a", 41.0)).toDF("id", "cat", "v"))
+  }
 
   Seq((3L, "d", 300.0), (99L, "a", 9.0)).toDF("id", "cat", "v")
     .createOrReplaceTempView("cost_merge_src")
@@ -141,9 +187,11 @@ class CostContractSpec extends AnyFunSuite {
     test(s"cost contract: ${op.name}") {
       val call = op.prepare(s"cost_t$i")
       val before = WarehouseIO.dirListings.get()
+      val reads = WarehouseIO.metaReads.get()
       val jobs = TestSpark.jobsDuring(call()).size
       val listings = WarehouseIO.dirListings.get() - before
-      info(s"${op.name}: $jobs jobs, $listings listings")
+      info(s"${op.name}: $jobs jobs, $listings listings, " +
+        s"${WarehouseIO.metaReads.get() - reads} metadata reads")
       assert(jobs <= op.jobs, s"${op.name} ran $jobs Spark jobs")
       assert(listings <= op.listings, s"${op.name} made $listings listings")
     }

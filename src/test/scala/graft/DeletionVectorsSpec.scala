@@ -12,7 +12,7 @@ class DeletionVectorsSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("dv_wh")
+  private val wh = Fixtures.fresh("dv_wh")
 
   private def bits(ps: Long*): Roaring64NavigableMap =
     Roaring64NavigableMap.bitmapOf(ps: _*)

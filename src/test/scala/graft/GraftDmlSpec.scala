@@ -12,7 +12,7 @@ class GraftDmlSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("dml_wh")
+  private val wh = Fixtures.fresh("dml_wh")
   spark.conf.set("spark.sql.catalog.gdml", classOf[GraftCatalog].getName)
   spark.conf.set("spark.sql.catalog.gdml.warehouse", wh)
 
@@ -152,7 +152,7 @@ class GraftDmlSpec extends AnyFunSuite {
   }
 
   test("library update reaches rows in the NULL partition") {
-    val dir = TestSpark.tmpDir("upd_nullpart")
+    val dir = Fixtures.fresh("upd_nullpart")
     val sink = new TableSink(SinkConfig(tableName = "t", warehousePath = dir,
       partitionSpec = Seq(PartitionField("cat", Transform.Identity))))
     sink.append(Seq((1L, Some("a"), 1.0), (2L, None, 2.0), (3L, None, 3.0))
@@ -169,7 +169,7 @@ class GraftDmlSpec extends AnyFunSuite {
     * NULL partition; `filesOf(part)` maps partition `part`'s data files to
     * their mtimes. */
   private def nullPartTable(name: String): (TableSink, String => Map[String, Long]) = {
-    val dir = TestSpark.tmpDir(name)
+    val dir = Fixtures.fresh(name)
     val sink = new TableSink(SinkConfig(tableName = "t", warehousePath = dir,
       versioned = true,
       partitionSpec = Seq(PartitionField("cat", Transform.Identity))))
@@ -328,7 +328,7 @@ class GraftDmlSpec extends AnyFunSuite {
   // ----------------------------------------------- library TableSink.update
 
   test("library update rewrites only the touched partitions") {
-    val dir = TestSpark.tmpDir("upd_parts")
+    val dir = Fixtures.fresh("upd_parts")
     val sink = new TableSink(SinkConfig(tableName = "t", warehousePath = dir,
       partitionSpec = Seq(PartitionField("cat", Transform.Identity))))
     sink.append(Seq((1L, "a", 1.0), (2L, "a", 2.0), (3L, "b", 3.0),
@@ -787,7 +787,7 @@ class GraftDmlSpec extends AnyFunSuite {
   }
 
   test("library update refuses partition-deriving columns and unknown columns") {
-    val dir = TestSpark.tmpDir("upd_guard")
+    val dir = Fixtures.fresh("upd_guard")
     val sink = new TableSink(SinkConfig(tableName = "t", warehousePath = dir,
       partitionSpec = Seq(PartitionField("ts", Transform.Year))))
     sink.append(Seq((1L, java.sql.Timestamp.valueOf("2024-03-01 00:00:00")))
@@ -804,7 +804,7 @@ class GraftDmlSpec extends AnyFunSuite {
 
   test("library update refuses a data column that collides with its " +
     "partition-join bookkeeping name") {
-    val dir = TestSpark.tmpDir("upd_clash")
+    val dir = Fixtures.fresh("upd_clash")
     val sink = new TableSink(SinkConfig(tableName = "t", warehousePath = dir,
       partitionSpec = Seq(PartitionField("cat", Transform.Identity))))
     sink.append(Seq((1L, "a", 9.0)).toDF("id", "cat", "cat__graft_tv"))
@@ -818,7 +818,7 @@ class GraftDmlSpec extends AnyFunSuite {
   }
 
   test("durable declaration sidecars ride every rewrite swap") {
-    val dir = TestSpark.tmpDir("sidecars")
+    val dir = Fixtures.fresh("sidecars")
     val sink = new TableSink(SinkConfig(tableName = "t", warehousePath = dir,
       versioned = true, checkConstraints = Seq("v >= 0")))
     sink.append(Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("id", "v"))
@@ -837,7 +837,7 @@ class GraftDmlSpec extends AnyFunSuite {
   }
 
   test("library update: zero matches is a no-op, missing table returns 0") {
-    val dir = TestSpark.tmpDir("upd_noop")
+    val dir = Fixtures.fresh("upd_noop")
     val sink = new TableSink(SinkConfig(tableName = "t", warehousePath = dir,
       versioned = true))
     assert(sink.update(spark, lit(true), Seq("v" -> lit(0.0))) == 0L)

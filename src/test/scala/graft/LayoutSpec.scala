@@ -7,7 +7,7 @@ class LayoutSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmpWarehouse(): String = TestSpark.tmpDir("graft_layout")
+  private def tmpWarehouse(): String = Fixtures.fresh("graft_layout")
 
   test("zvalue interleaves bits LSB-first, dimension i at position b*n+i") {
     // x=3 (011), y=5 (101), 3 bits, spans 0..7 -> identity normalization:
@@ -580,7 +580,7 @@ class LayoutSpec extends AnyFunSuite {
     assert(a.read(spark).inputFiles.length >= 8)
     // each file covers a disjoint k-range: max total overlap == 0
     new ZoneMaps(a).analyze(spark, Seq("k"))
-    val zones = spark.read.parquet(s"${a.config.tablePath}/_graft_stats")
+    val zones = StatsSidecar.read(spark, s"${a.config.tablePath}/_graft_stats")
       .select("min_k", "max_k").as[(Long, Long)].collect().sortBy(_._1)
     zones.sliding(2).foreach {
       case Array((_, hi1), (lo2, _)) => assert(hi1 <= lo2,

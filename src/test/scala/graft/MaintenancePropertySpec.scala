@@ -14,7 +14,7 @@ class MaintenancePropertySpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("maintprop_wh")
+  private val wh = Fixtures.fresh("maintprop_wh")
 
   private def mkSink(name: String): TableSink = {
     val sink = new TableSink(SinkConfig(tableName = name, warehousePath = wh,

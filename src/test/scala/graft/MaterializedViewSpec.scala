@@ -11,7 +11,7 @@ class MaterializedViewSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("mv_wh")
+  private val wh = Fixtures.fresh("mv_wh")
 
   private def mkSource(name: String): TableSink =
     new TableSink(SinkConfig(tableName = name, warehousePath = wh,

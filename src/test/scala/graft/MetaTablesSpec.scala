@@ -10,7 +10,7 @@ class MetaTablesSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("meta_wh")
+  private val wh = Fixtures.fresh("meta_wh")
 
   /** The data-file scans in `df`'s physical plan (v1 or v2 file sources). */
   private def dataFileScans(df: org.apache.spark.sql.DataFrame) =

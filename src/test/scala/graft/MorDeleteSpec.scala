@@ -11,7 +11,7 @@ class MorDeleteSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("mor_wh")
+  private val wh = Fixtures.fresh("mor_wh")
   spark.conf.set("spark.sql.catalog.gmor", classOf[GraftCatalog].getName)
   spark.conf.set("spark.sql.catalog.gmor.warehouse", wh)
 

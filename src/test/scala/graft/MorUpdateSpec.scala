@@ -12,7 +12,7 @@ class MorUpdateSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("morupd_wh")
+  private val wh = Fixtures.fresh("morupd_wh")
   spark.conf.set("spark.sql.catalog.gmu", classOf[GraftCatalog].getName)
   spark.conf.set("spark.sql.catalog.gmu.warehouse", wh)
 
@@ -176,7 +176,7 @@ class MorUpdateSpec extends AnyFunSuite {
     val sink = mkSink("u8")
     val dst = new TableSink(SinkConfig(tableName = "u8_dst",
       warehousePath = wh, versioned = true))
-    val cursor = TestSpark.tmpDir("morupd_cursor") + "/c"
+    val cursor = Fixtures.fresh("morupd_cursor") + "/c"
     sink.replicateTo(spark, dst, Seq("id"), cursor)
     sink.updateMor(spark, $"id" === 1L, Seq("v" -> lit(11.0)))
     sink.replicateTo(spark, dst, Seq("id"), cursor)
@@ -310,7 +310,7 @@ class MorUpdateSpec extends AnyFunSuite {
     val sink = mkSink("u13")
     val dst = new TableSink(SinkConfig(tableName = "u13_dst",
       warehousePath = wh, versioned = true))
-    val cursor = TestSpark.tmpDir("morupd_cursor13") + "/c"
+    val cursor = Fixtures.fresh("morupd_cursor13") + "/c"
     sink.replicateTo(spark, dst, Seq("id"), cursor)         // initial copy
     val dstFiles = dataFiles("u13_dst")
     val dstVs = dst.snapshotVersions().size

@@ -10,7 +10,7 @@ class PartialCompactSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("partial_compact_wh")
+  private val wh = Fixtures.fresh("partial_compact_wh")
 
   private def spineCounts(sink: TableSink): Map[String, Int] =
     sink.dataFilesRel()

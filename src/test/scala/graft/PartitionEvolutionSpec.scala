@@ -11,7 +11,7 @@ class PartitionEvolutionSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private def freshWh() = TestSpark.tmpDir("pe_wh")
+  private def freshWh() = Fixtures.fresh("pe_wh")
 
   private def rows(r: (Long, String, Double, String)*) =
     r.toSeq.toDF("id", "cat", "v", "ts_s")

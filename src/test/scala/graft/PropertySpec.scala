@@ -232,7 +232,7 @@ class PropertySpec extends AnyFunSuite {
     // key-list deletes that the hand-written cases cannot enumerate.
     val rnd = new scala.util.Random(421983L)
     (1 to 3).foreach { round =>
-      val wh = TestSpark.tmpDir(s"chg_prop_$round")
+      val wh = Fixtures.fresh(s"chg_prop_$round")
       val sink = new TableSink(SinkConfig(tableName = "t",
         warehousePath = wh, versioned = true,
         partitionSpec = Seq(PartitionField("cat", Transform.Identity))))
@@ -285,7 +285,7 @@ class PropertySpec extends AnyFunSuite {
     // consolidate-mid-mutation-stack, repeated updates of one key.
     val rnd = new scala.util.Random(731942L)
     (1 to 3).foreach { round =>
-      val wh = TestSpark.tmpDir(s"chg_mor_prop_$round")
+      val wh = Fixtures.fresh(s"chg_mor_prop_$round")
       val sink = new TableSink(SinkConfig(tableName = "t",
         warehousePath = wh, versioned = true,
         partitionSpec = Seq(PartitionField("cat", Transform.Identity))))
@@ -371,7 +371,7 @@ class PropertySpec extends AnyFunSuite {
     var specFlips = 0      // proof the spec-evolution op fires (asserted)
     var postFlipCommits = 0 // ...and that commits land on a flipped spine
     (1 to 2).foreach { round =>
-      val wh = TestSpark.tmpDir(s"chg_evo_prop_$round")
+      val wh = Fixtures.fresh(s"chg_evo_prop_$round")
       val cat = s"gevo$round"
       spark.conf.set(s"spark.sql.catalog.$cat",
         classOf[GraftCatalog].getName)

@@ -11,7 +11,7 @@ class ReadPlanningSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("plan_wh")
+  private val wh = Fixtures.fresh("plan_wh")
   spark.conf.set("spark.sql.catalog.gplan", classOf[GraftCatalog].getName)
   spark.conf.set("spark.sql.catalog.gplan.warehouse", wh)
 
@@ -123,7 +123,7 @@ class ReadPlanningSpec extends AnyFunSuite {
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
       "message m { required int64 id; required binary payload; }")
-    val dir = TestSpark.tmpDir("binary_as_string")
+    val dir = Fixtures.fresh("binary_as_string")
     val w = ExampleParquetWriter.builder(
         new org.apache.hadoop.fs.Path(s"$dir/part-0.parquet"))
       .withType(schema).build()

@@ -8,7 +8,7 @@ class RouterSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("batch routing fans records out to per-table sinks completely") {
-    val wh = TestSpark.tmpDir("router")
+    val wh = Fixtures.fresh("router")
     val e = Tables.events(spark, TestSpark.sfDir)
       .withColumn("dest", when($"value" < 100, "small").otherwise("large"))
     TableRouter.appendRouted(e, "dest",
@@ -22,14 +22,14 @@ class RouterSpec extends AnyFunSuite {
   }
 
   test("streaming routing fans out per micro-batch with a checkpoint") {
-    val wh = TestSpark.tmpDir("router_stream")
+    val wh = Fixtures.fresh("router_stream")
     val q = TableRouter.startRoutedStream(
       StreamPipeline.eventsStream(spark, TestSpark.sfDir)
         .withColumn("dest", concat(lit("t_"), $"event_type")),
       "dest",
       t => SinkConfig(tableName = t, warehousePath = wh,
         partitionSpec = Seq(PartitionField("ts", Transform.Day, Some("d")))),
-      TestSpark.tmpDir("router_cp"), intervalSeconds = 1)
+      Fixtures.fresh("router_cp"), intervalSeconds = 1)
     q.processAllAvailable()
     q.stop()
     val types = Tables.events(spark, TestSpark.sfDir)
@@ -40,7 +40,7 @@ class RouterSpec extends AnyFunSuite {
 
   test("versioned routed stream is exactly-once PER DESTINATION: a " +
     "replayed batch commits only to the tables that missed it") {
-    val wh = TestSpark.tmpDir("router_v_wh")
+    val wh = Fixtures.fresh("router_v_wh")
     def cfg(t: String) = SinkConfig(tableName = s"v_$t",
       warehousePath = wh, versioned = true)
     def batch(rows: (Long, String, Double)*) =
@@ -78,7 +78,7 @@ class RouterSpec extends AnyFunSuite {
     val src = MemoryStream[(Long, String, Double)]
     val q = TableRouter.startRoutedStreamVersioned(
       src.toDF().toDF("id", "dest", "v"), "dest", cfg,
-      TestSpark.tmpDir("router_v_cp"), streamId = Some("router2"),
+      Fixtures.fresh("router_v_cp"), streamId = Some("router2"),
       intervalSeconds = 1)
     try {
       src.addData((10L, "a", 1.0), (11L, "c", 2.0))
@@ -90,7 +90,7 @@ class RouterSpec extends AnyFunSuite {
 
   test("concurrent fan-out commits every destination exactly as the " +
     "sequential path would, and failures surface after all settle") {
-    val wh = TestSpark.tmpDir("router_conc_wh")
+    val wh = Fixtures.fresh("router_conc_wh")
     def cfg(t: String) = SinkConfig(tableName = s"c_$t",
       warehousePath = wh, versioned = true)
     val dests = ('a' to 'f').map(_.toString)

@@ -18,7 +18,7 @@ class SidecarEvolutionSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("sidecar_evo_wh")
+  private val wh = Fixtures.fresh("sidecar_evo_wh")
   spark.conf.set("spark.sql.catalog.gsec", classOf[GraftCatalog].getName)
   spark.conf.set("spark.sql.catalog.gsec.warehouse", wh)
 

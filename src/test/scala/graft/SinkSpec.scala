@@ -19,7 +19,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("append + read-back loses and duplicates nothing") {
     val e = Tables.events(spark, TestSpark.sfDir)
-    val sink = mkSink(TestSpark.tmpDir("sink_rt"))
+    val sink = mkSink(Fixtures.fresh("sink_rt"))
     sink.append(e)
     val back = sink.read(spark)
     assert(back.count() == e.count())
@@ -34,7 +34,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("compact collapses salted small files without changing the data") {
     val e = Tables.events(spark, TestSpark.sfDir)
-    val sink = mkSink(TestSpark.tmpDir("sink_compact"), numPartitions = 4)
+    val sink = mkSink(Fixtures.fresh("sink_compact"), numPartitions = 4)
     sink.append(e)
     sink.append(e.limit(200)) // second commit: more small files
     def files(): Seq[java.nio.file.Path] = {
@@ -66,7 +66,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("create-if-missing: first append creates the table directory") {
-    val wh = TestSpark.tmpDir("sink_create")
+    val wh = Fixtures.fresh("sink_create")
     val sink = mkSink(wh)
     assert(!new java.io.File(s"$wh/t").exists())
     sink.append(Tables.events(spark, TestSpark.sfDir).limit(10))
@@ -75,21 +75,21 @@ class SinkSpec extends AnyFunSuite {
 
   test("second append appends (mode=append), not overwrites") {
     val e = Tables.events(spark, TestSpark.sfDir).limit(100)
-    val sink = mkSink(TestSpark.tmpDir("sink_app"))
+    val sink = mkSink(Fixtures.fresh("sink_app"))
     sink.append(e)
     sink.append(e)
     assert(sink.read(spark).count() == 200)
   }
 
   test("unpartitioned config writes flat files") {
-    val sink = new TableSink(SinkConfig("flat", TestSpark.tmpDir("sink_flat")))
+    val sink = new TableSink(SinkConfig("flat", Fixtures.fresh("sink_flat")))
     sink.append(Seq((1, "a"), (2, "b")).toDF("id", "name"))
     assert(sink.read(spark).count() == 2)
   }
 
   test("sortWithinPartitions orders rows inside each file") {
     val e = Tables.events(spark, TestSpark.sfDir)
-    val sink = mkSink(TestSpark.tmpDir("sink_sort"), numPartitions = 1)
+    val sink = mkSink(Fixtures.fresh("sink_sort"), numPartitions = 1)
     sink.append(e)
     // per-file monotonicity of event_id within each partition dir
     val files = new java.io.File(sink.config.tablePath).listFiles()
@@ -104,7 +104,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("orc file format knob is honored end-to-end") {
-    val sink = new TableSink(SinkConfig("orc_t", TestSpark.tmpDir("sink_orc"),
+    val sink = new TableSink(SinkConfig("orc_t", Fixtures.fresh("sink_orc"),
       fileFormat = "orc",
       partitionSpec = Seq(PartitionField("event_type", Transform.Identity))))
     val e = Tables.events(spark, TestSpark.sfDir).limit(200)
@@ -116,7 +116,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("compression codec rides through extraOptions (zstd)") {
-    val sink = new TableSink(SinkConfig("zstd_t", TestSpark.tmpDir("sink_zstd"),
+    val sink = new TableSink(SinkConfig("zstd_t", Fixtures.fresh("sink_zstd"),
       extraOptions = Map("compression" -> "zstd")))
     sink.append(Tables.events(spark, TestSpark.sfDir).limit(100))
     assert(sink.read(spark).count() == 100)
@@ -130,7 +130,7 @@ class SinkSpec extends AnyFunSuite {
     // even event_ids carry an explicit partition value; odd rows derive
     val withOverride = e.withColumn(TableSink.PartitionDataCol,
       when($"event_id" % 2 === 0, map(lit("event_date"), lit("1970-01-01"))))
-    val sink = mkSink(TestSpark.tmpDir("sink_pdata"))
+    val sink = mkSink(Fixtures.fresh("sink_pdata"))
     sink.append(withOverride)
     val back = sink.read(spark)
     assert(!back.columns.contains(TableSink.PartitionDataCol),
@@ -145,7 +145,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("sink reads prune partitions on derived columns") {
-    val sink = mkSink(TestSpark.tmpDir("sink_prune"))
+    val sink = mkSink(Fixtures.fresh("sink_prune"))
     sink.append(Tables.events(spark, TestSpark.sfDir))
     val plan = sink.read(spark).filter($"event_type" === "click")
       .queryExecution.executedPlan.toString
@@ -156,7 +156,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("upsert replaces matching keys, keeps the rest, rewrites only touched partitions") {
     val e = Tables.events(spark, TestSpark.sfDir)
-    val sink = mkSink(TestSpark.tmpDir("sink_upsert"))
+    val sink = mkSink(Fixtures.fresh("sink_upsert"))
     sink.append(e)
     val before = sink.read(spark).count()
     val updates = e.filter($"event_type" === "click").limit(5)
@@ -183,7 +183,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("delete rewrites touched partitions; emptied partitions actually vanish") {
     val e = Tables.events(spark, TestSpark.sfDir)
-    val sink = mkSink(TestSpark.tmpDir("sink_delete"))
+    val sink = mkSink(Fixtures.fresh("sink_delete"))
     sink.append(e)
     val total = sink.read(spark).count()
     // partial delete inside partitions: negative-value clicks
@@ -208,7 +208,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("versioned sink time-travels over append history; rewrites expire it") {
-    val sink = new TableSink(SinkConfig("vt", TestSpark.tmpDir("sink_vt"),
+    val sink = new TableSink(SinkConfig("vt", Fixtures.fresh("sink_vt"),
       versioned = true,
       partitionSpec = Seq(PartitionField("event_type", Transform.Identity))))
     val e = Tables.events(spark, TestSpark.sfDir)
@@ -243,7 +243,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("upsert follows a key that migrates partitions (no stale duplicate)") {
     val e = Tables.events(spark, TestSpark.sfDir)
-    val sink = mkSink(TestSpark.tmpDir("sink_migrate"))
+    val sink = mkSink(Fixtures.fresh("sink_migrate"))
     sink.append(e)
     val total = sink.read(spark).count()
     val moved = e.filter($"event_type" === "click").limit(1)
@@ -259,7 +259,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("delete keeps rows where the predicate evaluates to NULL") {
-    val sink = new TableSink(SinkConfig("nulls", TestSpark.tmpDir("sink_nulls")))
+    val sink = new TableSink(SinkConfig("nulls", Fixtures.fresh("sink_nulls")))
     sink.append(Seq((1L, Some(10.0)), (2L, None), (3L, Some(99.0)))
       .toDF("id", "v"))
     assert(sink.delete(spark, $"v" < 50.0) == 1L,
@@ -272,7 +272,7 @@ class SinkSpec extends AnyFunSuite {
     val e = Tables.events(spark, TestSpark.sfDir).limit(10)
     val withOverride = e.withColumn(TableSink.PartitionDataCol,
       map(lit("some_other_col"), lit("x"))) // non-null map, no event_date entry
-    val sink = mkSink(TestSpark.tmpDir("sink_pdata_partial"))
+    val sink = mkSink(Fixtures.fresh("sink_pdata_partial"))
     sink.append(withOverride) // ANSI element_at would throw MAP_KEY_DOES_NOT_EXIST
     val back = sink.read(spark)
     assert(back.count() == 10)
@@ -292,7 +292,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("additive schema evolution: mergeSchema read unions appended columns") {
-    val sink = new TableSink(SinkConfig("evolve", TestSpark.tmpDir("sink_evolve")))
+    val sink = new TableSink(SinkConfig("evolve", Fixtures.fresh("sink_evolve")))
     sink.append(Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
     sink.append(Seq((3L, "c", 0.5)).toDF("id", "name", "score"))
     val merged = sink.read(spark, mergeSchema = true)
@@ -329,7 +329,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("CHECK constraints: versioned append aborts atomically in staging") {
-    val wh = TestSpark.tmpDir("sink_check_wh")
+    val wh = Fixtures.fresh("sink_check_wh")
     val sink = new TableSink(SinkConfig(tableName = "chk", warehousePath = wh,
       versioned = true,
       partitionSpec = Seq(PartitionField("cat", Transform.Identity)),
@@ -361,7 +361,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("CHECK constraints: empty batches pass; partition types hold") {
-    val wh = TestSpark.tmpDir("sink_check_wh3")
+    val wh = Fixtures.fresh("sink_check_wh3")
     val sink = new TableSink(SinkConfig(tableName = "chk3",
       warehousePath = wh, versioned = true,
       partitionSpec = Seq(PartitionField("cat", Transform.Identity)),
@@ -391,7 +391,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("CHECK constraints: unversioned append pre-validates before write") {
-    val wh = TestSpark.tmpDir("sink_check_wh2")
+    val wh = Fixtures.fresh("sink_check_wh2")
     val sink = new TableSink(SinkConfig(tableName = "chk2", warehousePath = wh,
       checkConstraints = Seq("v > 0")))
     val e = intercept[IllegalArgumentException](
@@ -426,7 +426,7 @@ class SinkSpec extends AnyFunSuite {
   test("copy-on-write upsert enforces the key contract: NULL or " +
     "duplicate key tuples refuse before any rewrite (round-13)") {
     val sink = new TableSink(SinkConfig(tableName = "t",
-      warehousePath = TestSpark.tmpDir("sink_keycontract")))
+      warehousePath = Fixtures.fresh("sink_keycontract")))
     sink.append(Seq((1L, "a", 1.0), (2L, "a", 2.0)).toDF("id", "cat", "v"))
     val vBefore = sink.read(spark).orderBy("id").collect().toSeq
     val e1 = intercept[IllegalArgumentException](sink.upsert(

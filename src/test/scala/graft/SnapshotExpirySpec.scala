@@ -10,7 +10,7 @@ class SnapshotExpirySpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("expiry_wh")
+  private val wh = Fixtures.fresh("expiry_wh")
 
   private def mkSink(name: String): TableSink = {
     val sink = new TableSink(SinkConfig(tableName = name, warehousePath = wh,

@@ -56,10 +56,10 @@ class StreamingSpec extends AnyFunSuite {
     def rows(data: (Long, Long, String)*) =
       data.map { case (id, ts, et) => (id, ts, id, et, 1.0, "{}") }
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val srcDir = new java.io.File(TestSpark.tmpDir("funnel_ooo"))
+    val srcDir = new java.io.File(Fixtures.fresh("funnel_ooo"))
     srcDir.mkdirs()
     def stage(name: String, df: org.apache.spark.sql.DataFrame, mtime: Long): Unit = {
-      val tmp = TestSpark.tmpDir(s"funnel_ooo_$name")
+      val tmp = Fixtures.fresh(s"funnel_ooo_$name")
       df.coalesce(1).write.parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -124,10 +124,10 @@ class StreamingSpec extends AnyFunSuite {
     def rows(data: (Long, Long, String)*) =
       data.map { case (id, ts, et) => (id, ts, id, et, 1.0, "{}") }
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val srcDir = new java.io.File(TestSpark.tmpDir("loj_batches"))
+    val srcDir = new java.io.File(Fixtures.fresh("loj_batches"))
     srcDir.mkdirs()
     def stage(name: String, df: org.apache.spark.sql.DataFrame, mtime: Long): Unit = {
-      val tmp = TestSpark.tmpDir(s"loj_batches_$name")
+      val tmp = Fixtures.fresh(s"loj_batches_$name")
       df.coalesce(1).write.parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -176,10 +176,10 @@ class StreamingSpec extends AnyFunSuite {
     // three source files, one micro-batch each (maxFilesPerTrigger=1),
     // touching overlapping users: value state must CARRY totals across
     // batches, not recompute per batch
-    val srcDir = new java.io.File(TestSpark.tmpDir("tws_src"))
+    val srcDir = new java.io.File(Fixtures.fresh("tws_src"))
     srcDir.mkdirs()
     def stage(name: String, mtime: Long, data: (Long, Double)*): Unit = {
-      val tmp = TestSpark.tmpDir(s"tws_$name")
+      val tmp = Fixtures.fresh(s"tws_$name")
       data.toDF("user_id", "value").coalesce(1).write.parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -205,12 +205,12 @@ class StreamingSpec extends AnyFunSuite {
     // the watermark advancing. The timer must fire for user 1 exactly
     // once (watermark past last-event + gap) and never for user 2 (still
     // live at end of stream).
-    val srcDir = new java.io.File(TestSpark.tmpDir("timer_src"))
+    val srcDir = new java.io.File(Fixtures.fresh("timer_src"))
     srcDir.mkdirs()
     def t(s: String) = java.sql.Timestamp.valueOf(s)
     def stage(name: String, mtime: Long,
         data: (Long, java.sql.Timestamp)*): Unit = {
-      val tmp = TestSpark.tmpDir(s"timer_$name")
+      val tmp = Fixtures.fresh(s"timer_$name")
       data.toDF("user_id", "ts").coalesce(1).write.parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -236,11 +236,11 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming sink is exactly-once across a checkpointed restart") {
     val cfg = SinkConfig(
       tableName = "events_stream",
-      warehousePath = TestSpark.tmpDir("stream_sink"),
+      warehousePath = Fixtures.fresh("stream_sink"),
       batchIntervalSeconds = 1,
       partitionSpec = Seq(PartitionField("event_type", Transform.Identity)))
     val sink = new TableSink(cfg)
-    val cp = TestSpark.tmpDir("stream_cp")
+    val cp = Fixtures.fresh("stream_cp")
     val src = StreamPipeline.eventsStream(spark, TestSpark.sfDir)
 
     val q1 = sink.startStream(src, cp)
@@ -269,7 +269,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val sink = new TableSink(SinkConfig(
       tableName = "events_srcstream",
-      warehousePath = TestSpark.tmpDir("stream_read_wh"),
+      warehousePath = Fixtures.fresh("stream_read_wh"),
       versioned = true,
       partitionSpec = Seq(PartitionField("cat", Transform.Identity))))
     sink.append(Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "cat", "v"))
@@ -277,7 +277,7 @@ class StreamingSpec extends AnyFunSuite {
       .groupBy($"cat").agg(org.apache.spark.sql.functions.sum($"id").as("s"))
       .writeStream.outputMode("complete")
       .format("memory").queryName("tbl_stream")
-      .option("checkpointLocation", TestSpark.tmpDir("stream_read_cp"))
+      .option("checkpointLocation", Fixtures.fresh("stream_read_cp"))
       .start()
     try {
       q.processAllAvailable()
@@ -298,7 +298,7 @@ class StreamingSpec extends AnyFunSuite {
       .groupBy($"cat").agg(org.apache.spark.sql.functions.sum($"id").as("s"))
       .writeStream.outputMode("complete")
       .format("memory").queryName("tbl_stream_mor")
-      .option("checkpointLocation", TestSpark.tmpDir("stream_read_cp2"))
+      .option("checkpointLocation", Fixtures.fresh("stream_read_cp2"))
       .start()
     try {
       q2.processAllAvailable()
@@ -312,13 +312,13 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val sink = new TableSink(SinkConfig(
       tableName = "events_orphanstream",
-      warehousePath = TestSpark.tmpDir("stream_orphan_wh"),
+      warehousePath = Fixtures.fresh("stream_orphan_wh"),
       versioned = true,
       partitionSpec = Seq(PartitionField("cat", Transform.Identity))))
     sink.append(Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "cat", "v"))
     val q = sink.readStream(spark)
       .writeStream.format("memory").queryName("orphan_stream")
-      .option("checkpointLocation", TestSpark.tmpDir("stream_orphan_cp"))
+      .option("checkpointLocation", Fixtures.fresh("stream_orphan_cp"))
       .start()
     try {
       q.processAllAvailable()
@@ -348,12 +348,12 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val sink = new TableSink(SinkConfig(
       tableName = "events_guardstream",
-      warehousePath = TestSpark.tmpDir("stream_guard_wh"),
+      warehousePath = Fixtures.fresh("stream_guard_wh"),
       versioned = true))
     sink.append(Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "cat", "v"))
     def startQ(n: String) = sink.readStream(spark)
       .writeStream.format("memory").queryName(n)
-      .option("checkpointLocation", TestSpark.tmpDir(s"stream_guard_$n"))
+      .option("checkpointLocation", Fixtures.fresh(s"stream_guard_$n"))
       .start()
     val q1 = startQ("guard1")
     try {
@@ -384,14 +384,14 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val sink = new TableSink(SinkConfig(
       tableName = "events_cdcstart",
-      warehousePath = TestSpark.tmpDir("stream_cdcstart_wh"),
+      warehousePath = Fixtures.fresh("stream_cdcstart_wh"),
       versioned = true))
     sink.append(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")) // v1
     sink.append(Seq((3L, 30.0)).toDF("id", "v"))             // v2
     sink.append(Seq((4L, 40.0)).toDF("id", "v"))             // v3
     def run(starting: Option[String], tag: String): Set[(Long, String, Long)] = {
-      val cp = TestSpark.tmpDir(s"stream_cdcstart_cp_$tag")
-      val out = TestSpark.tmpDir(s"stream_cdcstart_out_$tag")
+      val cp = Fixtures.fresh(s"stream_cdcstart_cp_$tag")
+      val out = Fixtures.fresh(s"stream_cdcstart_out_$tag")
       val q = sink.readChangesStream(spark, starting)
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", cp).start()
@@ -411,8 +411,8 @@ class StreamingSpec extends AnyFunSuite {
       "startingVersion=1 includes the first commit — inclusive, not " +
         "an exclusive floor")
     // latest: nothing until a post-start commit lands
-    val cp = TestSpark.tmpDir("stream_cdcstart_cp_latest")
-    val out = TestSpark.tmpDir("stream_cdcstart_out_latest")
+    val cp = Fixtures.fresh("stream_cdcstart_cp_latest")
+    val out = Fixtures.fresh("stream_cdcstart_out_latest")
     val q = sink.readChangesStream(spark, Some("latest"))
       .writeStream.format("parquet").option("path", out)
       .option("checkpointLocation", cp).start()
@@ -427,11 +427,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(got == Set((5L, "insert", 4L)),
       s"a 'latest' consumer must see only post-start commits: $got")
     // snapshot mode honors the same floor
-    val outS = TestSpark.tmpDir("stream_cdcstart_out_snap")
+    val outS = Fixtures.fresh("stream_cdcstart_out_snap")
     val qs = sink.readStream(spark, Some("4"))
       .writeStream.format("parquet").option("path", outS)
       .option("checkpointLocation",
-        TestSpark.tmpDir("stream_cdcstart_cp_snap")).start()
+        Fixtures.fresh("stream_cdcstart_cp_snap")).start()
     try qs.processAllAvailable() finally qs.stop()
     assert(spark.read.parquet(outS).select($"id").as[Long].collect().toSet
       == Set(5L), "snapshot stream with startingVersion=4 sees [4, head]")
@@ -444,8 +444,8 @@ class StreamingSpec extends AnyFunSuite {
     // (the numeric spelling of 'latest'): nothing from history, the
     // next commit emits — and unlike 'latest' the floor is stable
     // across restarts
-    val cpF = TestSpark.tmpDir("stream_cdcstart_cp_future")
-    val outF = TestSpark.tmpDir("stream_cdcstart_out_future")
+    val cpF = Fixtures.fresh("stream_cdcstart_cp_future")
+    val outF = Fixtures.fresh("stream_cdcstart_out_future")
     def startF() = sink.readChangesStream(spark, Some("5")) // head is v4
       .writeStream.format("parquet").option("path", outF)
       .option("checkpointLocation", cpF).start()
@@ -467,13 +467,13 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val sink = new TableSink(SinkConfig(
       tableName = "events_igch",
-      warehousePath = TestSpark.tmpDir("stream_igch_wh"),
+      warehousePath = Fixtures.fresh("stream_igch_wh"),
       versioned = true))
     sink.append(Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "cat", "v"))
-    val out = TestSpark.tmpDir("stream_igch_out")
+    val out = Fixtures.fresh("stream_igch_out")
     val q = sink.readStream(spark, ignoreChanges = true)
       .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", TestSpark.tmpDir("stream_igch_cp"))
+      .option("checkpointLocation", Fixtures.fresh("stream_igch_cp"))
       .start()
     try {
       q.processAllAvailable()                        // batch 0: snapshot
@@ -492,7 +492,7 @@ class StreamingSpec extends AnyFunSuite {
     // (the documented default) — fresh checkpoint, replayed history
     val q2 = sink.readStream(spark)
       .writeStream.format("memory").queryName("igch_default")
-      .option("checkpointLocation", TestSpark.tmpDir("stream_igch_cp2"))
+      .option("checkpointLocation", Fixtures.fresh("stream_igch_cp2"))
       .start()
     try {
       q2.processAllAvailable() // snapshot batch is fine (deletes applied)
@@ -514,7 +514,7 @@ class StreamingSpec extends AnyFunSuite {
       .option("ignoreChanges", "true")
       .load()
       .writeStream.format("memory").queryName("igch_bad")
-      .option("checkpointLocation", TestSpark.tmpDir("stream_igch_cp3"))
+      .option("checkpointLocation", Fixtures.fresh("stream_igch_cp3"))
       .start()
     val err2 = intercept[Exception] {
       try bad.processAllAvailable() finally bad.stop()
@@ -529,7 +529,7 @@ class StreamingSpec extends AnyFunSuite {
     "commits NULL-filled under the declared head schema — including a " +
     "post-evolution MoR delete of a pre-evolution row (round-13)") {
     import spark.implicits._
-    val wh = TestSpark.tmpDir("stream_evolve_wh")
+    val wh = Fixtures.fresh("stream_evolve_wh")
     spark.conf.set("spark.sql.catalog.gsev", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gsev.warehouse", wh)
     spark.sql("CREATE TABLE gsev.ev (id BIGINT, v DOUBLE) " +
@@ -540,10 +540,10 @@ class StreamingSpec extends AnyFunSuite {
     val sink = new TableSink(SinkConfig(tableName = "ev",
       warehousePath = wh, versioned = true,
       tableSchema = Some(spark.table("gsev.ev").schema)))
-    val out = TestSpark.tmpDir("stream_evolve_out")
+    val out = Fixtures.fresh("stream_evolve_out")
     val q = sink.readChangesStream(spark)
       .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", TestSpark.tmpDir("stream_evolve_cp"))
+      .option("checkpointLocation", Fixtures.fresh("stream_evolve_cp"))
       .start()
     try {
       q.processAllAvailable()                 // batch 0: history replay
@@ -582,7 +582,7 @@ class StreamingSpec extends AnyFunSuite {
     "restart remedy; a fresh stream re-pins at the renamed head and " +
     "folds pre-rename values under the new name (round-13)") {
     import spark.implicits._
-    val wh = TestSpark.tmpDir("stream_rename_wh")
+    val wh = Fixtures.fresh("stream_rename_wh")
     spark.conf.set("spark.sql.catalog.gsrn", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gsrn.warehouse", wh)
     spark.sql("CREATE TABLE gsrn.rn (id BIGINT, amount DOUBLE) " +
@@ -592,7 +592,7 @@ class StreamingSpec extends AnyFunSuite {
       versioned = true, tableSchema = Some(spark.table("gsrn.rn").schema)))
     val q = sink.readStream(spark).writeStream.format("memory")
       .queryName("rnstream")
-      .option("checkpointLocation", TestSpark.tmpDir("stream_rename_cp"))
+      .option("checkpointLocation", Fixtures.fresh("stream_rename_cp"))
       .start()
     try {
       q.processAllAvailable()
@@ -615,7 +615,7 @@ class StreamingSpec extends AnyFunSuite {
       tableSchema = Some(spark.table("gsrn.rn").schema)))
     val q2 = sink2.readStream(spark).writeStream.format("memory")
       .queryName("rnstream2")
-      .option("checkpointLocation", TestSpark.tmpDir("stream_rename_cp2"))
+      .option("checkpointLocation", Fixtures.fresh("stream_rename_cp2"))
       .start()
     try {
       q2.processAllAvailable()
@@ -629,7 +629,7 @@ class StreamingSpec extends AnyFunSuite {
     "commits would NULL-fill the pinned shape silently); a fresh stream " +
     "re-pins at the evolved head (round-13)") {
     import spark.implicits._
-    val wh = TestSpark.tmpDir("stream_drop_wh")
+    val wh = Fixtures.fresh("stream_drop_wh")
     spark.conf.set("spark.sql.catalog.gsdr", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gsdr.warehouse", wh)
     spark.sql("CREATE TABLE gsdr.dr (id BIGINT, v DOUBLE, score DOUBLE) " +
@@ -639,7 +639,7 @@ class StreamingSpec extends AnyFunSuite {
       versioned = true, tableSchema = Some(spark.table("gsdr.dr").schema)))
     val q = sink.readStream(spark).writeStream.format("memory")
       .queryName("drstream")
-      .option("checkpointLocation", TestSpark.tmpDir("stream_drop_cp"))
+      .option("checkpointLocation", Fixtures.fresh("stream_drop_cp"))
       .start()
     try {
       q.processAllAvailable()
@@ -658,7 +658,7 @@ class StreamingSpec extends AnyFunSuite {
       tableSchema = Some(spark.table("gsdr.dr").schema)))
     val q2 = sink2.readStream(spark).writeStream.format("memory")
       .queryName("drstream2")
-      .option("checkpointLocation", TestSpark.tmpDir("stream_drop_cp2"))
+      .option("checkpointLocation", Fixtures.fresh("stream_drop_cp2"))
       .start()
     try {
       q2.processAllAvailable()
@@ -675,7 +675,7 @@ class StreamingSpec extends AnyFunSuite {
     "precisely with the restart remedy; the restart re-pins the WIDE " +
     "declared schema (round-14)") {
     import spark.implicits._
-    val wh = TestSpark.tmpDir("stream_add_wh")
+    val wh = Fixtures.fresh("stream_add_wh")
     spark.conf.set("spark.sql.catalog.gsad", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gsad.warehouse", wh)
     spark.sql("CREATE TABLE gsad.ad (id BIGINT, v DOUBLE) " +
@@ -685,7 +685,7 @@ class StreamingSpec extends AnyFunSuite {
       versioned = true, tableSchema = Some(spark.table("gsad.ad").schema)))
     val q = sink.readStream(spark).writeStream.format("memory")
       .queryName("adstream")
-      .option("checkpointLocation", TestSpark.tmpDir("stream_add_cp"))
+      .option("checkpointLocation", Fixtures.fresh("stream_add_cp"))
       .start()
     try {
       q.processAllAvailable()
@@ -714,7 +714,7 @@ class StreamingSpec extends AnyFunSuite {
       tableSchema = Some(spark.table("gswd.wd").schema)))
     val q2 = sink2.readStream(spark).writeStream.format("memory")
       .queryName("wdstream")
-      .option("checkpointLocation", TestSpark.tmpDir("stream_widen_cp"))
+      .option("checkpointLocation", Fixtures.fresh("stream_widen_cp"))
       .start()
     try {
       q2.processAllAvailable()
@@ -734,7 +734,7 @@ class StreamingSpec extends AnyFunSuite {
       warehousePath = wh, versioned = true))
     val q3 = sink3.readStream(spark).writeStream.format("memory")
       .queryName("wdstream2")
-      .option("checkpointLocation", TestSpark.tmpDir("stream_widen_cp2"))
+      .option("checkpointLocation", Fixtures.fresh("stream_widen_cp2"))
       .start()
     try {
       q3.processAllAvailable()
@@ -750,11 +750,11 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val sink = new TableSink(SinkConfig(
       tableName = "events_cdcrestart",
-      warehousePath = TestSpark.tmpDir("stream_cdcrestart_wh"),
+      warehousePath = Fixtures.fresh("stream_cdcrestart_wh"),
       versioned = true))
     sink.append(Seq((1L, 10.0)).toDF("id", "v"))             // v1
-    val cp = TestSpark.tmpDir("stream_cdcrestart_cp")
-    val out = TestSpark.tmpDir("stream_cdcrestart_out")
+    val cp = Fixtures.fresh("stream_cdcrestart_cp")
+    val out = Fixtures.fresh("stream_cdcrestart_out")
     def start(starting: Option[String]) =
       sink.readChangesStream(spark, starting)
         .writeStream.format("parquet").option("path", out)
@@ -779,7 +779,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val sink = new TableSink(SinkConfig(
       tableName = "events_cdcts",
-      warehousePath = TestSpark.tmpDir("stream_cdcts_wh"),
+      warehousePath = Fixtures.fresh("stream_cdcts_wh"),
       versioned = true))
     sink.append(Seq((1L, 10.0)).toDF("id", "v"))             // v1
     Thread.sleep(30) // separate the commit mtimes
@@ -788,12 +788,12 @@ class StreamingSpec extends AnyFunSuite {
     sink.append(Seq((2L, 20.0)).toDF("id", "v"))             // v2
     sink.append(Seq((3L, 30.0)).toDF("id", "v"))             // v3
     def run(ts: Long, tag: String): Set[Long] = {
-      val out = TestSpark.tmpDir(s"stream_cdcts_out_$tag")
+      val out = Fixtures.fresh(s"stream_cdcts_out_$tag")
       val q = sink.readChangesStream(spark,
           startingTimestampMs = Some(ts))
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation",
-          TestSpark.tmpDir(s"stream_cdcts_cp_$tag")).start()
+          Fixtures.fresh(s"stream_cdcts_cp_$tag")).start()
       try q.processAllAvailable() finally q.stop()
       spark.read.parquet(out).select($"id").as[Long].collect().toSet
     }
@@ -807,7 +807,7 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream.format("memory")
         .queryName("cdcts_bad")
         .option("checkpointLocation",
-          TestSpark.tmpDir("stream_cdcts_cp_bad")).start()
+          Fixtures.fresh("stream_cdcts_cp_bad")).start()
       try q.processAllAvailable() finally q.stop()
     }
   }
@@ -817,11 +817,11 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val sink = new TableSink(SinkConfig(
       tableName = "events_cdcstream",
-      warehousePath = TestSpark.tmpDir("stream_cdc_wh"),
+      warehousePath = Fixtures.fresh("stream_cdc_wh"),
       versioned = true))
     sink.append(Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "cat", "v"))
-    val cp = TestSpark.tmpDir("stream_cdc_cp")
-    val out = TestSpark.tmpDir("stream_cdc_out")
+    val cp = Fixtures.fresh("stream_cdc_cp")
+    val out = Fixtures.fresh("stream_cdc_out")
     def startQ() = sink.readChangesStream(spark)
       .writeStream.format("parquet").option("path", out)
       .option("checkpointLocation", cp).start()
@@ -852,11 +852,11 @@ class StreamingSpec extends AnyFunSuite {
   test("resident-stream replication tracks the source through appends, " +
     "updates, and deletes; restart converges idempotently") {
     import spark.implicits._
-    val wh2 = TestSpark.tmpDir("stream_repl_wh")
+    val wh2 = Fixtures.fresh("stream_repl_wh")
     val src = new TableSink(SinkConfig("repl_src", wh2, versioned = true))
     val dst = new TableSink(SinkConfig("repl_dst", wh2, versioned = true))
     src.append(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"))
-    val cp = TestSpark.tmpDir("stream_repl_cp")
+    val cp = Fixtures.fresh("stream_repl_cp")
     def state(s: TableSink) = s.read(spark).select($"id", $"v")
       .as[(Long, Double)].collect().toSet
     val q1 = src.startReplication(spark, dst, Seq("id"), cp,
@@ -878,7 +878,7 @@ class StreamingSpec extends AnyFunSuite {
     // converges to the rewritten source (keyed upsert is idempotent
     // over the rows the first stream already landed)
     val q2 = src.startReplication(spark, dst, Seq("id"),
-      TestSpark.tmpDir("stream_repl_cp2"), intervalSeconds = 1)
+      Fixtures.fresh("stream_repl_cp2"), intervalSeconds = 1)
     try {
       q2.processAllAvailable()
       assert(state(dst) == state(src),
@@ -899,12 +899,12 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val rnd = new scala.util.Random(12)
     for (i <- 1 to 5) {
-      val wh = TestSpark.tmpDir(s"stream_race_wh_$i")
+      val wh = Fixtures.fresh(s"stream_race_wh_$i")
       val src = new TableSink(SinkConfig("race_src", wh, versioned = true))
       val dst = new TableSink(SinkConfig("race_dst", wh, versioned = true))
       src.append(Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v"))
       val q = src.startReplication(spark, dst, Seq("id"),
-        TestSpark.tmpDir(s"stream_race_cp_$i"), intervalSeconds = 1)
+        Fixtures.fresh(s"stream_race_cp_$i"), intervalSeconds = 1)
       // interleave appends around a COW rewrite while micro-batches run:
       // the rewrite deletes planned source files under the in-flight
       // batch with seeded-random timing, exercising both the planning
@@ -930,7 +930,7 @@ class StreamingSpec extends AnyFunSuite {
       // after the maintenance window a fresh checkpoint converges (the
       // keyed apply is idempotent over whatever the first stream landed)
       val q2 = src.startReplication(spark, dst, Seq("id"),
-        TestSpark.tmpDir(s"stream_race_cp2_$i"), intervalSeconds = 1)
+        Fixtures.fresh(s"stream_race_cp2_$i"), intervalSeconds = 1)
       try {
         q2.processAllAvailable()
         val s = src.read(spark).select($"id", $"v")
@@ -947,11 +947,11 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val sink = new TableSink(SinkConfig(
       tableName = "events_resumestream",
-      warehousePath = TestSpark.tmpDir("stream_resume_wh"),
+      warehousePath = Fixtures.fresh("stream_resume_wh"),
       versioned = true))
     sink.append(Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "cat", "v"))
-    val cp = TestSpark.tmpDir("stream_resume_cp")
-    val out = TestSpark.tmpDir("stream_resume_out")
+    val cp = Fixtures.fresh("stream_resume_cp")
+    val out = Fixtures.fresh("stream_resume_out")
     def startQ() = sink.readStream(spark)
       .writeStream.format("parquet").option("path", out)
       .option("checkpointLocation", cp).start()
@@ -972,13 +972,13 @@ class StreamingSpec extends AnyFunSuite {
   test("size flush: no streamed data file exceeds batchSize records") {
     val cfg = SinkConfig(
       tableName = "events_sized",
-      warehousePath = TestSpark.tmpDir("stream_sized"),
+      warehousePath = Fixtures.fresh("stream_sized"),
       batchSize = 64,
       batchIntervalSeconds = 1)
     val sink = new TableSink(cfg)
     val q = sink.startStream(
       StreamPipeline.eventsStream(spark, TestSpark.sfDir),
-      TestSpark.tmpDir("stream_sized_cp"))
+      Fixtures.fresh("stream_sized_cp"))
     try q.processAllAvailable() finally q.stop()
     assert(sink.read(spark).count() == 1000)
     val files = new java.io.File(cfg.tablePath).listFiles()
@@ -995,14 +995,14 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val sink = new TableSink(SinkConfig(
       tableName = "cdc",
-      warehousePath = TestSpark.tmpDir("cdc_sink"),
+      warehousePath = Fixtures.fresh("cdc_sink"),
       batchIntervalSeconds = 1,
       partitionSpec = Seq(PartitionField("event_type", Transform.Identity))))
     val src = MemoryStream[(Long, String, Double)]
     val q = sink.startStreamUpsert(
       src.toDF().toDF("event_id", "event_type", "value"),
       keyCols = Seq("event_id"),
-      checkpointLocation = TestSpark.tmpDir("cdc_cp"))
+      checkpointLocation = Fixtures.fresh("cdc_cp"))
     try {
       src.addData((1L, "click", 1.0), (2L, "click", 2.0), (3L, "view", 3.0))
       q.processAllAvailable()
@@ -1028,7 +1028,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val sink = new TableSink(SinkConfig(
       tableName = "cdc_mor",
-      warehousePath = TestSpark.tmpDir("cdc_mor_sink"),
+      warehousePath = Fixtures.fresh("cdc_mor_sink"),
       batchIntervalSeconds = 1,
       versioned = true,
       partitionSpec = Seq(PartitionField("event_type", Transform.Identity))))
@@ -1036,7 +1036,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = sink.startStreamUpsert(
       src.toDF().toDF("event_id", "event_type", "value"),
       keyCols = Seq("event_id"),
-      checkpointLocation = TestSpark.tmpDir("cdc_mor_cp"))
+      checkpointLocation = Fixtures.fresh("cdc_mor_cp"))
     try {
       src.addData((1L, "click", 1.0), (2L, "view", 2.0))
       q.processAllAvailable()
@@ -1056,11 +1056,11 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("versioned config rejects the raw streaming sink, pointing at the CDC path") {
-    val sink = new TableSink(SinkConfig("vs", TestSpark.tmpDir("vs_sink"),
+    val sink = new TableSink(SinkConfig("vs", Fixtures.fresh("vs_sink"),
       versioned = true))
     val ex = intercept[IllegalArgumentException](
       sink.startStream(StreamPipeline.eventsStream(spark, TestSpark.sfDir),
-        TestSpark.tmpDir("vs_cp")))
+        Fixtures.fresh("vs_cp")))
     assert(ex.getMessage.contains("startStreamUpsert"))
   }
 

@@ -12,7 +12,7 @@ class SwapCrashSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("swapcrash_wh")
+  private val wh = Fixtures.fresh("swapcrash_wh")
 
   private final case class SimCrash(step: String)
     extends RuntimeException(s"simulated crash at $step")

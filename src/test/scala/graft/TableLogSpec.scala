@@ -11,7 +11,7 @@ class TableLogSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("tablelog_wh")
+  private val wh = Fixtures.fresh("tablelog_wh")
 
   private def mkSink(name: String): TableSink =
     new TableSink(SinkConfig(tableName = name, warehousePath = wh,
@@ -81,8 +81,8 @@ class TableLogSpec extends AnyFunSuite {
       pat <- layout if t.contains(pat)
     } yield s"${root.relativize(p)}: $pat"
     assert(offenders.isEmpty, offenders.mkString("; "))
-    // the catalog's TIMESTAMP AS OF fixture names version files the same way
-    assert(sources.filter(_.getFileName.toString == "ParityQueries.scala")
+    // the sink names version files through TableLog too
+    assert(sources.filter(_.getFileName.toString == "TableSink.scala")
       .exists(p => text(p).contains("TableLog.versionFile(")))
   }
 }

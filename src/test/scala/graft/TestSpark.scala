@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
@@ -28,30 +26,10 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
-  /** This test JVM's own scratch root under the checkout's `target/tmp`
-    * (the forked test JVM runs in the project directory), deleted when
-    * the JVM exits, so test warehouses do not pile up across runs. */
-  private lazy val tmpRoot: Path = {
-    val base = Paths.get(sys.props("user.dir"), "target", "tmp")
-    Files.createDirectories(base)
-    val root = Files.createTempDirectory(base, "run_")
-    sys.addShutdownHook {
-      val paths = Files.walk(root) // depth-first, symlinks not followed
-      try paths.sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => scala.util.Try(Files.deleteIfExists(p)))
-      finally paths.close()
-    }
-    root
-  }
-
   /** Immediate child names of `dir` (empty when absent), from one
     * [[WarehouseIO.listing]]. */
   def childNames(dir: org.apache.hadoop.fs.Path): Seq[String] =
     WarehouseIO.listing(dir).getOrElse(Nil).map(_.getPath.getName)
-
-  /** A fresh path under this JVM's scratch root. */
-  def tmpDir(prefix: String): String =
-    tmpRoot.resolve(s"${prefix}_${java.util.UUID.randomUUID()}").toString
 
   /** Each Spark job started while `body` runs, named by the action of its
     * SQL execution (adaptive execution submits shuffle stages from a pool

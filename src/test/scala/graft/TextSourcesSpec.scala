@@ -14,7 +14,7 @@ class TextSourcesSpec extends AnyFunSuite {
   test("JSONL round-trips the documents fixture bit-for-bit") {
     val docs = Tables.documents(spark, TestSpark.sfDir)
       .select($"doc_id", $"lang", $"text")
-    val dir = TestSpark.tmpDir("jsonl_docs")
+    val dir = Fixtures.fresh("jsonl_docs")
     docs.write.json(dir)
     val back = TextSources.jsonl(spark, dir, docSchema)
     assert(back.schema == docSchema)
@@ -25,7 +25,7 @@ class TextSourcesSpec extends AnyFunSuite {
   test("CSV round-trips the documents fixture (quoted text survives)") {
     val docs = Tables.documents(spark, TestSpark.sfDir)
       .select($"doc_id", $"lang", $"text")
-    val dir = TestSpark.tmpDir("csv_docs")
+    val dir = Fixtures.fresh("csv_docs")
     docs.write.option("header", "true").csv(dir)
     val back = TextSources.csv(spark, dir, docSchema)
     assert(back.as[(Long, String, String)].collect().toSet ==
@@ -35,7 +35,7 @@ class TextSourcesSpec extends AnyFunSuite {
   test("JSONL reads unchanged under readStream (the claimed streaming path)") {
     val docs = Tables.documents(spark, TestSpark.sfDir)
       .select($"doc_id", $"lang", $"text")
-    val dir = TestSpark.tmpDir("jsonl_stream")
+    val dir = Fixtures.fresh("jsonl_stream")
     docs.write.json(dir)
     val stream = spark.readStream.schema(docSchema).json(dir)
     assert(stream.isStreaming)
@@ -50,7 +50,7 @@ class TextSourcesSpec extends AnyFunSuite {
   }
 
   test("unparseable JSONL rows surface as null rows for the ok/err split") {
-    val dir = TestSpark.tmpDir("jsonl_bad")
+    val dir = Fixtures.fresh("jsonl_bad")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/part-0.json"),

@@ -11,7 +11,7 @@ class VersionedStreamSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = TestSpark.tmpDir("vstream_wh")
+  private val wh = Fixtures.fresh("vstream_wh")
 
   private def mkSink(name: String): TableSink =
     new TableSink(SinkConfig(tableName = name, warehousePath = wh,
@@ -26,7 +26,7 @@ class VersionedStreamSpec extends AnyFunSuite {
     val src = MemoryStream[(Long, String, Double)]
     val q = sink.startStreamVersioned(
       src.toDF().toDF("id", "cat", "v"),
-      checkpointLocation = TestSpark.tmpDir("vs_t1_cp"))
+      checkpointLocation = Fixtures.fresh("vs_t1_cp"))
     try {
       src.addData((1L, "a", 1.0), (2L, "b", 2.0))
       q.processAllAvailable()
@@ -64,7 +64,7 @@ class VersionedStreamSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val sink = mkSink("vs_t3")
-    val cp = TestSpark.tmpDir("vs_t3_cp")
+    val cp = Fixtures.fresh("vs_t3_cp")
     val src = MemoryStream[(Long, String, Double)]
     val df = src.toDF().toDF("id", "cat", "v")
     val q1 = sink.startStreamVersioned(df, cp, streamId = Some("vs3"))

@@ -10,7 +10,7 @@ class WarehouseIOSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("the data-file and whole-tree walks list what listFiles lists") {
-    val wh = TestSpark.tmpDir("wio_wh")
+    val wh = Fixtures.fresh("wio_wh")
     val sink = new TableSink(SinkConfig(tableName = "t", warehousePath = wh,
       versioned = true,
       partitionSpec = Seq(PartitionField("cat", Transform.Identity))))
@@ -58,7 +58,7 @@ class WarehouseIOSpec extends AnyFunSuite {
   }
 
   test("a probe of an absent file leaves metaReads unchanged") {
-    val p = new HPath(TestSpark.tmpDir("wio_probe"), "generation")
+    val p = new HPath(Fixtures.fresh("wio_probe"), "generation")
     val before = WarehouseIO.metaReads.get()
     intercept[java.io.FileNotFoundException](WarehouseIO.readString(p))
     assert(WarehouseIO.metaReads.get() == before,
