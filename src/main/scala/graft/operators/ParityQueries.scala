@@ -2432,7 +2432,9 @@ object ParityQueries {
     * never wall-clock or file counts, which the record-per-file split
     * may vary); the oracle recomputes the counts from the source. Pins
     * identifier resolution (`<table>` as the namespace tail), the
-    * V1Scan execution path, and that the manifest-served inventories
+    * driver-built tables' `LocalScan` serving (each of the three inputs
+    * plans as a local table scan, the `files` aggregate evaluated by
+    * [[LocalScanStrategy]]), and that the manifest-served inventories
     * agree with the snapshot log. */
   def metaSql(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)

@@ -33,6 +33,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // UpdateTable/MergeIntoTable inside the fixed point, before Spark's
     // row-level rewrite refuses the non-SupportsRowLevelOperations table.
     ext.injectResolutionRule(_ => new GraftDmlRule)
+    // queries over the driver-built metadata tables plan job-free
+    ext.injectPlannerStrategy(_ => LocalScanStrategy)
   }
 }
 
@@ -88,11 +90,16 @@ object GraftExtensions {
       info("graft_iceberg_bucket", "graft_iceberg_bucket(col, n) - Iceberg-spec bucket transform"),
       es => IcebergBucketing.IcebergBucket(es(0), litInt(es(1), "bucket count n"))))
 
-  /** Install the same functions on an already-built session (extensions can
-    * only be declared at build time; this is the post-hoc equivalent). */
-  def register(spark: SparkSession): Unit =
+  /** Install the same functions and the [[LocalScanStrategy]] on an
+    * already-built session (extensions can only be declared at build time;
+    * this is the post-hoc equivalent). */
+  def register(spark: SparkSession): Unit = {
     functions.foreach { case (name, _, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
+    val strategies = spark.experimental.extraStrategies
+    if (!strategies.contains(LocalScanStrategy))
+      spark.experimental.extraStrategies = strategies :+ LocalScanStrategy
+  }
 }

@@ -393,12 +393,13 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
     * where `<meta>` ∈ `snapshots` (alias `history`), `files`,
     * `partitions`, `deletes`, `changes` — served only when no real table
     * shadows the name (real tables win). Each is a read-only
-    * [[GraftMetaTable]] whose V1Scan executes the matching [[TableSink]]
-    * metadata DataFrame: the file/partition inventories are the head
-    * manifest's recorded per-file facts (no data file is opened, so
-    * planning and answering them runs no scan), snapshot/delete rows are
-    * driver-computed from the log, and `changes` replays the full CDC
-    * changelog as a distributed plan. */
+    * [[GraftMetaTable]] over the matching [[TableSink]] metadata
+    * DataFrame. The file/partition inventories (the head manifest's
+    * recorded per-file facts; no data file is opened) and the snapshot and
+    * delete rows are built on the driver and served as a `LocalScan`, so
+    * a query over them runs no Spark job ([[LocalScanStrategy]]);
+    * `changes` replays the full CDC changelog as a distributed plan
+    * through a `V1Scan`. */
   private def metaTable(ident: Identifier): Option[Table] = {
     if (ident.namespace().isEmpty) return None
     val base = Identifier.of(
@@ -512,9 +513,12 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
               declaredSchema(ident), writable = true)
           case None if declaredSchema(ident).isDefined =>
             // created-but-empty (CREATE TABLE / CTAS target): the declared
-            // schema serves reads (empty) and validates the first INSERT
-            fileTable(ident, Nil, None, declaredSchema(ident),
-              writable = true)
+            // schema serves reads (empty) and validates the first INSERT.
+            // The scan lists the table directory, which holds only hidden
+            // `_graft_*` entries: a file index over no paths makes Spark
+            // warn that all paths were ignored
+            fileTable(ident, Seq(tableDir(ident).toString), None,
+              declaredSchema(ident), writable = true)
           case None => throw new NoSuchTableException(ident)
         }
     }
@@ -1001,21 +1005,34 @@ private[graft] final class GraftReadOnlyTable(delegate: FileTable,
 }
 
 /** A metadata table (`cat.t.snapshots` / `files` / `partitions` /
-  * `deletes` / `changes`): read-only, served as a DSv2
-  * [[org.apache.spark.sql.connector.read.V1Scan]] whose relation executes
-  * the underlying metadata DataFrame as its plan (`df.rdd`) — never a
-  * driver-side collect. That matters for `changes`: the row-level
-  * changelog is data-sized, and a `LocalScan` would have funneled the
-  * whole diff through the driver. The file and partition inventories
-  * are local relations over the head manifest's per-file facts, built at
-  * plan-construction time; snapshots and deletes read the log there too.
-  * No write capability: an INSERT gets Spark's standard refusal. */
+  * `deletes` / `changes`): read-only, served from the metadata DataFrame.
+  * A frame the driver already holds (the file and partition inventories
+  * over the head manifest's per-file facts, the delete rows and the
+  * snapshot rows, all built at plan-construction time) serves its rows as
+  * a DSv2 `LocalScan`, and [[LocalScanStrategy]] plans a query over it
+  * without a Spark job. `changes`, whose row-level changelog is
+  * data-sized, stays a [[org.apache.spark.sql.connector.read.V1Scan]]
+  * that executes the frame as its plan (`df.rdd`) and never funnels it
+  * through the driver. No write capability: an INSERT gets Spark's
+  * standard refusal. */
 private[graft] final class GraftMetaTable(fullName: String,
     compute: () => org.apache.spark.sql.DataFrame)
     extends Table with SupportsRead {
   // one plan per load: schema() during analysis and the scan at execution
   // must agree
   private lazy val df = compute()
+  /** The frame's rows, when it optimizes to a local relation. Only a plan
+    * whose every leaf is one can, and checking that first spares
+    * `changes`' data-sized plan an extra optimizer pass. */
+  private lazy val localRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val qe = df.queryExecution
+    if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else qe.optimizedPlan match {
+      case r: LocalRelation => Some(r.data)
+      case _ => None
+    }
+  }
   override def name(): String = fullName
   override def schema(): StructType = df.schema
   override def partitioning(): Array[V2Transform] = Array.empty
@@ -1023,21 +1040,25 @@ private[graft] final class GraftMetaTable(fullName: String,
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): org.apache.spark.sql.connector.read.Scan =
-        new org.apache.spark.sql.connector.read.V1Scan {
-          override def readSchema(): StructType = df.schema
-          override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
-              with org.apache.spark.sql.sources.TableScan](
-              context: org.apache.spark.sql.SQLContext): T =
-            new org.apache.spark.sql.sources.BaseRelation
-                with org.apache.spark.sql.sources.TableScan {
-              override def sqlContext: org.apache.spark.sql.SQLContext = context
-              override def schema: StructType = df.schema
-              override def buildScan(): org.apache.spark.rdd.RDD[
-                org.apache.spark.sql.Row] = df.rdd
-            }.asInstanceOf[T]
-        }
+    () => localRows match {
+      case Some(data) => new org.apache.spark.sql.connector.read.LocalScan {
+        override def readSchema(): StructType = df.schema
+        override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
+          data.toArray
+      }
+      case None => new org.apache.spark.sql.connector.read.V1Scan {
+        override def readSchema(): StructType = df.schema
+        override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
+            with org.apache.spark.sql.sources.TableScan](
+            context: org.apache.spark.sql.SQLContext): T =
+          new org.apache.spark.sql.sources.BaseRelation
+              with org.apache.spark.sql.sources.TableScan {
+            override def sqlContext: org.apache.spark.sql.SQLContext = context
+            override def schema: StructType = df.schema
+            override def buildScan(): org.apache.spark.rdd.RDD[
+              org.apache.spark.sql.Row] = df.rdd
+          }.asInstanceOf[T]
+      }
     }
 }
 

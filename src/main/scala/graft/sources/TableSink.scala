@@ -2703,8 +2703,8 @@ final class TableSink(val config: SinkConfig) {
         DeletionVectors.cardinality(dv), "file_path,row_pos"))
       Seq(pred, keys, pos).flatten
     }
-    rows.toDF("version", "flavor", "n_entries", "detail")
-      .orderBy($"version", $"flavor")
+    rows.sortBy(r => (r._1, r._2))
+      .toDF("version", "flavor", "n_entries", "detail")
   }
 
   /** Iceberg's `remove_orphan_files` analogue: delete data files present

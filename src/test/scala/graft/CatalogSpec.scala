@@ -4,6 +4,8 @@ import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** [[GraftCatalog]]: SQL reads over the versioned sink warehouse — latest,
   * VERSION AS OF, TIMESTAMP AS OF, DDL surface, and the read-only guard. */
 class CatalogSpec extends AnyFunSuite {
@@ -1027,5 +1029,36 @@ class CatalogSpec extends AnyFunSuite {
     val e3 = intercept[Exception](
       spark.sql("ALTER TABLE gtest.ttdrop RENAME COLUMN v TO tag"))
     assert(e3.getMessage.contains("resurrect"), e3.getMessage)
+  }
+
+  test("a created-but-empty table serves its reads and first INSERT " +
+    "without a zero-path file index (no 'All paths were ignored' warning)") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("empty-paths", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        warnings.add(e.getMessage.getFormattedMessage); ()
+      }
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try {
+      spark.sql("CREATE TABLE gtest.created_empty (id BIGINT, s STRING)")
+      assert(spark.sql("SELECT * FROM gtest.created_empty").count() == 0)
+      spark.sql("INSERT INTO gtest.created_empty VALUES (1, 'a')")
+      assert(spark.sql("SELECT id FROM gtest.created_empty").as[Long]
+        .collect().toSeq == Seq(1L))
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    assert(!warnings.asScala.exists(_.contains("All paths were ignored")),
+      s"got: ${warnings.asScala.mkString("; ")}")
   }
 }

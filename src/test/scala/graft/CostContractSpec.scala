@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The cost contract of each copy-on-write and merge-on-read `TableSink`
   * operation, of each SQL DML door in merge-on-read mode, of the
-  * replication apply and of the reads of a table with pending deletes:
+  * replication apply, of the reads of a table with pending deletes and of
+  * the metadata tables:
   * one row per operation on a fixed small table, recording the Spark jobs
   * it launches ([[TestSpark.jobsDuring]]) and the directory listings it
   * makes ([[WarehouseIO.dirListings]]); its metadata reads are
@@ -130,9 +131,35 @@ class CostContractSpec extends AnyFunSuite {
       table(t).deletePositions(spark, "id = 3")
       () => { spark.sql(s"SELECT cat, count(*), sum(v) FROM gcost.$t " +
         "GROUP BY cat").collect(); () } }),
-    new Op("deletes metadata table", 1, 1)(t => {
+    new Op("deletes metadata table", 0, 1)(t => {
       table(t).deletePositions(spark, "id = 3")
       () => { spark.sql(s"SELECT * FROM gcost.$t.deletes").collect(); () } }),
+    new Op("files metadata table, aggregate", 0, 1)(t => {
+      table(t)
+      () => { spark.sql("SELECT count(*), sum(record_count), sum(size_bytes) " +
+        s"FROM gcost.$t.files").collect(); () } }),
+    new Op("files metadata table, SELECT *", 0, 1)(t => {
+      table(t)
+      () => { spark.sql(s"SELECT * FROM gcost.$t.files").collect(); () } }),
+    new Op("files metadata table, filtered aggregate", 0, 1)(t => {
+      table(t)
+      () => { spark.sql("SELECT count(*), sum(size_bytes) FROM " +
+        s"gcost.$t.files WHERE record_count >= 10").collect(); () } }),
+    new Op("partitions metadata table, GROUP BY", 0, 1)(t => {
+      table(t)
+      () => { spark.sql("SELECT partition = 'cat=a', sum(file_count), " +
+        s"sum(record_count) FROM gcost.$t.partitions GROUP BY 1")
+        .collect(); () } }),
+    new Op("snapshots metadata table", 4, 1)(t => {
+      val s = table(t)
+      s.append(base)
+      () => { spark.sql("SELECT max(version), sum(n_added_files) " +
+        s"FROM gcost.$t.snapshots").collect(); () } }),
+    new Op("changes metadata table", 2, 2)(t => {
+      val s = table(t)
+      s.updateMor(spark, $"id" === 3L, Seq("v" -> ($"v" + 1.0)))
+      () => { spark.sql(s"SELECT count(*) FROM gcost.$t.changes")
+        .collect(); () } }),
     new Op("deleteKeys", 2, 3)(t => {
       val s = table(t)
       () => { s.deleteKeys(Seq(3L, 4L).toDF("id"), Seq("id")); () } }),

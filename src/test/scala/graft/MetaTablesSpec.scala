@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[TableSink.metaSnapshots]] / [[TableSink.metaFiles]] — the Iceberg
   * metadata-table analogues: commit history and the live file inventory as
-  * DataFrames, consistent with the manifests and the data they describe. */
+  * DataFrames, consistent with the manifests and the data they describe —
+  * and the catalog's metadata tables over them, whose queries answer on
+  * the driver with the rows Spark computes over the same frames. */
 class MetaTablesSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -241,5 +243,138 @@ class MetaTablesSpec extends AnyFunSuite {
     assert(parts.getOrElse("cat=b", 0L) == 1L, s"got: $parts")
     assert(parts.getOrElse("", 0L) == 2L,
       s"unpartitioned generation must roll up under '': $parts")
+  }
+
+  // ------------------------------------------------------------------
+  // The catalog's metadata tables answer on the driver: a query over a
+  // driver-built frame plans as one evaluated LocalTableScanExec and runs
+  // no Spark job, with the same rows as the library frame through Spark.
+
+  spark.conf.set("spark.sql.catalog.gmeta", classOf[GraftCatalog].getName)
+  spark.conf.set("spark.sql.catalog.gmeta.warehouse", wh)
+
+  /** `df` served through a [[GraftMetaTable]], as the catalog serves a
+    * metadata table. */
+  private def metaTableOf(df: org.apache.spark.sql.DataFrame) =
+    org.apache.spark.sql.graft.Bridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(new GraftMetaTable("synthetic", () => df), None, None))
+
+  private def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  private def driverPlanned(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan
+      .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec]
+
+  /** `query` over the served table `served` equals it over `lib` through
+    * Spark, and runs no Spark job. */
+  private def agrees(served: org.apache.spark.sql.DataFrame,
+      lib: org.apache.spark.sql.DataFrame, query: String): Unit = {
+    served.createOrReplaceTempView("meta_served")
+    lib.createOrReplaceTempView("meta_lib")
+    val got = spark.sql(query.format("meta_served"))
+    val want = spark.sql(query.format("meta_lib"))
+    assert(driverPlanned(got), s"$query planned as\n${got.queryExecution.executedPlan}")
+    var rows = Seq.empty[String]
+    assert(TestSpark.jobsDuring { rows = sorted(got) }.isEmpty, query)
+    assert(rows == sorted(want), query)
+  }
+
+  test("metadata-table queries answer on the driver with Spark's rows: " +
+    "aggregates, SELECT *, WHERE, GROUP BY, avg and timestamp min/max") {
+    val sink = mkSink("ms_local")
+    sink.append(Seq((6L, "a", 60.0)).toDF("id", "cat", "v"))
+    sink.deletePositions(spark, "id = 2")
+    val files = spark.table("gmeta.ms_local.files")
+    Seq(
+      "SELECT count(*), sum(record_count), sum(size_bytes) FROM %s",
+      "SELECT * FROM %s",
+      "SELECT count(*), sum(record_count) FROM %s WHERE record_count > 1",
+      "SELECT file_path FROM %s WHERE file_path LIKE '%%cat=a%%'",
+      "SELECT avg(record_count), avg(size_bytes), min(modified_at), " +
+        "max(modified_at) FROM %s"
+    ).foreach(agrees(files, sink.metaFiles(spark), _))
+    agrees(spark.table("gmeta.ms_local.partitions"), sink.metaPartitions(spark),
+      "SELECT partition = 'cat=a' AS a, sum(file_count), sum(record_count), " +
+        "max(size_bytes) FROM %s GROUP BY 1")
+    agrees(spark.table("gmeta.ms_local.deletes"), sink.metaDeletes(spark),
+      "SELECT * FROM %s")
+    agrees(spark.table("gmeta.ms_local.snapshots"), sink.metaSnapshots(spark),
+      "SELECT max(version), sum(n_added_files), count(txn) FROM %s")
+  }
+
+  test("an empty inventory: a global aggregate returns one (0, NULL) row, " +
+    "a GROUP BY returns none") {
+    val sink = mkSink("ms_empty")
+    sink.delete(spark, lit(true))
+    assert(sink.metaFiles(spark).isEmpty)
+    val files = spark.table("gmeta.ms_empty.files")
+    agrees(files, sink.metaFiles(spark),
+      "SELECT count(*), sum(record_count) FROM %s")
+    assert(sorted(spark.sql("SELECT count(*), sum(record_count) FROM " +
+      "gmeta.ms_empty.files")) == Seq("0|null"))
+    agrees(files, sink.metaFiles(spark),
+      "SELECT file_path, count(*) FROM %s GROUP BY file_path")
+    assert(spark.sql("SELECT file_path, count(*) FROM gmeta.ms_empty.files " +
+      "GROUP BY file_path").collect().isEmpty)
+  }
+
+  test("NULLs keep Spark's semantics in driver-side aggregates and keys") {
+    val lib = Seq(("a", 1L, Some(10L)), ("b", 2L, None), ("c", 3L, None))
+      .toDF("file_path", "record_count", "size_bytes")
+    val served = metaTableOf(lib)
+    Seq(
+      "SELECT count(size_bytes), sum(size_bytes), avg(size_bytes), " +
+        "min(size_bytes), max(size_bytes), count(*) FROM %s",
+      "SELECT size_bytes, count(*), sum(record_count) FROM %s " +
+        "GROUP BY size_bytes",
+      "SELECT file_path FROM %s WHERE size_bytes IS NULL OR size_bytes > 5",
+      "SELECT sum(size_bytes) FROM %s WHERE size_bytes IS NULL"
+    ).foreach(agrees(served, lib, _))
+  }
+
+  test("a non-deterministic filter, DISTINCT or FILTER clause falls back to " +
+    "Spark's plan with the same rows") {
+    val sink = mkSink("ms_fallback")
+    val n = sink.metaFiles(spark).count()
+    Seq(
+      "SELECT count(*) FROM gmeta.ms_fallback.files " +
+        "WHERE record_count + rand() > 0",
+      "SELECT count(DISTINCT record_count) + 0 * count(*) FROM " +
+        "gmeta.ms_fallback.files WHERE record_count < 0",
+      "SELECT count(*) FILTER (WHERE record_count >= 0) FROM " +
+        "gmeta.ms_fallback.files"
+    ).foreach { q =>
+      val df = spark.sql(q)
+      assert(!driverPlanned(df), s"$q must fall back")
+      val want = if (q.contains("DISTINCT")) 0L else n
+      assert(df.collect().head.getLong(0) == want, q)
+    }
+  }
+
+  test("ANSI sum overflow still raises when a local scan aggregates on " +
+    "the driver") {
+    val key = "spark.sql.ansi.enabled"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      val lib = Seq(Long.MaxValue, 1L).toDF("n")
+      val served = metaTableOf(lib)
+      assert(driverPlanned(served.agg(count("n"))))
+      intercept[ArithmeticException](lib.agg(sum("n")).collect())
+      // raised by the driver-side evaluation: no job ran
+      assert(TestSpark.jobsDuring(
+        intercept[ArithmeticException](served.agg(sum("n")).collect())).isEmpty)
+    } finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("the changes metadata table keeps its distributed scan") {
+    val sink = mkSink("ms_changes")
+    val df = spark.sql("SELECT count(*) FROM gmeta.ms_changes.changes")
+    assert(!driverPlanned(df))
+    var n = 0L
+    assert(TestSpark.jobsDuring { n = df.collect().head.getLong(0) }.nonEmpty)
+    assert(n == sink.readChangelogAll(spark).count())
   }
 }
